@@ -7,14 +7,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Evidence tool (not part of the library surface): dumps the executed
   * plan of EVERY successful action to `$SPARK_GRAFT_PLANCAP_DIR`, one
-  * numbered file per execution. [[PlanDump]] only sees a catalog entry's
-  * OUTER plan — operators that `localCheckpoint` internally (the suffix
-  * descent, round loops, memoized chains) truncate it to a
-  * `Scan ExistingRDD`, hiding exactly the plans an optimization round
-  * changes. A QueryExecutionListener sees each internal action's plan as
-  * it runs. Attach with
+  * numbered file per execution. A catalog entry's OUTER plan stops at
+  * each internal `localCheckpoint` (the suffix descent, round loops,
+  * memoized chains) as a `Scan ExistingRDD`, hiding exactly the plans an
+  * optimization round changes; a QueryExecutionListener sees each
+  * internal action's plan as it runs. Attach with
   * `-Dspark.sql.queryExecutionListeners=graft.PlanCapture` on any main
-  * (Prof, Bench); inert unless the env var is set.
+  * (Sweep, Bench, Verify); inert unless the env var is set.
   */
 class PlanCapture extends QueryExecutionListener {
   private val dir = sys.env.get("SPARK_GRAFT_PLANCAP_DIR")

@@ -53,16 +53,13 @@ object Bpe {
     * trainings over the same corpus — the NB-memo shared-chain
     * pattern. The merges frame is a driver-local relation; the
     * vocabulary is type-domain-sized. Eviction drops references only;
-    * [[releaseLearnMemo]] frees explicitly.
+    * [[Memos.releaseAll]] frees explicitly.
     */
   private val bpeMemo = new PlanMemo[(DataFrame, DataFrame)](
     freeOnEvict = _ => (),
     freeOnRelease = { case (_, reps) =>
       org.apache.spark.sql.GraftBridge.unpersistCheckpoint(reps) },
     capacity = 12)
-
-  /** Drop the BPE training memo and free its checkpoint storage. */
-  def releaseLearnMemo(): Unit = bpeMemo.release()
 
   /** As `learnMerges`, also returning the final word-level symbol table
     * (word, wc, rep) — the trained segmentation of every corpus type. */

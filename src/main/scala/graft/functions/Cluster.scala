@@ -61,16 +61,13 @@ object Cluster {
     * LSH candidate graph, each paying the full eager driver loop.
     * The memoized value is the final (id, component) checkpoint —
     * corpus-sized but two columns. Eviction drops references only
-    * (consumers hold lazy views); [[releaseComponentsMemo]] frees
+    * (consumers hold lazy views); [[Memos.releaseAll]] frees
     * explicitly.
     */
   private val ccMemo = new graft.functions.PlanMemo[DataFrame](
     freeOnEvict = _ => (),
     freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
     capacity = 3)
-
-  /** Drop the components memo and free its checkpoint storage. */
-  def releaseComponentsMemo(): Unit = ccMemo.release()
 
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
       vertices: DataFrame, idCol: String, maxIter: Int = 20): DataFrame =

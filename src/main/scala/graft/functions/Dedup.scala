@@ -340,7 +340,7 @@ object Dedup {
     * selection, leakage-safe split) build the identical shingle →
     * signature → band → bucket-join chain; the memoized result is the
     * bounded candidate-pair artifact. Eviction drops references only;
-    * [[releasePairMemos]] frees explicitly.
+    * [[Memos.releaseAll]] frees explicitly.
     */
   private val lshMemo = new PlanMemo[DataFrame](
     freeOnEvict = _ => (),
@@ -666,7 +666,7 @@ object Dedup {
     * (corpus, n, w) → identical selection, built once. Capacity 2: an
     * index build (corpus) and its query side (query docs) alternate.
     * Eviction drops the reference only (consumers hold lazy views);
-    * [[releasePairMemos]] frees explicitly. Per-batch STREAMING callers
+    * [[Memos.releaseAll]] frees explicitly. Per-batch STREAMING callers
     * use [[winnowFingerprintsUncached]] — a memo keyed on an
     * ever-changing batch plan would thrash and strand checkpoints.
     */
@@ -958,7 +958,7 @@ object Dedup {
     * far smaller than the postings it came from — so sharing it is a
     * cache of the artifact, not of a corpus-sized intermediate.
     * Eviction drops the reference only (consumers hold lazy views —
-    * the NB-memo policy); [[releasePairMemos]] frees explicitly.
+    * the NB-memo policy); [[Memos.releaseAll]] frees explicitly.
     */
   private val njMemo = new PlanMemo[DataFrame](
     freeOnEvict = _ => (),
@@ -972,7 +972,7 @@ object Dedup {
     * previously twice. It is the bounded artifact an inverted-list
     * system stores anyway; sharing it leaves each generator paying only
     * its own self-join + verify. Eviction drops the reference only
-    * (consumers hold lazy views); [[releasePairMemos]] frees explicitly.
+    * (consumers hold lazy views); [[Memos.releaseAll]] frees explicitly.
     */
   private val pgMemo = new PlanMemo[DataFrame](
     freeOnEvict = _ => (),
@@ -1288,20 +1288,12 @@ object Dedup {
     * pipeline over the same (corpus, key, window); the memoized result
     * is the (window−1)·n candidate set — linear by construction.
     * Eviction drops the reference only (consumers hold lazy views);
-    * [[releasePairMemos]] frees explicitly.
+    * [[Memos.releaseAll]] frees explicitly.
     */
   private val snmMemo = new PlanMemo[DataFrame](
     freeOnEvict = _ => (),
     freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
     capacity = 12)
-
-  /** Drop the shared candidate-pair/overlap memos (SNM, n-gram
-    * Jaccard, banded LSH, source overlap) and free their checkpoint
-    * storage. */
-  def releasePairMemos(): Unit = {
-    snmMemo.release(); njMemo.release(); lshMemo.release()
-    soMemo.release(); pgMemo.release(); wfMemo.release()
-  }
 
   def sortedNeighborhoodPairs(docs: DataFrame, idCol: String, key: Column,
       window: Int): DataFrame =

@@ -217,15 +217,12 @@ object Graph {
     * graph) run byte-identical 2-round propagations — the NB-memo
     * shared-chain pattern. The artifact is vertex-domain narrow
     * (id, label); eviction drops references only,
-    * [[releaseLabelMemo]] frees explicitly.
+    * [[Memos.releaseAll]] frees explicitly.
     */
   private val lpMemo = new PlanMemo[DataFrame](
     freeOnEvict = _ => (),
     freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
     capacity = 12)
-
-  /** Drop the label-propagation memo and free its checkpoint storage. */
-  def releaseLabelMemo(): Unit = lpMemo.release()
 
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
       vertices: DataFrame, idCol: String, rounds: Int): DataFrame =

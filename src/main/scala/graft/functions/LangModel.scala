@@ -167,7 +167,7 @@ object LangModel {
     * ALTERNATE between the corpus-wide and per-language keys (a single
     * slot would thrash on the q_lm_buckets → _perlang → _sampled run
     * order). Eviction drops references only (consumers hold lazy
-    * views); [[releaseKnMemos]] frees explicitly.
+    * views); [[Memos.releaseAll]] frees explicitly.
     */
   private val lmMemo = new PlanMemo[DataFrame](
     freeOnEvict = _ => (),
@@ -181,11 +181,6 @@ object LangModel {
     freeOnEvict = _ => (),
     freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
     capacity = 12)
-
-  /** Drop the shared KN-chain memos and free their checkpoint storage. */
-  def releaseKnMemos(): Unit = {
-    lmMemo.release(); scoreMemo.release(); ppMemo.release()
-  }
 
   def knBigramProbs(docs: DataFrame, textCol: String,
       minCount: Long = 1L, groupCols: Seq[String] = Nil): DataFrame =

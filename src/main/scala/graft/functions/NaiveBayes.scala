@@ -143,18 +143,13 @@ object NaiveBayes {
     * reference (classify's returned frames are lazy views over the
     * checkpoint, so an eager unpersist would break a caller that holds
     * one — the Suffix-memo lesson; Spark's ContextCleaner reclaims the
-    * blocks once every consumer is GC'd). [[releaseShared]] is the
+    * blocks once every consumer is GC'd). [[Memos.releaseAll]] is the
     * explicit "no consumers remain" hook, which DOES unpersist.
     */
   private val memo = new PlanMemo[DataFrame](
     freeOnEvict = _ => (),
     freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
     capacity = 12)
-
-  /** Drop the shared scoring-chain memo and free its checkpoint
-    * storage (callers declare no live frames derived from classify/
-    * classifyWithMargin remain in use). */
-  def releaseShared(): Unit = memo.release()
 
   /** The SHARED scoring chain of [[classify]] and
     * [[classifyWithMargin]]: every (document, class) posterior

@@ -20,6 +20,9 @@ import org.apache.spark.sql.SparkSession
   * exist and fail at runtime mid-scan. Keying on the context makes
   * such a hit a miss, so the chain transparently rebuilds.
   *
+  * Each instance registers itself in the companion, which is how
+  * [[Memos.releaseAll]] finds it.
+  *
   * Eviction (a different key arrives) and explicit [[release]] run the
   * caller-supplied free hooks; both are best-effort (a stopped
   * context's blocks are already gone and unpersisting them throws —
@@ -38,6 +41,7 @@ private[graft] final class PlanMemo[V](
   // keys (e.g. the corpus-wide and per-language KN chains) — a single
   // slot would thrash, rebuilding on every alternation.
   private var slots: List[(Seq[Any], V)] = Nil
+  PlanMemo.registry.add(this): Unit
 
   private def freeQuietly(f: V => Unit, v: V): Unit =
     try f(v) catch { case NonFatal(_) => () }
@@ -92,4 +96,14 @@ private[graft] object PlanMemo {
   private val hits = new java.util.concurrent.atomic.AtomicLong
   private val builds = new java.util.concurrent.atomic.AtomicLong
   private[graft] def counters: (Long, Long) = (hits.get, builds.get)
+
+  // Every memo ever constructed registers here, so [[Memos.releaseAll]]
+  // covers a new memo without a hand-kept list. Memos are object-level
+  // singletons, so holding them strongly leaks nothing.
+  private val registry =
+    new java.util.concurrent.CopyOnWriteArrayList[PlanMemo[_]]
+  private[graft] def registered: Seq[PlanMemo[_]] = {
+    import scala.jdk.CollectionConverters._
+    registry.asScala.toSeq
+  }
 }

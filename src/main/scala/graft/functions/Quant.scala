@@ -106,7 +106,7 @@ object Quant {
     * catalog entries (q_pq_codes, q_pq_adc, q_ivfpq_topk,
     * q_ivfpq_recall) train the identical (corpus, m, subDim, k, iters)
     * codebooks, each paying the m sub-quantizer chains. Eviction drops
-    * references only; [[releaseModelMemo]] frees explicitly.
+    * references only; [[Memos.releaseAll]] frees explicitly.
     */
   private val pqMemo = new PlanMemo[(DataFrame, DataFrame)](
     freeOnEvict = _ => (),
@@ -115,9 +115,6 @@ object Quant {
       org.apache.spark.sql.GraftBridge.unpersistCheckpoint(c)
     },
     capacity = 12) // raw-vector, residual, ... trainings alternate
-
-  /** Drop the PQ model memo and free its checkpoint storage. */
-  def releaseModelMemo(): Unit = pqMemo.release()
 
   def pqModel(corpus: DataFrame, m: Int, subDim: Int, k: Int, iters: Int,
       idCol: String = "vec_id",

@@ -201,9 +201,6 @@ object Vec {
     freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
     capacity = 12)
 
-  /** Drop the top-k ranking memos and free their checkpoint storage. */
-  def releaseTopKMemos(): Unit = { bfMemo.release(); ivfMemo.release() }
-
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       excludeSelf: Boolean = true): DataFrame =
@@ -380,16 +377,10 @@ object Vec {
     },
     capacity = 12)
 
-  /** Drop the residual-IVF memo and free its checkpoint storage. */
-  def releaseResidMemo(): Unit = residMemo.release()
-
   private val nndMemo = new PlanMemo[DataFrame](
     freeOnEvict = _ => (),
     freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
     capacity = 12)
-
-  /** Drop the kNN-graph memo and free its checkpoint storage. */
-  def releaseGraphMemo(): Unit = nndMemo.release()
 
   def nnDescent(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
       nBits: Int = 4, rounds: Int = 3, ringWindow: Int = 8): DataFrame =
@@ -713,9 +704,6 @@ object Vec {
     freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
     capacity = 12)
 
-  /** Drop the beam-search memo and free its checkpoint storage. */
-  def releaseBeamMemo(): Unit = beamMemo.release()
-
   def graphBeamSearch(graph: DataFrame, vecs: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       beam: Int, hops: Int): DataFrame =
@@ -843,7 +831,7 @@ object Vec {
     * q_split_by_cluster), each re-running the full iterative chain.
     * Capacity 12: the catalog alternates between the fixed-k and the
     * derived-kCells keys. Eviction drops references only (consumers
-    * hold lazy views); [[releaseModelMemo]] frees explicitly.
+    * hold lazy views); [[Memos.releaseAll]] frees explicitly.
     */
   private val kmMemo = new PlanMemo[(DataFrame, DataFrame)](
     freeOnEvict = _ => (),
@@ -852,9 +840,6 @@ object Vec {
       org.apache.spark.sql.GraftBridge.unpersistCheckpoint(c)
     },
     capacity = 12)
-
-  /** Drop the k-means model memo and free its checkpoint storage. */
-  def releaseModelMemo(): Unit = kmMemo.release()
 
   def kmeansModel(corpus: DataFrame, k: Int, iters: Int,
       idCol: String = "vec_id",
@@ -1240,7 +1225,7 @@ object Vec {
     * the LSH paths, with a LEARNED partition instead of a random one.
     *
     * kCells must GROW with the corpus (cells stay ~bounded) or the
-    * in-cell pair stage goes quadratic — prefer [[semDedupPairsAuto]],
+    * in-cell pair stage goes quadratic — prefer [[semDedupAuto]],
     * which derives kCells via [[deriveKCells]] instead of trusting the
     * caller to uphold that contract.
     */
@@ -1323,7 +1308,7 @@ object Vec {
     * Output: (id_a, id_b, sim) with id_a < id_b, each pair once.
     *
     * As with semDedupPairs, kCells must grow with the corpus — prefer
-    * [[mutualKnnPairsAuto]] ([[deriveKCells]]) over a fixed kCells.
+    * [[mutualKnnClustersAuto]] ([[deriveKCells]]) over a fixed kCells.
     */
   def mutualKnnPairs(corpus: DataFrame, k: Int, kCells: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
@@ -1411,30 +1396,16 @@ object Vec {
     math.max(1L, math.min(k, Int.MaxValue.toLong)).toInt
   }
 
-  /** [[semDedupPairs]] with kCells derived from the corpus size
+  /** [[semDedup]] with kCells derived from the corpus size
     * ([[deriveKCells]]) — one bounded count (a 1-row aggregate), then
     * the kCells path. Default targetCellSize = 64 reproduces the
     * catalog's kCells at the oracle scale and keeps in-cell pair mass
     * at ≤ 64·n at any corpus size.
     */
-  def semDedupPairsAuto(corpus: DataFrame, threshold: Double, iters: Int,
-      targetCellSize: Long = 64L, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
-    semDedupPairs(corpus, threshold,
-      deriveKCells(corpus.count(), targetCellSize), iters, idCol, vecCol)
-
-  /** [[semDedup]] with auto-derived kCells (see [[deriveKCells]]). */
   def semDedupAuto(corpus: DataFrame, threshold: Double, iters: Int,
       targetCellSize: Long = 64L, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame =
     semDedup(corpus, threshold,
-      deriveKCells(corpus.count(), targetCellSize), iters, idCol, vecCol)
-
-  /** [[mutualKnnPairs]] with auto-derived kCells (see [[deriveKCells]]). */
-  def mutualKnnPairsAuto(corpus: DataFrame, k: Int, iters: Int,
-      targetCellSize: Long = 64L, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
-    mutualKnnPairs(corpus, k,
       deriveKCells(corpus.count(), targetCellSize), iters, idCol, vecCol)
 
   /** [[mutualKnnClusters]] with auto-derived kCells (see

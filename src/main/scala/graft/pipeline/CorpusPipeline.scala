@@ -358,44 +358,30 @@ object CorpusPipeline {
       blockPhrases: Seq[String] = Seq.empty,
       lineDedupLen: Option[Int] = Some(10),
       domainCap: Option[(String, Long)] = None,
-      cfg: Config = Config(),
-      onStage: Option[(String, Double, Long) => Unit] = None)
+      cfg: Config = Config())
       : (DataFrame, DataFrame, DataFrame) = {
-    // Per-stage probe hook: (stage, wall seconds, surviving rows) after
-    // each checkpoint. The count is a second job per stage, so it runs
-    // ONLY when a hook is installed (the ScaleProbe corpus_e2e card);
-    // production callers pay nothing.
-    def cp(name: String)(df: DataFrame): DataFrame = onStage match {
-      case None => df.localCheckpoint(true)
-      case Some(f) =>
-        val t0 = System.nanoTime()
-        val c = df.localCheckpoint(true)
-        val sec = (System.nanoTime() - t0) / 1e9
-        f(name, sec, c.count())
-        c
-    }
-    val bl = cp("blocklist")(blocklistGate(docs, blockPhrases, cfg))
-    val ld = cp("line_dedup")(
-      lineDedupLen.map(lineDedupStage(bl, _, cfg)).getOrElse(bl))
-    val ann = cp("annotate")(annotate(ld, cfg))
-    val q = cp("quality")(qualityGate(ann, cfg))
-    val gp = cp("gopher")(gopherGate(q, cfg = cfg))
-    val dc = cp("domain_cap")(domainCap.map { case (src, k) =>
+    def cp(df: DataFrame): DataFrame = df.localCheckpoint(true)
+    val bl = cp(blocklistGate(docs, blockPhrases, cfg))
+    val ld = cp(lineDedupLen.map(lineDedupStage(bl, _, cfg)).getOrElse(bl))
+    val ann = cp(annotate(ld, cfg))
+    val q = cp(qualityGate(ann, cfg))
+    val gp = cp(gopherGate(q, cfg = cfg))
+    val dc = cp(domainCap.map { case (src, k) =>
       domainCapStage(gp, src, k, cfg) }.getOrElse(gp))
-    val sp = cp("span")(spanGate(dc, minKeepRatio, cfg = cfg))
-    val ct = cp("contam")(contamGate(sp, evalDocs, maxContamRatio, cfg))
-    val ov = cp("oov")(oovGate(ct, vocabSize, maxOovRate, cfg))
-    val lf = cp("lm_fit")(lmFitGate(ov, lm, minFit, cfg))
-    val cl = cp("classifier")(classifierGate(lf, seed, cfg = cfg))
-    val ex = cp("exact_dedup")(exactDedup(cl, cfg))
-    val nd = cp("near_dedup")(nearDedupBestCopy(ex, cfg))
-    val sem = cp("semantic")(semanticDedup(nd,
+    val sp = cp(spanGate(dc, minKeepRatio, cfg = cfg))
+    val ct = cp(contamGate(sp, evalDocs, maxContamRatio, cfg))
+    val ov = cp(oovGate(ct, vocabSize, maxOovRate, cfg))
+    val lf = cp(lmFitGate(ov, lm, minFit, cfg))
+    val cl = cp(classifierGate(lf, seed, cfg = cfg))
+    val ex = cp(exactDedup(cl, cfg))
+    val nd = cp(nearDedupBestCopy(ex, cfg))
+    val sem = cp(semanticDedup(nd,
       embeddings.join(nd.select(col(cfg.idCol)), Seq(cfg.idCol), "left_semi"),
       semThreshold,
       graft.functions.Vec.deriveKCells(nd.count(), semTargetCellSize),
       cfg = cfg))
-    val split = cp("split")(assignSplits(sem, cfg = cfg))
-    val shards = cp("shard")(shardForTraining(split, nShards, cfg))
+    val split = cp(assignSplits(sem, cfg = cfg))
+    val shards = cp(shardForTraining(split, nShards, cfg))
     def n(df: DataFrame, as: String) = df.select(count(lit(1)).as(as))
     val stats = n(docs, "n_input")
       .crossJoin(n(bl, "n_blocklist"))

@@ -17,6 +17,9 @@ object TestSpark {
     s
   }
 
+  /** The shipped sf0.001 tables (TESTDATA.md). */
+  val sf0001 = "/root/testdata/sf0.001"
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }
