@@ -52,22 +52,15 @@ object Bpe {
     * consumers (merges, encode, fertility) run byte-identical
     * trainings over the same corpus — the NB-memo shared-chain
     * pattern. The merges frame is a driver-local relation; the
-    * vocabulary is type-domain-sized. Eviction drops references only;
-    * [[Memos.releaseAll]] frees explicitly.
+    * vocabulary is type-domain-sized.
     */
-  private val bpeMemo = new PlanMemo[(DataFrame, DataFrame)](
-    freeOnEvict = _ => (),
-    freeOnRelease = { case (_, reps) =>
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(reps) },
-    capacity = 12)
+  private val bpeMemo = new PlanMemo[(DataFrame, DataFrame)]
 
   /** As `learnMerges`, also returning the final word-level symbol table
     * (word, wc, rep) — the trained segmentation of every corpus type. */
   def learn(docs: DataFrame, textCol: String,
       rounds: Int): (DataFrame, DataFrame) =
-    bpeMemo.getOrBuild(docs.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(docs).canonicalized,
-        textCol, rounds)) {
+    bpeMemo(docs, textCol, rounds) {
       learnUncached(docs, textCol, rounds)
     }
 

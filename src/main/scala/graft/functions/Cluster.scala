@@ -55,98 +55,82 @@ object Cluster {
     *                 the numeric min, string ids to the lexicographic min)
     * @param maxIter  propagation-round cap (component-diameter bound)
     */
-  /** Session memo ([[graft.functions.PlanMemo]]) for the converged
+  /** Session memo ([[PlanMemo]]) for the converged
     * label set — THREE catalog entries (near-dup clustering, canonical
     * selection, leakage-safe split) run components over the identical
     * LSH candidate graph, each paying the full eager driver loop.
     * The memoized value is the final (id, component) checkpoint —
-    * corpus-sized but two columns. Eviction drops references only
-    * (consumers hold lazy views); [[Memos.releaseAll]] frees
-    * explicitly.
+    * corpus-sized but two columns.
     */
-  private val ccMemo = new graft.functions.PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 3)
+  private val ccMemo = new PlanMemo[DataFrame]
 
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-      vertices: DataFrame, idCol: String, maxIter: Int = 20): DataFrame =
-    ccMemo.getOrBuild(edges.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(edges).canonicalized,
-        org.apache.spark.sql.GraftBridge.logicalPlan(vertices).canonicalized,
-        aCol, bCol, idCol, maxIter)) {
-      connectedComponentsUncached(edges, aCol, bCol, vertices, idCol,
-        maxIter)
-    }
-
-  // private[graft]: the memoized entry point returns the converged
-  // checkpoint; iteration-shape assertions target this chain
-  private[graft] def connectedComponentsUncached(edges: DataFrame,
-      aCol: String, bCol: String, vertices: DataFrame, idCol: String,
-      maxIter: Int = 20): DataFrame = {
+      vertices: DataFrame, idCol: String, maxIter: Int = 20): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     import org.apache.spark.sql.GraftBridge
-    // Undirected: materialize both directions once; dedup cuts message
-    // volume when the candidate generator emits a pair via several bands.
-    // Both orientations come from ONE explode over each edge row — the
-    // self-union form evaluated the whole candidate-generation subtree
-    // twice per materialization (LSH banding, window top-k, ... are the
-    // expensive half of every near-dup pipeline this feeds).
-    val sym = edges
-      .select(explode(array(
-        struct(col(aCol).as("s"), col(bCol).as("t")),
-        struct(col(bCol).as("s"), col(aCol).as("t")))).as("__e"))
-      .select(col("__e.s").as("__s"), col("__e.t").as("__t"))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = vertices.select(col(idCol).as("__id"), col(idCol).as("__comp"))
-      .localCheckpoint(true)
-    var it = 0
-    var converged = false
-    while (it < maxIter && !converged) {
-      val msgs = sym
-        .join(labels.withColumnRenamed("__id", "__s"), Seq("__s"))
-        .select(col("__t").as("__id"), col("__comp"))
-      val hopped = labels.union(msgs)
-        .groupBy(col("__id"))
-        .agg(min(col("__comp")).as("__comp"))
-      // Pointer jumping: adopt the label OF the current label (labels are
-      // vertex ids, so l(v) always has a row; l(l(v)) <= l(v) because a
-      // vertex's own label never exceeds its id). One extra label-sized
-      // equi-join per round turns chain convergence from O(diameter)
-      // rounds into O(log diameter) — near-dup cliques never notice, but
-      // path-shaped graphs (mutual-kNN chains, long span overlaps) would
-      // otherwise need diameter-many rounds against any fixed maxIter.
-      // (A second jump per round was measured SLOWER at bench scale: the
-      // extra per-round join barrier cost more than the rounds it saved.)
-      val next = hopped
-        .join(hopped.select(col("__id").as("__comp"),
-          col("__comp").as("__cc")), Seq("__comp"))
-        .select(col("__id"), least(col("__comp"), col("__cc")).as("__comp"))
+    ccMemo(edges, vertices, aCol, bCol, idCol, maxIter) {
+      // Undirected: materialize both directions once; dedup cuts message
+      // volume when the candidate generator emits a pair via several bands.
+      // Both orientations come from ONE explode over each edge row — the
+      // self-union form evaluated the whole candidate-generation subtree
+      // twice per materialization (LSH banding, window top-k, ... are the
+      // expensive half of every near-dup pipeline this feeds).
+      val sym = edges
+        .select(explode(array(
+          struct(col(aCol).as("s"), col(bCol).as("t")),
+          struct(col(bCol).as("s"), col(aCol).as("t")))).as("__e"))
+        .select(col("__e.s").as("__s"), col("__e.t").as("__t"))
+        .distinct()
         .localCheckpoint(true)
-      // Exact, type-agnostic convergence: did any vertex's label change?
-      // (Labels only decrease, so inequality == change.) One join of the
-      // two checkpointed label sets per round, stopped at the first
-      // changed row — dwarfed by the msgs join. An aggregate statistic
-      // (e.g. label sums) would be cheaper but either overflows ANSI
-      // arithmetic at 64-bit-id scale or can't handle string ids at all.
-      converged = next
-        .join(labels.select(col("__id"), col("__comp").as("__old")), Seq("__id"))
-        .filter(col("__comp") =!= col("__old"))
-        .isEmpty
-      GraftBridge.unpersistCheckpoint(labels) // superseded round's blocks
-      labels = next
-      it += 1
+      var labels = vertices.select(col(idCol).as("__id"), col(idCol).as("__comp"))
+        .localCheckpoint(true)
+      var it = 0
+      var converged = false
+      while (it < maxIter && !converged) {
+        val msgs = sym
+          .join(labels.withColumnRenamed("__id", "__s"), Seq("__s"))
+          .select(col("__t").as("__id"), col("__comp"))
+        val hopped = labels.union(msgs)
+          .groupBy(col("__id"))
+          .agg(min(col("__comp")).as("__comp"))
+        // Pointer jumping: adopt the label OF the current label (labels are
+        // vertex ids, so l(v) always has a row; l(l(v)) <= l(v) because a
+        // vertex's own label never exceeds its id). One extra label-sized
+        // equi-join per round turns chain convergence from O(diameter)
+        // rounds into O(log diameter) — near-dup cliques never notice, but
+        // path-shaped graphs (mutual-kNN chains, long span overlaps) would
+        // otherwise need diameter-many rounds against any fixed maxIter.
+        // (A second jump per round was measured SLOWER at bench scale: the
+        // extra per-round join barrier cost more than the rounds it saved.)
+        val next = hopped
+          .join(hopped.select(col("__id").as("__comp"),
+            col("__comp").as("__cc")), Seq("__comp"))
+          .select(col("__id"), least(col("__comp"), col("__cc")).as("__comp"))
+          .localCheckpoint(true)
+        // Exact, type-agnostic convergence: did any vertex's label change?
+        // (Labels only decrease, so inequality == change.) One join of the
+        // two checkpointed label sets per round, stopped at the first
+        // changed row — dwarfed by the msgs join. An aggregate statistic
+        // (e.g. label sums) would be cheaper but either overflows ANSI
+        // arithmetic at 64-bit-id scale or can't handle string ids at all.
+        converged = next
+          .join(labels.select(col("__id"), col("__comp").as("__old")), Seq("__id"))
+          .filter(col("__comp") =!= col("__old"))
+          .isEmpty
+        GraftBridge.unpersistCheckpoint(labels) // superseded round's blocks
+        labels = next
+        it += 1
+      }
+      GraftBridge.unpersistCheckpoint(sym)
+      if (!converged) {
+        GraftBridge.unpersistCheckpoint(labels)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds — a " +
+            "component's diameter exceeds the cap; raise maxIter (with " +
+            "pointer jumping, rounds needed ~= log2 of the longest chain)")
+      }
+      labels.select(col("__id").as(idCol), col("__comp").as("component"))
     }
-    GraftBridge.unpersistCheckpoint(sym)
-    if (!converged) {
-      GraftBridge.unpersistCheckpoint(labels)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — a " +
-          "component's diameter exceeds the cap; raise maxIter (with " +
-          "pointer jumping, rounds needed ~= log2 of the longest chain)")
-    }
-    labels.select(col("__id").as(idCol), col("__comp").as("component"))
   }
 
   /** Cluster assignment with sizes: (idCol, component, csize, is_rep) —

@@ -123,47 +123,37 @@ object Dedup {
   /** Session memo for the exact source-overlap matrix — built by both
     * q_source_overlap and the MinHash-calibration entry. Mixture²-sized
     * output; one shingle pass shared. */
-  private val soMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
+  private val soMemo = new PlanMemo[DataFrame]
 
   def sourceOverlap(docs: DataFrame, groupCol: String, textCol: String,
-      n: Int, srcCap: Int = 1000): DataFrame =
-    soMemo.getOrBuild(docs.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(docs).canonicalized,
-        groupCol, textCol, n, srcCap)) {
-      sourceOverlapUncached(docs, groupCol, textCol, n, srcCap)
-        .localCheckpoint(true)
-    }
-
-  private[graft] def sourceOverlapUncached(docs: DataFrame,
-      groupCol: String, textCol: String,
       n: Int, srcCap: Int = 1000): DataFrame = {
     require(srcCap >= 2, s"srcCap must be >= 2, got $srcCap")
-    val grams = docs.select(col(groupCol),
-        graft.plans.TextExpressions.hashedShingles(col(textCol), n))
-      .distinct()
-    val sizes = grams.groupBy(col(groupCol))
-      .agg(count(lit(1)).as("__sz"))
-    val capped = grams.join(
-      grams.groupBy(col("tid")).agg(count(lit(1)).as("__df"))
-        .filter(col("__df") <= srcCap).select(col("tid")),
-      Seq("tid"))
-    val shared = capped.select(col("tid"), col(groupCol).as("src_a"))
-      .join(capped.select(col("tid"), col(groupCol).as("src_b")), Seq("tid"))
-      .filter(col("src_a") < col("src_b"))
-      .groupBy(col("src_a"), col("src_b"))
-      .agg(count(lit(1)).as("shared_grams"))
-    val all = sizes.select(col(groupCol).as("src_a"), col("__sz").as("n_a"))
-      .crossJoin(sizes.select(col(groupCol).as("src_b"), col("__sz").as("n_b")))
-      .filter(col("src_a") < col("src_b"))
-    all.join(shared, Seq("src_a", "src_b"), "left")
-      .select(col("src_a"), col("src_b"), col("n_a"), col("n_b"),
-        coalesce(col("shared_grams"), lit(0L)).as("shared_grams"))
-      .withColumn("jaccard",
-        col("shared_grams").cast("double") /
-          (col("n_a") + col("n_b") - col("shared_grams")).cast("double"))
+    soMemo(docs, groupCol, textCol, n, srcCap) {
+      val grams = docs.select(col(groupCol),
+          graft.plans.TextExpressions.hashedShingles(col(textCol), n))
+        .distinct()
+      val sizes = grams.groupBy(col(groupCol))
+        .agg(count(lit(1)).as("__sz"))
+      val capped = grams.join(
+        grams.groupBy(col("tid")).agg(count(lit(1)).as("__df"))
+          .filter(col("__df") <= srcCap).select(col("tid")),
+        Seq("tid"))
+      val shared = capped.select(col("tid"), col(groupCol).as("src_a"))
+        .join(capped.select(col("tid"), col(groupCol).as("src_b")), Seq("tid"))
+        .filter(col("src_a") < col("src_b"))
+        .groupBy(col("src_a"), col("src_b"))
+        .agg(count(lit(1)).as("shared_grams"))
+      val all = sizes.select(col(groupCol).as("src_a"), col("__sz").as("n_a"))
+        .crossJoin(sizes.select(col(groupCol).as("src_b"), col("__sz").as("n_b")))
+        .filter(col("src_a") < col("src_b"))
+      all.join(shared, Seq("src_a", "src_b"), "left")
+        .select(col("src_a"), col("src_b"), col("n_a"), col("n_b"),
+          coalesce(col("shared_grams"), lit(0L)).as("shared_grams"))
+        .withColumn("jaccard",
+          col("shared_grams").cast("double") /
+            (col("n_a") + col("n_b") - col("shared_grams")).cast("double"))
+        .localCheckpoint(true)
+    }
   }
 
   /** Sketch estimate of [[sourceOverlap]]'s Jaccard matrix from ONE
@@ -339,40 +329,27 @@ object Dedup {
     * FOUR catalog entries (pair listing, near-dup clustering, canonical
     * selection, leakage-safe split) build the identical shingle →
     * signature → band → bucket-join chain; the memoized result is the
-    * bounded candidate-pair artifact. Eviction drops references only;
-    * [[Memos.releaseAll]] frees explicitly.
+    * bounded candidate-pair artifact.
     */
-  private val lshMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
+  private val lshMemo = new PlanMemo[DataFrame]
 
   def lshCandidatePairs(bands: DataFrame, idCol: String,
       bucketCap: Int = DerivedCap.toInt): DataFrame = {
     val cap = resolveBucketCap(bucketCap, distinctIdCount(bands, idCol))
-    lshMemo.getOrBuild(bands.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(bands).canonicalized,
-        idCol, cap)) {
-      lshCandidatePairsUncached(bands, idCol, cap)
+    lshMemo(bands, idCol, cap) {
+      val w = Window.partitionBy(col("band"), col("band_val"))
+      val capped = bands
+        .withColumn("__n", count(lit(1)).over(w))
+        .filter(col("__n") <= cap)
+        .drop("__n")
+      val a = capped.select(col("band"), col("band_val"), col(idCol).as("id_a"))
+      val b = capped.select(col("band"), col("band_val"), col(idCol).as("id_b"))
+      a.join(b, Seq("band", "band_val"))
+        .filter(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"))
+        .distinct()
         .localCheckpoint(true)
     }
-  }
-
-  // private[graft]: plan-shape assertions target the unmemoized chain
-  private[graft] def lshCandidatePairsUncached(bands: DataFrame,
-      idCol: String, bucketCap: Int = DerivedCap.toInt): DataFrame = {
-    val cap = resolveBucketCap(bucketCap, distinctIdCount(bands, idCol))
-    val w = Window.partitionBy(col("band"), col("band_val"))
-    val capped = bands
-      .withColumn("__n", count(lit(1)).over(w))
-      .filter(col("__n") <= cap)
-      .drop("__n")
-    val a = capped.select(col("band"), col("band_val"), col(idCol).as("id_a"))
-    val b = capped.select(col("band"), col("band_val"), col(idCol).as("id_b"))
-    a.join(b, Seq("band", "band_val"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
   }
 
   // ------------------------------------------------------------------
@@ -663,23 +640,15 @@ object Dedup {
   /** Session memo for the winnow fingerprint selection — the doc-keyed
     * window min is the expensive half of both the fingerprint listing
     * (q_winnow) and the pair generator ([[winnowPairs]]); identical
-    * (corpus, n, w) → identical selection, built once. Capacity 2: an
-    * index build (corpus) and its query side (query docs) alternate.
-    * Eviction drops the reference only (consumers hold lazy views);
-    * [[Memos.releaseAll]] frees explicitly. Per-batch STREAMING callers
-    * use [[winnowFingerprintsUncached]] — a memo keyed on an
-    * ever-changing batch plan would thrash and strand checkpoints.
+    * (corpus, n, w) → identical selection, built once. Per-batch
+    * STREAMING callers use [[winnowFingerprintsUncached]] — a memo
+    * keyed on an ever-changing batch plan would thrash.
     */
-  private val wfMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
+  private val wfMemo = new PlanMemo[DataFrame]
 
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
       n: Int, w: Int): DataFrame =
-    wfMemo.getOrBuild(docs.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(docs).canonicalized,
-        idCol, textCol, n, w)) {
+    wfMemo(docs, idCol, textCol, n, w) {
       winnowFingerprintsUncached(docs, idCol, textCol, n, w)
         .localCheckpoint(true)
     }
@@ -950,20 +919,15 @@ object Dedup {
         col("jaccard"))
   }
 
-  /** Single-slot session memo of the last n-gram-Jaccard pair build
-    * ([[PlanMemo]]): THREE catalog consumers (the pair listing, the
-    * 2-core peel, the blocker-recall truth side) run the identical
+  /** Session memo ([[PlanMemo]]) of the n-gram-Jaccard pair build:
+    * THREE catalog consumers (the pair listing, the 2-core peel, the
+    * blocker-recall truth side) run the identical
     * shingle→df-cap→self-join→verify pipeline over the same corpus;
     * the memoized result is the VERIFIED pair set — bounded output,
     * far smaller than the postings it came from — so sharing it is a
     * cache of the artifact, not of a corpus-sized intermediate.
-    * Eviction drops the reference only (consumers hold lazy views —
-    * the NB-memo policy); [[Memos.releaseAll]] frees explicitly.
     */
-  private val njMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
+  private val njMemo = new PlanMemo[DataFrame]
 
   /** Session memo for the df-capped inverted postings table (id, tid):
     * distinct hashed shingles with hub grams (df > dfCap) removed — the
@@ -971,13 +935,9 @@ object Dedup {
     * [[ngramContainmentPairs]]) build from the same (corpus, n, dfCap),
     * previously twice. It is the bounded artifact an inverted-list
     * system stores anyway; sharing it leaves each generator paying only
-    * its own self-join + verify. Eviction drops the reference only
-    * (consumers hold lazy views); [[Memos.releaseAll]] frees explicitly.
+    * its own self-join + verify.
     */
-  private val pgMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
+  private val pgMemo = new PlanMemo[DataFrame]
 
   /** Fraction-of-corpus document-frequency cap: `max(floor,
     * nDocs·maxDfPpm/1e6)`. A FIXED dfCap stops guarding the moment the
@@ -1025,18 +985,12 @@ object Dedup {
   /** Plan-keyed memo of corpus cardinalities used by cap derivation —
     * the count is an eager plan-build action, so repeated generator
     * calls over the same (memoized-checkpoint) input must not re-count.
-    * Values are tiny (one Long); capacity covers the distinct corpus
-    * frames alive in a session.
     */
-  private val nDocsMemo = new PlanMemo[java.lang.Long](
-    freeOnEvict = _ => (), freeOnRelease = _ => (), capacity = 32)
+  private val nDocsMemo = new PlanMemo[Long]
 
   private def memoCount(df: DataFrame, tag: String, cols: Seq[String])(
       build: => Long): Long =
-    nDocsMemo.getOrBuild(df.sparkSession, Seq[Any](tag,
-      org.apache.spark.sql.GraftBridge.logicalPlan(df).canonicalized) ++ cols) {
-      java.lang.Long.valueOf(build)
-    }.longValue()
+    nDocsMemo(tag +: df +: cols: _*)(build)
 
   private[graft] def corpusCount(docs: DataFrame): Long =
     memoCount(docs, "rows", Nil)(docs.count())
@@ -1057,9 +1011,7 @@ object Dedup {
 
   private[graft] def cappedPostings(docs: DataFrame, idCol: String,
       textCol: String, n: Int, dfCap: Long): DataFrame =
-    pgMemo.getOrBuild(docs.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(docs).canonicalized,
-        idCol, textCol, n, dfCap)) {
+    pgMemo(docs, idCol, textCol, n, dfCap) {
       // The RAW shingle-set table is deliberately NOT persisted: with
       // the compiled HashedShingles generator, recomputing the
       // scan→hash→distinct chain is cheaper than materializing it
@@ -1148,8 +1100,7 @@ object Dedup {
   }
 
   /** Near-dup pairs by word-n-gram Jaccard over a df-capped inverted
-    * list (see [[ngramJaccardPairsUncached]] for the plan shape).
-    * NOTE: constructing this frame runs EAGER Spark actions — the
+    * list. NOTE: constructing this frame runs EAGER Spark actions — the
     * derived-cap corpus count (default dfCap only) and the fan-out
     * sizing aggregate behind [[pairJoinParts]] — so plan BUILD triggers
     * jobs and surfaces input failures immediately; both actions are
@@ -1159,58 +1110,47 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int, minJaccard: Double, dfCap: Long = DerivedCap): DataFrame = {
     val cap = resolveDfCap(dfCap, corpusCount(docs))
-    njMemo.getOrBuild(docs.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(docs).canonicalized,
-        idCol, textCol, n, minJaccard, cap)) {
-      ngramJaccardPairsUncached(docs, idCol, textCol, n, minJaccard, cap)
+    njMemo(docs, idCol, textCol, n, minJaccard, cap) {
+      // Post-cap postings feed THREE consumers (sizes + both join sides),
+      // each of which would re-run the distinct AND the df join —
+      // shuffles, not the compiled scan. Materialized once (measured on
+      // the containment twin: 3.1 → 2.5 s) in the SHARED [[cappedPostings]]
+      // memo — the containment generator reads the same table.
+      val g = cappedPostings(docs, idCol, textCol, n, cap)
+      // Set sizes come from the CAPPED table too: hub shingles must leave
+      // both the intersection and the denominators, or docs made of hub
+      // shingles would see their Jaccard biased toward zero and be missed.
+      val sizes = g.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))
+      // Fan-out-sized tid partitioning (see [[pairJoinParts]]); both join
+      // sides read the SAME repartitioned subtree — one exchange, reused.
+      val gp = g.repartition(pairJoinParts(g), col("tid"))
+      val a = gp.select(col("tid"), col(idCol).as("id_a"))
+      val b = gp.select(col("tid"), col(idCol).as("id_b"))
+      // SHUFFLE-HASH everywhere on this chain, never sort-merge: SMJ
+      // would SORT the generated pair stream (and the postings), and
+      // those sort buffers both spill ~the whole stream and starve the
+      // intersection aggregate's hash map in the unified pool — the
+      // spill probe measured the verify joins re-spilling the pair
+      // stream once per join. Hash sides are per-task slivers (a tid
+      // partition of the postings; an id partition of the one-row-per-
+      // doc sizes table), bounded at any corpus size.
+      val inter = a.hint("shuffle_hash").join(b, Seq("tid"))
+        .filter(col("id_a") < col("id_b"))
+        .groupBy(col("id_a"), col("id_b"))
+        .agg(count(lit(1)).as("inter"))
+      inter
+        .join(sizes.select(col(idCol).as("id_a"), col("n_grams").as("n_a"))
+          .hint("shuffle_hash"), Seq("id_a"))
+        .join(sizes.select(col(idCol).as("id_b"), col("n_grams").as("n_b"))
+          .hint("shuffle_hash"), Seq("id_b"))
+        .withColumn("jaccard",
+          round(col("inter").cast("double") /
+            (col("n_a") + col("n_b") - col("inter")).cast("double"), 6))
+        .filter(col("jaccard") >= minJaccard)
+        .select(col("id_a"), col("id_b"), col("inter"), col("n_a"), col("n_b"),
+          col("jaccard"))
         .localCheckpoint(true)
     }
-  }
-
-  // private[graft]: plan-shape assertions target the unmemoized chain —
-  // the memoized entry point's visible plan is just the checkpoint scan
-  private[graft] def ngramJaccardPairsUncached(docs: DataFrame,
-      idCol: String, textCol: String,
-      n: Int, minJaccard: Double, dfCap: Long = DerivedCap): DataFrame = {
-    val cap = resolveDfCap(dfCap, corpusCount(docs))
-    // Post-cap postings feed THREE consumers (sizes + both join sides),
-    // each of which would re-run the distinct AND the df join —
-    // shuffles, not the compiled scan. Materialized once (measured on
-    // the containment twin: 3.1 → 2.5 s) in the SHARED [[cappedPostings]]
-    // memo — the containment generator reads the same table.
-    val g = cappedPostings(docs, idCol, textCol, n, cap)
-    // Set sizes come from the CAPPED table too: hub shingles must leave
-    // both the intersection and the denominators, or docs made of hub
-    // shingles would see their Jaccard biased toward zero and be missed.
-    val sizes = g.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))
-    // Fan-out-sized tid partitioning (see [[pairJoinParts]]); both join
-    // sides read the SAME repartitioned subtree — one exchange, reused.
-    val gp = g.repartition(pairJoinParts(g), col("tid"))
-    val a = gp.select(col("tid"), col(idCol).as("id_a"))
-    val b = gp.select(col("tid"), col(idCol).as("id_b"))
-    // SHUFFLE-HASH everywhere on this chain, never sort-merge: SMJ
-    // would SORT the generated pair stream (and the postings), and
-    // those sort buffers both spill ~the whole stream and starve the
-    // intersection aggregate's hash map in the unified pool — the
-    // spill probe measured the verify joins re-spilling the pair
-    // stream once per join. Hash sides are per-task slivers (a tid
-    // partition of the postings; an id partition of the one-row-per-
-    // doc sizes table), bounded at any corpus size.
-    val inter = a.hint("shuffle_hash").join(b, Seq("tid"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("n_grams").as("n_a"))
-        .hint("shuffle_hash"), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("n_grams").as("n_b"))
-        .hint("shuffle_hash"), Seq("id_b"))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (col("n_a") + col("n_b") - col("inter")).cast("double"), 6))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), col("inter"), col("n_a"), col("n_b"),
-        col("jaccard"))
   }
 
   /** Asymmetric near-dup pairs by shingle CONTAINMENT — |A∩B| / min(|A|,
@@ -1281,25 +1221,36 @@ object Dedup {
     * verifier ([[verifyJaccardArrays]], [[verifyEditDistance]]) — SNM is
     * a candidate generator, not a match decision.
     */
-  /** Single-slot session memo of the last SNM candidate build
-    * ([[PlanMemo]]): SEVEN catalog consumers (pair listing, edit-
-    * distance verify, blocker recall, label propagation, PPR,
-    * triangles, common neighbors) run the identical rank+window
+  /** Session memo ([[PlanMemo]]) of the SNM candidate build: SEVEN
+    * catalog consumers (pair listing, edit-distance verify, blocker
+    * recall, label propagation, PPR, triangles, common neighbors) run the identical rank+window
     * pipeline over the same (corpus, key, window); the memoized result
     * is the (window−1)·n candidate set — linear by construction.
-    * Eviction drops the reference only (consumers hold lazy views);
-    * [[Memos.releaseAll]] frees explicitly.
     */
-  private val snmMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
+  private val snmMemo = new PlanMemo[DataFrame]
 
   def sortedNeighborhoodPairs(docs: DataFrame, idCol: String, key: Column,
-      window: Int): DataFrame =
-    snmMemo.getOrBuild(docs.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(docs).canonicalized,
-        idCol, key.toString, window)) {
+      window: Int): DataFrame = {
+    require(window >= 2, s"window must be >= 2, got $window")
+    snmMemo(docs, idCol, key.toString, window) {
+      val keyed = docs.select(col(idCol), key.as("__snmkey"))
+        .withColumn("__snmall", lit(1))
+      // Materialized once: both neighborhood-join sides read the ranked
+      // table, and the two-level rank behind it is a range exchange + a
+      // window + an offset broadcast — not a chain to run twice.
+      val ranked = graft.functions.GroupRank.withRankAndCount(keyed,
+          Seq("__snmall"), Seq(col("__snmkey").asc, col(idCol).asc),
+          "__snmrn", "__snmn")
+        .select(col(idCol), col("__snmkey"), col("__snmrn"))
+        .localCheckpoint(true)
+      val a = ranked
+        .select(col(idCol).as("id_a"), col("__snmkey").as("key_a"),
+          col("__snmrn").as("__rna"))
+        .select(col("id_a"), col("key_a"), col("__rna"),
+          explode(sequence(col("__rna") + 1,
+            col("__rna") + (window - 1))).as("__snmj"))
+      val b = ranked.select(col(idCol).as("id_b"),
+        col("__snmkey").as("key_b"), col("__snmrn").as("__snmj"))
       // Repartition BEFORE the checkpoint: AQE coalesces the (w−1)·n
       // candidate rows — a few MB — into ONE partition, and every
       // checkpoint consumer inherits that single partition. The
@@ -1309,36 +1260,12 @@ object Dedup {
       // at any scale — the bruteForceTopK scan-partitioning hazard,
       // same one-linear-exchange fix (measured here: the Damerau DP
       // stage ran 1-partition, 2.3 s; 32-way it is ~0.1 s).
-      sortedNeighborhoodPairsUncached(docs, idCol, key, window)
+      a.join(b, Seq("__snmj"))
+        .select(col("id_a"), col("id_b"), col("key_a"), col("key_b"),
+          (col("__snmj") - col("__rna")).cast("long").as("rdist"))
         .repartition(docs.sparkSession.sparkContext.defaultParallelism)
         .localCheckpoint(true)
     }
-
-  // private[graft]: plan-shape assertions target the unmemoized chain
-  private[graft] def sortedNeighborhoodPairsUncached(docs: DataFrame,
-      idCol: String, key: Column, window: Int): DataFrame = {
-    require(window >= 2, s"window must be >= 2, got $window")
-    val keyed = docs.select(col(idCol), key.as("__snmkey"))
-      .withColumn("__snmall", lit(1))
-    // Materialized once: both neighborhood-join sides read the ranked
-    // table, and the two-level rank behind it is a range exchange + a
-    // window + an offset broadcast — not a chain to run twice.
-    val ranked = graft.functions.GroupRank.withRankAndCount(keyed,
-        Seq("__snmall"), Seq(col("__snmkey").asc, col(idCol).asc),
-        "__snmrn", "__snmn")
-      .select(col(idCol), col("__snmkey"), col("__snmrn"))
-      .localCheckpoint(true)
-    val a = ranked
-      .select(col(idCol).as("id_a"), col("__snmkey").as("key_a"),
-        col("__snmrn").as("__rna"))
-      .select(col("id_a"), col("key_a"), col("__rna"),
-        explode(sequence(col("__rna") + 1,
-          col("__rna") + (window - 1))).as("__snmj"))
-    val b = ranked.select(col(idCol).as("id_b"),
-      col("__snmkey").as("key_b"), col("__snmrn").as("__snmj"))
-    a.join(b, Seq("__snmj"))
-      .select(col("id_a"), col("id_b"), col("key_a"), col("key_b"),
-        (col("__snmj") - col("__rna")).cast("long").as("rdist"))
   }
 
   /** Blocking-quality report: how much of a TRUTH pair set a candidate

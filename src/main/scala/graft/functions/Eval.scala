@@ -551,9 +551,9 @@ object Eval {
     * Input: a [[reliability]] frame (bin, n, n_correct). Output: +
     * (acc_ppm recomputed, cal_ppm) with cal_ppm nondecreasing in bin —
     * the monotone accuracy estimate to threshold on instead of raw
-    * bucket accuracy. Bins are model-sized (<= domain of conf/bin), so
-    * the O(bins^3) hull predicate and the tiny cumulative window are
-    * bounded regardless of corpus size.
+    * bucket accuracy. Bins are model-sized (<= domain of conf/bin); a
+    * table above [[IsotonicMaxBins]] rows fails with a message instead
+    * of flooding the driver.
     */
   def isotonicCalibrate(rel: DataFrame): DataFrame = {
     // The bin table is bounded by CONTRACT (one row per occupied
@@ -572,26 +572,35 @@ object Eval {
     // relational form). The corpus-sized work (reliability's aggregate)
     // stays distributed; downstream consumers read a LocalRelation.
     val spark = rel.sparkSession
-    val pts = rel.select(col("bin").cast("long"), col("n").cast("long"),
-        col("n_correct").cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val rows = rel.select(col("bin").cast("long"), col("n").cast("long"),
+        col("n_correct").cast("long"))
+      .limit(IsotonicMaxBins + 1).collect()
+    if (rows.length > IsotonicMaxBins) throw new IllegalArgumentException(
+      "isotonicCalibrate: the bin table exceeds IsotonicMaxBins " +
+        s"($IsotonicMaxBins rows); use a wider bin")
+    val pts = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1)
     var wAcc = 0L
     var sAcc = 0L
     val cum = pts.map { case (b, n, c) =>
       wAcc += n; sAcc += c; (b, n, c, wAcc, sAcc)
     }
-    val verts = (0L, 0L) +: cum.map(t => (t._4, t._5))
-    // vertex m is ON the minorant iff no chord (j, k) passes strictly
-    // below it — the exact predicate the triple join evaluated
-    val hull = verts.filterNot { case (wm, sm) =>
-      verts.exists { case (wj, sj) =>
-        wj < wm && verts.exists { case (wk, sk) =>
-          wk > wm &&
-            BigInt(sm - sj) * BigInt(wk - wj) >
-              BigInt(sk - sj) * BigInt(wm - wj)
-        }
+    // Vertex m is ON the minorant iff no chord (j, k) passes strictly
+    // below it — the predicate the triple join evaluated. Vertices
+    // arrive in strictly increasing W (counts are positive), so a
+    // monotone-chain lower hull finds the same set in O(B): a vertex is
+    // popped only when it lies STRICTLY above the chord from its
+    // predecessor to the new vertex, so collinear vertices stay.
+    val hull = scala.collection.mutable.ArrayBuffer((0L, 0L))
+    cum.foreach { t =>
+      val (wk, sk) = (t._4, t._5)
+      def above: Boolean = hull.length >= 2 && {
+        val (wj, sj) = hull(hull.length - 2)
+        val (wm, sm) = hull.last
+        BigInt(sm - sj) * BigInt(wk - wj) > BigInt(sk - sj) * BigInt(wm - wj)
       }
+      while (above) hull.remove(hull.length - 1)
+      hull += ((wk, sk))
     }
     // round-half-up of |num|*scale/den with the sign reapplied —
     // fixedPointExact's decimal staging verbatim (den > 0 throughout:
@@ -601,14 +610,15 @@ object Eval {
         BigInt(2L * den)).toLong
       if (num < 0) -q else q
     }
+    // bin i sits on the hull segment (a, b] with Wa < W_i <= Wb: a the
+    // greatest vertex strictly below, b the least at-or-above. W rises
+    // with i, so one forward pointer walks the hull (the origin and the
+    // last vertex are always on it, so both ends exist).
+    var seg = 1
     val outRows: Seq[org.apache.spark.sql.Row] = cum.toSeq.map {
-      case (b, n, c, w, s) =>
-        // bin i sits on the hull segment (a, b] with Wa < W_i <= Wb:
-        // a the greatest vertex strictly below, b the least at-or-above
-        // (W values are distinct — counts are positive — so the struct
-        // max/min the aggregates took is the plain lexicographic one)
-        val (wa, sa) = hull.filter(_._1 < w).max
-        val (wb, sb) = hull.filter(_._1 >= w).min
+      case (b, n, c, w, _) =>
+        while (hull(seg)._1 < w) seg += 1
+        val ((wa, sa), (wb, sb)) = (hull(seg - 1), hull(seg))
         org.apache.spark.sql.Row(b, n, c, fpExact(c, n),
           fpExact(sb - sa, wb - wa))
     }
@@ -622,6 +632,9 @@ object Eval {
       StructField("cal_ppm", LongType, nullable = true)))
     spark.createDataFrame(outRows.asJava, schema)
   }
+
+  /** Largest bin table [[isotonicCalibrate]] collects to the driver. */
+  val IsotonicMaxBins = 100000
 
   /** The relational greatest-convex-minorant fit [[isotonicCalibrate]]
     * replays locally — kept as the executable specification

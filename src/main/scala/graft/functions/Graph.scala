@@ -216,21 +216,13 @@ object Graph {
     * consumers (labels, conductance, modularity over the same SNM
     * graph) run byte-identical 2-round propagations — the NB-memo
     * shared-chain pattern. The artifact is vertex-domain narrow
-    * (id, label); eviction drops references only,
-    * [[Memos.releaseAll]] frees explicitly.
+    * (id, label).
     */
-  private val lpMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
+  private val lpMemo = new PlanMemo[DataFrame]
 
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
       vertices: DataFrame, idCol: String, rounds: Int): DataFrame =
-    lpMemo.getOrBuild(edges.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(edges).canonicalized,
-        aCol, bCol,
-        org.apache.spark.sql.GraftBridge.logicalPlan(vertices).canonicalized,
-        idCol, rounds)) {
+    lpMemo(edges, aCol, bCol, vertices, idCol, rounds) {
       labelPropagationUncached(edges, aCol, bCol, vertices, idCol, rounds)
         .localCheckpoint(true)
     }

@@ -163,81 +163,60 @@ object LangModel {
   /** Session memos ([[PlanMemo]]) for the KN chain's three shared
     * stages — SIX catalog entries (lm_fit, perplexity, the three
     * bucket variants, doremi) rebuilt the identical train/score
-    * pipelines over the same corpus. Capacity 2 where consumers
-    * ALTERNATE between the corpus-wide and per-language keys (a single
-    * slot would thrash on the q_lm_buckets → _perlang → _sampled run
-    * order). Eviction drops references only (consumers hold lazy
-    * views); [[Memos.releaseAll]] frees explicitly.
+    * pipelines over the same corpus.
     */
-  private val lmMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12) // corpus-wide, per-language, held-out-half, ... LMs
-  private val scoreMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
-  private val ppMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
+  private val lmMemo = new PlanMemo[DataFrame]
+  private val scoreMemo = new PlanMemo[DataFrame]
+  private val ppMemo = new PlanMemo[DataFrame]
 
   def knBigramProbs(docs: DataFrame, textCol: String,
       minCount: Long = 1L, groupCols: Seq[String] = Nil): DataFrame =
-    lmMemo.getOrBuild(docs.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(docs).canonicalized,
-        textCol, minCount, groupCols)) {
-      knBigramProbsUncached(docs, textCol, minCount, groupCols)
+    lmMemo(docs, textCol, minCount, groupCols) {
+      val dec = "decimal(38,0)"
+      val gc = groupCols.map(col)
+      val pairs = adjacentPairs(docs.select(gc :+ col(textCol): _*),
+        textCol, groupCols)
+      // Materialized once: the bigram-TYPE table feeds four consumers
+      // (c_a, N1+(·b), N_pairs, the final join) — without it each branch
+      // re-runs the corpus pair scan + count shuffle (exchange reuse only
+      // dedups the shuffle files, not the final aggregation per branch).
+      // The table is type-sized — the thing KenLM materializes on disk —
+      // bounded far below the occurrence stream it came from.
+      val cab = pairs.groupBy(gc ++ Seq(col("tid_a"), col("tid_b")): _*)
+        .agg(count(lit(1)).cast("long").as("c_ab"))
+        .localCheckpoint(true)
+      val ca = cab.groupBy(gc :+ col("tid_a"): _*)
+        .agg(sum(col("c_ab")).cast("long").as("c_a"),
+          count(lit(1)).cast("long").as("n1a"))
+      val contb = cab.groupBy(gc :+ col("tid_b"): _*)
+        .agg(count(lit(1)).cast("long").as("n1b"))
+      val joined =
+        if (groupCols.isEmpty) {
+          val npairs = broadcast(cab.agg(count(lit(1)).cast("long").as("np")))
+          cab.join(ca, Seq("tid_a")).join(contb, Seq("tid_b"))
+            .crossJoin(npairs)
+        } else {
+          val npairs = broadcast(cab.groupBy(gc: _*)
+            .agg(count(lit(1)).cast("long").as("np")))
+          cab.join(ca, groupCols :+ "tid_a")
+            .join(contb, groupCols :+ "tid_b")
+            .join(npairs, groupCols)
+        }
+      joined
+        .withColumn("pkn_q",
+          expr(s"""CAST((CAST(greatest(4 * c_ab - 3, 0) AS $dec) *
+                         CAST(np AS $dec) +
+                         CAST(3 AS $dec) * CAST(n1a AS $dec) *
+                         CAST(n1b AS $dec)) *
+                        CAST(1000000000 AS $dec) div
+                        (CAST(4 AS $dec) * CAST(c_a AS $dec) *
+                         CAST(np AS $dec)) AS BIGINT)"""))
+        .filter(col("c_ab") >= minCount)
+        .withColumn("pkn", col("pkn_q").cast("double") / lit(1e9))
+        .select(gc ++ Seq(col("tid_a"), col("tid_b"), col("c_ab"),
+          col("pkn_q"), col("pkn")): _*)
         .localCheckpoint(true)
     }
-
-  // private[graft]: plan-shape assertions target the unmemoized chain
-  private[graft] def knBigramProbsUncached(docs: DataFrame, textCol: String,
-      minCount: Long = 1L, groupCols: Seq[String] = Nil): DataFrame = {
-    val dec = "decimal(38,0)"
-    val gc = groupCols.map(col)
-    val pairs = adjacentPairs(docs.select(gc :+ col(textCol): _*),
-      textCol, groupCols)
-    // Materialized once: the bigram-TYPE table feeds four consumers
-    // (c_a, N1+(·b), N_pairs, the final join) — without it each branch
-    // re-runs the corpus pair scan + count shuffle (exchange reuse only
-    // dedups the shuffle files, not the final aggregation per branch).
-    // The table is type-sized — the thing KenLM materializes on disk —
-    // bounded far below the occurrence stream it came from.
-    val cab = pairs.groupBy(gc ++ Seq(col("tid_a"), col("tid_b")): _*)
-      .agg(count(lit(1)).cast("long").as("c_ab"))
-      .localCheckpoint(true)
-    val ca = cab.groupBy(gc :+ col("tid_a"): _*)
-      .agg(sum(col("c_ab")).cast("long").as("c_a"),
-        count(lit(1)).cast("long").as("n1a"))
-    val contb = cab.groupBy(gc :+ col("tid_b"): _*)
-      .agg(count(lit(1)).cast("long").as("n1b"))
-    val joined =
-      if (groupCols.isEmpty) {
-        val npairs = broadcast(cab.agg(count(lit(1)).cast("long").as("np")))
-        cab.join(ca, Seq("tid_a")).join(contb, Seq("tid_b"))
-          .crossJoin(npairs)
-      } else {
-        val npairs = broadcast(cab.groupBy(gc: _*)
-          .agg(count(lit(1)).cast("long").as("np")))
-        cab.join(ca, groupCols :+ "tid_a")
-          .join(contb, groupCols :+ "tid_b")
-          .join(npairs, groupCols)
-      }
-    joined
-      .withColumn("pkn_q",
-        expr(s"""CAST((CAST(greatest(4 * c_ab - 3, 0) AS $dec) *
-                       CAST(np AS $dec) +
-                       CAST(3 AS $dec) * CAST(n1a AS $dec) *
-                       CAST(n1b AS $dec)) *
-                      CAST(1000000000 AS $dec) div
-                      (CAST(4 AS $dec) * CAST(c_a AS $dec) *
-                       CAST(np AS $dec)) AS BIGINT)"""))
-      .filter(col("c_ab") >= minCount)
-      .withColumn("pkn", col("pkn_q").cast("double") / lit(1e9))
-      .select(gc ++ Seq(col("tid_a"), col("tid_b"), col("c_ab"),
-        col("pkn_q"), col("pkn")): _*)
-  }
 
   /** Jelinek-Mercer interpolated bigram LM over the bigram event
     * space — the fixed-weight linear-interpolation smoother next to
@@ -390,10 +369,7 @@ object LangModel {
     */
   def knScoreDocs(docs: DataFrame, idCol: String, textCol: String,
       lm: DataFrame, groupCols: Seq[String] = Nil): DataFrame =
-    scoreMemo.getOrBuild(docs.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(docs).canonicalized,
-        org.apache.spark.sql.GraftBridge.logicalPlan(lm).canonicalized,
-        idCol, textCol, groupCols)) {
+    scoreMemo(docs, lm, idCol, textCol, groupCols) {
       knScoreDocsUncached(docs, idCol, textCol, lm, groupCols)
         .localCheckpoint(true)
     }
@@ -442,30 +418,22 @@ object LangModel {
     */
   def perplexityBits(docs: DataFrame, idCol: String, textCol: String,
       lm: DataFrame): DataFrame =
-    ppMemo.getOrBuild(docs.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(docs).canonicalized,
-        org.apache.spark.sql.GraftBridge.logicalPlan(lm).canonicalized,
-        idCol, textCol)) {
-      perplexityBitsUncached(docs, idCol, textCol, lm).localCheckpoint(true)
+    ppMemo(docs, lm, idCol, textCol) {
+      val pairs = adjacentPairs(docs.select(col(idCol), col(textCol)),
+        textCol, Seq(idCol))
+      val scale = graft.plans.FixLog.log2q(1000000000L)
+      pairs
+        .join(lm.select(col("tid_a"), col("tid_b"), col("pkn_q")),
+          Seq("tid_a", "tid_b"))
+        .withColumn("__bq", lit(scale) -
+          graft.plans.FixLog.log2qCol(greatest(col("pkn_q"), lit(1L))))
+        .groupBy(col(idCol))
+        .agg(count(lit(1)).as("n_scored"), sum(col("__bq")).as("__sbq"))
+        .withColumn("bits_q", expr("__sbq div n_scored"))
+        .withColumn("bits", round(col("bits_q").cast("double") / 65536.0, 6))
+        .select(col(idCol), col("n_scored"), col("bits_q"), col("bits"))
+        .localCheckpoint(true)
     }
-
-  // private[graft]: plan-shape assertions target the unmemoized chain
-  private[graft] def perplexityBitsUncached(docs: DataFrame, idCol: String,
-      textCol: String, lm: DataFrame): DataFrame = {
-    val pairs = adjacentPairs(docs.select(col(idCol), col(textCol)),
-      textCol, Seq(idCol))
-    val scale = graft.plans.FixLog.log2q(1000000000L)
-    pairs
-      .join(lm.select(col("tid_a"), col("tid_b"), col("pkn_q")),
-        Seq("tid_a", "tid_b"))
-      .withColumn("__bq", lit(scale) -
-        graft.plans.FixLog.log2qCol(greatest(col("pkn_q"), lit(1L))))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_scored"), sum(col("__bq")).as("__sbq"))
-      .withColumn("bits_q", expr("__sbq div n_scored"))
-      .withColumn("bits", round(col("bits_q").cast("double") / 65536.0, 6))
-      .select(col(idCol), col("n_scored"), col("bits_q"), col("bits"))
-  }
 
   /** CCNet-style LM-fit bucketing (Wenzek et al. 2020, arXiv:1911.00359):
     * rank every document by its [[knScoreDocs]] fit within its language

@@ -132,24 +132,14 @@ object NaiveBayes {
         (col("score_q") - col("__s2")).as("margin_q"))
   }
 
-  /** Single-slot session memo of the last scoring chain, keyed by the
-    * canonicalized input plans + column names + SparkContext identity
-    * (via [[PlanMemo]]) — the eval layer runs classify/margin/
-    * reliability/calibration/AUC/AP over the SAME (train, score) pair,
-    * and each rebuilt the identical tokenize-join-score pipeline
-    * (measured: the six NB-chain catalog entries pay ~2 s each at
-    * sf0.1 rebuilding it). The checkpointed result is documents x
-    * classes — corpus-sized but narrow; eviction only DROPS the
-    * reference (classify's returned frames are lazy views over the
-    * checkpoint, so an eager unpersist would break a caller that holds
-    * one — the Suffix-memo lesson; Spark's ContextCleaner reclaims the
-    * blocks once every consumer is GC'd). [[Memos.releaseAll]] is the
-    * explicit "no consumers remain" hook, which DOES unpersist.
+  /** Session memo ([[PlanMemo]]) of the scoring chain — the eval
+    * layer runs classify/margin/reliability/calibration/AUC/AP over the
+    * SAME (train, score) pair, and each rebuilt the identical
+    * tokenize-join-score pipeline (measured: the six NB-chain catalog
+    * entries pay ~2 s each at sf0.1 rebuilding it). The checkpointed
+    * result is documents x classes — corpus-sized but narrow.
     */
-  private val memo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
+  private val memo = new PlanMemo[DataFrame]
 
   /** The SHARED scoring chain of [[classify]] and
     * [[classifyWithMargin]]: every (document, class) posterior
@@ -172,10 +162,7 @@ object NaiveBayes {
 
   private def rankedScores(train: DataFrame, score: DataFrame,
       idCol: String, textCol: String, classCol: String): DataFrame =
-    memo.getOrBuild(train.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(train).canonicalized,
-        org.apache.spark.sql.GraftBridge.logicalPlan(score).canonicalized,
-        idCol, textCol, classCol)) {
+    memo(train, score, idCol, textCol, classCol) {
       rankedScoresUncached(train, score, idCol, textCol, classCol)
         .localCheckpoint(true)
     }

@@ -2,60 +2,56 @@ package graft.functions
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, GraftBridge}
 
-/** Single-slot, plan-keyed SESSION MEMO for an expensive shared chain
-  * (the pattern behind [[Suffix]]'s rank tables and [[NaiveBayes]]'s
-  * scoring chain, now also the dedup candidate generators): several
+/** Plan-keyed SESSION MEMO for an expensive shared chain: several
   * catalog entries consume the SAME intermediate — byte-identical work
-  * — and without the memo each rebuilds it from scratch.
+  * — and without the memo each rebuilds it from scratch. Every memo in
+  * the engine runs the one policy below; call sites only name the key
+  * and the build.
   *
-  * The slot key ALWAYS includes the owning SparkContext's identity
-  * (instance hash + applicationId) in addition to the caller's
-  * canonicalized-plan key: a canonicalized logical plan is stable
-  * across context restarts (and identical between two sessions reading
-  * the same source), but the memoized value holds `localCheckpoint`
-  * RDD blocks that belong to ONE live context — a hit from a restarted
-  * or foreign context would hand back a frame whose blocks no longer
-  * exist and fail at runtime mid-scan. Keying on the context makes
-  * such a hit a miss, so the chain transparently rebuilds.
+  * Keys: `memo(key*)(build)` replaces every DataFrame in the key by its
+  * canonicalized analyzed plan, so callers pass frames and parameters
+  * as they are (every parameter that changes the result belongs in the
+  * key). The session is the first DataFrame's, and the slot key also
+  * carries its SparkContext identity (instance hash + applicationId): a
+  * canonicalized plan is stable across context restarts, but the value
+  * holds `localCheckpoint` blocks that belong to ONE live context — a
+  * hit from a restarted context would hand back a frame whose blocks no
+  * longer exist. Keying on the context turns that into a rebuild.
   *
-  * Each instance registers itself in the companion, which is how
-  * [[Memos.releaseAll]] finds it.
+  * Eviction: at most [[PlanMemo.Capacity]] slots, least recently used
+  * out first, and eviction only DROPS the reference. Consumers hold
+  * lazy views over the memoized checkpoints, so freeing on evict could
+  * hand one a frame whose blocks are gone; Spark's ContextCleaner
+  * reclaims the blocks once no consumer references them. A failed build
+  * leaves the existing slots intact.
   *
-  * Eviction (a different key arrives) and explicit [[release]] run the
-  * caller-supplied free hooks; both are best-effort (a stopped
-  * context's blocks are already gone and unpersisting them throws —
-  * that exception is swallowed, the storage is reclaimed either way).
-  * Eviction frees AFTER the replacement build succeeds, so a failed
-  * build leaves the old slot intact.
+  * Release: [[release]] (and [[Memos.releaseAll]], which walks the
+  * registry every memo joins on construction) frees every checkpointed
+  * frame reachable in each value — a DataFrame, a tuple or a Seq of
+  * them; other values hold no storage. Freeing is best-effort: a stopped
+  * context's blocks are already gone and unpersisting them throws, which
+  * is swallowed.
   */
-private[graft] final class PlanMemo[V](
-    freeOnEvict: V => Unit, freeOnRelease: V => Unit,
-    capacity: Int = 1) {
-  require(capacity >= 1, s"capacity must be >= 1, got $capacity")
-
+private[graft] final class PlanMemo[V] {
   private val lock = new Object
-  // MRU first; at most `capacity` entries. capacity > 1 exists for
-  // call sites whose consumers ALTERNATE between a small number of
-  // keys (e.g. the corpus-wide and per-language KN chains) — a single
-  // slot would thrash, rebuilding on every alternation.
+  // MRU first; at most PlanMemo.Capacity entries
   private var slots: List[(Seq[Any], V)] = Nil
   PlanMemo.registry.add(this): Unit
 
-  private def freeQuietly(f: V => Unit, v: V): Unit =
-    try f(v) catch { case NonFatal(_) => () }
-
-  /** The memoized value for `key` under `spark`'s context, building
-    * (and evicting the least-recently-used occupant past capacity) on
-    * miss. `key` should be the canonicalized input plan(s) plus every
-    * parameter that changes the result — column names, rounds,
-    * thresholds.
-    */
-  def getOrBuild(spark: SparkSession, key: Seq[Any])(build: => V): V =
+  /** The memoized value for `key`, building on miss. */
+  def apply(key: Any*)(build: => V): V = {
+    val sc = key.collectFirst { case df: Dataset[_] => df.sparkSession }
+      .getOrElse(throw new IllegalArgumentException(
+        "PlanMemo key must contain a DataFrame"))
+      .sparkContext
+    val full = Seq[Any](System.identityHashCode(sc), sc.applicationId) ++
+      key.map {
+        case df: Dataset[_] => GraftBridge.logicalPlan(df).canonicalized
+        case k => k
+      }
     lock.synchronized {
-      val sc = spark.sparkContext
-      val full = Seq[Any](System.identityHashCode(sc), sc.applicationId) ++ key
       slots.find(_._1 == full) match {
         case Some(hit @ (_, v)) =>
           PlanMemo.hits.incrementAndGet()
@@ -64,19 +60,18 @@ private[graft] final class PlanMemo[V](
         case None =>
           val v = build
           PlanMemo.builds.incrementAndGet()
-          slots = (full, v) :: slots
-          if (slots.size > capacity) {
-            freeQuietly(freeOnEvict, slots.last._2)
-            slots = slots.init
-          }
+          slots = ((full, v) :: slots).take(PlanMemo.Capacity)
           v
       }
     }
+  }
 
-  /** Drop every slot and free its storage (callers declare no live
-    * consumers of the memoized frames remain). */
+  /** Drop every slot and free its checkpoint storage (callers declare
+    * no live consumers of the memoized frames remain). */
   def release(): Unit = lock.synchronized {
-    slots.foreach { case (_, v) => freeQuietly(freeOnRelease, v) }
+    slots.foreach { case (_, v) =>
+      try PlanMemo.free(v) catch { case NonFatal(_) => () }
+    }
     slots = Nil
   }
 
@@ -85,8 +80,17 @@ private[graft] final class PlanMemo[V](
 }
 
 private[graft] object PlanMemo {
-  /** A memo whose evict and release hooks are the same `free`. */
-  def apply[V](free: V => Unit): PlanMemo[V] = new PlanMemo(free, free)
+  /** Slots per memo: covers the keys the catalog alternates between
+    * (k=5/k=10 rankings, corpus-wide and per-language LMs, raw and
+    * residual PQ trainings, ...) so no family thrashes. */
+  val Capacity = 12
+
+  private def free(v: Any): Unit = v match {
+    case df: Dataset[_] => GraftBridge.unpersistCheckpoint(df)
+    case s: Iterable[_] => s.foreach(free)
+    case p: Product => p.productIterator.foreach(free)
+    case _ => ()
+  }
 
   // Session-global hit/build counters across EVERY memo instance — the
   // bench harness snapshots them around each catalog entry to attribute

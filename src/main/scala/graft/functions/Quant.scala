@@ -105,23 +105,14 @@ object Quant {
   /** Session memo ([[PlanMemo]]) for the trained PQ model — FOUR
     * catalog entries (q_pq_codes, q_pq_adc, q_ivfpq_topk,
     * q_ivfpq_recall) train the identical (corpus, m, subDim, k, iters)
-    * codebooks, each paying the m sub-quantizer chains. Eviction drops
-    * references only; [[Memos.releaseAll]] frees explicitly.
+    * codebooks, each paying the m sub-quantizer chains.
     */
-  private val pqMemo = new PlanMemo[(DataFrame, DataFrame)](
-    freeOnEvict = _ => (),
-    freeOnRelease = { case (a, c) =>
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(a)
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(c)
-    },
-    capacity = 12) // raw-vector, residual, ... trainings alternate
+  private val pqMemo = new PlanMemo[(DataFrame, DataFrame)]
 
   def pqModel(corpus: DataFrame, m: Int, subDim: Int, k: Int, iters: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): (DataFrame, DataFrame) =
-    pqMemo.getOrBuild(corpus.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(corpus).canonicalized,
-        m, subDim, k, iters, idCol, vecCol)) {
+    pqMemo(corpus, m, subDim, k, iters, idCol, vecCol) {
       val (codes, cb) = pqModelUncached(corpus, m, subDim, k, iters,
         idCol, vecCol)
       (codes.localCheckpoint(true), cb.localCheckpoint(true))

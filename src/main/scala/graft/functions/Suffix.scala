@@ -181,40 +181,27 @@ object Suffix {
     tables.toSeq
   }
 
-  /** Single-slot session memo of the LAST rank-table build, keyed by
-    * the canonicalized input plan + parameters + SparkContext identity
-    * (via [[PlanMemo]]): [[suffixRanks]] and [[lcpAdjacent]] share one
-    * prefix-doubling pipeline — the rank tables are byte-identical
-    * work, and the two catalog consumers were the engine's two
-    * costliest entries precisely because each rebuilt all log2(L)
-    * checkpointed rounds (measured: 9.9 + 11.7 s at sf0.1 min-of-2
-    * rebuilt, 9.9 + 2.8 s shared). Checkpointed tables are frozen
-    * data, so reuse is sound for the same logical input under the SAME
-    * context; the slot holds one build (evicting unpersists), and
-    * [[releaseShared]] frees it explicitly — at 100 TB the memo is
-    * log2(L) corpus-sized checkpoint files, a deliberate cache, not a
-    * leak.
+  /** Session memo ([[PlanMemo]]) of the rank-table build:
+    * [[suffixRanks]] and [[lcpAdjacent]] share one prefix-doubling
+    * pipeline — the rank tables are byte-identical work, and the two
+    * catalog consumers were the engine's two costliest entries
+    * precisely because each rebuilt all log2(L) checkpointed rounds
+    * (measured: 9.9 + 11.7 s at sf0.1 min-of-2 rebuilt, 9.9 + 2.8 s
+    * shared). At 100 TB the memo is log2(L) corpus-sized checkpoint
+    * files, a deliberate cache, not a leak.
     */
-  private val memo = PlanMemo[Seq[DataFrame]](
-    _.foreach(GraftBridge.unpersistCheckpoint))
+  private val memo = new PlanMemo[Seq[DataFrame]]
 
   private def sharedRankTables(docs: DataFrame, idCol: String,
       textCol: String, rounds: Int): Seq[DataFrame] =
-    memo.getOrBuild(docs.sparkSession,
-        Seq(GraftBridge.logicalPlan(docs).canonicalized, idCol, textCol,
-          rounds)) {
+    memo(docs, idCol, textCol, rounds) {
       rankTables(docs, idCol, textCol, rounds)
     }
 
-  /** Drop the shared rank-table memo and free its checkpoint storage. */
-  def releaseShared(): Unit = memo.release()
-
   /** Suffix ranks by the first 2^rounds tokens:
     * (idCol, pos, srank) — dense, deterministic. The result is
-    * checkpointed INDEPENDENTLY of the shared memo: a later build for
-    * a different input evicts (and unpersists) the memo's tables, and
-    * a still-lazy result referencing them would die on missing
-    * checkpoint blocks — so the returned frame must own its storage.
+    * checkpointed INDEPENDENTLY of the shared memo, so it owns its
+    * storage whatever later happens to the memo's tables.
     */
   def suffixRanks(docs: DataFrame, idCol: String, textCol: String,
       rounds: Int): DataFrame =
@@ -274,8 +261,8 @@ object Suffix {
         .select(col("__ida"), col("__posa"), col("__idb"), col("__posb"),
           col("__lena"), col("__lcp"))
     }
-    // the rank tables stay alive in the shared memo (released on the
-    // next different build or via releaseShared)
+    // the rank tables stay alive in the shared memo (freed by
+    // Memos.releaseAll)
     pairs.select(col("__ida").as("id_a"), col("__posa").as("pos_a"),
       col("__idb").as("id_b"), col("__posb").as("pos_b"),
       col("__lcp").as("lcp")).localCheckpoint(true)

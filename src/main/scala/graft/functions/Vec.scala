@@ -189,25 +189,15 @@ object Vec {
     */
   /** Session memos for the bounded (queries × k) top-k rankings — the
     * eval layer (recall/NDCG/RBO/IVF-PQ grades) reruns the same exact
-    * and IVF rankings as its truth/approx sides. Capacity 3: the
-    * catalog alternates between k=5/k=10 and the recon-corpus keys.
+    * and IVF rankings as its truth/approx sides.
     */
-  private val bfMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
-  private val ivfMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
+  private val bfMemo = new PlanMemo[DataFrame]
+  private val ivfMemo = new PlanMemo[DataFrame]
 
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       excludeSelf: Boolean = true): DataFrame =
-    bfMemo.getOrBuild(queries.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(queries).canonicalized,
-        org.apache.spark.sql.GraftBridge.logicalPlan(corpus).canonicalized,
-        k, idCol, vecCol, excludeSelf)) {
+    bfMemo(queries, corpus, k, idCol, vecCol, excludeSelf) {
       bruteForceTopKUncached(queries, corpus, k, idCol, vecCol, excludeSelf)
         .localCheckpoint(true)
     }
@@ -369,24 +359,13 @@ object Vec {
 
   /** Residual-IVF shared tables: (cell centroids, residual vectors),
     * keyed by the corpus plan — see [[ivfPqResidualTopK]]. */
-  private val residMemo = new PlanMemo[(DataFrame, DataFrame)](
-    freeOnEvict = _ => (),
-    freeOnRelease = { case (c, r) =>
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(c)
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(r)
-    },
-    capacity = 12)
+  private val residMemo = new PlanMemo[(DataFrame, DataFrame)]
 
-  private val nndMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
+  private val nndMemo = new PlanMemo[DataFrame]
 
   def nnDescent(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
       nBits: Int = 4, rounds: Int = 3, ringWindow: Int = 8): DataFrame =
-    nndMemo.getOrBuild(vecs.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(vecs).canonicalized,
-        idCol, vecCol, k, nBits, rounds, ringWindow)) {
+    nndMemo(vecs, idCol, vecCol, k, nBits, rounds, ringWindow) {
       nnDescentUncached(vecs, idCol, vecCol, k, nBits, rounds, ringWindow)
         .localCheckpoint(true)
     }
@@ -699,77 +678,65 @@ object Vec {
     * vector join, one per-query window bounded by beam·degree. The
     * graph is the only corpus-sized input; beams are queries×beam.
     */
-  private val beamMemo = new PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint,
-    capacity = 12)
+  private val beamMemo = new PlanMemo[DataFrame]
 
   def graphBeamSearch(graph: DataFrame, vecs: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      beam: Int, hops: Int): DataFrame =
-    beamMemo.getOrBuild(vecs.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(graph).canonicalized,
-        org.apache.spark.sql.GraftBridge.logicalPlan(vecs).canonicalized,
-        org.apache.spark.sql.GraftBridge.logicalPlan(queries).canonicalized,
-        idCol, vecCol, k, beam, hops)) {
-      graphBeamSearchUncached(graph, vecs, queries, idCol, vecCol, k,
-        beam, hops).localCheckpoint(true)
-    }
-
-  private[graft] def graphBeamSearchUncached(graph: DataFrame,
-      vecs: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, beam: Int, hops: Int): DataFrame = {
+      beam: Int, hops: Int): DataFrame = {
     require(k >= 1 && beam >= k, s"need beam >= k >= 1, got k=$k beam=$beam")
     require(hops >= 1, s"hops must be >= 1, got $hops")
-    val base = vecs.select(col(idCol).cast("long").as("__id"),
-      col(vecCol).as("__v"),
-      sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol), col(vecCol)))
-        .as("__n"))
-    val q = broadcast(queries.select(col(idCol).cast("long").as("__q"))
-      .join(base.withColumnRenamed("__id", "__q"), Seq("__q"))
-      .select(col("__q"), col("__v").as("__qv"), col("__n").as("__qn")))
-    val e = graph.select(col("node_id").as("__s"),
-      col("neighbor_id").as("__d"))
-    val adj = e.unionByName(
-        e.select(col("__d").as("__s"), col("__s").as("__d")))
-      .distinct()
-      .localCheckpoint(true)
-    val entry = base
-      .select(col("__id"),
-        Sampling.hashOrder(col("__id")).as("__h"))
-      .orderBy(col("__h").asc, col("__id").asc)
-      .limit(1)
-      .select(col("__id").as("__d"))
-    def score(cand: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("__q"))
-        .orderBy(col("sim").desc, col("__d").asc)
-      cand
-        .join(base.select(col("__id").as("__d"), col("__v").as("__dv"),
-          col("__n").as("__dn")), Seq("__d"))
-        .join(q, Seq("__q"))
-        .select(col("__q"), col("__d"),
-          pairSim(col("__qv"), col("__dv"), col("__qn"), col("__dn"))
-            .as("sim"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-    }
-    // the entry beam is an UNSCORED set (it may even be the query
-    // itself); the self-exclusion runs at every candidate stage, so a
-    // query that happens to be the entry node still seeds from its
-    // own adjacency instead of an empty beam
-    var bm = q.select(col("__q")).crossJoin(broadcast(entry))
-    for (_ <- 1 to hops) {
-      val cand = bm.select(col("__q"), col("__d"))
-        .join(adj.select(col("__s").as("__d"), col("__d").as("__d2")),
-          Seq("__d"))
-        .select(col("__q"), col("__d2").as("__d"))
-        .unionByName(bm.select(col("__q"), col("__d")))
-        .filter(col("__q") =!= col("__d"))
+    beamMemo(graph, vecs, queries, idCol, vecCol, k, beam, hops) {
+      val base = vecs.select(col(idCol).cast("long").as("__id"),
+        col(vecCol).as("__v"),
+        sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol), col(vecCol)))
+          .as("__n"))
+      val q = broadcast(queries.select(col(idCol).cast("long").as("__q"))
+        .join(base.withColumnRenamed("__id", "__q"), Seq("__q"))
+        .select(col("__q"), col("__v").as("__qv"), col("__n").as("__qn")))
+      val e = graph.select(col("node_id").as("__s"),
+        col("neighbor_id").as("__d"))
+      val adj = e.unionByName(
+          e.select(col("__d").as("__s"), col("__s").as("__d")))
         .distinct()
-      bm = score(cand).filter(col("rank") <= beam).localCheckpoint(true)
+        .localCheckpoint(true)
+      val entry = base
+        .select(col("__id"),
+          Sampling.hashOrder(col("__id")).as("__h"))
+        .orderBy(col("__h").asc, col("__id").asc)
+        .limit(1)
+        .select(col("__id").as("__d"))
+      def score(cand: DataFrame): DataFrame = {
+        val w = Window.partitionBy(col("__q"))
+          .orderBy(col("sim").desc, col("__d").asc)
+        cand
+          .join(base.select(col("__id").as("__d"), col("__v").as("__dv"),
+            col("__n").as("__dn")), Seq("__d"))
+          .join(q, Seq("__q"))
+          .select(col("__q"), col("__d"),
+            pairSim(col("__qv"), col("__dv"), col("__qn"), col("__dn"))
+              .as("sim"))
+          .withColumn("rank", row_number().over(w).cast("long"))
+      }
+      // the entry beam is an UNSCORED set (it may even be the query
+      // itself); the self-exclusion runs at every candidate stage, so a
+      // query that happens to be the entry node still seeds from its
+      // own adjacency instead of an empty beam
+      var bm = q.select(col("__q")).crossJoin(broadcast(entry))
+      for (_ <- 1 to hops) {
+        val cand = bm.select(col("__q"), col("__d"))
+          .join(adj.select(col("__s").as("__d"), col("__d").as("__d2")),
+            Seq("__d"))
+          .select(col("__q"), col("__d2").as("__d"))
+          .unionByName(bm.select(col("__q"), col("__d")))
+          .filter(col("__q") =!= col("__d"))
+          .distinct()
+        bm = score(cand).filter(col("rank") <= beam).localCheckpoint(true)
+      }
+      bm.filter(col("rank") <= k)
+        .select(col("__q").as("query_id"), col("__d").as("neighbor_id"),
+          col("sim"), col("rank"))
+        .localCheckpoint(true)
     }
-    bm.filter(col("rank") <= k)
-      .select(col("__q").as("query_id"), col("__d").as("neighbor_id"),
-        col("sim"), col("rank"))
   }
 
   /** Dimension-wise mean vector (centroid) per group — embedding pooling
@@ -829,24 +796,13 @@ object Vec {
     * catalog entries train the identical (corpus, k, iters) model
     * (q_kmeans, q_semdedup, q_mutual_knn, q_ivf_kmeans,
     * q_split_by_cluster), each re-running the full iterative chain.
-    * Capacity 12: the catalog alternates between the fixed-k and the
-    * derived-kCells keys. Eviction drops references only (consumers
-    * hold lazy views); [[Memos.releaseAll]] frees explicitly.
     */
-  private val kmMemo = new PlanMemo[(DataFrame, DataFrame)](
-    freeOnEvict = _ => (),
-    freeOnRelease = { case (a, c) =>
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(a)
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(c)
-    },
-    capacity = 12)
+  private val kmMemo = new PlanMemo[(DataFrame, DataFrame)]
 
   def kmeansModel(corpus: DataFrame, k: Int, iters: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): (DataFrame, DataFrame) =
-    kmMemo.getOrBuild(corpus.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(corpus).canonicalized,
-        k, iters, idCol, vecCol)) {
+    kmMemo(corpus, k, iters, idCol, vecCol) {
       val (a, c) = kmeansModelUncached(corpus, k, iters, idCol, vecCol)
       (a.localCheckpoint(true), c.localCheckpoint(true))
     }
@@ -994,10 +950,8 @@ object Vec {
       cellCol: String, idCol: String = "vec_id",
       vecCol: String = "embedding",
       excludeSelf: Boolean = true): DataFrame =
-    ivfMemo.getOrBuild(corpus.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(corpus).canonicalized,
-        org.apache.spark.sql.GraftBridge.logicalPlan(queries).canonicalized,
-        k, nProbe, cellCol, idCol, vecCol, excludeSelf)) {
+    ivfMemo(corpus, queries, k, nProbe, cellCol, idCol, vecCol,
+        excludeSelf) {
       ivfTopKUncached(corpus, queries, k, nProbe, cellCol, idCol, vecCol,
         excludeSelf).localCheckpoint(true)
     }
@@ -1131,9 +1085,7 @@ object Vec {
     // plan so the residual ladder's entries (topk/recall) keep handing
     // pqModel the SAME checkpoint — its plan-keyed memo still hits
     // across entries.
-    val (centroids, resid) = residMemo.getOrBuild(corpus.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(corpus).canonicalized,
-        cellCol, idCol, vecCol)) {
+    val (centroids, resid) = residMemo(corpus, cellCol, idCol, vecCol) {
       val cents = groupCentroids(
         corpus.select(col(cellCol).as("cell"), col(vecCol)), "cell", vecCol)
         .localCheckpoint(true)

@@ -165,9 +165,7 @@ object Media {
     * [[textAsPng]] call creates a fresh mapPartitions closure, and
     * closure-bearing plans only canonicalize equal by reference).
     */
-  private val thumbMemo = new graft.functions.PlanMemo[DataFrame](
-    freeOnEvict = _ => (),
-    freeOnRelease = org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
+  private val thumbMemo = new graft.functions.PlanMemo[DataFrame]
 
   /** [[textAsPng]] → [[imageThumbnails]] as ONE memo-shared relation:
     * (media_id, thumb). Catalog entries that agree on the source and
@@ -176,15 +174,10 @@ object Media {
     */
   def thumbnailsOfText(docs: DataFrame, idCol: String, textCol: String,
       w: Int, h: Int, k: Int): DataFrame =
-    thumbMemo.getOrBuild(docs.sparkSession, Seq(
-        org.apache.spark.sql.GraftBridge.logicalPlan(docs).canonicalized,
-        idCol, textCol, w, h, k)) {
+    thumbMemo(docs, idCol, textCol, w, h, k) {
       imageThumbnails(textAsPng(docs, idCol, textCol, w, h), k)
         .localCheckpoint(true)
     }
-
-  /** Drop the shared thumbnail slot (see [[graft.functions.Memos]]). */
-  def releaseThumbMemo(): Unit = thumbMemo.release()
 
   /** Decode + nearest-neighbor thumbnail per payload: (media_id, thumb)
     * with thumb a k*k float vector in [0,1] — image content lifted into

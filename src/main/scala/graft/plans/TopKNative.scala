@@ -23,16 +23,15 @@ import org.apache.spark.sql.{DataFrame, GraftBridge}
   * twice).
   *
   * Memory: the partial phase holds k rows per distinct key per open
-  * partition, bounded by a key budget
-  * (`spark.graft.topk.maxPartialKeys`, default 262144): when a partition
-  * holds more distinct keys than the budget, the open heaps are emitted
-  * and the phase restarts — emitting more than k rows per key across
-  * flushes is harmless because the final phase re-truncates after the
-  * shuffle, exactly like a partial aggregation falling back to
-  * pass-through. The FINAL phase (post-shuffle) still holds k rows per
-  * key in its partition with no spill, like a hash aggregate; for
-  * adversarial total key cardinality at tiny memory prefer the window
-  * formulation, whose sort spills.
+  * partition, bounded by a key budget ([[TopKStrategy.MaxPartialKeys]]):
+  * when a partition holds more distinct keys than the budget, the open
+  * heaps are emitted and the phase restarts — emitting more than k rows
+  * per key across flushes is harmless because the final phase
+  * re-truncates after the shuffle, exactly like a partial aggregation
+  * falling back to pass-through. The FINAL phase (post-shuffle) still
+  * holds k rows per key in its partition with no spill, like a hash
+  * aggregate; for adversarial total key cardinality at tiny memory
+  * prefer the window formulation, whose sort spills.
   */
 object TopKNative {
 
@@ -97,17 +96,13 @@ case class TopKPerKeyNode(keys: Seq[Expression], ordering: Seq[SortOrder],
 }
 
 object TopKStrategy extends SparkStrategy {
-  val MaxPartialKeysConf = "spark.graft.topk.maxPartialKeys"
+  /** Distinct keys one partial-phase partition holds open before it
+    * flushes its heaps. */
+  val MaxPartialKeys = 262144
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case n: TopKPerKeyNode =>
-      val maxKeys = org.apache.spark.sql.internal.SQLConf.get
-        .getConfString(MaxPartialKeysConf, "262144").toInt
-      // maxKeys <= 0 would make the partial phase's budget unfillable and
-      // silently emit ZERO rows — reject at planning, loudly.
-      if (maxKeys < 1) throw new IllegalArgumentException(
-        s"$MaxPartialKeysConf must be >= 1, got $maxKeys")
-      val partial = TopKPartialExec(n.keys, n.ordering, n.k, maxKeys,
+      val partial = TopKPartialExec(n.keys, n.ordering, n.k, MaxPartialKeys,
         planLater(n.child))
       TopKFinalExec(n.keys, n.ordering, n.k, n.rankAttr, partial) :: Nil
     case _ => Nil
@@ -115,7 +110,7 @@ object TopKStrategy extends SparkStrategy {
 }
 
 /** Shared bounded-heap truncation over InternalRows. */
-private[plans] object TopKRuntime {
+private[graft] object TopKRuntime {
   def localTopK(it: Iterator[InternalRow], keys: Seq[Expression],
       ordering: Seq[SortOrder], k: Int,
       input: Seq[Attribute]): Iterator[(InternalRow, mutable.PriorityQueue[InternalRow])] = {

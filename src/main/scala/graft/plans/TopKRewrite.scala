@@ -27,16 +27,12 @@ import org.apache.spark.sql.types.IntegerType
   */
 object TopKRewrite extends Rule[LogicalPlan] {
 
-  val MaxRewriteKConf = "spark.graft.topk.maxRewriteK"
-
   /** The bounded operator holds k rows per key in MEMORY with no spill;
     * the window plan it replaces sorts with spill. Above this k the
     * trade inverts (a huge rank filter is effectively "keep everything"),
     * so the rewrite declines and the spillable window plan stands.
     */
-  private def maxRewriteK: Int =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(MaxRewriteKConf, "100000").toInt
+  val MaxRewriteK = 100000
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond,
@@ -49,7 +45,7 @@ object TopKRewrite extends Rule[LogicalPlan] {
         // leave unpartitioned windows to the normal planner.
         if orderSpec.nonEmpty && partitionSpec.nonEmpty =>
       boundOf(cond, alias.toAttribute) match {
-        case Some(k) if k > 0 && k <= maxRewriteK =>
+        case Some(k) if k > 0 && k <= MaxRewriteK =>
           // Spark's InsertWindowGroupLimit may already have wrapped the
           // child; those nodes (which still fully sort each partition)
           // become redundant once the bounded-heap operator takes over.

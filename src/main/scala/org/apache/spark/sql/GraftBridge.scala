@@ -104,12 +104,18 @@ object GraftBridge {
     * like a bucketed table's) hash partitioning on `partitionCols`
     * into `numPartitions` with rows sorted by `ordering`
     * (name, ascending); descending orders carry NULLS LAST and
-    * ascending NULLS FIRST, the window/sort defaults.
+    * ascending NULLS FIRST, the window/sort defaults. Fails loudly on a
+    * frame that is not an eager checkpoint or whose partition count
+    * differs from `numPartitions`.
     */
   def relabelCheckpointLayout(df: Dataset[_], partitionCols: Seq[String],
       ordering: Seq[(String, Boolean)], numPartitions: Int): DataFrame =
     df.queryExecution.analyzed match {
       case l: execution.LogicalRDD =>
+        require(l.rdd.getNumPartitions == numPartitions,
+          "relabelCheckpointLayout: the checkpoint has " +
+            s"${l.rdd.getNumPartitions} partitions, the declared layout " +
+            s"$numPartitions")
         val attr = l.output.map(a => a.name -> a).toMap
         val part = catalyst.plans.physical.HashPartitioning(
           partitionCols.map(attr), numPartitions)
@@ -122,7 +128,9 @@ object GraftBridge {
         classic.Dataset.ofRows(cs,
           l.copy(outputPartitioning = part, outputOrdering = ord)(
             cs, None, None))
-      case _ => df.toDF()
+      case other => throw new IllegalArgumentException(
+        "relabelCheckpointLayout needs an eagerly checkpointed frame " +
+          s"(a LogicalRDD plan), got ${other.nodeName}")
     }
 
   /** Register a function into a LIVE session's registry (builder-time

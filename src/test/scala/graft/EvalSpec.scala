@@ -332,6 +332,14 @@ class EvalSpec extends AnyFunSuite {
     assert(got.values.forall { case (acc, cal) => acc == cal }, got)
   }
 
+  test("isotonicCalibrate: a bin table above IsotonicMaxBins fails " +
+      "with a message") {
+    val rel = spark.range(Eval.IsotonicMaxBins + 1L)
+      .select(col("id").as("bin"), lit(1L).as("n"), lit(0L).as("n_correct"))
+    val e = intercept[IllegalArgumentException](Eval.isotonicCalibrate(rel))
+    assert(e.getMessage.contains("exceeds IsotonicMaxBins"), e.getMessage)
+  }
+
   test("classifyWithMargin: margin = best minus runner-up, prediction " +
       "matches classify") {
     val docs = Seq((1L, "aa aa bb", "x"), (2L, "cc cc dd", "y"),

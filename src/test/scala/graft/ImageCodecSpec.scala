@@ -125,7 +125,7 @@ class ImageCodecSpec extends AnyFunSuite {
 
   test("thumbnailsOfText memo: hit on same source+params, miss on " +
       "different k, results match the uncached chain") {
-    Media.releaseThumbMemo()
+    graft.functions.Memos.releaseAll()
     val docs = Seq((1L, "abcdefgh"), (2L, "zyxwvuts")).toDF("doc_id", "text")
     val direct = Media.imageThumbnails(
         Media.textAsPng(docs, "doc_id", "text", w = 4, h = 2), 2)
@@ -147,6 +147,6 @@ class ImageCodecSpec extends AnyFunSuite {
     val k1 = Media.thumbnailsOfText(docs, "doc_id", "text", 4, 2, 1)
       .collect().map(r => r.getSeq[Float](1).length).toSet
     assert(k1 == Set(1))
-    Media.releaseThumbMemo()
+    graft.functions.Memos.releaseAll()
   }
 }

@@ -1,66 +1,122 @@
 package graft
 
-import scala.collection.mutable.ListBuffer
-
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.functions.PlanMemo
 
-/** The single-slot plan-keyed memo behind the shared Suffix/NB/dedup
-  * chains: hit-vs-evict semantics, free hooks, and hook-failure
-  * swallowing (a stopped context's blocks are already gone).
+/** The one memo policy behind every shared chain: plan-canonicalized
+  * keys, drop-only LRU eviction at [[PlanMemo.Capacity]], release that
+  * frees every checkpoint in the value, swallowed free failures, and a
+  * failed build that keeps the old slot.
   */
 class PlanMemoSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("same key hits, key change evicts and frees the old value, " +
-      "release frees and empties") {
-    val freed = ListBuffer[Int]()
-    val memo = PlanMemo[Int](v => freed += v)
+  private def checkpointed(n: Int): DataFrame =
+    spark.range(n).toDF("id").localCheckpoint(true)
+
+  private def rddId(df: DataFrame): Int =
+    df.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
+
+  private def stored: Set[Int] =
+    spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  test("a plan-equal key hits without rebuilding") {
+    val memo = new PlanMemo[Int]
     var builds = 0
     def build(v: Int): Int = { builds += 1; v }
-    assert(memo.getOrBuild(spark, Seq("k1"))(build(1)) == 1)
-    assert(memo.getOrBuild(spark, Seq("k1"))(build(99)) == 1,
-      "second call with the same key must return the memoized value")
-    assert(builds == 1, "the hit must not re-run the build")
-    assert(memo.getOrBuild(spark, Seq("k2"))(build(2)) == 2)
-    assert(freed.toSeq == Seq(1), "eviction frees the displaced value")
-    assert(memo.isOccupied)
+    val (h0, b0) = PlanMemo.counters
+    assert(memo(spark.range(5), "k")(build(1)) == 1)
+    assert(memo(spark.range(5), "k")(build(99)) == 1,
+      "a re-derived frame with the same plan must hit")
+    assert(memo(spark.range(6), "k")(build(2)) == 2,
+      "a different plan is a different key")
+    assert(memo(spark.range(5), "other")(build(3)) == 3,
+      "a different parameter is a different key")
+    assert(builds == 3)
+    val (h1, b1) = PlanMemo.counters
+    assert(h1 - h0 == 1 && b1 - b0 == 3)
     memo.release()
-    assert(freed.toSeq == Seq(1, 2))
-    assert(!memo.isOccupied)
-    memo.release() // idempotent on empty
-    assert(freed.toSeq == Seq(1, 2))
   }
 
-  test("a throwing free hook is swallowed; the slot still advances") {
-    val memo = PlanMemo[Int](_ => throw new IllegalStateException("gone"))
-    assert(memo.getOrBuild(spark, Seq("a"))(1) == 1)
-    assert(memo.getOrBuild(spark, Seq("b"))(2) == 2,
-      "evict of a dead value must not propagate its unpersist failure")
-    memo.release()
-    assert(!memo.isOccupied)
+  test("a key without a DataFrame is rejected") {
+    val memo = new PlanMemo[Int]
+    val e = intercept[IllegalArgumentException](memo("k")(1))
+    assert(e.getMessage.contains("DataFrame"))
   }
 
-  test("distinct evict/release hooks: NB keeps lazy views alive on " +
-      "evict but frees on explicit release") {
-    val evicted = ListBuffer[Int]()
-    val released = ListBuffer[Int]()
-    val memo = new PlanMemo[Int](evicted += _, released += _)
-    memo.getOrBuild(spark, Seq(1))(10)
-    memo.getOrBuild(spark, Seq(2))(20)
-    assert(evicted.toSeq == Seq(10) && released.isEmpty)
+  test("eviction at Capacity drops the least recently used slot and " +
+      "frees nothing") {
+    val memo = new PlanMemo[DataFrame]
+    val key = spark.range(1)
+    val vals = (0 to PlanMemo.Capacity).map { i =>
+      memo(key, i)(checkpointed(i + 1))
+    }
+    // slot 0 was least recently used when slot Capacity arrived
+    var rebuilt = false
+    memo(key, 1) { rebuilt = true; checkpointed(1) }
+    assert(!rebuilt, "slot 1 must still be held")
+    memo(key, 0) { rebuilt = true; checkpointed(1) }
+    assert(rebuilt, "slot 0 must have been evicted")
+    // eviction only dropped the references: every displaced frame
+    // (slot 0, then slot 2 for the rebuilt slot 0) still reads
+    assert(stored.contains(rddId(vals(0))) && stored.contains(rddId(vals(2))))
+    assert(vals(0).count() == 1 && vals(2).count() == 3)
     memo.release()
-    assert(released.toSeq == Seq(20))
+    vals.foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
+  }
+
+  test("release frees DataFrame, tuple and Seq values, and empties the " +
+      "memo") {
+    val key = spark.range(1)
+    val single = new PlanMemo[DataFrame]
+    val pair = new PlanMemo[(DataFrame, DataFrame)]
+    val many = new PlanMemo[Seq[DataFrame]]
+    val count = new PlanMemo[Long]
+    val a = single(key)(checkpointed(2))
+    val (b, c) = pair(key)((checkpointed(3), checkpointed(4)))
+    val ds = many(key)(Seq(checkpointed(5), checkpointed(6)))
+    count(key)(7L)
+    val ids = (Seq(a, b, c) ++ ds).map(rddId)
+    assert(ids.forall(stored.contains))
+    Seq(single, pair, many, count).foreach(_.release())
+    assert(Seq(single, pair, many, count).forall(!_.isOccupied))
+    eventually(timeout(30.seconds), interval(200.millis)) {
+      assert((stored & ids.toSet).isEmpty)
+    }
+    single.release() // idempotent on empty
+  }
+
+  test("a failing free is swallowed and the other slots are still freed") {
+    val memo = new PlanMemo[Iterable[DataFrame]]
+    val key = spark.range(1)
+    // stands in for a stopped context, whose unpersist throws
+    val dead = new Iterable[DataFrame] {
+      def iterator: Iterator[DataFrame] =
+        throw new IllegalStateException("context stopped")
+    }
+    memo(key, "dead")(dead)
+    val live = memo(key, "live")(Seq(checkpointed(2)))
+    memo.release()
+    assert(!memo.isOccupied)
+    eventually(timeout(30.seconds), interval(200.millis)) {
+      assert(!stored.contains(rddId(live.head)))
+    }
   }
 
   test("a failed build leaves the previous slot intact") {
-    val memo = PlanMemo[Int](_ => ())
-    memo.getOrBuild(spark, Seq("x"))(7)
+    val memo = new PlanMemo[Int]
+    val key = spark.range(1)
+    memo(key, "x")(7)
     intercept[RuntimeException] {
-      memo.getOrBuild(spark, Seq("y"))(throw new RuntimeException("boom"))
+      memo(key, "y")(throw new RuntimeException("boom"))
     }
-    assert(memo.getOrBuild(spark, Seq("x"))(8) == 7,
+    assert(memo(key, "x")(8) == 7,
       "the old value must survive a failed replacement build")
+    memo.release()
   }
 }

@@ -675,4 +675,30 @@ class PlanSpec extends AnyFunSuite {
     assert(rp.contains("ReadSchema: struct<doc_id:bigint,text:string>"),
       rp)
   }
+
+  test("relabelCheckpointLayout rejects a lazy frame and a wrong " +
+      "partition count") {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.functions.col
+    val lazyDf = spark.range(100).toDF("id")
+    val lazyErr = intercept[IllegalArgumentException] {
+      GraftBridge.relabelCheckpointLayout(lazyDf, Seq("id"),
+        Seq(("id", true)), 4)
+    }
+    assert(lazyErr.getMessage.contains("LogicalRDD"), lazyErr.getMessage)
+    val laid = lazyDf.repartition(4, col("id"))
+      .sortWithinPartitions(col("id")).localCheckpoint(true)
+    val partErr = intercept[IllegalArgumentException] {
+      GraftBridge.relabelCheckpointLayout(laid, Seq("id"),
+        Seq(("id", true)), 8)
+    }
+    assert(partErr.getMessage.contains("4 partitions"), partErr.getMessage)
+    // the true layout relabels, and a same-key aggregate then needs no
+    // exchange
+    val ok = GraftBridge.relabelCheckpointLayout(laid, Seq("id"),
+      Seq(("id", true)), 4)
+    val p = ok.groupBy(col("id")).count().queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), p)
+    GraftBridge.unpersistCheckpoint(laid)
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.Suffix
+import graft.functions.{Memos, Suffix}
 
 /** Prefix-doubling suffix ranking: brute-force equivalence of the rank
   * order and adjacent LCPs, planted repeated-phrase recovery, and the
@@ -62,7 +62,7 @@ class SuffixSpec extends AnyFunSuite {
           "doc_id", "text", rounds)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
       assert(got == expect, s"rounds=$rounds seed=$seed")
-      Suffix.releaseShared()
+      Memos.releaseAll()
     }
   }
 

@@ -103,48 +103,51 @@ class TopKExtensionsSpec extends AnyFunSuite {
   }
 
   test("partial key budget: adversarial cardinality at a tiny budget stays exact") {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
     // ~1000 distinct custkeys per partition vs a budget of 4 forces
-    // hundreds of flush rounds; the final phase must still produce the
-    // exact window-formulation answer.
-    spark.conf.set(graft.plans.TopKStrategy.MaxPartialKeysConf, "4")
-    try {
-      val o = Tables.orders(spark, "/root/testdata/sf0.001").coalesce(2)
-      val expected = graft.plans.TopK.topKPerKey(o, Seq("o_custkey"),
-          "o_totalprice", "o_orderkey", 3)
-        .select(col("o_custkey"), col("o_orderkey"), col("rank").cast("long"))
-        .collect().map(_.toString).sorted.toSeq
-      val got = graft.plans.TopKNative.topKPerKey(o, Seq("o_custkey"),
-          "o_totalprice", "o_orderkey", k = 3, descending = true)
-        .select(col("o_custkey"), col("o_orderkey"), col("rank"))
-        .collect().map(_.toString).sorted.toSeq
-      assert(got === expected)
-    } finally {
-      spark.conf.unset(graft.plans.TopKStrategy.MaxPartialKeysConf)
-    }
+    // hundreds of flush rounds; finishing the per-key top-k over the
+    // partial output must still give the exact answer.
+    val o = Tables.orders(spark, "/root/testdata/sf0.001").coalesce(2)
+      .select(col("o_custkey").cast("long").as("o_custkey"),
+        col("o_orderkey").cast("long").as("o_orderkey"),
+        col("o_totalprice").cast("double").as("o_totalprice"))
+    val input = o.queryExecution.executedPlan.output
+    val Seq(cust, ord, price) = input
+    val keys = Seq(cust)
+    val ordering = Seq(SortOrder(price, Descending), SortOrder(ord, Ascending))
+    def partial(budget: Int) = o.queryExecution.toRdd.mapPartitions { it =>
+      graft.plans.TopKRuntime.partialTopK(it, keys, ordering, 3, budget,
+          input)
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    }.collect()
+    val tiny = partial(4)
+    assert(tiny.length > partial(graft.plans.TopKStrategy.MaxPartialKeys)
+      .length, "the tiny budget must force flush rounds")
+    val got = tiny.groupBy(_._1).toSeq.flatMap { case (c, rows) =>
+      rows.sortBy(r => (-r._3, r._2)).take(3).zipWithIndex
+        .map { case (r, i) => (c, r._2, i + 1L) }
+    }.sorted
+    val expected = graft.plans.TopK.topKPerKey(o, Seq("o_custkey"),
+        "o_totalprice", "o_orderkey", 3)
+      .select(col("o_custkey"), col("o_orderkey"), col("rank").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      .sorted
+    assert(got === expected)
   }
 
-  test("rewrite declines beyond the k memory ceiling; bad key budget errors") {
+  test("rewrite declines beyond the k memory ceiling") {
     import org.apache.spark.sql.expressions.Window
     graft.plans.TopKNative.enable(spark)
     try {
       val o = Tables.orders(spark, "/root/testdata/sf0.001")
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      // k far beyond maxRewriteK: the spillable window plan must stand
+      // k far beyond MaxRewriteK: the spillable window plan must stand
       val big = o.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 10000000)
       val plan = big.queryExecution.executedPlan.toString
       assert(!plan.contains("TopKFinal"), plan)
       assert(big.count() === o.count())
-      // a non-positive key budget fails planning loudly, never emits 0 rows
-      spark.conf.set(graft.plans.TopKStrategy.MaxPartialKeysConf, "0")
-      try {
-        val ex = intercept[Exception] {
-          graft.plans.TopKNative.topKPerKey(o, Seq("o_custkey"),
-            "o_totalprice", "o_orderkey", k = 3).collect()
-        }
-        assert(ex.getMessage.contains("must be >= 1"), ex.getMessage)
-      } finally spark.conf.unset(graft.plans.TopKStrategy.MaxPartialKeysConf)
     } finally graft.plans.TopKNative.disableRewrite(spark)
   }
 
