@@ -71,16 +71,7 @@ object Cluster {
     ccMemo(edges, vertices, aCol, bCol, idCol, maxIter) {
       // Undirected: materialize both directions once; dedup cuts message
       // volume when the candidate generator emits a pair via several bands.
-      // Both orientations come from ONE explode over each edge row — the
-      // self-union form evaluated the whole candidate-generation subtree
-      // twice per materialization (LSH banding, window top-k, ... are the
-      // expensive half of every near-dup pipeline this feeds).
-      val sym = edges
-        .select(explode(array(
-          struct(col(aCol).as("s"), col(bCol).as("t")),
-          struct(col(bCol).as("s"), col(aCol).as("t")))).as("__e"))
-        .select(col("__e.s").as("__s"), col("__e.t").as("__t"))
-        .distinct()
+      val sym = Graph.undirectedEdges(edges, aCol, bCol, "__s", "__t")
         .localCheckpoint(true)
       var labels = vertices.select(col(idCol).as("__id"), col(idCol).as("__comp"))
         .localCheckpoint(true)

@@ -46,10 +46,6 @@ object Dedup {
   def permA(j: Int): Long = 1223L + 2741L * j + 37L * j * j
   def permB(j: Int): Long = 7919L + 104729L * j
 
-  /** h_j(x) = (a_j * x + b_j) mod (2^31-1) — the permutation family. */
-  def permHash(x: Column, j: Int): Column =
-    (x * permA(j) + permB(j)) % MersennePrime
-
   /** Arithmetic token id: rolling polynomial hash of the token's
     * characters (Text.charFingerprint). Per-row, shuffle-free, and
     * reproducible in plain SQL — the preferred id for oracle-checked
@@ -86,12 +82,6 @@ object Dedup {
   /** (id, token) rows: distinct tokens per document. */
   def docTokens(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol), explode(Text.tokens(col(textCol))).as("tok"))
-      .distinct()
-
-  /** (id, gram) rows: distinct word n-grams (shingles) per document. */
-  def docShingles(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    docs.select(col(idCol),
-        explode(Text.wordNgrams(Text.tokens(col(textCol)), n)).as("gram"))
       .distinct()
 
   /** (id, tid) rows: polynomial-hashed shingles, NOT deduplicated — the
@@ -295,8 +285,8 @@ object Dedup {
   /** Production MinHash: token ids from xxhash64 (no dictionary). The
     * shingle rows are NOT deduplicated — min over a multiset equals min
     * over its set, so a pre-distinct would shuffle the job's largest
-    * intermediate for nothing (docShingles' distinct exists for Jaccard
-    * SET semantics, which this path doesn't need).
+    * intermediate for nothing (set semantics matter only to the Jaccard
+    * paths).
     */
   def minhashSignatureHashed(docs: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int): DataFrame = {
@@ -776,12 +766,16 @@ object Dedup {
     inter
       .join(sizes.select(col(idCol).as("id_a"), col("__n").as("n_a")), Seq("id_a"))
       .join(sizes.select(col(idCol).as("id_b"), col("__n").as("n_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (col("n_a") + col("n_b") - col("inter")).cast("double"), 6))
+      .withColumn("jaccard", jaccardRatio(col("inter"), col("n_a"), col("n_b")))
       .filter(col("jaccard") >= minJaccard)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
+
+  /** round(|A∩B| / |A∪B|, 6) from the intersection and the two set
+    * sizes — the one Jaccard ratio every verify path in this file emits,
+    * rounded to 6 places for cross-engine stability. */
+  private def jaccardRatio(inter: Column, nA: Column, nB: Column): Column =
+    round(inter.cast("double") / (nA + nB - inter).cast("double"), 6)
 
   /** [[verifyJaccard]] over compact per-doc gram ARRAYS instead of the
     * exploded gram stream: one corpus groupBy packs each doc's distinct
@@ -800,15 +794,27 @@ object Dedup {
     */
   def verifyJaccardArrays(candidates: DataFrame, sets: DataFrame,
       idCol: String, minJaccard: Double,
-      idsOverride: Option[DataFrame] = None): DataFrame = {
+      idsOverride: Option[DataFrame] = None): DataFrame =
     // One explode instead of a self-union (see verifyJaccard).
     // idsOverride: any SUPERSET of the candidate endpoints works for
     // the semi-join cut (extra docs' arrays simply never join) — a
     // caller that can list endpoints from an already-shuffled subtree
     // (winnowPairs' grouped postings) passes it to avoid re-running
     // the candidate generator just to enumerate its ids.
-    val ids = idsOverride.getOrElse(candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct())
+    arrayJaccard(candidates, sets, idCol, minJaccard,
+        idsOverride.getOrElse(candidates
+          .select(explode(array(col("id_a"), col("id_b"))).as(idCol))
+          .distinct()))
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+
+  /** The array verify behind [[verifyJaccardArrays]] and
+    * [[jaccardPairsPrefix]]: candidates joined twice by id to their
+    * sorted distinct gram arrays (`__ga`, `__gb`), `inter` from one
+    * `array_intersect`, filtered on `jaccard >= minJaccard`. `ids` is
+    * any superset of the candidate endpoints.
+    */
+  private def arrayJaccard(candidates: DataFrame, sets: DataFrame,
+      idCol: String, minJaccard: Double, ids: DataFrame): DataFrame = {
     // collect_set, not collect_list: per-doc dedup happens INSIDE the
     // aggregation, so callers may pass the raw (non-distinct) gram
     // stream — the candidate semi-join then cuts the stream BEFORE any
@@ -823,11 +829,8 @@ object Dedup {
       .withColumn("inter",
         size(array_intersect(col("__ga"), col("__gb"))).cast("long"))
       .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (size(col("__ga")) + size(col("__gb")) - col("inter")).cast("double"),
-          6))
+        jaccardRatio(col("inter"), size(col("__ga")), size(col("__gb"))))
       .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   // ------------------------------------------------------------------
@@ -901,22 +904,13 @@ object Dedup {
     // intersection via array_intersect — instead of re-exploding each
     // candidate by its gram set (measured 10x slower: the re-expansion
     // shuffles candidate x set-size rows where this ships one array).
-    val sets = grams.groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("tid"))).as("__set"),
-        count(lit(1)).as("n_grams"))
-    cand
-      .join(sets.select(col(idCol).as("id_a"), col("__set").as("__sa"),
-        col("n_grams").as("n_a")), Seq("id_a"))
-      .join(sets.select(col(idCol).as("id_b"), col("__set").as("__sb"),
-        col("n_grams").as("n_b")), Seq("id_b"))
-      .withColumn("inter",
-        size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (col("n_a") + col("n_b") - col("inter")).cast("double"), 6))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), col("inter"), col("n_a"), col("n_b"),
-        col("jaccard"))
+    // Every candidate endpoint indexed a prefix gram, so the prefix ids
+    // are the endpoint superset.
+    arrayJaccard(cand, grams, idCol, minJaccard,
+        prefix.select(col(idCol)).distinct())
+      .select(col("id_a"), col("id_b"), col("inter"),
+        size(col("__ga")).cast("long").as("n_a"),
+        size(col("__gb")).cast("long").as("n_b"), col("jaccard"))
   }
 
   /** Session memo ([[PlanMemo]]) of the n-gram-Jaccard pair build:
@@ -1111,46 +1105,54 @@ object Dedup {
       n: Int, minJaccard: Double, dfCap: Long = DerivedCap): DataFrame = {
     val cap = resolveDfCap(dfCap, corpusCount(docs))
     njMemo(docs, idCol, textCol, n, minJaccard, cap) {
-      // Post-cap postings feed THREE consumers (sizes + both join sides),
-      // each of which would re-run the distinct AND the df join —
-      // shuffles, not the compiled scan. Materialized once (measured on
-      // the containment twin: 3.1 → 2.5 s) in the SHARED [[cappedPostings]]
-      // memo — the containment generator reads the same table.
-      val g = cappedPostings(docs, idCol, textCol, n, cap)
-      // Set sizes come from the CAPPED table too: hub shingles must leave
-      // both the intersection and the denominators, or docs made of hub
-      // shingles would see their Jaccard biased toward zero and be missed.
-      val sizes = g.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))
-      // Fan-out-sized tid partitioning (see [[pairJoinParts]]); both join
-      // sides read the SAME repartitioned subtree — one exchange, reused.
-      val gp = g.repartition(pairJoinParts(g), col("tid"))
-      val a = gp.select(col("tid"), col(idCol).as("id_a"))
-      val b = gp.select(col("tid"), col(idCol).as("id_b"))
-      // SHUFFLE-HASH everywhere on this chain, never sort-merge: SMJ
-      // would SORT the generated pair stream (and the postings), and
-      // those sort buffers both spill ~the whole stream and starve the
-      // intersection aggregate's hash map in the unified pool — the
-      // spill probe measured the verify joins re-spilling the pair
-      // stream once per join. Hash sides are per-task slivers (a tid
-      // partition of the postings; an id partition of the one-row-per-
-      // doc sizes table), bounded at any corpus size.
-      val inter = a.hint("shuffle_hash").join(b, Seq("tid"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(count(lit(1)).as("inter"))
-      inter
-        .join(sizes.select(col(idCol).as("id_a"), col("n_grams").as("n_a"))
-          .hint("shuffle_hash"), Seq("id_a"))
-        .join(sizes.select(col(idCol).as("id_b"), col("n_grams").as("n_b"))
-          .hint("shuffle_hash"), Seq("id_b"))
+      gramOverlap(docs, idCol, textCol, n, cap)
         .withColumn("jaccard",
-          round(col("inter").cast("double") /
-            (col("n_a") + col("n_b") - col("inter")).cast("double"), 6))
+          jaccardRatio(col("inter"), col("n_a"), col("n_b")))
         .filter(col("jaccard") >= minJaccard)
         .select(col("id_a"), col("id_b"), col("inter"), col("n_a"), col("n_b"),
           col("jaccard"))
         .localCheckpoint(true)
     }
+  }
+
+  /** (id_a, id_b, inter, n_a, n_b) for every id_a < id_b pair sharing a
+    * gram of the df-capped postings: the fan-out-sized tid self-join,
+    * the intersection count and both set sizes that
+    * [[ngramJaccardPairs]] and [[ngramContainmentPairs]] score. */
+  private def gramOverlap(docs: DataFrame, idCol: String, textCol: String,
+      n: Int, cap: Long): DataFrame = {
+    // Post-cap postings feed THREE consumers (sizes + both join sides),
+    // each of which would re-run the distinct AND the df join —
+    // shuffles, not the compiled scan. Materialized once (measured on
+    // the containment generator: 3.1 → 2.5 s) in the SHARED
+    // [[cappedPostings]] memo, which both generators read.
+    val g = cappedPostings(docs, idCol, textCol, n, cap)
+    // Set sizes come from the CAPPED table too: hub shingles must leave
+    // both the intersection and the denominators, or docs made of hub
+    // shingles would see their score biased toward zero and be missed.
+    val sizes = g.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))
+    // Fan-out-sized tid partitioning (see [[pairJoinParts]]); both join
+    // sides read the SAME repartitioned subtree — one exchange, reused.
+    val gp = g.repartition(pairJoinParts(g), col("tid"))
+    val a = gp.select(col("tid"), col(idCol).as("id_a"))
+    val b = gp.select(col("tid"), col(idCol).as("id_b"))
+    // SHUFFLE-HASH everywhere on this chain, never sort-merge: SMJ
+    // would SORT the generated pair stream (and the postings), and
+    // those sort buffers both spill ~the whole stream and starve the
+    // intersection aggregate's hash map in the unified pool — the
+    // spill probe measured the verify joins re-spilling the pair
+    // stream once per join. Hash sides are per-task slivers (a tid
+    // partition of the postings; an id partition of the one-row-per-
+    // doc sizes table), bounded at any corpus size.
+    val inter = a.hint("shuffle_hash").join(b, Seq("tid"))
+      .filter(col("id_a") < col("id_b"))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("inter"))
+    inter
+      .join(sizes.select(col(idCol).as("id_a"), col("n_grams").as("n_a"))
+        .hint("shuffle_hash"), Seq("id_a"))
+      .join(sizes.select(col(idCol).as("id_b"), col("n_grams").as("n_b"))
+        .hint("shuffle_hash"), Seq("id_b"))
   }
 
   /** Asymmetric near-dup pairs by shingle CONTAINMENT — |A∩B| / min(|A|,
@@ -1173,24 +1175,7 @@ object Dedup {
   def ngramContainmentPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int, minContainment: Double, dfCap: Long = DerivedCap): DataFrame = {
     val cap = resolveDfCap(dfCap, corpusCount(docs))
-    // Shared df-capped postings — identical table to the Jaccard twin's
-    // for the same (corpus, n, dfCap), built once ([[cappedPostings]]).
-    val g = cappedPostings(docs, idCol, textCol, n, cap)
-    val sizes = g.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))
-    // Fan-out-sized tid partitioning (see [[pairJoinParts]]).
-    val gp = g.repartition(pairJoinParts(g), col("tid"))
-    val a = gp.select(col("tid"), col(idCol).as("id_a"))
-    val b = gp.select(col("tid"), col(idCol).as("id_b"))
-    // shuffle-hash chain — see the Jaccard twin's rationale
-    val inter = a.hint("shuffle_hash").join(b, Seq("tid"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("n_grams").as("n_a"))
-        .hint("shuffle_hash"), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("n_grams").as("n_b"))
-        .hint("shuffle_hash"), Seq("id_b"))
+    gramOverlap(docs, idCol, textCol, n, cap)
       .withColumn("containment",
         round(col("inter").cast("double") /
           least(col("n_a"), col("n_b")).cast("double"), 6))

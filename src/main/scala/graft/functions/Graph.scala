@@ -37,6 +37,21 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** Distinct (srcCol, dstCol) rows holding every edge of `edges` in
+    * BOTH orientations, from ONE explode per edge row: a self-union
+    * would evaluate the candidate generator feeding the edges twice.
+    * Self-loops pass through; callers that drop them filter the edges
+    * or the result. Callers reading it more than once checkpoint it.
+    */
+  private[graft] def undirectedEdges(edges: DataFrame, aCol: String,
+      bCol: String, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(explode(array(
+        struct(col(aCol).as("s"), col(bCol).as("t")),
+        struct(col(bCol).as("s"), col(aCol).as("t")))).as("__e"))
+      .select(col("__e.s").as(srcCol), col("__e.t").as(dstCol))
+      .distinct()
+
   private val RScale = 1000000000000L // 10^12 fixed-point rank scale
 
   /** Co-occurrence edge list (src, dst, w) — both directions, no
@@ -134,15 +149,9 @@ object Graph {
       iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val dec = "decimal(38,0)"
-    // one pass emits both orientations; distinct collapses duplicate
-    // candidate pairs to unit weight
-    val sym = pairs
-      .filter(col(aCol) =!= col(bCol))
-      .select(explode(array(
-        struct(col(aCol).as("src"), col(bCol).as("dst")),
-        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("__e"))
-      .select(col("__e.src"), col("__e.dst"))
-      .distinct()
+    // distinct collapses duplicate candidate pairs to unit weight
+    val sym = undirectedEdges(pairs.filter(col(aCol) =!= col(bCol)),
+        aCol, bCol, "src", "dst")
       .localCheckpoint(true)
     val deg = sym.groupBy(col("src"))
       .agg(count(lit(1)).cast("long").as("out_w"))
@@ -234,14 +243,8 @@ object Graph {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.GraftBridge
-    // both orientations from ONE pass (the CC sym discipline)
-    val sym = edges
-      .select(explode(array(
-        struct(col(aCol).as("s"), col(bCol).as("t")),
-        struct(col(bCol).as("s"), col(aCol).as("t")))).as("__e"))
-      .select(col("__e.s").as("__src"), col("__e.t").as("__dst"))
+    val sym = undirectedEdges(edges, aCol, bCol, "__src", "__dst")
       .filter(col("__src") =!= col("__dst"))
-      .distinct()
       .localCheckpoint(true)
     var labels = vertices.select(col(idCol).as("__id"),
         col(idCol).as("__lbl"))
@@ -445,13 +448,8 @@ object Graph {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     import org.apache.spark.sql.GraftBridge
-    val sym = edges
-      .select(explode(array(
-        struct(col(aCol).as("s"), col(bCol).as("t")),
-        struct(col(bCol).as("s"), col(aCol).as("t")))).as("__e"))
-      .select(col("__e.s").as("__src"), col("__e.t").as("__dst"))
+    val sym = undirectedEdges(edges, aCol, bCol, "__src", "__dst")
       .filter(col("__src") =!= col("__dst"))
-      .distinct()
       .localCheckpoint(true)
     def induced(alive: DataFrame): DataFrame = sym
       .join(alive.select(col("__id").as("__src")), Seq("__src"), "leftsemi")
@@ -641,13 +639,8 @@ object Graph {
       vertices: DataFrame, idCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     import org.apache.spark.sql.GraftBridge
-    val sym = edges
-      .select(explode(array(
-        struct(col(aCol).as("s"), col(bCol).as("t")),
-        struct(col(bCol).as("s"), col(aCol).as("t")))).as("__e"))
-      .select(col("__e.s").as("__src"), col("__e.t").as("__dst"))
+    val sym = undirectedEdges(edges, aCol, bCol, "__src", "__dst")
       .filter(col("__src") =!= col("__dst"))
-      .distinct()
       .localCheckpoint(true)
     var reached = sym
       .select(col("__src").as("__u"), col("__dst").as("__v"),
@@ -766,12 +759,8 @@ object Graph {
   def conductance(edges: DataFrame, aCol: String, bCol: String,
       communities: DataFrame, idCol: String,
       labelCol: String = "label"): DataFrame = {
-    val sym = edges.filter(col(aCol) =!= col(bCol))
-      .select(explode(array(
-        struct(col(aCol).as("s"), col(bCol).as("t")),
-        struct(col(bCol).as("s"), col(aCol).as("t")))).as("__e"))
-      .select(col("__e.s").as("s"), col("__e.t").as("t"))
-      .distinct()
+    val sym = undirectedEdges(edges.filter(col(aCol) =!= col(bCol)),
+      aCol, bCol, "s", "t")
     val lab = communities.select(col(idCol).as("__id"),
       col(labelCol).cast("long").as("__lbl"))
     val deg = sym.groupBy(col("s").as("__id"))

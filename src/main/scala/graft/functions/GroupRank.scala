@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Exact within-group ranking WITHOUT a single sort task per group — the
@@ -60,32 +60,10 @@ object GroupRank {
     * ranks. Internal column names are dropped from the result.
     */
   def withRankAndCount(df: DataFrame, groupCols: Seq[String],
-      order: Seq[Column], rankCol: String, countCol: String): DataFrame = {
-    require(groupCols.nonEmpty, "groupCols must not be empty")
-    require(order.nonEmpty, "order must not be empty")
-    val gc = groupCols.map(col)
-    val ranged = df
-      .repartitionByRange((gc ++ order): _*)
-      .withColumn("__grshard", spark_partition_id())
-    val wLocal = Window.partitionBy((gc :+ col("__grshard")): _*)
-      .orderBy(order: _*)
-    val local = ranged.withColumn("__grlrn", row_number().over(wLocal))
-    // per-(group, shard) counts: GROUPS×SHARDS rows — mixture-sized
-    val counts = local.groupBy((gc :+ col("__grshard")): _*)
-      .agg(count(lit(1)).as("__grc"))
-    val wOff = Window.partitionBy(gc: _*).orderBy(col("__grshard").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wTot = Window.partitionBy(gc: _*)
-    val offsets = counts
-      .withColumn("__groff", coalesce(sum(col("__grc")).over(wOff), lit(0L)))
-      .withColumn(countCol, sum(col("__grc")).over(wTot))
-      .drop("__grc")
-    local.join(broadcast(offsets), groupCols :+ "__grshard")
-      .withColumn(rankCol, (col("__grlrn").cast("long") + col("__groff")))
-      // the using-join puts its keys first; restore the caller's layout
-      .select((df.columns.toIndexedSeq.map(col) :+ col(rankCol) :+
-        col(countCol)): _*)
-  }
+      order: Seq[Column], rankCol: String, countCol: String): DataFrame =
+    twoLevel(df, groupCols, order,
+      "__grlrn", row_number().over(_),
+      "__grc", count(lit(1)), rankCol, countCol)
 
   /** `df` + `rankCol` (1-based global DENSE rank of the row's `keys`
     * tuple under ascending non-null order, LongType) — two level like
@@ -97,7 +75,13 @@ object GroupRank {
     * span shard boundaries — adjacent shards whose boundary rows carry
     * the same key double-count one distinct value per shared boundary.
     * Dense rank is tie-insensitive, so sampled range boundaries never
-    * change a rank, only which shard computes it.
+    * change a rank, only which shard computes it — provided the stats
+    * branch and the rank branch see ONE sharding. The local stage is
+    * therefore checkpointed once: without exchange reuse each branch
+    * would run its own range exchange, whose boundary sample is seeded
+    * by the RDD id, and the offsets would belong to another sharding.
+    * That checkpoint is the result's only leaf: once the result is
+    * materialized, `GraftBridge.unpersistCheckpoint(result)` frees it.
     */
   def denseRankAll(df: DataFrame, keys: Seq[String],
       rankCol: String): DataFrame = {
@@ -109,6 +93,7 @@ object GroupRank {
       .orderBy(kc.map(_.asc): _*)
     val local = ranged
       .withColumn("__drl", dense_rank().over(wLocal).cast("long"))
+      .localCheckpoint(true)
     val stats = local.groupBy(col("__drshard"))
       .agg(max(col("__drl")).as("__drd"),
         min(struct(kc: _*)).as("__drmin"),
@@ -146,6 +131,23 @@ object GroupRank {
     */
   def withPrefixSum(df: DataFrame, groupCols: Seq[String],
       order: Seq[Column], valueCol: String, prefixCol: String,
+      totalCol: String): DataFrame =
+    twoLevel(df, groupCols, order,
+      "__grlps", w => coalesce(sum(col(valueCol).cast("long"))
+        .over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)),
+      "__grs", sum(col(valueCol).cast("long")), prefixCol, totalCol)
+
+  /** The two-level plan behind [[withRankAndCount]] and [[withPrefixSum]]
+    * (see the object doc): range exchange on (groups, order), shard
+    * stamp, the LOCAL window column `localCol` = `local(w)` over
+    * (groups, shard) ordered by `order`, the per-(group, shard)
+    * aggregate `shardCol` = `shardAgg`, shard offsets and group totals
+    * over that small table, broadcast back. `outCol` is the local
+    * value plus its shard offset, `totalCol` the group total.
+    */
+  private def twoLevel(df: DataFrame, groupCols: Seq[String],
+      order: Seq[Column], localCol: String, local: WindowSpec => Column,
+      shardCol: String, shardAgg: Column, outCol: String,
       totalCol: String): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must not be empty")
     require(order.nonEmpty, "order must not be empty")
@@ -155,21 +157,21 @@ object GroupRank {
       .withColumn("__grshard", spark_partition_id())
     val wLocal = Window.partitionBy((gc :+ col("__grshard")): _*)
       .orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = ranged.withColumn("__grlps",
-      coalesce(sum(col(valueCol).cast("long")).over(wLocal), lit(0L)))
-    val sums = local.groupBy((gc :+ col("__grshard")): _*)
-      .agg(sum(col(valueCol).cast("long")).as("__grs"))
+    val withLocal = ranged.withColumn(localCol, local(wLocal))
+    // per-(group, shard) aggregates: GROUPS×SHARDS rows — mixture-sized
+    val perShard = withLocal.groupBy((gc :+ col("__grshard")): _*)
+      .agg(shardAgg.as(shardCol))
     val wOff = Window.partitionBy(gc: _*).orderBy(col("__grshard").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val wTot = Window.partitionBy(gc: _*)
-    val offsets = sums
-      .withColumn("__groff", coalesce(sum(col("__grs")).over(wOff), lit(0L)))
-      .withColumn(totalCol, sum(col("__grs")).over(wTot))
-      .drop("__grs")
-    local.join(broadcast(offsets), groupCols :+ "__grshard")
-      .withColumn(prefixCol, col("__grlps") + col("__groff"))
-      .select((df.columns.toIndexedSeq.map(col) :+ col(prefixCol) :+
+    val offsets = perShard
+      .withColumn("__groff", coalesce(sum(col(shardCol)).over(wOff), lit(0L)))
+      .withColumn(totalCol, sum(col(shardCol)).over(wTot))
+      .drop(shardCol)
+    withLocal.join(broadcast(offsets), groupCols :+ "__grshard")
+      .withColumn(outCol, (col(localCol).cast("long") + col("__groff")))
+      // the using-join puts its keys first; restore the caller's layout
+      .select((df.columns.toIndexedSeq.map(col) :+ col(outCol) :+
         col(totalCol)): _*)
   }
 

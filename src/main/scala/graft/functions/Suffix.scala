@@ -92,9 +92,11 @@ object Suffix {
     // dense rank of the token stream directly (two-level, no distinct +
     // rank-the-vocabulary + join-back: that staging cost one more
     // corpus exchange and a corpus-sized sort-merge join per ranking)
-    var cur = GroupRank.denseRankAll(toks, Seq("__tok"), "__r")
-      .select(col("__id"), col("__pos"), col("__r"))
+    val ranked0 = GroupRank.denseRankAll(toks, Seq("__tok"), "__r")
+    var cur = ranked0.select(col("__id"), col("__pos"), col("__r"))
       .localCheckpoint(true)
+    // the rank's pinned local stage has no reader left
+    GraftBridge.unpersistCheckpoint(ranked0)
     val tables = scala.collection.mutable.ArrayBuffer[DataFrame](cur)
     var span = 1L
     // max rank of the last DENSE table: the convergence probe, and the
@@ -158,9 +160,10 @@ object Suffix {
         // ranking the distinct pair domain and joining back (dense rank
         // is tie-insensitive), minus the distinct, the domain join's
         // exchanges, and its corpus-sized sorts
-        cur = GroupRank.denseRankAll(paired, Seq("__ra", "__rb"), "__r")
-          .select(col("__id"), col("__pos"), col("__r"))
+        val ranked = GroupRank.denseRankAll(paired, Seq("__ra", "__rb"), "__r")
+        cur = ranked.select(col("__id"), col("__pos"), col("__r"))
           .localCheckpoint(true)
+        GraftBridge.unpersistCheckpoint(ranked)
         dense = true
         idLaid = false
         maxRank = cur.agg(max(col("__r"))).head.getLong(0)

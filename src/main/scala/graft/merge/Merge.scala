@@ -403,7 +403,7 @@ object Merge {
     * staging directories, which are never the only copy of anything (the
     * live table is intact until the swap begins). `__rewrite_old*` ASIDE
     * areas are NEVER touched — after a mid-swap crash an aside holds the
-    * only copy of a partition (or, for rewriteTable, the whole table), and
+    * only copy of a partition, and
     * the stale-aside guard in `rewritePartitions` deliberately refuses to
     * run until an operator restores or removes them BY HAND after checking
     * their contents. Call when no rewrite of the table is running (a live
@@ -424,43 +424,7 @@ object Merge {
       .toSeq.sorted
   }
 
-  /** Path-backed merge: read the parquet table at `path`, apply `f`, and
-    * overwrite it safely. The naive read→overwrite self-reference fails
-    * (Spark deletes the input before the job reads it), so the new content
-    * is materialized to a sibling temp dir first, then swapped in — the
-    * closest stock-Spark analog of Delta's atomic commit (SURVEY.md §7.5).
-    * Prefer `rewritePartitions` when the touched partitions are known.
-    */
-  def rewriteTable(spark: SparkSession, path: String,
-      partitionCol: Option[String] = None)(f: DataFrame => DataFrame): Unit = {
-    val tmp = path.stripSuffix("/") + "__rewrite_tmp"
-    val out = f(spark.read.parquet(path))
-    val writer = out.write.mode("overwrite").format("parquet")
-    partitionCol.fold(writer)(c => writer.partitionBy(c)).save(tmp)
-
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val t = new org.apache.hadoop.fs.Path(tmp)
-    val old = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__rewrite_old")
-    val fs = p.getFileSystem(conf)
-    // Rename the live table ASIDE first so a crash mid-swap leaves either
-    // the old or the new data reachable (delete-then-rename has a window
-    // where the table is simply gone). Rename/delete results are checked —
-    // Hadoop FileSystem reports failure via boolean, not exception.
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(s"rewriteTable: cannot clear $old")
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"rewriteTable: cannot move $p aside")
-    if (!fs.rename(t, p)) {
-      fs.rename(old, p) // best-effort rollback
-      throw new java.io.IOException(s"rewriteTable: cannot install $t at $p")
-    }
-    if (!fs.delete(old, true))
-      throw new java.io.IOException(s"rewriteTable: cannot remove $old")
-    invalidateAfterSwap(spark, fs, path.stripSuffix("/"))
-  }
-
-  /** Post-swap invalidation shared by both rewrites.
+  /** Post-swap invalidation after a partition rewrite.
     *
     * 1. A table WRITTEN BY A STREAMING FILE SINK carries a _spark_metadata
     *    transaction log, and every reader (batch and streaming) resolves

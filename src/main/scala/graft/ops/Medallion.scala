@@ -174,14 +174,6 @@ object Medallion {
     (df.filter(pred), df.filter(!pred))
   }
 
-  /** P7 — drop rows with an empty string in `c` (operations.py:54). */
-  def dropEmpty(df: DataFrame, c: String): DataFrame =
-    df.filter(col(c) =!= "")
-
-  /** P9 — literal status overwrite (operations.py:117). */
-  def withStatus(df: DataFrame, status: String): DataFrame =
-    df.withColumn("status", lit(status))
-
   /** P10 — numeric repair via abs (operations.py:141). */
   def repairAbs(df: DataFrame, c: String): DataFrame =
     df.withColumn(c, abs(col(c)))

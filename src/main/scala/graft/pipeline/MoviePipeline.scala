@@ -61,6 +61,47 @@ object MoviePipeline {
   def transformLanguage(flat: DataFrame): DataFrame =
     flat.select(lit(1).as("Id"), col("OriginalLanguage")).distinct()
 
+  /** The silver quality gate. Clean requires a non-null Id as well: Id
+    * is the merge/idempotency key everywhere downstream, and NULL never
+    * equals NULL in an anti-join, so a null-Id row could neither be
+    * deduplicated nor replay-guarded — it quarantines instead.
+    */
+  private def isClean = col("RunTime") >= 0 && col("Id").isNotNull
+
+  /** What one bronze → silver step hands back: the flattened rows
+    * (cached; the caller unpersists them), both sides of the quality
+    * split, and `keyed` — every row's (value, status, p_ingestdate),
+    * checkpointed.
+    */
+  private[graft] case class SilverSplit(flat: DataFrame, clean: DataFrame,
+      quarantined: DataFrame, keyed: DataFrame)
+
+  /** The bronze → silver step the batch and streaming variants share:
+    * flatten the 'new' bronze rows, project movies, split on the quality
+    * gate, append the clean rows to `movie_silver` behind the Id replay
+    * guard (a crash between this write and the status writeback would
+    * otherwise re-append the same still-'new' rows on rerun), and key
+    * each row's final status with the bronze partition it lives in.
+    */
+  private[graft] def splitToSilver(spark: SparkSession, bronzeNew: DataFrame,
+      silverDir: String): SilverSplit = {
+    val flat = Medallion.flattenValue(bronzeNew).cache()
+    val (clean, quarantined) =
+      Medallion.cleanQuarantineSplit(transformMovie(flat).distinct(), isClean)
+    Merge.antiJoinAppend(spark, clean.drop("value"),
+      s"$silverDir/movie_silver", Seq("Id"), "p_CreatedDate")
+    // One (value, status, p_ingestdate) source for BOTH statuses,
+    // materialized here: the batch writeback rewrites the bronze files
+    // these lazy plans read, and the streaming side probes it before
+    // writing it.
+    val statused = clean.select(col("value")).withColumn("status", lit("loaded"))
+      .unionByName(
+        quarantined.select(col("value")).withColumn("status", lit("quarantined")))
+      .distinct()
+    val keyed = withPartitions(bronzeNew, statused).localCheckpoint(true)
+    SilverSplit(flat, clean, quarantined, keyed)
+  }
+
   /** Stage 2 — bronze → silver (main.py:21-46). Returns
     * (cleanCount, quarantinedCount) for reconciliation.
     */
@@ -68,45 +109,21 @@ object MoviePipeline {
       silverDir: String): (Long, Long) = {
     val bronzeNew = Medallion.filterStatus(
       spark.read.parquet(bronzePath), "new")
-    val flat = Medallion.flattenValue(bronzeNew).cache()
-
-    val movie = transformMovie(flat).distinct()
-    // Clean requires a non-null Id as well: Id is the merge/idempotency
-    // key everywhere downstream, and NULL never equals NULL in an
-    // anti-join, so a null-Id row could neither be deduplicated nor
-    // replay-guarded — it quarantines instead.
-    val (clean, quarantined) = Medallion.cleanQuarantineSplit(movie,
-      col("RunTime") >= 0 && col("Id").isNotNull)
-
-    // Replay guard: a crash between this write and the status writeback
-    // would otherwise re-append the same still-'new' rows on rerun.
-    Merge.antiJoinAppend(spark, clean.drop("value"),
-      s"$silverDir/movie_silver", Seq("Id"), "p_CreatedDate")
+    val step = splitToSilver(spark, bronzeNew, silverDir)
     // Dimensions accumulate across batches via anti-join upsert: a plain
     // overwrite would wipe rows from earlier batches (dangling FKs from
     // older silver movies), and the reference's plain append would
     // duplicate dimension rows on every run.
-    upsertDimension(spark, transformGenres(flat),
+    upsertDimension(spark, transformGenres(step.flat),
       s"$silverDir/genres_silver", Seq("Id", "name"))
-    upsertDimension(spark, transformLanguage(flat),
+    upsertDimension(spark, transformLanguage(step.flat),
       s"$silverDir/language_silver", Seq("Id", "OriginalLanguage"))
+    val counts = (step.clean.count(), step.quarantined.count())
 
-    // One (value, status, p_ingestdate) source for BOTH statuses,
-    // materialized BEFORE the rewrite (the lazy plans reference the bronze
-    // files being replaced underneath them). The previous form ran one
-    // full-table rewrite per status — two complete bronze rewrites per
-    // batch, the clearest scale-killer at 100 TB; this runs exactly one
-    // rewrite restricted to the partitions that contain matched keys.
-    val statused = clean.select(col("value")).withColumn("status", lit("loaded"))
-      .unionByName(
-        quarantined.select(col("value")).withColumn("status", lit("quarantined")))
-      .distinct()
-    val keyed = withPartitions(bronzeNew, statused).localCheckpoint(true)
-    val counts = (clean.count(), quarantined.count())
-
-    // MERGE status writeback on the full struct key (operations.py:112-129).
-    updateBronzeStatuses(spark, bronzePath, keyed)
-    flat.unpersist()
+    // MERGE status writeback on the full struct key (operations.py:112-129),
+    // ONE rewrite restricted to the partitions that contain matched keys.
+    updateBronzeStatuses(spark, bronzePath, step.keyed)
+    step.flat.unpersist()
     counts
   }
 
@@ -176,8 +193,7 @@ object MoviePipeline {
     // stay quarantined (not inserted, not marked loaded) for the next
     // repair strategy.
     val (repaired, _) = Medallion.cleanQuarantineSplit(
-      transformMovie(Medallion.repairAbs(flat, "RunTime")).distinct(),
-      col("RunTime") >= 0 && col("Id").isNotNull)
+      transformMovie(Medallion.repairAbs(flat, "RunTime")).distinct(), isClean)
 
     val repairedKeys = repaired.select(col("value")).distinct().localCheckpoint(true)
     val n = Merge.antiJoinAppend(spark, repaired.drop("value"),

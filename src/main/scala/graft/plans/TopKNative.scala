@@ -18,9 +18,8 @@ import org.apache.spark.sql.{DataFrame, GraftBridge}
   * partition to k rows per key *before* the exchange the FINAL exec's
   * required distribution inserts, so the shuffle moves at most
   * k × keys-per-partition rows instead of the whole input. Operates on
-  * InternalRow with a codegen'd ordering (no encoder round-trips — the
-  * Dataset/mapPartitions formulation in TopK.scala deserializes every row
-  * twice).
+  * InternalRow with a codegen'd ordering (no encoder round-trips, which
+  * a Dataset/mapPartitions formulation pays twice per row).
   *
   * Memory: the partial phase holds k rows per distinct key per open
   * partition, bounded by a key budget ([[TopKStrategy.MaxPartialKeys]]):

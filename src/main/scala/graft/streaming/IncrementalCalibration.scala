@@ -102,10 +102,14 @@ object IncrementalCalibration {
     * a layout whose partition count otherwise grows one per microbatch
     * forever. The rows here are ADDITIVE DELTAS, so (unlike the dedup
     * index, where a crash between append and delete only leaves
-    * harmless duplicate probe rows) the fold must be all-or-nothing:
-    * it rides [[graft.merge.Merge.rewriteTable]]'s aside-then-swap —
-    * a crash leaves either the old layout or the new one reachable,
-    * never a double-counted bin.
+    * harmless duplicate probe rows) the fold must never double-count:
+    * it rides [[graft.merge.Merge.rewritePartitions]] over exactly the
+    * folded batch partitions plus the bulk, which are swapped with the
+    * bulk LAST. A crash mid-swap therefore leaves already-swapped batch
+    * deltas in the run's aside area (missing from the histogram, never
+    * counted twice), and the stale-aside guard refuses every later
+    * rewrite until they are restored by hand; the partitions that are
+    * not folded are never read or rewritten.
     *
     * Safety contract, same shape as the dedup fold but with the
     * opposite failure: `belowBatch` must not exceed the stream's last
@@ -130,15 +134,11 @@ object IncrementalCalibration {
       .filter(b => b >= 0L && b < belowBatch)
       .sorted.toSeq
     if (batches.isEmpty) return Seq.empty
-    graft.merge.Merge.rewriteTable(spark, histPath,
-        partitionCol = Some("__batch")) { df =>
-      val folded = col("__batch") === -1L ||
-        (col("__batch") >= 0L && col("__batch") < belowBatch)
-      df.filter(folded)
-        .groupBy(col("bin"))
+    graft.merge.Merge.rewritePartitions(spark, histPath, "__batch",
+        batches.map(_.toString) :+ "-1") { df =>
+      df.groupBy(col("bin"))
         .agg(sum(col("n")).as("n"), sum(col("n_correct")).as("n_correct"))
         .withColumn("__batch", lit(-1L))
-        .unionByName(df.filter(!folded))
     }
     batches
   }

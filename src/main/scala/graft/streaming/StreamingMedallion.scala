@@ -89,37 +89,23 @@ object StreamingMedallion {
     val bronze = spark.readStream.schema(schema).parquet(bronzeDir)
     val fresh = Medallion.filterStatus(bronze, "new")
     foreachBatchSink(fresh, checkpoint, "Bronze_To_Silver") { (s, batch, batchId) =>
-      val flat = Medallion.flattenValue(batch).cache()
-      val movie = graft.pipeline.MoviePipeline.transformMovie(flat).distinct()
-      // non-null Id required for clean: it is the anti-join idempotency
-      // key, and NULL never matches in an anti-join
-      val (clean, quarantined) = Medallion.cleanQuarantineSplit(movie,
-        col("RunTime") >= 0 && col("Id").isNotNull)
-      // One shared replay guard (Merge.antiJoinAppend). The quarantine
-      // table holds malformed rows — possibly with NULL Ids, which an Id
-      // anti-join can never match — so it uses the whole-row-hash
-      // fallback for its null-keyed rows.
-      Merge.antiJoinAppend(s, clean.drop("value"),
-        s"$silverDir/movie_silver", Seq("Id"), "p_CreatedDate")
-      Merge.antiJoinAppend(s, quarantined.drop("value"),
+      val step = graft.pipeline.MoviePipeline.splitToSilver(s, batch, silverDir)
+      // The quarantine table holds malformed rows — possibly with NULL
+      // Ids, which an Id anti-join can never match — so its replay guard
+      // uses the whole-row-hash fallback for its null-keyed rows.
+      Merge.antiJoinAppend(s, step.quarantined.drop("value"),
         s"$silverDir/movie_quarantine", Seq("Id"), "p_CreatedDate",
         nullKeyRowHash = true)
-      val statused = clean.select(col("value")).withColumn("status", lit("loaded"))
-        .unionByName(quarantined.select(col("value"))
-          .withColumn("status", lit("quarantined")))
-      val keyed = batch.select(col("value"), col("p_ingestdate"))
-        .join(statused, Seq("value")).distinct()
-        .localCheckpoint(true) // one materialization for probe + write
       // empty microbatches (e.g. a replay over already-statused rows)
       // write nothing — an empty overwrite would leave a footerless
       // partition directory
-      if (!keyed.isEmpty)
-        keyed.withColumn("__batch", lit(batchId))
+      if (!step.keyed.isEmpty)
+        step.keyed.withColumn("__batch", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("__batch")
           .parquet(s"$silverDir/bronze_status_log")
-      flat.unpersist()
+      step.flat.unpersist()
     }
   }
 

@@ -54,10 +54,13 @@ object GraftBridge {
     * CacheManager entries (`df.persist`), not checkpoint RDD blocks —
     * those otherwise linger until the driver GCs the RDD reference, which
     * in an iterative loop means O(rounds) superseded label sets pinned in
-    * executor memory. No-op for plans that aren't materialized RDD scans.
+    * executor memory. Frees EVERY RDD-scan leaf of the analyzed plan, so a
+    * projection or join over checkpoints frees them too: only pass frames
+    * whose checkpoints no live frame still reads. No-op for leaves that
+    * are not RDD scans (files, local relations).
     */
   def unpersistCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed match {
+    df.queryExecution.analyzed.collectLeaves().foreach {
       case l: execution.LogicalRDD => l.rdd.unpersist(false)
       case _ => ()
     }

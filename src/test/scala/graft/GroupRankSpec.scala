@@ -44,6 +44,41 @@ class GroupRankSpec extends AnyFunSuite {
     }
   }
 
+  test("denseRankAll equals the dense_rank window without exchange reuse") {
+    // With exchange reuse off, the per-shard stats branch and the rank
+    // branch each run their own range exchange, and RangePartitioner
+    // seeds its boundary sample with the RDD id. 5,000 rows per input
+    // partition against a sample of 60 make the bounds a real sample;
+    // 8 shards over 534 distinct (a, b) keys of about 75 rows each.
+    val confs = Map("spark.sql.exchange.reuse" -> "false",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "8")
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k))
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val df = spark.range(0L, 40000L, 1L, 8)
+        .select(col("id"),
+          ((col("id") * 2654435761L) % 40000L / 150L).cast("long").as("a"),
+          (col("id") % 2L).as("b"))
+      val shards = df.repartitionByRange(col("a"), col("b"))
+        .select(spark_partition_id()).distinct().count()
+      assert(shards >= 4, s"only $shards shards")
+      val got = GroupRank.denseRankAll(df, Seq("a", "b"), "r")
+        .select(col("id"), col("r"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = df.withColumn("r",
+          dense_rank().over(Window.orderBy(col("a"), col("b"))).cast("long"))
+        .select(col("id"), col("r"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got.size === 40000)
+      val wrong = got.count { case (id, r) => want(id) != r }
+      assert(wrong === 0, s"$wrong of 40000 ranks differ")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("withRankAndCount output column order preserves the input layout") {
     val df = Seq(("a", 1L, 0.5), ("a", 2L, 0.7)).toDF("g", "id", "v")
     val out = GroupRank.withRankAndCount(df, Seq("g"),

@@ -7,7 +7,7 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 
-import graft.functions.{Dedup, Memos, PlanMemo, Quant, Vec}
+import graft.functions.{Cluster, Dedup, Memos, PlanMemo, Quant, Vec}
 
 /** `Memos.releaseAll` frees every registered memo — including the
   * nn-descent graph and beam-search memos a hand-kept release list
@@ -54,6 +54,33 @@ class MemoRegistrySpec extends AnyFunSuite {
     eventually(timeout(60.seconds), interval(250.millis)) {
       assert((stored & ids).isEmpty,
         s"checkpoints ${(stored & ids).toSeq.sorted} are still stored")
+    }
+  }
+
+  test("releaseAll frees the label checkpoint under the components " +
+      "projection") {
+    def stored: Set[Int] =
+      spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val d = TestSpark.sf0001
+    val docs = Tables.documents(spark, d)
+    val sh = Dedup.docShingleIds(docs, "doc_id", "text", 3)
+    val sig = Dedup.minhashSignature(sh, "doc_id", col("tid"),
+      SparkEntry.numMinhashes)
+    val pairs = Dedup.lshCandidatePairs(Dedup.lshBands(sig, "doc_id", 2),
+      "doc_id")
+    val comps = Cluster.connectedComponents(pairs, "id_a", "id_b",
+      docs.select(col("doc_id")), "doc_id")
+    // the memo value is a projection, not the checkpoint itself
+    assert(!comps.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+    val labels = comps.queryExecution.analyzed.collectLeaves()
+      .collect { case l: LogicalRDD => l.rdd.id }
+    assert(labels.size == 1)
+    assert(stored.contains(labels.head),
+      s"label checkpoint ${labels.head} is not in storage")
+    Memos.releaseAll()
+    eventually(timeout(60.seconds), interval(250.millis)) {
+      assert(!stored.contains(labels.head),
+        s"label checkpoint ${labels.head} is still stored")
     }
   }
 }

@@ -251,18 +251,4 @@ class MergeSpec extends AnyFunSuite {
     assert(removed.exists(_.contains("__rewrite_tmp")), removed.toString)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${path}__rewrite_tmp_dead")))
   }
-
-  test("rewriteTable swaps content atomically-ish and preserves partitioning") {
-    val dir = TestSpark.tmpDir("rewrite")
-    val path = s"$dir/t"
-    target.withColumn("p", lit("a"))
-      .write.partitionBy("p").parquet(path)
-    Merge.rewriteTable(spark, path, Some("p")) { df =>
-      df.withColumn("status", lit("done"))
-    }
-    val back = spark.read.parquet(path)
-    assert(back.count() === 3)
-    assert(back.filter($"status" === "done").count() === 3)
-    assert(back.columns.contains("p"))
-  }
 }

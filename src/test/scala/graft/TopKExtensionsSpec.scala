@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.TopK
+import graft.plans.TopKNative
 
 /** The bounded top-k-per-key operator and the SparkSessionExtensions SQL
   * function registration.
@@ -12,17 +13,15 @@ import graft.plans.TopK
 class TopKExtensionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("topKPerKey matches the window row_number formulation exactly") {
-    val o = Tables.orders(spark, "/root/testdata/sf0.001")
-    val expected = SparkEntry.queries("q_window_topn")(spark, "/root/testdata/sf0.001")
+  /** Per-customer top-3 orders by price under Spark's own row_number
+    * window, as sorted row strings: the expected side of the rewrite
+    * tests (compute it while the rewrite is off). */
+  private def windowTop3(o: DataFrame): Seq[String] =
+    o.withColumn("rn", row_number().over(Window.partitionBy(col("o_custkey"))
+        .orderBy(col("o_totalprice").desc, col("o_orderkey"))))
+      .filter(col("rn") <= 3)
+      .select(col("o_custkey"), col("o_orderkey"), col("rn"))
       .collect().map(_.toString).sorted.toSeq
-    val got = TopK.topKPerKey(o, Seq("o_custkey"), "o_totalprice",
-        "o_orderkey", k = 3, descending = true)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-        col("rank").as("rn"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(got === expected)
-  }
 
   test("topKPerKey groups binary keys by value, not reference") {
     import spark.implicits._
@@ -32,7 +31,7 @@ class TopKExtensionsSpec extends AnyFunSuite {
       (Array[Byte](1, 2), 10L, 1L), (Array[Byte](1, 2), 20L, 2L),
       (Array[Byte](3, 4), 30L, 3L))
       .toDF("bkey", "score", "id")
-    val out = TopK.topKPerKey(df, Seq("bkey"), "score", "id", k = 1)
+    val out = TopKNative.topKPerKey(df, Seq("bkey"), "score", "id", k = 1)
       .select("id", "rank").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out === Map(2L -> 1L, 3L -> 1L)) // one winner per byte-value
@@ -40,7 +39,7 @@ class TopKExtensionsSpec extends AnyFunSuite {
 
   test("topKPerKey handles k larger than any group") {
     val n = Tables.nation(spark, "/root/testdata/sf0.001")
-    val out = TopK.topKPerKey(n, Seq("n_regionkey"), "n_nationkey",
+    val out = TopKNative.topKPerKey(n, Seq("n_regionkey"), "n_nationkey",
       "n_name", k = 100)
     assert(out.count() === n.count())
   }
@@ -67,7 +66,9 @@ class TopKExtensionsSpec extends AnyFunSuite {
   }
 
   test("TopKRewrite plans rank filters as the bounded operator automatically") {
-    import org.apache.spark.sql.expressions.Window
+    // the expected side is the plain window, computed before the
+    // rewrite is enabled
+    val expected = windowTop3(Tables.orders(spark, "/root/testdata/sf0.001"))
     graft.plans.TopKNative.enable(spark)
     try {
     val o = Tables.orders(spark, "/root/testdata/sf0.001")
@@ -78,11 +79,6 @@ class TopKExtensionsSpec extends AnyFunSuite {
     assert(plan.contains("TopKFinal"), plan)
     assert(!plan.contains("WindowGroupLimit"), plan)
     assert(!plan.contains("Window ["), plan) // no window exec remains
-    // results identical to the (rule-immune) Dataset-form operator
-    val expected = graft.plans.TopK.topKPerKey(o, Seq("o_custkey"),
-        "o_totalprice", "o_orderkey", 3)
-      .select(col("o_custkey"), col("o_orderkey"), col("rank").cast("int"))
-      .collect().map(_.toString).sorted.toSeq
     val got = df.select(col("o_custkey"), col("o_orderkey"), col("rn"))
       .collect().map(_.toString).sorted.toSeq
     assert(got === expected)
@@ -127,16 +123,17 @@ class TopKExtensionsSpec extends AnyFunSuite {
       rows.sortBy(r => (-r._3, r._2)).take(3).zipWithIndex
         .map { case (r, i) => (c, r._2, i + 1L) }
     }.sorted
-    val expected = graft.plans.TopK.topKPerKey(o, Seq("o_custkey"),
-        "o_totalprice", "o_orderkey", 3)
-      .select(col("o_custkey"), col("o_orderkey"), col("rank").cast("long"))
+    val expected = o.withColumn("rn", row_number().over(
+        Window.partitionBy(col("o_custkey"))
+          .orderBy(col("o_totalprice").desc, col("o_orderkey"))))
+      .filter(col("rn") <= 3)
+      .select(col("o_custkey"), col("o_orderkey"), col("rn").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       .sorted
     assert(got === expected)
   }
 
   test("rewrite declines beyond the k memory ceiling") {
-    import org.apache.spark.sql.expressions.Window
     graft.plans.TopKNative.enable(spark)
     try {
       val o = Tables.orders(spark, "/root/testdata/sf0.001")
@@ -217,11 +214,7 @@ class TopKExtensionsSpec extends AnyFunSuite {
     assert(plan.contains("TopKFinal"), plan)
     assert(!plan.contains("WindowGroupLimit"), plan)
     // results identical to the window formulation on the base session
-    val expected = graft.plans.TopK.topKPerKey(
-        Tables.orders(spark, "/root/testdata/sf0.001"), Seq("o_custkey"),
-        "o_totalprice", "o_orderkey", 3)
-      .select(col("o_custkey"), col("o_orderkey"), col("rank").cast("int"))
-      .collect().map(_.toString).sorted.toSeq
+    val expected = windowTop3(Tables.orders(spark, "/root/testdata/sf0.001"))
     val got = df.select(col("o_custkey"), col("o_orderkey"), col("rn"))
       .collect().map(_.toString).sorted.toSeq
     assert(got === expected)
