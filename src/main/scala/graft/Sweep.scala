@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions.{count, lit, sum, xxhash64}
   * disk spill — plus the row count and an order-independent checksum
   * taken outside the timed region. It then prints one summary line per
   * (entry, sf) and fails unless every cell agrees on the checksum: no
-  * result may depend on the master or on the partition count.
+  * result may depend on the master or on the partition count. Its last
+  * line is the JVM's peak resident set, `{"sweep":"memory",...}`.
   *
   * Args (all optional, `key=value`, lists comma-separated):
   * {{{
@@ -141,6 +142,19 @@ object Sweep {
       s"checksum mismatch or failure across cells: ${bad.mkString(", ")}")
   }
 
+  /** The JVM's peak resident set in MB: `VmHWM` from a `/proc/<pid>/status`
+    * file, 0 where the file or the line is absent. In local mode the
+    * executors run in this JVM too. */
+  def peakRssMb(status: java.nio.file.Path =
+      java.nio.file.Paths.get("/proc/self/status")): Double =
+    if (!java.nio.file.Files.isReadable(status)) 0.0
+    else {
+      val src = scala.io.Source.fromFile(status.toFile)
+      try src.getLines().collectFirst { case l if l.startsWith("VmHWM:") =>
+        l.split("\\s+")(1).toLong / 1024.0 }.getOrElse(0.0)
+      finally src.close()
+    }
+
   private val LocalN = """local\[(\d+)\]""".r
   private val LocalCluster = """local-cluster\[(\d+),(\d+),(\d+)\]""".r
   private val addOpens = Seq("java.lang", "java.nio", "sun.nio.ch",
@@ -217,6 +231,7 @@ object Sweep {
           SparkSession.clearDefaultSession()
         }
     }
-    summarize(runs)
+    try summarize(runs)
+    finally println(f"""{"sweep":"memory","vm_hwm_mb":${peakRssMb()}%.1f}""")
   }
 }

@@ -649,6 +649,10 @@ object Vec {
       .sortWithinPartitions(col("node_id").asc, col("sim").desc,
         col("neighbor_id").asc)
       .localCheckpoint(true)
+    // The eager checkpoint holds the last round's output, so no task reads
+    // the vector map again: free it now, not at whichever later GC lets the
+    // ContextCleaner find it unreachable.
+    bc.destroy()
     // localCheckpoint under AQE records UnknownPartitioning; re-declare
     // the layout the plan above genuinely produced so consumers reuse
     // it exchange- and sort-free (the memo's own checkpoint passes the

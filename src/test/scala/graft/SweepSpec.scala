@@ -44,6 +44,15 @@ class SweepSpec extends AnyFunSuite {
     assert(e.getMessage.contains("q_corr_matrix"))
   }
 
+  test("peak memory is VmHWM in MB, and 0 without a status file") {
+    val dir = java.nio.file.Files.createTempDirectory("sweep-status")
+    val status = dir.resolve("status")
+    java.nio.file.Files.writeString(status,
+      "Name:\tjava\nVmPeak:\t 9999999 kB\nVmHWM:\t 1572864 kB\n")
+    assert(Sweep.peakRssMb(status) == 1536.0)
+    assert(Sweep.peakRssMb(dir.resolve("absent")) == 0.0)
+  }
+
   test("masters expand to (master, cores) cells") {
     assert(Sweep.cells(Seq("local", "local-cluster[2,2,1024]"), Seq(1, 4)) ==
       Seq(("local[1]", 1), ("local[4]", 4), ("local-cluster[2,2,1024]", 4)))
