@@ -1304,13 +1304,7 @@ object Dedup {
       maxDist: Int): DataFrame = {
     require(prefixLen >= 1, s"prefixLen must be >= 1, got $prefixLen")
     require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
-    val p = docs.select(col(idCol),
-      substring(col(textCol), 1, prefixLen).as("__pfx"))
-    candidates.select(col("id_a"), col("id_b"))
-      .join(p.select(col(idCol).as("id_a"), col("__pfx").as("__pa")),
-        Seq("id_a"))
-      .join(p.select(col(idCol).as("id_b"), col("__pfx").as("__pb")),
-        Seq("id_b"))
+    withPrefixes(candidates, docs, idCol, textCol, prefixLen)
       // The threshold form runs the BANDED DP — O(len·maxDist) per pair
       // instead of O(len²) — returning −1 past the threshold, which is
       // exactly the filter anyway; kept distances equal the full DP's.
@@ -1374,13 +1368,7 @@ object Dedup {
       maxDist: Int): DataFrame = {
     require(prefixLen >= 1, s"prefixLen must be >= 1, got $prefixLen")
     require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
-    val p = docs.select(col(idCol),
-      substring(col(textCol), 1, prefixLen).as("__pfx"))
-    candidates.select(col("id_a"), col("id_b"))
-      .join(p.select(col(idCol).as("id_a"), col("__pfx").as("__pa")),
-        Seq("id_a"))
-      .join(p.select(col(idCol).as("id_b"), col("__pfx").as("__pb")),
-        Seq("id_b"))
+    withPrefixes(candidates, docs, idCol, textCol, prefixLen)
       .withColumn("dist",
         graft.plans.Damerau.damerau(col("__pa"), col("__pb")).cast("long"))
       .filter(col("dist") <= maxDist)
@@ -1389,4 +1377,27 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("dist"), col("lev_dist"),
         (col("lev_dist") - col("dist")).as("transposition_gain"))
   }
+
+  /** The candidate pairs with each side's first `prefixLen` characters of
+    * `textCol` (`__pa`, `__pb`) — the bounded operands of the verify DPs.
+    */
+  private def withPrefixes(candidates: DataFrame, docs: DataFrame,
+      idCol: String, textCol: String, prefixLen: Int): DataFrame =
+    withDocColumns(candidates,
+      docs.select(col(idCol), substring(col(textCol), 1, prefixLen).as("__pfx")),
+      idCol, Seq(("__pfx", "__pa", "__pb")))
+
+  /** Pairs (id_a, id_b) with per-document columns fanned onto both sides
+    * by two id-keyed equi-joins — the candidate → fan-out → verify shape
+    * of every pair verifier: each (column, aName, bName) of `perDoc`
+    * lands as `aName` from id_a's row and as `bName` from id_b's. Pairs
+    * with a side absent from `perDoc` drop (inner joins).
+    */
+  private[functions] def withDocColumns(pairs: DataFrame, perDoc: DataFrame,
+      idCol: String, cols: Seq[(String, String, String)]): DataFrame =
+    pairs.select(col("id_a"), col("id_b"))
+      .join(perDoc.select(col(idCol).as("id_a") +:
+        cols.map { case (c, a, _) => col(c).as(a) }: _*), Seq("id_a"))
+      .join(perDoc.select(col(idCol).as("id_b") +:
+        cols.map { case (c, _, b) => col(c).as(b) }: _*), Seq("id_b"))
 }

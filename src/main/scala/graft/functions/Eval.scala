@@ -100,19 +100,11 @@ object Eval {
     // before it (the relational groupBy/collect_list form paid two
     // corpus shuffles for the same arrays).
     val sets = docs.select(col(idCol),
-        org.apache.spark.sql.GraftBridge.column(
-          graft.plans.RougeGramSetExpr(
-            org.apache.spark.sql.GraftBridge.expression(col(textCol)), n))
-          .as("__set"))
-      .withColumn("__t", size(col("__set")).cast("long"))
-      .filter(col("__t") > 0L)
-    pairs.select(col("id_a"), col("id_b"))
-      .join(sets.select(col(idCol).as("id_a"), col("__set").as("__sa"),
-        col("__t").as("n_cand")), Seq("id_a"))
-      .join(sets.select(col(idCol).as("id_b"), col("__set").as("__sb"),
-        col("__t").as("n_ref")), Seq("id_b"))
-      .withColumn("n_overlap",
-        size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
+      org.apache.spark.sql.GraftBridge.column(
+        graft.plans.RougeGramSetExpr(
+          org.apache.spark.sql.GraftBridge.expression(col(textCol)), n))
+        .as("__set"))
+    gramOverlap(pairs, sets, idCol)
       .select(col("id_a"), col("id_b"), col("n_overlap"), col("n_cand"),
         col("n_ref"),
         Stats.fixedPointExact(col("n_overlap"), col("n_cand"))
@@ -122,6 +114,20 @@ object Eval {
         Stats.fixedPointExact(lit(2L) * col("n_overlap"),
           col("n_cand") + col("n_ref")).as("rouge_f_ppm"))
   }
+
+  /** The multiset overlap of [[rougeN]] and [[chrF]]: each document's
+    * occurrence-indexed gram set `__set` (gram-less documents dropped)
+    * fanned onto the pairs — id_a's as (`__sa`, n_cand), id_b's as
+    * (`__sb`, n_ref) — and `n_overlap` = |__sa ∩ __sb|.
+    */
+  private def gramOverlap(pairs: DataFrame, sets: DataFrame,
+      idCol: String): DataFrame =
+    Dedup.withDocColumns(pairs,
+        sets.withColumn("__t", size(col("__set")).cast("long"))
+          .filter(col("__t") > 0L),
+        idCol, Seq(("__set", "__sa", "__sb"), ("__t", "n_cand", "n_ref")))
+      .withColumn("n_overlap",
+        size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
 
   /** Sentence BLEU-4 between candidate/reference pairs (Papineni et
     * al. 2002) — the classic MT/generation metric completing the eval
@@ -165,11 +171,8 @@ object Eval {
     val sets = docs.select(
       col(idCol) +: (1 to 4).map(nn => gset(nn).as(s"__g$nn")): _*)
     val lg = graft.plans.FixLog.log2qCol _
-    val joined = pairs.select(col("id_a"), col("id_b"))
-      .join(sets.select(col(idCol).as("id_a") +:
-        (1 to 4).map(nn => col(s"__g$nn").as(s"__a$nn")): _*), Seq("id_a"))
-      .join(sets.select(col(idCol).as("id_b") +:
-        (1 to 4).map(nn => col(s"__g$nn").as(s"__b$nn")): _*), Seq("id_b"))
+    val joined = Dedup.withDocColumns(pairs, sets, idCol,
+        (1 to 4).map(nn => (s"__g$nn", s"__a$nn", s"__b$nn")))
       .withColumn("c", size(col("__a1")).cast("long"))
       .withColumn("r", size(col("__b1")).cast("long"))
       .filter(col("c") >= 4L && col("r") >= 1L)
@@ -215,17 +218,9 @@ object Eval {
     require(n >= 1, s"n must be >= 1, got $n")
     require(beta2 >= 0, s"beta2 must be >= 0, got $beta2")
     val sets = docs.select(col(idCol),
-        graft.plans.CdcColumns.charGramSet(
-          regexp_replace(col(textCol), "\\s+", ""), n).as("__set"))
-      .withColumn("__t", size(col("__set")).cast("long"))
-      .filter(col("__t") > 0L)
-    pairs.select(col("id_a"), col("id_b"))
-      .join(sets.select(col(idCol).as("id_a"), col("__set").as("__sa"),
-        col("__t").as("n_cand")), Seq("id_a"))
-      .join(sets.select(col(idCol).as("id_b"), col("__set").as("__sb"),
-        col("__t").as("n_ref")), Seq("id_b"))
-      .withColumn("n_overlap",
-        size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
+      graft.plans.CdcColumns.charGramSet(
+        regexp_replace(col(textCol), "\\s+", ""), n).as("__set"))
+    gramOverlap(pairs, sets, idCol)
       .select(col("id_a"), col("id_b"), col("n_overlap"), col("n_cand"),
         col("n_ref"),
         Stats.fixedPointExact(col("n_overlap"), col("n_cand"))
@@ -248,12 +243,8 @@ object Eval {
     */
   def rougeL(pairs: DataFrame, docs: DataFrame, idCol: String,
       textCol: String, cap: Int = 256): DataFrame = {
-    val t = docs.select(col(idCol), col(textCol))
-    pairs.select(col("id_a"), col("id_b"))
-      .join(t.select(col(idCol).as("id_a"), col(textCol).as("__ta")),
-        Seq("id_a"))
-      .join(t.select(col(idCol).as("id_b"), col(textCol).as("__tb")),
-        Seq("id_b"))
+    Dedup.withDocColumns(pairs, docs.select(col(idCol), col(textCol)), idCol,
+        Seq((textCol, "__ta", "__tb")))
       .select(col("id_a"), col("id_b"),
         graft.plans.Lcs.tokenLcsCol(col("__ta"), col("__tb"), cap)
           .cast("long").as("lcs"),
@@ -331,14 +322,8 @@ object Eval {
     */
   def aucExact(pred: DataFrame, scoreCol: String,
       positive: Column): DataFrame = {
-    val perScore = pred.filter(col(scoreCol).isNotNull)
-      .select(col(scoreCol).cast("long").as("__sc"),
-        when(positive, 1L).otherwise(0L).as("__p"))
-      .groupBy(col("__sc"))
-      .agg(sum(col("__p")).as("__np"),
-        (count(lit(1)) - sum(col("__p"))).as("__nn"))
     val pre = GroupRank.withPrefixSum(
-      perScore.withColumn("__all", lit(1)),
+      scoreCounts(pred, scoreCol, positive).withColumn("__all", lit(1)),
       Seq("__all"), Seq(col("__sc").asc), "__nn", "__negBelow", "__negTot")
     pre.agg(sum(col("__np")).as("n_pos"), sum(col("__nn")).as("n_neg"),
         sum(col("__np") * (lit(2L) * col("__negBelow") + col("__nn")))
@@ -350,6 +335,19 @@ object Eval {
             (lit(2L).cast("decimal(19,0)") * col("n_pos") * col("n_neg"))
               .cast("decimal(38,0)"))).as("auc_ppm"))
   }
+
+  /** The per-score table of [[aucExact]] and [[prAuc]]: per distinct
+    * non-NULL integer score `__sc`, its positive (`__np`) and negative
+    * (`__nn`) counts — distinct-score-domain sized, never row sized.
+    */
+  private def scoreCounts(pred: DataFrame, scoreCol: String,
+      positive: Column): DataFrame =
+    pred.filter(col(scoreCol).isNotNull)
+      .select(col(scoreCol).cast("long").as("__sc"),
+        when(positive, 1L).otherwise(0L).as("__p"))
+      .groupBy(col("__sc"))
+      .agg(sum(col("__p")).as("__np"),
+        (count(lit(1)) - sum(col("__p"))).as("__nn"))
 
   /** RECALL@K of an approximate top-k retrieval against the exact one
     * — the serving-quality number every ANN index ships with (the
@@ -1069,12 +1067,7 @@ object Eval {
   def prAuc(pred: DataFrame, scoreCol: String,
       positive: Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val perScore = pred.filter(col(scoreCol).isNotNull)
-      .select(col(scoreCol).cast("long").as("__sc"),
-        when(positive, 1L).otherwise(0L).as("__p"))
-      .groupBy(col("__sc"))
-      .agg(sum(col("__p")).as("__np"),
-        (count(lit(1)) - sum(col("__p"))).as("__nn"))
+    val perScore = scoreCounts(pred, scoreCol, positive)
       .withColumn("__nt", col("__np") + col("__nn"))
     val withTp = GroupRank.withPrefixSum(
       perScore.withColumn("__all", lit(1)),

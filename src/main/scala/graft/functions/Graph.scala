@@ -52,6 +52,30 @@ object Graph {
       .select(col("__e.s").as(srcCol), col("__e.t").as(dstCol))
       .distinct()
 
+  /** The canonical undirected edge set: one distinct (a, b) row with
+    * a < b per non-loop edge of `edges`, whichever way it was listed.
+    */
+  private def canonicalEdges(edges: DataFrame, aCol: String,
+      bCol: String): DataFrame =
+    edges
+      .select(least(col(aCol), col(bCol)).as("a"),
+        greatest(col(aCol), col(bCol)).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+
+  /** The inputs of the wedge-based link predictors: the canonical edge
+    * set (checkpointed: the wedge build and the adjacency anti-join both
+    * read it), both its orientations as (center z, neighbor n), and each
+    * center's degree `__d`.
+    */
+  private def wedgeInputs(edges: DataFrame, aCol: String, bCol: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val und = canonicalEdges(edges, aCol, bCol).localCheckpoint(true)
+    val sym = und.select(col("a").as("z"), col("b").as("n"))
+      .unionByName(und.select(col("b").as("z"), col("a").as("n")))
+    (und, sym, sym.groupBy(col("z")).agg(count(lit(1)).as("__d")))
+  }
+
   private val RScale = 1000000000000L // 10^12 fixed-point rank scale
 
   /** Co-occurrence edge list (src, dst, w) — both directions, no
@@ -291,12 +315,7 @@ object Graph {
     */
   def triangleCounts(edges: DataFrame, aCol: String, bCol: String,
       vertices: DataFrame, idCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
+    val und = canonicalEdges(edges, aCol, bCol).localCheckpoint(true)
     val deg = und.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
     // orient by (degree, id): u -> v iff (d_u, u) < (d_v, v)
@@ -346,15 +365,7 @@ object Graph {
   def commonNeighbors(edges: DataFrame, aCol: String, bCol: String,
       minCommon: Long = 1L, degCap: Long = 10000L): DataFrame = {
     require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val sym = und.select(col("a").as("z"), col("b").as("n"))
-      .unionByName(und.select(col("b").as("z"), col("a").as("n")))
-    val deg = sym.groupBy(col("z")).agg(count(lit(1)).as("__d"))
+    val (und, sym, deg) = wedgeInputs(edges, aCol, bCol)
     val centers = sym.join(deg.filter(col("__d") <= degCap).select("z"),
       Seq("z"))
     val pairs = centers.select(col("z"), col("n").as("x"))
@@ -391,15 +402,7 @@ object Graph {
   def adamicAdar(edges: DataFrame, aCol: String, bCol: String,
       minCommon: Long = 1L, degCap: Long = 10000L): DataFrame = {
     require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val sym = und.select(col("a").as("z"), col("b").as("n"))
-      .unionByName(und.select(col("b").as("z"), col("a").as("n")))
-    val deg = sym.groupBy(col("z")).agg(count(lit(1)).as("__d"))
+    val (und, sym, deg) = wedgeInputs(edges, aCol, bCol)
     val disc = deg.filter(col("__d") >= 2L && col("__d") <= degCap)
       .select(col("z"),
         graft.plans.FixLog.log2qCol(col("__d")).as("__lq"))
@@ -598,11 +601,7 @@ object Graph {
     */
   def clusteringCoef(edges: DataFrame, aCol: String, bCol: String,
       vertices: DataFrame, idCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = canonicalEdges(edges, aCol, bCol)
     val deg = und.select(explode(array(col("a"), col("b"))).as(idCol))
       .groupBy(col(idCol)).agg(count(lit(1)).as("__deg"))
     val tri = triangleCounts(und, "a", "b", vertices, idCol)
@@ -694,12 +693,7 @@ object Graph {
   def modularity(edges: DataFrame, aCol: String, bCol: String,
       communities: DataFrame, idCol: String,
       labelCol: String = "label"): DataFrame = {
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("a"),
-        greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
+    val und = canonicalEdges(edges, aCol, bCol).localCheckpoint(true)
     val lab = communities.select(col(idCol).as("__id"),
       col(labelCol).cast("long").as("__lbl"))
     val m = und.count()

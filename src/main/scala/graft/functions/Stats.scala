@@ -41,6 +41,94 @@ object Stats {
     when(num < 0, -q).otherwise(q)
   }
 
+  /** The two-sample side flags: `__ia` / `__ib` are 1 where `aPred` /
+    * `bPred` holds, else 0. */
+  private def sideFlagCols(aPred: Column, bPred: Column): Seq[Column] =
+    Seq(when(aPred, 1L).otherwise(0L).as("__ia"),
+      when(bPred, 1L).otherwise(0L).as("__ib"))
+
+  /** Every row with a non-NULL `valueCol` — NULL is not an ordered sample
+    * value (and the two engines would even order it differently) — as
+    * its value `v` (`__v`) and its side flags. */
+  private def sideFlags(df: DataFrame, valueCol: String, v: Column,
+      aPred: Column, bPred: Column): DataFrame =
+    df.filter(col(valueCol).isNotNull)
+      .select(v.as("__v") +: sideFlagCols(aPred, bPred): _*)
+
+  /** Per `key` value of the flagged rows, the count of each sample
+    * (`__ca`, `__cb`). */
+  private def sideCounts(flags: DataFrame, key: String): DataFrame =
+    flags.groupBy(col(key))
+      .agg(sum(col("__ia")).as("__ca"), sum(col("__ib")).as("__cb"))
+
+  /** The value-domain count table of the rank and transport statistics:
+    * per distinct integer value `__v` of the rows in either sample, the
+    * count of each sample (`__ca`, `__cb`). Its size is the DISTINCT
+    * value domain, never the row count. */
+  private def valueCounts(df: DataFrame, valueCol: String, aPred: Column,
+      bPred: Column): DataFrame =
+    sideCounts(
+      sideFlags(df, valueCol, col(valueCol).cast("long"), aPred, bPred)
+        .filter(col("__ia") === 1L || col("__ib") === 1L), "__v")
+
+  /** The cumulative window over the rows ordered by `key`: every row up
+    * to and including the current one. */
+  private def upTo(key: String): org.apache.spark.sql.expressions.WindowSpec =
+    Window.orderBy(col(key))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** The KS sup over count table `counts` ordered by `key`: one row
+    * (n_a, n_b, d_num) with d_num = max |C_a·n_b − C_b·n_a| over the
+    * cumulative counts. */
+  private def ksSup(counts: DataFrame, key: String): DataFrame = {
+    val w = upTo(key)
+    val cum = counts
+      .withColumn("__Ca", sum(col("__ca")).over(w))
+      .withColumn("__Cb", sum(col("__cb")).over(w))
+    val tot = cum.agg(max(col("__Ca")).as("n_a"), max(col("__Cb")).as("n_b"))
+    cum.crossJoin(broadcast(tot))
+      .select(col("n_a"), col("n_b"),
+        abs(col("__Ca") * col("n_b") - col("__Cb") * col("n_a")).as("__d"))
+      .groupBy(col("n_a"), col("n_b"))
+      .agg(max(col("__d")).as("d_num"))
+  }
+
+  /** [[ksSup]]'s d_num / (n_a·n_b) in exact ppm; NULL when a sample is
+    * empty (the groupOls den = 0 contract). */
+  private def ksPpm: Column =
+    when(col("n_a") === 0L || col("n_b") === 0L, lit(null).cast("long"))
+      .otherwise(fixedPointExact(col("d_num"),
+        (col("n_a").cast("decimal(19,0)") * col("n_b"))
+          .cast("decimal(38,0)")))
+      .as("d_ppm")
+
+  /** One pass of two-sample moment sums over `valueCol` as long: sizes
+    * (na, nb), sums (__sa, __sb) and square sums (__ssa, __ssb), the
+    * square sums in decimal(38,0). */
+  private def momentSums(df: DataFrame, valueCol: String, aPred: Column,
+      bPred: Column): DataFrame = {
+    val dec = "decimal(38,0)"
+    val x = col(valueCol).cast("long")
+    df.select(x.as("__x") +: sideFlagCols(aPred, bPred): _*).agg(
+      sum(col("__ia")).as("na"), sum(col("__ib")).as("nb"),
+      sum(col("__ia") * col("__x")).as("__sa"),
+      sum(col("__ib") * col("__x")).as("__sb"),
+      sum((col("__ia") * col("__x")).cast("decimal(19,0)") * col("__x"))
+        .cast(dec).as("__ssa"),
+      sum((col("__ib") * col("__x")).cast("decimal(19,0)") * col("__x"))
+        .cast(dec).as("__ssb"))
+  }
+
+  /** The two sample means of [[momentSums]] in exact ppm (`mean_a_ppm`,
+    * `mean_b_ppm`); NULL for an empty sample. */
+  private def meanPpms: Seq[Column] = Seq(
+    when(col("na") === 0, lit(null).cast("long"))
+      .otherwise(fixedPointExact(col("__sa"), col("na")))
+      .as("mean_a_ppm"),
+    when(col("nb") === 0, lit(null).cast("long"))
+      .otherwise(fixedPointExact(col("__sb"), col("nb")))
+      .as("mean_b_ppm"))
+
   /** Two-sample KS distance between the `valueCol` distributions of two
     * row sets (`aPred` / `bPred` over the same frame) — exact:
     * D = max_x |F_a(x) - F_b(x)| = D_num / (n_a * n_b) with
@@ -52,35 +140,12 @@ object Stats {
     */
   def ksTest(df: DataFrame, valueCol: String, aPred: Column,
       bPred: Column): DataFrame = {
-    // NULL is not an ordered sample value (and the two engines would
-    // even order it differently); an empty side renders d as null, the
-    // groupOls den = 0 contract
-    val counts = df.filter(col(valueCol).isNotNull)
-      .select(col(valueCol).as("__v"),
-        when(aPred, 1L).otherwise(0L).as("__ia"),
-        when(bPred, 1L).otherwise(0L).as("__ib"))
-      .groupBy(col("__v"))
-      .agg(sum(col("__ia")).as("__ca"), sum(col("__ib")).as("__cb"))
     // cumulative over the DISTINCT value domain (bounded for the
-    // discrete metrics this test is for)
-    val w = Window.orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = counts
-      .withColumn("__Ca", sum(col("__ca")).over(w))
-      .withColumn("__Cb", sum(col("__cb")).over(w))
-    val tot = cum.agg(max(col("__Ca")).as("n_a"), max(col("__Cb")).as("n_b"))
-    cum.crossJoin(broadcast(tot))
-      .select(col("n_a"), col("n_b"),
-        abs(col("__Ca") * col("n_b") - col("__Cb") * col("n_a")).as("__d"))
-      .groupBy(col("n_a"), col("n_b"))
-      .agg(max(col("__d")).as("d_num"))
-      .select(col("n_a"), col("n_b"), col("d_num"),
-        when(col("n_a") === 0L || col("n_b") === 0L,
-          lit(null).cast("long"))
-          .otherwise(fixedPointExact(col("d_num"),
-            (col("n_a").cast("decimal(19,0)") * col("n_b"))
-              .cast("decimal(38,0)")))
-          .as("d_ppm"),
+    // discrete metrics this test is for); an empty side renders d as null
+    val counts = sideCounts(
+      sideFlags(df, valueCol, col(valueCol), aPred, bPred), "__v")
+    ksSup(counts, "__v")
+      .select(col("n_a"), col("n_b"), col("d_num"), ksPpm,
         when(col("n_a") === 0L || col("n_b") === 0L,
           lit(null).cast("double"))
           .otherwise(round(col("d_num").cast("double") /
@@ -111,10 +176,8 @@ object Stats {
   def ksTestBinned(df: DataFrame, valueCol: String, aPred: Column,
       bPred: Column, nBins: Int): DataFrame = {
     require(nBins >= 2, s"nBins must be >= 2, got $nBins")
-    val vals = df.filter(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("double").as("__v"),
-        when(aPred, 1L).otherwise(0L).as("__ia"),
-        when(bPred, 1L).otherwise(0L).as("__ib"))
+    val vals = sideFlags(df, valueCol, col(valueCol).cast("double"), aPred,
+        bPred)
       .filter(col("__ia") === 1L || col("__ib") === 1L)
     val ext = vals.agg(min(col("__v")).as("__mn"), max(col("__v")).as("__mx"))
     val binned = vals.crossJoin(broadcast(ext))
@@ -124,27 +187,9 @@ object Stats {
             floor((col("__v") - col("__mn")) * lit(nBins.toDouble) /
               (col("__mx") - col("__mn"))))).as("__b"),
         col("__ia"), col("__ib"))
-      .groupBy(col("__b"))
-      .agg(sum(col("__ia")).as("__ca"), sum(col("__ib")).as("__cb"))
-    val w = Window.orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = binned
-      .withColumn("__Ca", sum(col("__ca")).over(w))
-      .withColumn("__Cb", sum(col("__cb")).over(w))
-    val tot = cum.agg(max(col("__Ca")).as("n_a"), max(col("__Cb")).as("n_b"))
-    cum.crossJoin(broadcast(tot))
-      .select(col("n_a"), col("n_b"),
-        abs(col("__Ca") * col("n_b") - col("__Cb") * col("n_a")).as("__d"))
-      .groupBy(col("n_a"), col("n_b"))
-      .agg(max(col("__d")).as("d_num"))
+    ksSup(sideCounts(binned, "__b"), "__b")
       .select(col("n_a"), col("n_b"), lit(nBins.toLong).as("n_bins"),
-        col("d_num"),
-        when(col("n_a") === 0L || col("n_b") === 0L,
-          lit(null).cast("long"))
-          .otherwise(fixedPointExact(col("d_num"),
-            (col("n_a").cast("decimal(19,0)") * col("n_b"))
-              .cast("decimal(38,0)")))
-          .as("d_ppm"))
+        col("d_num"), ksPpm)
   }
 
   /** 1-D Wasserstein-1 (earth mover's) distance between the
@@ -166,17 +211,9 @@ object Stats {
   def wasserstein1(df: DataFrame, valueCol: String, aPred: Column,
       bPred: Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val counts = df.filter(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("long").as("__v"),
-        when(aPred, 1L).otherwise(0L).as("__ia"),
-        when(bPred, 1L).otherwise(0L).as("__ib"))
-      .filter(col("__ia") === 1L || col("__ib") === 1L)
-      .groupBy(col("__v"))
-      .agg(sum(col("__ia")).as("__ca"), sum(col("__ib")).as("__cb"))
-    val w = Window.orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val w = upTo("__v")
     val wNext = Window.orderBy(col("__v"))
-    val cum = counts
+    val cum = valueCounts(df, valueCol, aPred, bPred)
       .withColumn("__Ca", sum(col("__ca")).over(w))
       .withColumn("__Cb", sum(col("__cb")).over(w))
       .withColumn("__nv", lead(col("__v"), 1).over(wNext))
@@ -224,16 +261,8 @@ object Stats {
   def mannWhitneyU(df: DataFrame, valueCol: String, aPred: Column,
       bPred: Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val counts = df.filter(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("long").as("__v"),
-        when(aPred, 1L).otherwise(0L).as("__ia"),
-        when(bPred, 1L).otherwise(0L).as("__ib"))
-      .filter(col("__ia") === 1L || col("__ib") === 1L)
-      .groupBy(col("__v"))
-      .agg(sum(col("__ia")).as("__ca"), sum(col("__ib")).as("__cb"))
-    val w = Window.orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = counts
+    val w = upTo("__v")
+    val cum = valueCounts(df, valueCol, aPred, bPred)
       .withColumn("__t", col("__ca") + col("__cb"))
       .withColumn("__C", sum(col("__t")).over(w))
     val agg = cum.agg(
@@ -298,8 +327,7 @@ object Stats {
       .select(col(groupCol).as("__g"), col(valueCol).cast("long").as("__v"))
       .groupBy(col("__g"), col("__v")).agg(count(lit(1)).as("__c"))
     val dom = counts.groupBy(col("__v")).agg(sum(col("__c")).as("__t"))
-    val w = Window.orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val w = upTo("__v")
     // __cum, not __C: Spark's case-insensitive resolver would collide a
     // __C window alias with the per-group __c count after the join
     val domc = dom.withColumn("__cum", sum(col("__t")).over(w))
@@ -1524,25 +1552,8 @@ object Stats {
   def welchT2(df: DataFrame, valueCol: String, aPred: Column,
       bPred: Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val x = col(valueCol).cast("long")
-    val side = df.select(x.as("__x"),
-      when(aPred, 1L).otherwise(0L).as("__ia"),
-      when(bPred, 1L).otherwise(0L).as("__ib"))
-    val sums = side.agg(
-      sum(col("__ia")).as("na"), sum(col("__ib")).as("nb"),
-      sum(col("__ia") * col("__x")).as("__sa"),
-      sum(col("__ib") * col("__x")).as("__sb"),
-      sum((col("__ia") * col("__x")).cast("decimal(19,0)") * col("__x"))
-        .cast(dec).as("__ssa"),
-      sum((col("__ib") * col("__x")).cast("decimal(19,0)") * col("__x"))
-        .cast(dec).as("__ssb"))
-    sums.select(col("na"), col("nb"),
-        when(col("na") === 0, lit(null).cast("long"))
-          .otherwise(fixedPointExact(col("__sa"), col("na")))
-          .as("mean_a_ppm"),
-        when(col("nb") === 0, lit(null).cast("long"))
-          .otherwise(fixedPointExact(col("__sb"), col("nb")))
-          .as("mean_b_ppm"),
+    momentSums(df, valueCol, aPred, bPred)
+      .select(Seq(col("na"), col("nb")) ++ meanPpms ++ Seq(
         expr(s"""CAST((CAST(na AS $dec) * __ssa -
             CAST(__sa AS $dec) * __sa) *
           (CAST(nb AS $dec) * nb * (nb - 1)) +
@@ -1550,7 +1561,7 @@ object Stats {
           (CAST(na AS $dec) * na * (na - 1)) AS $dec)""").as("__den"),
         expr(s"""CAST((CAST(__sa AS $dec) * nb - CAST(__sb AS $dec) * na)
           * (CAST(__sa AS $dec) * nb - CAST(__sb AS $dec) * na)
-          * (CAST(na - 1 AS $dec) * (nb - 1)) AS $dec)""").as("__num"))
+          * (CAST(na - 1 AS $dec) * (nb - 1)) AS $dec)""").as("__num")): _*)
       .select(col("na").as("n_a"), col("nb").as("n_b"),
         col("mean_a_ppm"), col("mean_b_ppm"),
         when(col("na") < 2 || col("nb") < 2 || col("__den") <= 0,
@@ -1692,15 +1703,8 @@ object Stats {
   def energyDistance(df: DataFrame, valueCol: String, aPred: Column,
       bPred: Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val counts = df.filter(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("long").as("__v"),
-        when(aPred, 1L).otherwise(0L).as("__ia"),
-        when(bPred, 1L).otherwise(0L).as("__ib"))
-      .filter(col("__ia") === 1L || col("__ib") === 1L)
-      .groupBy(col("__v"))
-      .agg(sum(col("__ia")).as("__ca"), sum(col("__ib")).as("__cb"))
-    val w = Window.orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val counts = valueCounts(df, valueCol, aPred, bPred)
+    val w = upTo("__v")
     val cum = counts
       .withColumn("__qa", sum(col("__ca")).over(w))
       .withColumn("__qb", sum(col("__cb")).over(w))
@@ -1810,32 +1814,14 @@ object Stats {
   def cohensD(df: DataFrame, valueCol: String, aPred: Column,
       bPred: Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val x = col(valueCol).cast("long")
-    val side = df.select(x.as("__x"),
-      when(aPred, 1L).otherwise(0L).as("__ia"),
-      when(bPred, 1L).otherwise(0L).as("__ib"))
-    val sums = side.agg(
-      sum(col("__ia")).as("na"), sum(col("__ib")).as("nb"),
-      sum(col("__ia") * col("__x")).as("__sa"),
-      sum(col("__ib") * col("__x")).as("__sb"),
-      sum((col("__ia") * col("__x")).cast("decimal(19,0)") * col("__x"))
-        .cast(dec).as("__ssa"),
-      sum((col("__ib") * col("__x")).cast("decimal(19,0)") * col("__x"))
-        .cast(dec).as("__ssb"))
-    sums
-      .select(col("na"), col("nb"),
-        when(col("na") === 0, lit(null).cast("long"))
-          .otherwise(fixedPointExact(col("__sa"), col("na")))
-          .as("mean_a_ppm"),
-        when(col("nb") === 0, lit(null).cast("long"))
-          .otherwise(fixedPointExact(col("__sb"), col("nb")))
-          .as("mean_b_ppm"),
+    momentSums(df, valueCol, aPred, bPred)
+      .select(Seq(col("na"), col("nb")) ++ meanPpms ++ Seq(
         expr(s"""CAST((CAST(na AS $dec) * __ssa -
             CAST(__sa AS $dec) * __sa) * nb +
           (CAST(nb AS $dec) * __ssb - CAST(__sb AS $dec) * __sb) * na
           AS $dec)""").as("__pnum"),
         expr(s"""CAST(CAST(na AS $dec) * nb * (na + nb - 2)
-          AS $dec)""").as("__pden"))
+          AS $dec)""").as("__pden")): _*)
       .select(col("na").as("n_a"), col("nb").as("n_b"),
         col("mean_a_ppm"), col("mean_b_ppm"),
         when(col("na") < 2 || col("nb") < 2 || col("__pnum") < 0,
@@ -2140,17 +2126,10 @@ object Stats {
   def cliffsDelta(df: DataFrame, valueCol: String, aPred: Column,
       bPred: Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val counts = df.filter(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("long").as("__v"),
-        when(aPred, 1L).otherwise(0L).as("__ia"),
-        when(bPred, 1L).otherwise(0L).as("__ib"))
-      .filter(col("__ia") === 1L || col("__ib") === 1L)
-      .groupBy(col("__v"))
-      .agg(sum(col("__ia")).as("__ca"), sum(col("__ib")).as("__cb"))
     val w = Window.orderBy(col("__v"))
       .rowsBetween(Window.unboundedPreceding, -1)
     // #(a>b) − #(a<b) = Σ_v c_a(v)·(C_b_below(v) − (n_b − C_b_upto(v)))
-    val cum = counts
+    val cum = valueCounts(df, valueCol, aPred, bPred)
       .withColumn("__cbBelow", coalesce(sum(col("__cb")).over(w), lit(0L)))
     val agg = cum.agg(
       coalesce(sum(col("__ca")), lit(0L)).as("n_a"),

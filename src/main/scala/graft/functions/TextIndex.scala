@@ -86,20 +86,11 @@ object TextIndex {
     */
   def streamAppend(spark: SparkSession, path: String, streamDir: String,
       checkpoint: String, idCol: String = "doc_id",
-      textCol: String = "text"): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(streamDir).schema
-    val incoming = spark.readStream.schema(schema).parquet(streamDir)
-      .select(col(idCol), col(textCol))
-    incoming.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendBatch(batch.sparkSession, path, batch, idCol, textCol): Unit
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .queryName("Postings_Stream_Append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      textCol: String = "text"): org.apache.spark.sql.streaming.StreamingQuery =
+    graft.streaming.StreamingMedallion.parquetDirSink(spark, streamDir,
+        Seq(idCol, textCol), checkpoint, "Postings_Stream_Append") { (s, batch, _) =>
+      appendBatch(s, path, batch, idCol, textCol)
+    }
 
   /** One microbatch of documents into a written postings index —
     * [[streamAppend]]'s per-batch body, public so composed ingest loops

@@ -53,6 +53,55 @@ object Vec {
       sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol), col(vecCol)))
         .as(s"n$suffix"))
 
+  /** The top-k tail of every exact-scored search: each candidate
+    * (query_id, neighbor_id) row scored by [[pairSim]] of query vector
+    * `qVec` (norm `nq`) against candidate vector `cVec` (norm `nc`),
+    * then each query's k best by (sim desc, neighbor_id).
+    * Output: (query_id, neighbor_id, sim, rank).
+    */
+  private[functions] def simTopK(candidates: DataFrame, qVec: String,
+      cVec: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("neighbor_id"))
+    candidates
+      .withColumn("sim", pairSim(col(qVec), col(cVec), col("nq"), col("nc")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
+  }
+
+  /** The IVF coarse probe: each query's vector (`qv`) and norm (`nq`),
+    * paired with its `nProbe` cells of highest centroid cosine (ties to
+    * the lower cell id). `centroids` is (cell, centroid).
+    * Output: (query_id, qv, nq, cell).
+    */
+  private[functions] def probeCells(queries: DataFrame, centroids: DataFrame,
+      nProbe: Int, idCol: String, vecCol: String): DataFrame = {
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+      sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol), col(vecCol)))
+        .as("nq"))
+    val wCell = Window.partitionBy(col("query_id"))
+      .orderBy(col("cell_sim").desc, col("cell"))
+    q.join(broadcast(centroids))
+      .withColumn("cell_sim", cosine(col("qv"), col("centroid")))
+      .withColumn("cell_rank", row_number().over(wCell))
+      .filter(col("cell_rank") <= nProbe)
+      .select(col("query_id"), col("qv"), col("nq"), col("cell"))
+  }
+
+  /** The probed cells' candidates: `probed` ([[probeCells]]) joined to the
+    * cell-keyed corpus side `cells` (cell, neighbor_id, …). Self-exclusion
+    * only makes sense when queries come from the corpus's own id space —
+    * with an external query set a coincidental id equality would silently
+    * drop a legitimate neighbor (pass excludeSelf = false).
+    */
+  private[functions] def probedCandidates(probed: DataFrame, cells: DataFrame,
+      excludeSelf: Boolean): DataFrame = {
+    val joined = probed.join(cells, Seq("cell"))
+    if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
+    else joined
+  }
+
   /** Embedding-cosine near-duplicate pairs: all (id_a < id_b) pairs with
     * similarity >= `threshold`. This is the exact quadratic baseline —
     * correct at any data size but O(n²) compute; use `lshNearDupPairs`
@@ -223,13 +272,7 @@ object Vec {
     val joined =
       if (excludeSelf) q.join(c, col("query_id") =!= col("neighbor_id"))
       else q.crossJoin(c)
-    val scored = joined
-      .withColumn("sim", pairSim(col("vq"), col("vc"), col("nq"), col("nc")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
+    simTopK(joined, "vq", "vc", k)
   }
 
   /** Matryoshka-style truncated-prefix search (Kusupati et al. 2022,
@@ -366,8 +409,13 @@ object Vec {
   def nnDescent(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
       nBits: Int = 4, rounds: Int = 3, ringWindow: Int = 8): DataFrame =
     nndMemo(vecs, idCol, vecCol, k, nBits, rounds, ringWindow) {
-      nnDescentUncached(vecs, idCol, vecCol, k, nBits, rounds, ringWindow)
-        .localCheckpoint(true)
+      val g = nnDescentUncached(vecs, idCol, vecCol, k, nBits, rounds,
+        ringWindow)
+      val kept = g.localCheckpoint(true)
+      // g reads only the rounds' own final checkpoint (never a caller's):
+      // garbage once the memo's copy exists
+      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(g)
+      kept
     }
 
   private[graft] def nnDescentUncached(vecs: DataFrame, idCol: String,
@@ -633,10 +681,6 @@ object Vec {
       StructField("neighbor_id", LongType, nullable = true),
       StructField("sim", DoubleType, nullable = true),
       StructField("rank", LongType, nullable = false)))
-    // base0's checkpoint stays persisted: `seedRaw` reads it lazily at
-    // the caller's first action (the memo's own checkpoint); it is
-    // budget-gated small and dies with the context.
-    //
     // The DataFrame loop's checkpoint carried the final window's
     // hashpartitioning(node_id) + (node_id, sim desc, neighbor_id)
     // ordering, which every graph consumer's joins and windows reuse
@@ -650,9 +694,11 @@ object Vec {
         col("neighbor_id").asc)
       .localCheckpoint(true)
     // The eager checkpoint holds the last round's output, so no task reads
-    // the vector map again: free it now, not at whichever later GC lets the
-    // ContextCleaner find it unreachable.
+    // the vector map or base0 (the seed's source) again: free both now,
+    // as the DataFrame loop frees base0, not at whichever later GC lets
+    // the ContextCleaner find them unreachable.
     bc.destroy()
+    GraftBridge.unpersistCheckpoint(base0)
     // localCheckpoint under AQE records UnknownPartitioning; re-declare
     // the layout the plan above genuinely produced so consumers reuse
     // it exchange- and sort-free (the memo's own checkpoint passes the
@@ -967,38 +1013,13 @@ object Vec {
     val centroids = groupCentroids(
       corpus.select(col(cellCol).as("cell"), col(vecCol)), "cell", vecCol)
 
-    // rank cells per query by centroid similarity; keep nProbe. The query
-    // norm is computed once here, not per candidate pair.
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol), col(vecCol)))
-        .as("nq"))
-    val wCell = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_sim").desc, col("cell"))
-    val probed = q.join(broadcast(centroids))
-      .withColumn("cell_sim", cosine(col("qv"), col("centroid")))
-      .withColumn("cell_rank", row_number().over(wCell))
-      .filter(col("cell_rank") <= nProbe)
-      .select(col("query_id"), col("qv"), col("nq"), col("cell"))
-
+    val probed = probeCells(queries, centroids, nProbe, idCol, vecCol)
     // brute force only within the probed cells.
     val c = corpus.select(col(cellCol).as("cell"), col(idCol).as("neighbor_id"),
       col(vecCol).as("vc"),
       sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol), col(vecCol)))
         .as("nc"))
-    // Self-exclusion only makes sense when queries come from the corpus's
-    // own id space — with an external query set a coincidental id equality
-    // would silently drop a legitimate neighbor (set excludeSelf=false).
-    val joined = probed.join(c, Seq("cell"))
-    val candidates =
-      if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
-      else joined
-    val scored = candidates
-      .withColumn("sim", pairSim(col("qv"), col("vc"), col("nq"), col("nc")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
+    simTopK(probedCandidates(probed, c, excludeSelf), "qv", "vc", k)
   }
 
   /** IVF with a LEARNED coarse quantizer: k-means cells instead of a
@@ -1129,26 +1150,13 @@ object Vec {
       centroidsOpt: Option[DataFrame] = None): DataFrame = {
     val centroids = centroidsOpt.getOrElse(groupCentroids(
       corpus.select(col(cellCol).as("cell"), col(vecCol)), "cell", vecCol))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol), col(vecCol)))
-        .as("nq"))
-    val wCell = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_sim").desc, col("cell"))
-    val probed = q.join(broadcast(centroids))
-      .withColumn("cell_sim", cosine(col("qv"), col("centroid")))
-      .withColumn("cell_rank", row_number().over(wCell))
-      .filter(col("cell_rank") <= nProbe)
-      .select(col("query_id"), col("qv"), col("nq"), col("cell"))
-
+    val probed = probeCells(queries, centroids, nProbe, idCol, vecCol)
     // ADC within the probed cells only
     val c = recon.select(col("cell"), col(idCol).as("neighbor_id"),
       col("__rv"),
       sqrt(graft.plans.VecExpressions.dotProduct(col("__rv"), col("__rv")))
         .as("nc"))
-    val joined = probed.join(c, Seq("cell"))
-    val candidates =
-      if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
-      else joined
+    val candidates = probedCandidates(probed, c, excludeSelf)
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("__adc").desc, col("neighbor_id"))
     val sl = candidates
@@ -1390,14 +1398,8 @@ object Vec {
       col(vecCol).as("vq"), col("nrm").as("nq"))
     val c = b.select(col("bucket"), col(idCol).as("neighbor_id"),
       col(vecCol).as("vc"), col("nrm").as("nc"))
-    val scored = a.join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", pairSim(col("vq"), col("vc"), col("nq"), col("nc")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
+    simTopK(a.join(c, Seq("bucket"))
+      .filter(col("query_id") =!= col("neighbor_id")), "vq", "vc", k)
   }
 
   /** Greedy k-center (farthest-point-first) selection — the classic
@@ -2059,6 +2061,10 @@ object Vec {
       out = out.unionByName(frontier.select(col("__start"),
         lit(s.toLong).as("step"), col("__cur").as("node_id")))
     }
+    // every hop is materialized: the returned plan reads only the
+    // frontier checkpoints, so the adjacency and degree ones go
+    GraftBridge.unpersistCheckpoint(adj0)
+    GraftBridge.unpersistCheckpoint(deg0)
     out.select(col("__start").as("start_id"), col("step"), col("node_id"))
   }
 

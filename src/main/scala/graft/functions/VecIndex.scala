@@ -46,29 +46,19 @@ object VecIndex {
     */
   def streamAppend(spark: SparkSession, path: String, streamDir: String,
       checkpoint: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(streamDir).schema
-    val incoming = spark.readStream.schema(schema).parquet(streamDir)
-      .select(col(idCol), col(vecCol))
-    incoming.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val cents = s.read.parquet(s"$path/centroids")
-        val assigned = Vec.assignToCentroids(batch, cents, idCol, vecCol)
-          .select(col(idCol), col(vecCol), col("cell"))
-        // replay guard: a microbatch replayed after a mid-write failure
-        // must not double-append — the same id anti-join idempotency the
-        // medallion sinks use (the probe-side cost is one key-column scan
-        // of the index, partition-pruned readers never see duplicates)
-        graft.merge.Merge.antiJoinAppend(s, assigned, s"$path/data",
-          Seq(idCol), "cell"): Unit
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .queryName("Ivf_Stream_Append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      vecCol: String = "embedding"): org.apache.spark.sql.streaming.StreamingQuery =
+    graft.streaming.StreamingMedallion.parquetDirSink(spark, streamDir,
+        Seq(idCol, vecCol), checkpoint, "Ivf_Stream_Append") { (s, batch, _) =>
+      val cents = s.read.parquet(s"$path/centroids")
+      val assigned = Vec.assignToCentroids(batch, cents, idCol, vecCol)
+        .select(col(idCol), col(vecCol), col("cell"))
+      // replay guard: a microbatch replayed after a mid-write failure
+      // must not double-append — the same id anti-join idempotency the
+      // medallion sinks use (the probe-side cost is one key-column scan
+      // of the index, partition-pruned readers never see duplicates)
+      graft.merge.Merge.antiJoinAppend(s, assigned, s"$path/data",
+        Seq(idCol), "cell"): Unit
+    }
 
   /** Split every cell whose row count exceeds `maxCellSize` into
     * `splitK` sub-cells (in-cell k-means) — the maintenance op that keeps
@@ -206,41 +196,31 @@ object VecIndex {
     */
   def streamAppendPq(spark: SparkSession, path: String, streamDir: String,
       checkpoint: String, m: Int, subDim: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding"): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(streamDir).schema
-    val incoming = spark.readStream.schema(schema).parquet(streamDir)
-      .select(col(idCol), col(vecCol))
-    incoming.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val cents = s.read.parquet(s"$path/centroids")
-        val codebook = s.read.parquet(s"$path/codebook")
-        val coarse = Vec.assignToCentroids(batch, cents, idCol, vecCol)
-          .select(col(idCol), col(vecCol), col("cell"))
-          .localCheckpoint(true) // m subspace encoders + the cell join
-        val codes = (0 until m).map { ss =>
-          Vec.assignToCentroids(
-              coarse.select(col(idCol),
-                slice(col(vecCol), ss * subDim + 1, subDim).as(vecCol)),
-              codebook.filter(col("subspace") === ss)
-                .select(col("code").as("cell"), col("centroid")),
-              idCol, vecCol)
-            .select(col(idCol), lit(ss).as("subspace"),
-              col("cell").as("code"))
-        }.reduce(_ unionByName _)
-        val rows = packCodes(codes, idCol)
-          .join(coarse.select(col(idCol), col("cell")), Seq(idCol))
-          .select(col(idCol), col("codes"), col("cell"))
-        graft.merge.Merge.antiJoinAppend(s, rows, s"$path/codes",
-          Seq(idCol), "cell"): Unit
-        org.apache.spark.sql.GraftBridge.unpersistCheckpoint(coarse)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .queryName("IvfPq_Stream_Append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      vecCol: String = "embedding"): org.apache.spark.sql.streaming.StreamingQuery =
+    graft.streaming.StreamingMedallion.parquetDirSink(spark, streamDir,
+        Seq(idCol, vecCol), checkpoint, "IvfPq_Stream_Append") { (s, batch, _) =>
+      val cents = s.read.parquet(s"$path/centroids")
+      val codebook = s.read.parquet(s"$path/codebook")
+      val coarse = Vec.assignToCentroids(batch, cents, idCol, vecCol)
+        .select(col(idCol), col(vecCol), col("cell"))
+        .localCheckpoint(true) // m subspace encoders + the cell join
+      val codes = (0 until m).map { ss =>
+        Vec.assignToCentroids(
+            coarse.select(col(idCol),
+              slice(col(vecCol), ss * subDim + 1, subDim).as(vecCol)),
+            codebook.filter(col("subspace") === ss)
+              .select(col("code").as("cell"), col("centroid")),
+            idCol, vecCol)
+          .select(col(idCol), lit(ss).as("subspace"),
+            col("cell").as("code"))
+      }.reduce(_ unionByName _)
+      val rows = packCodes(codes, idCol)
+        .join(coarse.select(col(idCol), col("cell")), Seq(idCol))
+        .select(col(idCol), col("codes"), col("cell"))
+      graft.merge.Merge.antiJoinAppend(s, rows, s"$path/codes",
+        Seq(idCol), "cell"): Unit
+      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(coarse)
+    }
 
   /** Top-k ADC search against a written IVF-PQ index: rank cells per
     * query by centroid cosine (broadcast centroid table), scan ONLY the
@@ -264,40 +244,13 @@ object VecIndex {
     // (centroids/codebook/queries), so AQE re-plan rounds and wide
     // shuffles are pure per-probe latency. Bulk query sides keep the
     // shared session's analytics posture.
-    val (session, centroids, codebook, codes, qSide) =
+    val (Seq(centroids, codebook, codesBase), qSide) =
       servingQuerySide(spark, s"ivfpq:$path", queries,
-        Seq("centroids", "codebook", "codes"), path) match {
-        case Some((ss, fr, qv)) => (ss, fr(0), fr(1), fr(2), qv)
-        case None => (spark, spark.read.parquet(s"$path/centroids"),
-          spark.read.parquet(s"$path/codebook"),
-          spark.read.parquet(s"$path/codes"), queries)
-      }
-    ivfPqProbeBody(session, centroids, codebook, codes, qSide, k, nProbe,
-      idCol, vecCol, excludeSelf)
-  }
-
-  private def ivfPqProbeBody(spark: SparkSession, centroids: DataFrame,
-      codebook: DataFrame, codesBase: DataFrame, queries: DataFrame,
-      k: Int, nProbe: Int, idCol: String, vecCol: String,
-      excludeSelf: Boolean): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol), col(vecCol)))
-        .as("nq"))
-    val wCell = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_sim").desc, col("cell"))
-    val probed = q.join(broadcast(centroids))
-      .withColumn("cell_sim", Vec.cosine(col("qv"), col("centroid")))
-      .withColumn("cell_rank", row_number().over(wCell))
-      .filter(col("cell_rank") <= nProbe)
-      .select(col("query_id"), col("qv"), col("nq"), col("cell"))
-    // bounded driver-side artifact (≤ cell count), inlined so the scan
-    // below never lists or reads an unprobed cell's files
-    val probedCells = probed.select(col("cell")).distinct()
-      .collect().map(_.get(0))
+        Seq("centroids", "codebook", "codes"), path)
+    val probed = Vec.probeCells(qSide, centroids, nProbe, idCol, vecCol)
     // unpack (one map-side posexplode of the m-element code array),
     // look codewords up in the broadcast codebook, reassemble
-    val recon = codesBase
-      .filter(col("cell").isin(probedCells.toIndexedSeq: _*))
+    val recon = probedPartitions(probed, codesBase, "cell")
       .select(col(idCol), col("cell"),
         posexplode(col("codes")).as(Seq("subspace", "code")))
       .join(broadcast(codebook), Seq("subspace", "code"))
@@ -309,17 +262,7 @@ object VecIndex {
       col("__rv"),
       sqrt(graft.plans.VecExpressions.dotProduct(col("__rv"), col("__rv")))
         .as("nc"))
-    val joined = probed.join(c, Seq("cell"))
-    val candidates =
-      if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
-      else joined
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    candidates
-      .withColumn("sim", Vec.pairSim(col("qv"), col("__rv"), col("nq"), col("nc")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
+    Vec.simTopK(Vec.probedCandidates(probed, c, excludeSelf), "qv", "__rv", k)
   }
 
   /** Top-k ANN against a written IVF index: rank cells per query by
@@ -333,30 +276,33 @@ object VecIndex {
       idCol: String = "vec_id", vecCol: String = "embedding",
       excludeSelf: Boolean = true): DataFrame = {
     // Serving split — see ivfPqProbeIndexed.
-    val (session, centroids, dataBase, qSide) =
+    val (Seq(centroids, dataBase), qSide) =
       servingQuerySide(spark, s"ivf:$path", queries,
-        Seq("centroids", "data"), path) match {
-        case Some((ss, fr, qv)) => (ss, fr(0), fr(1), qv)
-        case None => (spark, spark.read.parquet(s"$path/centroids"),
-          spark.read.parquet(s"$path/data"), queries)
-      }
-    ivfProbeBody(session, centroids, dataBase, qSide, k, nProbe, cellCol,
-      idCol, vecCol, excludeSelf)
+        Seq("centroids", "data"), path)
+    val probed = Vec.probeCells(qSide, centroids, nProbe, idCol, vecCol)
+    val c = probedPartitions(probed, dataBase, cellCol)
+      .select(col(cellCol).as("cell"), col(idCol).as("neighbor_id"),
+        col(vecCol).as("vc"),
+        sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol), col(vecCol)))
+          .as("nc"))
+    Vec.simTopK(Vec.probedCandidates(probed, c, excludeSelf), "qv", "vc", k)
   }
 
   /** Bounded-query serving detection shared by the IVF probes: collect
     * at most [[FrontierCollectMax]]+1 query rows in ONE job — fewer
     * means the query side is a bounded serving artifact, so return the
-    * cached tuned session ([[Serving]]), its reader frames for
-    * `path/<dir>` per requested dir, and the queries re-hosted as a
+    * reader frames for `path/<dir>` per requested dir on the cached
+    * tuned session ([[Serving]]) and the queries re-hosted as a
     * broadcastable local frame on that session; hitting the cap returns
-    * None (bulk path, nothing materialized beyond the probe rows).
+    * the frames on `spark` and `queries` as given (bulk path, nothing
+    * materialized beyond the probe rows).
     */
   private def servingQuerySide(spark: SparkSession, purpose: String,
       queries: DataFrame, dirs: Seq[String], path: String)
-      : Option[(SparkSession, Seq[DataFrame], DataFrame)] = {
+      : (Seq[DataFrame], DataFrame) = {
     val probe = queries.limit(FrontierCollectMax.toInt + 1).collect()
-    if (probe.length > FrontierCollectMax) None
+    if (probe.length > FrontierCollectMax)
+      (dirs.map(d => spark.read.parquet(s"$path/$d")), queries)
     else {
       val (ss, frames) = Serving.tuned(spark, purpose) { ss =>
         dirs.map(d => ss.read.parquet(s"$path/$d"))
@@ -364,47 +310,20 @@ object VecIndex {
       val local = ss.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           java.util.Arrays.asList(probe: _*)), queries.schema)
-      Some((ss, frames, broadcast(local)))
+      (frames, broadcast(local))
     }
   }
 
-  private def ivfProbeBody(spark: SparkSession, centroids: DataFrame,
-      dataBase: DataFrame, queries: DataFrame, k: Int, nProbe: Int,
-      cellCol: String, idCol: String, vecCol: String,
-      excludeSelf: Boolean): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol), col(vecCol)))
-        .as("nq"))
-    val wCell = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_sim").desc, col("cell"))
-    val probed = q.join(broadcast(centroids))
-      .withColumn("cell_sim", Vec.cosine(col("qv"), col("centroid")))
-      .withColumn("cell_rank", row_number().over(wCell))
-      .filter(col("cell_rank") <= nProbe)
-      .select(col("query_id"), col("qv"), col("nq"), col("cell"))
-
-    // Bounded driver-side artifact: the UNION of probed cells (≤ cell
-    // count). Inlined as a partition-pruning predicate so the scan below
-    // never lists, opens, or reads an unprobed cell's files.
+  /** The rows of `base` in the cells `probed` reaches. The UNION of probed
+    * cells is a bounded driver-side artifact (≤ cell count), inlined as a
+    * partition-pruning predicate on `cellCol` so the scan never lists,
+    * opens or reads an unprobed cell's files.
+    */
+  private def probedPartitions(probed: DataFrame, base: DataFrame,
+      cellCol: String): DataFrame = {
     val probedCells = probed.select(col("cell")).distinct()
       .collect().map(_.get(0))
-    val c = dataBase
-      .filter(col(cellCol).isin(probedCells.toIndexedSeq: _*))
-      .select(col(cellCol).as("cell"), col(idCol).as("neighbor_id"),
-        col(vecCol).as("vc"),
-        sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol), col(vecCol)))
-          .as("nc"))
-    val joined = probed.join(c, Seq("cell"))
-    val candidates =
-      if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
-      else joined
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    candidates
-      .withColumn("sim", Vec.pairSim(col("qv"), col("vc"), col("nq"), col("nc")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
+    base.filter(col(cellCol).isin(probedCells.toIndexedSeq: _*))
   }
 
   // ----- kNN-GRAPH index (the graph rung's persisted serving layout) ----
@@ -490,21 +409,11 @@ object VecIndex {
   def streamAppendGraph(spark: SparkSession, path: String,
       streamDir: String, checkpoint: String, k: Int, beam: Int,
       hops: Int, idCol: String = "vec_id", vecCol: String = "embedding")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(streamDir).schema
-    val incoming = spark.readStream.schema(schema).parquet(streamDir)
-      .select(col(idCol), col(vecCol))
-    incoming.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendGraphBatch(batch.sparkSession, path, batch, k, beam, hops,
-          idCol, vecCol)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .queryName("Graph_Stream_Append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.streaming.StreamingMedallion.parquetDirSink(spark, streamDir,
+        Seq(idCol, vecCol), checkpoint, "Graph_Stream_Append") { (s, batch, _) =>
+      appendGraphBatch(s, path, batch, k, beam, hops, idCol, vecCol)
+    }
 
   /** One graph-ingest batch — the [[streamAppendGraph]] arithmetic
     * (beam-search each new vector against the CURRENT index, append

@@ -121,41 +121,31 @@ object WinnowIndex {
   def streamScreenAndAdmit(spark: SparkSession, path: String,
       streamDir: String, checkpoint: String, reportDir: String,
       minShared: Long = 1L, idCol: String = "doc_id",
-      textCol: String = "text"): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(streamDir).schema
-    val incoming = spark.readStream.schema(schema).parquet(streamDir)
-      .select(col(idCol), col(textCol))
-    incoming.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        import s.implicits._
-        val meta = s.read.parquet(s"$path/meta")
-        val (n, w, nBuckets) = meta
-          .select(col("n"), col("w"), col("n_buckets"))
-          .as[(Long, Long, Long)].head()
-        val hits = screen(s, path, batch, minShared, idCol, textCol, idCol)
-          .withColumnRenamed(idCol, "index_id")
-          .withColumn("bucket", pmod(xxhash64(col("query_id")), lit(nBuckets)))
-        graft.merge.Merge.antiJoinAppend(s, hits, reportDir,
-          Seq("query_id", "index_id"), "bucket")
-        // Uncached form: per-batch plans never repeat, so the session
-        // memo would thrash and strand checkpoint blocks.
-        val fp = Dedup.winnowFingerprintsUncached(batch, idCol, textCol,
-            n.toInt, w.toInt)
-          .select(col(idCol), col("tid")).distinct()
-          .withColumn("bucket", pmod(col("tid"), lit(nBuckets)))
-        graft.merge.Merge.antiJoinAppend(s, fp, s"$path/fingerprints",
-          Seq(idCol), "bucket")
-        val sizes = fp.groupBy(col(idCol))
-          .agg(count(lit(1)).cast("long").as("n_fp"))
-          .withColumn("bucket", pmod(xxhash64(col(idCol)), lit(nBuckets)))
-        graft.merge.Merge.antiJoinAppend(s, sizes, s"$path/sizes",
-          Seq(idCol), "bucket"): Unit
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .queryName("Winnow_Screen_Admit")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      textCol: String = "text"): org.apache.spark.sql.streaming.StreamingQuery =
+    graft.streaming.StreamingMedallion.parquetDirSink(spark, streamDir,
+        Seq(idCol, textCol), checkpoint, "Winnow_Screen_Admit") { (s, batch, _) =>
+      import s.implicits._
+      val meta = s.read.parquet(s"$path/meta")
+      val (n, w, nBuckets) = meta
+        .select(col("n"), col("w"), col("n_buckets"))
+        .as[(Long, Long, Long)].head()
+      val hits = screen(s, path, batch, minShared, idCol, textCol, idCol)
+        .withColumnRenamed(idCol, "index_id")
+        .withColumn("bucket", pmod(xxhash64(col("query_id")), lit(nBuckets)))
+      graft.merge.Merge.antiJoinAppend(s, hits, reportDir,
+        Seq("query_id", "index_id"), "bucket")
+      // Uncached form: per-batch plans never repeat, so the session
+      // memo would thrash and strand checkpoint blocks.
+      val fp = Dedup.winnowFingerprintsUncached(batch, idCol, textCol,
+          n.toInt, w.toInt)
+        .select(col(idCol), col("tid")).distinct()
+        .withColumn("bucket", pmod(col("tid"), lit(nBuckets)))
+      graft.merge.Merge.antiJoinAppend(s, fp, s"$path/fingerprints",
+        Seq(idCol), "bucket")
+      val sizes = fp.groupBy(col(idCol))
+        .agg(count(lit(1)).cast("long").as("n_fp"))
+        .withColumn("bucket", pmod(xxhash64(col(idCol)), lit(nBuckets)))
+      graft.merge.Merge.antiJoinAppend(s, sizes, s"$path/sizes",
+        Seq(idCol), "bucket"): Unit
+    }
 }

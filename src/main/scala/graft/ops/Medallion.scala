@@ -15,10 +15,14 @@ object Medallion {
 
   /** S1 — multiline JSON scan (operations.py:19-21). One task per file (a
     * multiline JSON doc is not splittable); callers should repartition after
-    * explode when the downstream work is heavy.
+    * explode when the downstream work is heavy. FAILFAST: a malformed
+    * (e.g. truncated) file fails the read instead of becoming a
+    * `_corrupt_record` row whose NULL record array `explodeRecords` would
+    * silently drop; [[readRawJsonSafe]] is the quarantining read.
     */
   def readRawJson(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("json").option("multiline", "true").load(path)
+    spark.read.format("json").option("multiline", "true")
+      .option("mode", "FAILFAST").load(path)
 
   /** S1 with corrupt-input quarantine: PERMISSIVE multiline-JSON read that
     * routes unparseable documents to a `_corrupt_record` side output

@@ -66,13 +66,6 @@ object TopKNative {
         spark.experimental.extraOptimizations :+ TopKRewrite
   }
 
-  /** Remove the rewrite rule (the strategy stays; it only fires for
-    * explicitly injected nodes).
-    */
-  def disableRewrite(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == TopKRewrite)
-
   private def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(TopKStrategy))
       spark.experimental.extraStrategies =

@@ -31,12 +31,14 @@ object StreamingMedallion {
   /** S4/K2 — raw JSON directory → bronze parquet, incremental,
     * exactly-once per file via the checkpoint (Raw_to_Bronze.py:33-70).
     * Streaming sources need an explicit schema: probe one (S3) or pass it.
+    * A malformed raw file fails the query (FAILFAST), as in the batch read.
     */
   def rawToBronzeStream(spark: SparkSession, rawDir: String,
       bronzePath: String, checkpoint: String,
       schema: StructType): StreamingQuery = {
     val raw = spark.readStream.format("json")
       .option("multiLine", "true")
+      .option("mode", "FAILFAST")
       .schema(schema)
       .load(rawDir)
     val records = Medallion.explodeRecords(raw, "movie", "record")
@@ -58,12 +60,31 @@ object StreamingMedallion {
     */
   def foreachBatchSink(df: DataFrame, checkpoint: String, name: String)(
       mergeFn: (SparkSession, DataFrame, Long) => Unit): StreamingQuery =
+    batchSink(df, checkpoint, name, "update")(mergeFn)
+
+  /** AvailableNow ingest of the parquet files landing in `streamDir`
+    * (schema probed from the files already there), narrowed to `cols`:
+    * `fn` receives (spark, microbatch, batchId) once per microbatch,
+    * exactly once per input file via the checkpoint. The index appends
+    * (IVF, IVF-PQ, graph, postings, winnow) all ingest this way.
+    */
+  def parquetDirSink(spark: SparkSession, streamDir: String,
+      cols: Seq[String], checkpoint: String, name: String)(
+      fn: (SparkSession, DataFrame, Long) => Unit): StreamingQuery = {
+    val schema = spark.read.parquet(streamDir).schema
+    batchSink(spark.readStream.schema(schema).parquet(streamDir)
+      .select(cols.map(col): _*), checkpoint, name, "append")(fn)
+  }
+
+  private def batchSink(df: DataFrame, checkpoint: String, name: String,
+      mode: String)(fn: (SparkSession, DataFrame, Long) => Unit)
+      : StreamingQuery =
     df.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeFn(batch.sparkSession, batch, batchId)
+        fn(batch.sparkSession, batch, batchId)
       }
       .option("checkpointLocation", checkpoint)
-      .outputMode("update")
+      .outputMode(mode)
       .queryName(name)
       .trigger(Trigger.AvailableNow())
       .start()

@@ -65,20 +65,6 @@ object GraftBridge {
       case _ => ()
     }
 
-  /** Force-compile an expression's generated code with NO interpreted
-    * fallback: `GenerateUnsafeProjection.generate` runs the full
-    * codegen + Janino pipeline and throws on any compile failure —
-    * unlike `UnsafeProjection.create`, whose
-    * CodeGeneratorWithInterpretedFallback silently swallows the error
-    * and runs every row interpreted (exactly how WordPieceExpr's broken
-    * static call shipped unnoticed). The expression must be bound —
-    * literal children in tests.
-    */
-  def compileExpression(e: Expression): Unit = {
-    catalyst.expressions.codegen.GenerateUnsafeProjection
-      .generate(Seq(e)): Unit
-  }
-
   /** Block until every queued listener event is delivered — lets a
     * measurement harness attribute listener-counted job time to the
     * action that just returned (the bus is async; without the drain a

@@ -15,7 +15,7 @@ import graft.plans.{Blocklist, FixLog, TextExpressions, Unigram,
   * `UnsafeProjection.create`'s interpreted fallback swallows Janino
   * failures silently — WordPieceExpr shipped a broken static call for a
   * whole round with green value tests because every row quietly ran
-  * interpreted. `GraftBridge.compileExpression` goes through
+  * interpreted. `GraftTestBridge.compileExpression` goes through
   * `GenerateUnsafeProjection.generate` directly, which throws on any
   * compile failure, so a doGenCode regression fails THIS suite instead
   * of degrading throughput. Literal children keep the expressions bound
@@ -38,7 +38,7 @@ class CodegenSpec extends AnyFunSuite {
       case a: Alias => a.child
       case other    => other
     }
-    GraftBridge.compileExpression(e)
+    org.apache.spark.GraftTestBridge.compileExpression(e)
   }
 
   private val text = lit("the quick brown fox jumps over the lazy dog")

@@ -50,6 +50,26 @@ class MedallionSpec extends AnyFunSuite {
     assert(c2.select(col("_corrupt_record")).count() === 0)
   }
 
+  test("S1 strict read: a truncated raw file fails rawToBronze and " +
+      "leaves bronze unwritten") {
+    val dir = TestSpark.tmpDir("raw_truncated")
+    java.nio.file.Files.writeString(
+      new java.io.File(s"$dir/good.json").toPath,
+      """{"movie": [{"Id": 1, "Title": "ok"}, {"Id": 2, "Title": "also ok"}]}""")
+    java.nio.file.Files.writeString(
+      new java.io.File(s"$dir/bad.json").toPath,
+      """{"movie": [{"Id": 3, "Title": "truncated...""")
+    val bronzePath = s"${TestSpark.tmpDir("bronze_truncated")}/bronze"
+    val err = intercept[Exception] {
+      MoviePipeline.rawToBronze(spark, dir, bronzePath)
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("Malformed")),
+      err.toString)
+    assert(!new java.io.File(bronzePath).exists(),
+      "bronze must stay unwritten when a raw file is malformed")
+  }
+
   test("schema drift: unknown record fields rescue instead of vanishing") {
     val dir = TestSpark.tmpDir("raw_drift")
     java.nio.file.Files.writeString(

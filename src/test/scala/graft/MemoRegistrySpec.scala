@@ -7,7 +7,8 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 
-import graft.functions.{Cluster, Dedup, Memos, PlanMemo, Quant, Vec}
+import graft.functions.{Cluster, Dedup, Memos, NaiveBayes, PlanMemo, Quant,
+  Vec}
 
 /** `Memos.releaseAll` frees every registered memo — including the
   * nn-descent graph and beam-search memos a hand-kept release list
@@ -81,6 +82,34 @@ class MemoRegistrySpec extends AnyFunSuite {
     eventually(timeout(60.seconds), interval(250.millis)) {
       assert(!stored.contains(labels.head),
         s"label checkpoint ${labels.head} is still stored")
+    }
+  }
+
+  test("graphWalks and the memoized NaiveBayes chain give their storage " +
+      "back once the result is freed and the memos released") {
+    def stored: Set[Int] =
+      spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val d = TestSpark.sf0001
+    val emb = Tables.embeddings(spark, d)
+    val docs = Tables.documents(spark, d)
+    val runs = Seq[(String, () => DataFrame)](
+      "graphWalks" -> (() =>
+        Vec.graphWalks(emb, emb.filter(col("vec_id") < 20), steps = 3)),
+      "NaiveBayes.classify" -> (() =>
+        NaiveBayes.classify(docs, docs, "doc_id", "text", "lang")))
+    for ((name, run) <- runs) {
+      Memos.releaseAll()
+      val baseline = stored
+      val result = run()
+      assert(result.count() > 0, name)
+      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(result)
+      Memos.releaseAll()
+      eventually(timeout(60.seconds), interval(250.millis)) {
+        val left = spark.sparkContext.getRDDStorageInfo
+          .filterNot(i => baseline(i.id))
+        assert(left.isEmpty, s"$name left checkpoints " +
+          left.map(i => s"${i.id} (${i.callSite})").mkString(", "))
+      }
     }
   }
 }

@@ -240,6 +240,46 @@ class StatsSpec extends AnyFunSuite {
       col("side") === "b").collect()(0).isNullAt(3))
   }
 
+  test("value-domain statistics: an empty B side, all-NULL values and " +
+      "one distinct value each give one row, NULL where undefined") {
+    val a = col("side") === "a"
+    val b = col("side") === "b"
+    // (name, statistic, its column, its value on one distinct value)
+    val stats = Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame, String, Option[Long])](
+      ("wasserstein1", Stats.wasserstein1(_, "v", a, b), "w1_ppm", Some(0L)),
+      // every value tied: zero variance, z undefined
+      ("mannWhitneyU", Stats.mannWhitneyU(_, "v", a, b), "z2_ppm", None),
+      ("energyDistance", Stats.energyDistance(_, "v", a, b), "e_milli",
+        Some(0L)),
+      ("cliffsDelta", Stats.cliffsDelta(_, "v", a, b), "cliffs_ppm",
+        Some(0L)))
+    def frame(rows: (Option[Long], String)*) = rows.toDF("v", "side")
+    val emptyB = frame((Some(1L), "a"), (Some(2L), "a"), (Some(3L), "a"))
+    val allNull = frame((None, "a"), (None, "b"), (None, "a"))
+    val single = frame((Some(5L), "a"), (Some(5L), "b"), (Some(5L), "a"))
+    for ((name, stat, statCol, onSingle) <- stats) {
+      for ((input, df) <- Seq("empty B" -> emptyB, "all NULL" -> allNull)) {
+        val rows = stat(df).collect()
+        assert(rows.length == 1, s"$name, $input: ${rows.toSeq}")
+        assert(rows(0).isNullAt(rows(0).fieldIndex(statCol)),
+          s"$name, $input: ${rows(0)}")
+      }
+      val e = stat(emptyB).collect()(0)
+      assert(e.getAs[Long]("n_a") == 3L && e.getAs[Long]("n_b") == 0L,
+        s"$name, empty B: $e")
+      val rows = stat(single).collect()
+      assert(rows.length == 1, s"$name, one value: ${rows.toSeq}")
+      val r = rows(0)
+      assert(r.getAs[Long]("n_a") == 2L && r.getAs[Long]("n_b") == 1L,
+        s"$name, one value: $r")
+      onSingle match {
+        case Some(v) => assert(r.getAs[Long](statCol) == v, s"$name: $r")
+        case None => assert(r.isNullAt(r.fieldIndex(statCol)), s"$name: $r")
+      }
+    }
+  }
+
   test("categoricalMi: exactly 1 bit on the diagonal, 0 at independence") {
     // x = y (2x2 diagonal): each cell term 2*(log2q(8)-log2q(4)) =
     // 2*65536 -> mi2_q = 262144 -> exactly 1.0 bit

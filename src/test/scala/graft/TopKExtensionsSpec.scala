@@ -94,7 +94,7 @@ class TopKExtensionsSpec extends AnyFunSuite {
     assert(global.count() === 3)
     } finally {
       // don't leave the rewrite active for unrelated suites in this JVM
-      graft.plans.TopKNative.disableRewrite(spark)
+      org.apache.spark.GraftTestBridge.disableTopKRewrite(spark)
     }
   }
 
@@ -145,7 +145,7 @@ class TopKExtensionsSpec extends AnyFunSuite {
       val plan = big.queryExecution.executedPlan.toString
       assert(!plan.contains("TopKFinal"), plan)
       assert(big.count() === o.count())
-    } finally graft.plans.TopKNative.disableRewrite(spark)
+    } finally org.apache.spark.GraftTestBridge.disableTopKRewrite(spark)
   }
 
   test("GraftFunctions registers the native expressions for SQL use") {
