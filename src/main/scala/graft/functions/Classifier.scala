@@ -25,14 +25,14 @@ import org.apache.spark.sql.functions._
   * distinct bucket array), and the model is a dense (B+1)-long array
   * riding the plan's codegen reference table — so each round is ONE
   * pass over the checkpointed (id, y, buckets) frame: the margin folds
-  * at the scan stage (compiled WeightFoldSum, whole-stage codegen),
+  * at the scan stage (the compiled weight_fold_sum kernel, whole-stage codegen),
   * misclassified docs explode into (bkt, y)
   * pairs, and the only shuffle is the partial-aggregable ≤(B+1)-group
   * bucket fold. No doc-keyed shuffle anywhere in training — the
   * k-means-round shape (broadcast model, map-side-combined gradient).
   * Rounds are a fixed hyperparameter, not data-dependent. Margins run
   * in exact long arithmetic behind a LOUD overflow trap
-  * (WeightFoldSum's addExact): |margin| ≤ (buckets-per-doc + 1)·max|w|
+  * (WeightVector.margin's addExact): |margin| ≤ (buckets-per-doc + 1)·max|w|
   * and max|w| ≤ rounds × corpus docs — ~10^15-scale at a 10^12-doc
   * corpus, three orders under 2^63, and a corpus that somehow crossed
   * it fails with the offending value, never a silent wrap. The dense
@@ -123,7 +123,7 @@ object Classifier {
 
   /** Row-local margin of a bucket-array doc under the driver-held model:
     * bias + Σ w(b) over the doc's `__bkts`, folded at the SCAN stage by
-    * the compiled [[graft.plans.WeightFoldSum]] (the model array rides
+    * the compiled [[graft.plans.WeightFold]] kernel (the model array rides
     * codegen's reference table — one tree node per round, so per-round
     * Catalyst work is constant-size; the HOF-lambda fold it replaced
     * cost ~half the training wall in per-round analysis). Per-doc
@@ -135,7 +135,7 @@ object Classifier {
       nBuckets: Int): org.apache.spark.sql.Column = {
     val bias = wMap.getOrElse(-1L, 0L)
     val dense = Array.tabulate(nBuckets)(b => wMap.getOrElse(b.toLong, 0L))
-    graft.plans.WeightFoldSum.margin(col("__bkts"), bias, dense)
+    graft.plans.WeightFold.margin(col("__bkts"), bias, dense)
   }
 
   private def trainAndX(docs: DataFrame, idCol: String, textCol: String,

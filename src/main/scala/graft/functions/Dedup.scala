@@ -87,7 +87,7 @@ object Dedup {
   /** (id, tid) rows: polynomial-hashed shingles, NOT deduplicated — the
     * minhash input. Dedup is pointless ahead of a min-aggregate (min over
     * a multiset equals min over its set), so this path has zero shuffles
-    * before the final partial-aggregable groupBy. The HashedShingles
+    * before the final partial-aggregable groupBy. The hashed_shingles
     * generator fuses tokenize → shingle → hash into one compiled pass.
     */
   def docShingleIds(docs: DataFrame, idCol: String, textCol: String,
@@ -418,7 +418,7 @@ object Dedup {
   def simhashPairs(fps: DataFrame, idCol: String, fpCol: String, bits: Int,
       maxHamming: Int, bucketCap: Int = DerivedCap.toInt): DataFrame = {
     val cap = resolveBucketCap(bucketCap, distinctIdCount(fps, idCol))
-    // Capped at 31, not 62: SimhashExpr's per-token hash is mod 2^31-1,
+    // Capped at 31, not 62: the simhash kernel's per-token hash is mod 2^31-1,
     // so fingerprint lanes above bit ~31 are constant zero. Wider widths
     // would make the upper pigeonhole chunks a single degenerate all-equal
     // bucket that bucketCap silently drops — voiding the hamming-ball
@@ -442,7 +442,7 @@ object Dedup {
         lit(s"simhashPairs: fingerprint outside [0, 2^$bits): "),
         col(fpCol).cast("string"))))
     // Carry the fingerprint THROUGH the blocking join instead of rejoining
-    // the fps relation per pair side: fps (often a scan-stage SimhashExpr
+    // the fps relation per pair side: fps (often a scan-stage simhash kernel
     // over full document text) is evaluated exactly once into the
     // checkpointed keyed relation (4 longs x maxHamming+1 rows per doc),
     // and the exact-hamming verify reads the carried lanes — no re-scan of
@@ -539,7 +539,7 @@ object Dedup {
     * same document or any other).
     *
     * Three stages, all linear: (1) positioned n-gram stream from the
-    * fused HashedShinglesPos generator (tokenize → shingle → hash → emit
+    * fused hashed_shingles_pos generator (tokenize → shingle → hash → emit
     * position in one compiled scan pass); (2) repeated-gram detection as
     * a partial-aggregable count over gram hashes, then a semi-join of
     * positions against the repeated set (AQE sizes it — the repeated set
@@ -647,7 +647,7 @@ object Dedup {
   // callers target the unmemoized chain
   private[graft] def winnowFingerprintsUncached(docs: DataFrame,
       idCol: String, textCol: String, n: Int, w: Int): DataFrame =
-    // One compiled scan pass (plans.WinnowSelect): the sliding-window
+    // One compiled scan pass (the winnow_select generator): the sliding-window
     // minimum is sequential WITHIN a document, so the doc-partitioned
     // declarative window (a full gram-stream shuffle) and its trailing
     // distinct are replaced by a monotonic-deque generator — the
@@ -1007,7 +1007,7 @@ object Dedup {
       textCol: String, n: Int, dfCap: Long): DataFrame =
     pgMemo(docs, idCol, textCol, n, dfCap) {
       // The RAW shingle-set table is deliberately NOT persisted: with
-      // the compiled HashedShingles generator, recomputing the
+      // the compiled hashed_shingles generator, recomputing the
       // scan→hash→distinct chain is cheaper than materializing it
       // (measured at sf0.1: 2.2s vs 2.6s steady-state plus a 7s+
       // first-run cost), and caching a corpus-sized intermediate is
@@ -1245,11 +1245,15 @@ object Dedup {
       // at any scale — the bruteForceTopK scan-partitioning hazard,
       // same one-linear-exchange fix (measured here: the Damerau DP
       // stage ran 1-partition, 2.3 s; 32-way it is ~0.1 s).
-      a.join(b, Seq("__snmj"))
+      val pairs = a.join(b, Seq("__snmj"))
         .select(col("id_a"), col("id_b"), col("key_a"), col("key_b"),
           (col("__snmj") - col("__rna")).cast("long").as("rdist"))
         .repartition(docs.sparkSession.sparkContext.defaultParallelism)
         .localCheckpoint(true)
+      // the eager checkpoint above has read every ranked row: free the
+      // ranked table now, not whenever a GC lets the cleaner find it
+      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(ranked)
+      pairs
     }
   }
 

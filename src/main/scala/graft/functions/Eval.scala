@@ -100,10 +100,7 @@ object Eval {
     // before it (the relational groupBy/collect_list form paid two
     // corpus shuffles for the same arrays).
     val sets = docs.select(col(idCol),
-      org.apache.spark.sql.GraftBridge.column(
-        graft.plans.RougeGramSetExpr(
-          org.apache.spark.sql.GraftBridge.expression(col(textCol)), n))
-        .as("__set"))
+      graft.plans.RougeGrams.gramSetCol(col(textCol), n).as("__set"))
     gramOverlap(pairs, sets, idCol)
       .select(col("id_a"), col("id_b"), col("n_overlap"), col("n_cand"),
         col("n_ref"),
@@ -152,7 +149,7 @@ object Eval {
     * anywhere. The convenience double `bleu_log2` = q/(4·2^16).
     *
     * Gram counting rides the compiled occurrence-indexed hashed sets
-    * ([[graft.plans.RougeGramSetExpr]], one scan-stage pass per
+    * ([[graft.plans.RougeGrams]], one scan-stage pass per
     * order); the clipped overlap is one array_intersect per order.
     * Pairs need c >= 4 (all four orders defined) and m_1 >= 1 (BLEU
     * is 0 = log -inf otherwise) — others drop, documented.
@@ -164,10 +161,7 @@ object Eval {
   def bleu4(pairs: DataFrame, docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val Log2eQ4 = 378192L // 4 * round(log2(e) * 2^16)
-    def gset(nn: Int) =
-      org.apache.spark.sql.GraftBridge.column(
-        graft.plans.RougeGramSetExpr(
-          org.apache.spark.sql.GraftBridge.expression(col(textCol)), nn))
+    def gset(nn: Int) = graft.plans.RougeGrams.gramSetCol(col(textCol), nn)
     val sets = docs.select(
       col(idCol) +: (1 to 4).map(nn => gset(nn).as(s"__g$nn")): _*)
     val lg = graft.plans.FixLog.log2qCol _
@@ -633,52 +627,6 @@ object Eval {
 
   /** Largest bin table [[isotonicCalibrate]] collects to the driver. */
   val IsotonicMaxBins = 100000
-
-  /** The relational greatest-convex-minorant fit [[isotonicCalibrate]]
-    * replays locally — kept as the executable specification
-    * IsotonicParitySpec compares the in-memory fit against (chord
-    * predicate in decimal(38,0), segment struct-extrema, ppm rendering
-    * through [[Stats.fixedPointExact]]).
-    */
-  private[graft] def isotonicCalibrateRelational(rel: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("bin"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, org.apache.spark.sql.expressions.Window
-        .currentRow)
-    val pts = rel.select(col("bin"), col("n"), col("n_correct"))
-      .withColumn("__W", sum(col("n")).over(w))
-      .withColumn("__S", sum(col("n_correct")).over(w))
-      .localCheckpoint(true)
-    val spark = rel.sparkSession
-    import spark.implicits._
-    val withOrigin = pts.select(col("__W"), col("__S"))
-      .unionByName(Seq((0L, 0L)).toDF("__W", "__S"))
-    val m = withOrigin.select(col("__W").as("__Wm"), col("__S").as("__Sm"))
-    val j = withOrigin.select(col("__W").as("__Wj"), col("__S").as("__Sj"))
-    val k = withOrigin.select(col("__W").as("__Wk"), col("__S").as("__Sk"))
-    val dec = "decimal(38,0)"
-    val violated = m.join(j, col("__Wj") < col("__Wm"))
-      .join(k, col("__Wk") > col("__Wm"))
-      .filter(
-        expr(s"CAST(__Sm - __Sj AS $dec) * (__Wk - __Wj)") >
-          expr(s"CAST(__Sk - __Sj AS $dec) * (__Wm - __Wj)"))
-      .select(col("__Wm")).distinct()
-    val hull = withOrigin.join(violated,
-        withOrigin("__W") === violated("__Wm"), "left_anti")
-    val ha = hull.select(col("__W").as("__Wa"), col("__S").as("__Sa"))
-    val hb = hull.select(col("__W").as("__Wb"), col("__S").as("__Sb"))
-    val seg = pts.join(ha, col("__Wa") < col("__W"))
-      .groupBy(col("bin"), col("n"), col("n_correct"), col("__W"),
-        col("__S"))
-      .agg(max(struct(col("__Wa"), col("__Sa"))).as("__a"))
-      .join(hb, col("__Wb") >= col("__W"))
-      .groupBy(col("bin"), col("n"), col("n_correct"), col("__a"))
-      .agg(min(struct(col("__Wb"), col("__Sb"))).as("__b"))
-    seg.select(col("bin"), col("n"), col("n_correct"),
-        Stats.fixedPointExact(col("n_correct"), col("n")).as("acc_ppm"),
-        Stats.fixedPointExact(col("__b.__Sb") - col("__a.__Sa"),
-          col("__b.__Wb") - col("__a.__Wa")).as("cal_ppm"))
-  }
 
   /** MURPHY DECOMPOSITION of the Brier score over the calibrated
     * reliability table (Murphy 1973): with the isotonic fit's cal_ppm

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * n-grams are boilerplate candidates).
   *
   * Scale design (100 TB): bigrams are polynomial-hashed to fixed-width
-  * long keys at the scan (the HashedShingles generator — no string
+  * long keys at the scan (the hashed_shingles generator — no string
   * shuffle keys), corpus counts are one partial-aggregable groupBy, and
   * the count-back join is a long-keyed equi-join followed by a per-doc
   * aggregate. No windows, no driver-side state.

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB): term frequencies for the query terms come from
   * one token scan filtered to the query vocabulary BEFORE any shuffle
   * (the exploded stream is cut to ~|query| * N rows at the scan); doc
-  * lengths are a second scan-stage pass with the codegen'd TokenCountExpr
+  * lengths are a second scan-stage pass with the codegen'd token_count kernel
   * (no explode at all); N and T ride in as a broadcast 1-row aggregate.
   * df is an aggregate of the already-filtered tf pairs. No corpus-sized
   * shuffle exists anywhere in the plan; the final top-k is a single

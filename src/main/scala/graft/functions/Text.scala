@@ -22,14 +22,14 @@ object Text {
     filter(split(c, "\\s+"), t => length(t) > 0)
 
   /** Token count (whitespace tokenization). Backed by the codegen'd
-    * TokenCountExpr — one compiled pass, no token-array materialization;
+    * token_count kernel — one compiled pass, no token-array materialization;
     * semantically `size(tokens(c))` (the HOF form is CodegenFallback).
     */
   def tokenCount(c: Column): Column = graft.plans.TextExpressions.tokenCount(c)
 
   /** Gini-impurity lexical diversity over the whitespace tokens: 1 −
     * Σc²/n², the log-free diversity signal (entropy needs libm). Backed
-    * by the codegen'd TokenGiniExpr — one compiled pass, scan-stage.
+    * by the codegen'd token_gini kernel — one compiled pass, scan-stage.
     */
   def tokenGini(c: Column): Column = graft.plans.TextExpressions.tokenGini(c)
 
@@ -49,7 +49,7 @@ object Text {
     * because Spark generates a *descending* sequence when end < start.
     */
   def wordNgrams(toks: Column, n: Int): Column = {
-    require(n >= 1, "n-gram size must be >= 1") // same contract as HashedShingles
+    require(n >= 1, "n-gram size must be >= 1") // same contract as hashed_shingles
     when(size(toks) >= n,
       transform(sequence(lit(1), size(toks) - (n - 1)),
         i => concat_ws(" ", slice(toks, i, lit(n)))))
@@ -76,7 +76,7 @@ object Text {
   }
 
   /** Number of tokens (with multiplicity) of `text` that appear in `words`
-    * (marker/stopword hits). Backed by the codegen'd MarkerHitsExpr — one
+    * (marker/stopword hits). Backed by the codegen'd marker_hits kernel — one
     * compiled scan with a hash-set probe per token; semantically
     * `size(filter(tokens(text), t => array_contains(words, t)))`, whose HOF
     * form is CodegenFallback and rescans the word list per token.
@@ -94,7 +94,7 @@ object Text {
     * h = fold(h * 31 + ascii(char)) mod 1e9+7. Deterministic, order-
     * sensitive (a true rolling hash), and expressible in the oracle via
     * list_reduce. Spaces are included (the character stream is the doc).
-    * Backed by the codegen'd PolyHashExpr (the equivalent higher-order
+    * Backed by the codegen'd poly_hash kernel (the equivalent higher-order
     * `aggregate(transform(split(...)))` form is CodegenFallback and ~10x
     * slower on corpus-scale inputs).
     */
@@ -102,7 +102,7 @@ object Text {
     graft.plans.TextExpressions.polyHash(c)
 
   /** Mean token length in characters (code points), as double (0 for empty
-    * docs). Backed by the codegen'd TokenCharsExpr/TokenCountExpr pair —
+    * docs). Backed by the codegen'd token_chars/token_count kernels —
     * total token characters equal the HOF `aggregate(toks, 0L, acc +
     * length(t))` because tokens partition the non-whitespace characters.
     */

@@ -25,7 +25,7 @@ object Vec {
 
   /** Cosine similarity, rounded to `scale` places for cross-engine
     * comparisons (pass scale < 0 to skip rounding). Backed by the
-    * codegen'd CosineSimExpr — the equivalent zip_with/aggregate chain is
+    * codegen'd cosine_sim kernel — the equivalent zip_with/aggregate chain is
     * CodegenFallback and dominates all-pairs workloads; fold order and
     * double promotion are identical.
     */
@@ -331,7 +331,7 @@ object Vec {
   /** Random-hyperplane LSH bucket id (`nBits`-bit) per vector — the scale
     * path for ANN: vectors are bucketed in one map-only pass; search probes
     * only the query's bucket. Projection j = sum_i sign(i,j) * v_i.
-    * Backed by the codegen'd RpLshBucketExpr: one compiled loop instead of
+    * Backed by the codegen'd rp_lsh_bucket kernel: one compiled loop instead of
     * nBits interpreted zip_with/aggregate passes per row.
     */
   def rpLshBucket(vec: Column, nBits: Int): Column =
@@ -408,14 +408,10 @@ object Vec {
 
   def nnDescent(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
       nBits: Int = 4, rounds: Int = 3, ringWindow: Int = 8): DataFrame =
+    // the uncached graph already reads only the rounds' own final
+    // checkpoint: the memo holds that one copy
     nndMemo(vecs, idCol, vecCol, k, nBits, rounds, ringWindow) {
-      val g = nnDescentUncached(vecs, idCol, vecCol, k, nBits, rounds,
-        ringWindow)
-      val kept = g.localCheckpoint(true)
-      // g reads only the rounds' own final checkpoint (never a caller's):
-      // garbage once the memo's copy exists
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(g)
-      kept
+      nnDescentUncached(vecs, idCol, vecCol, k, nBits, rounds, ringWindow)
     }
 
   private[graft] def nnDescentUncached(vecs: DataFrame, idCol: String,
@@ -701,8 +697,7 @@ object Vec {
     GraftBridge.unpersistCheckpoint(base0)
     // localCheckpoint under AQE records UnknownPartitioning; re-declare
     // the layout the plan above genuinely produced so consumers reuse
-    // it exchange- and sort-free (the memo's own checkpoint passes the
-    // properties through a bare scan).
+    // it exchange- and sort-free (the memo stores this frame as is).
     GraftBridge.relabelCheckpointLayout(laid, Seq("node_id"),
       Seq(("node_id", true), ("sim", false), ("neighbor_id", true)),
       sqlParts)
@@ -954,7 +949,7 @@ object Vec {
     * MAP-ONLY: the k-row centroid table is collected (the same driver +
     * executor footprint as the `broadcast(centroids)` it replaces) and
     * the whole k×d argmin runs as one compiled loop per row
-    * ([[graft.plans.NearestCellExpr]]) — no n·k candidate rows are ever
+    * (the nearest_cell kernel, [[graft.plans.NearestCell]]) — no n·k candidate rows are ever
     * materialized, no shuffle, no aggregate. Profiled at 32k vecs ×
     * 500 cells × 128 dims: 23.8 s as a broadcast-cross-join candidate
     * stream (whose struct-typed argmin buffer forces a sort-based

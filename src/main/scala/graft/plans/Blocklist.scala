@@ -1,12 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Multi-phrase blocklist screening — the "banned words/phrases" gate
   * every crawl-curation pipeline runs (C4 drops any page containing a
@@ -108,43 +102,10 @@ final class AhoCorasick(phrases: Seq[String]) extends Serializable {
   }
 }
 
-object AhoCorasick {
-  /** Janino-friendly static entry for generated code. */
-  def scan(s: String, ac: AhoCorasick): Long = ac.presenceMask(s)
-}
-
-/** Scalar: 64-bit presence mask of blocklist phrases over a string, in
-  * one compiled Aho–Corasick pass. Semantically the OR-of-contains
-  * bitmask `sum_i (contains(text, p_i) ? 1L << i : 0)` — the oracle's
-  * form — without rescanning the text per phrase.
-  */
-case class BlocklistMaskExpr(child: Expression, phrases: Seq[String])
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val ac = new AhoCorasick(phrases)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"blocklist_mask requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    AhoCorasick.scan(input.asInstanceOf[UTF8String].toString, ac)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val acRef = ctx.addReferenceObj("blocklistAc", ac, "graft.plans.AhoCorasick")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.AhoCorasick.scan($c.toString(), $acRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BlocklistMaskExpr =
-    copy(child = newChild)
-}
-
 object Blocklist {
-  /** Column form: the phrase-presence bitmask. */
+  /** Column form: the phrase-presence bitmask — one compiled
+    * Aho–Corasick pass per row, the OR-of-contains bitmask
+    * `sum_i (contains(text, p_i) ? 1L << i : 0)` the oracle runs. */
   def blocklistMask(c: Column, phrases: Seq[String]): Column =
-    GraftBridge.column(BlocklistMaskExpr(GraftBridge.expression(c), phrases))
+    Kernels.blocklistMask(Seq(c), phrases)
 }

@@ -1,11 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** CONTENT-DEFINED CHUNKING scan — the landmark/fingerprint chunker of
   * LBFS (Muthitacharoen, Chen & Mazières, SOSP 2001) and every modern
@@ -70,37 +65,6 @@ object CdcScan {
   }
 }
 
-/** Generator: [[CdcScan.chunks]] compiled into the scan stage —
-  * one output row per content-defined chunk:
-  * (chunk_no: bigint, start: bigint, clen: bigint, chash: bigint).
-  */
-case class CdcChunksExpr(child: Expression, w: Int, maskBits: Int)
-    extends UnaryExpression with Generator with CodegenFallback {
-  require(w >= 2, s"window must be >= 2 chars, got $w")
-  require(maskBits >= 1 && maskBits <= 30,
-    s"maskBits must be in [1, 30], got $maskBits")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cdc_chunks requires a string argument, got ${child.dataType.sql}")
-
-  override def elementSchema: StructType =
-    StructType(StructField("chunk_no", LongType) ::
-      StructField("start", LongType) ::
-      StructField("clen", LongType) ::
-      StructField("chash", LongType) :: Nil)
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Nil
-    else CdcScan.chunks(v.asInstanceOf[UTF8String].toString, w, maskBits)
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): CdcChunksExpr = copy(child = newChild)
-}
-
 /** Scan-stage builder of chrF's occurrence-indexed hashed CHARACTER
   * n-gram set — [[RougeGrams.gramSet]]'s char-level sibling (same
   * h·2^20 + occurrence packing, same sorted-array multiset contract,
@@ -110,62 +74,20 @@ case class CdcChunksExpr(child: Expression, w: Int, maskBits: Int)
   * is wanted — the expression itself hashes the string it is given.
   */
 object CharGrams {
-  def gramSet(s: String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val m = s.length - n + 1
-    if (m <= 0)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Any])
-    val counts = new java.util.HashMap[Long, Integer]()
-    val out = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      val h = PolyHash.eval(s.substring(i, i + n))
-      val occ = counts.merge(h, 1, (a, b) => a + b)
-      out(i) = h * 1048576L + occ.toLong
-      i += 1
-    }
-    java.util.Arrays.sort(out)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      out.map(Long.box): Array[Any])
-  }
-}
-
-/** Scalar: CharGrams.gramSet compiled into the scan stage. */
-case class CharGramSetExpr(child: Expression, n: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  require(n >= 1, s"n must be >= 1, got $n")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"char_gram_set requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    CharGrams.gramSet(input.asInstanceOf[UTF8String].toString, n)
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.CharGrams.gramSet($c.toString(), $n)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): CharGramSetExpr = copy(child = newChild)
+  def gramSet(s: String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData =
+    RougeGrams.occurrenceSet(Array.tabulate(math.max(s.length - n + 1, 0))(i =>
+      PolyHash.eval(s.substring(i, i + n))))
 }
 
 /** Column API for the CDC / char-gram scans. */
 object CdcColumns {
-  import org.apache.spark.sql.{Column, GraftBridge}
+  import org.apache.spark.sql.Column
 
   /** Generator column: (chunk_no, start, clen, chash) rows per text. */
   def cdcChunks(c: Column, w: Int, maskBits: Int): Column =
-    GraftBridge.column(CdcChunksExpr(GraftBridge.expression(c), w, maskBits))
+    Kernels.cdcChunks(Seq(c), w, maskBits)
 
   /** Occurrence-indexed hashed char n-gram set (sorted long array). */
   def charGramSet(c: Column, n: Int): Column =
-    GraftBridge.column(CharGramSetExpr(GraftBridge.expression(c), n))
+    Kernels.charGramSet(Seq(c), n)
 }

@@ -1,12 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** TRUE Damerau–Levenshtein distance (Lowrance & Wagner 1975) — the
   * record-linkage edit metric that counts an adjacent TRANSPOSITION as
@@ -43,10 +37,6 @@ object Damerau {
   private val scratch = new ThreadLocal[Scratch] {
     override def initialValue(): Scratch = new Scratch
   }
-
-  /** Static kernel, callable from generated code. */
-  def distance(a: UTF8String, b: UTF8String): Int =
-    distance(a.toString, b.toString)
 
   def distance(a: String, b: String): Int = {
     val m = a.length
@@ -103,31 +93,5 @@ object Damerau {
 
   /** Column API: Damerau–Levenshtein distance (codegen'd kernel). */
   def damerau(a: Column, b: Column): Column =
-    GraftBridge.column(
-      DamerauExpr(GraftBridge.expression(a), GraftBridge.expression(b)))
-}
-
-/** Scalar expression: the Damerau kernel compiled into the scan stage. */
-case class DamerauExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"damerau requires string arguments, got " +
-        s"${left.dataType.sql}, ${right.dataType.sql}")
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Damerau.distance(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.plans.Damerau.distance($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): DamerauExpr = copy(newLeft, newRight)
+    Kernels.damerau(Seq(a, b))
 }

@@ -1,11 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Fixed-point base-2 logarithm WITHOUT libm — the engine's cross-engine
   * logarithm: log2q(x) = e * 2^16 + frac for integer x >= 1, where e is
@@ -55,7 +50,7 @@ object FixLog {
 
   /** Column form over a long column (null-safe, errors on x < 1). */
   def log2qCol(c: Column): Column =
-    GraftBridge.column(Log2FixedExpr(GraftBridge.expression(c)))
+    Kernels.log2q(Seq(c))
 
   /** Exact floor integer square root (Newton, monotone-corrected) —
     * used to derive the exp2 constant ladder without touching libm.
@@ -114,45 +109,5 @@ object FixLog {
 
   /** Column form over a long column (null-safe). */
   def exp2qCol(c: Column): Column =
-    GraftBridge.column(Exp2FixedExpr(GraftBridge.expression(c)))
-}
-
-/** Scalar expression: FixLog.exp2q compiled into the scan stage. */
-case class Exp2FixedExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"exp2q requires a bigint argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    FixLog.exp2q(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.FixLog.exp2q($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Exp2FixedExpr =
-    copy(child = newChild)
-}
-
-/** Scalar expression: FixLog.log2q compiled into the scan stage. */
-case class Log2FixedExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"log2q requires a bigint argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    FixLog.log2q(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.FixLog.log2q($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Log2FixedExpr =
-    copy(child = newChild)
+    Kernels.exp2q(Seq(c))
 }

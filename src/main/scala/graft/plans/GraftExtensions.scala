@@ -17,183 +17,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 object GraftFunctions {
 
-  /** Extract a non-null integral literal argument or fail analysis with a
-    * named, bounded error — the shared gate for every function taking a
-    * compile-time size/width parameter.
-    */
-  private def requireIntLiteral(fn: String, what: String, e: Expression,
-      min: Int, max: Int = Int.MaxValue): Int = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val integral = e.dataType == IntegerType || e.dataType == LongType ||
-      e.dataType == ShortType || e.dataType == ByteType
-    val v = if (e.foldable && integral) e.eval() else null
-    if (v == null) // non-literal, wrong type, or a NULL literal
-      throw new IllegalArgumentException(
-        s"$fn: the $what must be a non-null integer literal")
-    val n = v.asInstanceOf[Number].intValue()
-    if (n < min || n > max) {
-      val range = if (max == Int.MaxValue) s">= $min" else s"in [$min, $max]"
-      throw new IllegalArgumentException(s"$fn: the $what must be $range, got $n")
-    }
-    n
-  }
-
-  /** Extract a non-null array<string> literal argument (word lists,
-    * phrase lists, vocabularies) or fail analysis with a named error.
-    */
-  private def requireStringArrayLiteral(fn: String, what: String,
-      e: Expression): Seq[String] = {
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    val isStrArr = e.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    val v = if (e.foldable && isStrArr) e.eval() else null
-    if (v == null) // non-literal, wrong type, or a NULL literal
-      throw new IllegalArgumentException(
-        s"$fn: the $what must be a non-null array<string> literal")
-    val items = v.asInstanceOf[ArrayData].toObjectArray(StringType)
-      .map(x => if (x == null) null else x.toString)
-    if (items.contains(null))
-      throw new IllegalArgumentException(
-        s"$fn: the $what must not contain nulls")
-    items.toSeq
-  }
-
-  /** Extract a non-null string literal argument. */
-  private def requireStringLiteral(fn: String, what: String,
-      e: Expression): String = {
-    import org.apache.spark.sql.types.StringType
-    val v = if (e.foldable && e.dataType == StringType) e.eval() else null
-    if (v == null)
-      throw new IllegalArgumentException(
-        s"$fn: the $what must be a non-null string literal")
-    v.toString
-  }
-
-  val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("poly_hash", classOf[PolyHashExpr], {
-      case Seq(c) => PolyHashExpr(c)
-      case args => throw new IllegalArgumentException(
-        s"poly_hash expects 1 argument, got ${args.length}")
-    }: Seq[Expression] => Expression),
-    ("hashed_shingles", classOf[HashedShingles], {
-      case Seq(c, n) =>
-        HashedShingles(c, requireIntLiteral("hashed_shingles", "shingle size", n, 1))
-      case args => throw new IllegalArgumentException(
-        s"hashed_shingles expects (text, n), got ${args.length} arguments")
-    }: Seq[Expression] => Expression),
-    ("hashed_shingles_pos", classOf[HashedShinglesPos], {
-      case Seq(c, n) =>
-        HashedShinglesPos(c,
-          requireIntLiteral("hashed_shingles_pos", "shingle size", n, 1))
-      case args => throw new IllegalArgumentException(
-        s"hashed_shingles_pos expects (text, n), got ${args.length} arguments")
-    }: Seq[Expression] => Expression),
-    ("token_count", classOf[TokenCountExpr], {
-      case Seq(c) => TokenCountExpr(c)
-      case args => throw new IllegalArgumentException(
-        s"token_count expects 1 argument, got ${args.length}")
-    }: Seq[Expression] => Expression),
-    ("token_chars", classOf[TokenCharsExpr], {
-      case Seq(c) => TokenCharsExpr(c)
-      case args => throw new IllegalArgumentException(
-        s"token_chars expects 1 argument, got ${args.length}")
-    }: Seq[Expression] => Expression),
-    ("token_gini", classOf[TokenGiniExpr], {
-      case Seq(c) => TokenGiniExpr(c)
-      case args => throw new IllegalArgumentException(
-        s"token_gini expects 1 argument, got ${args.length}")
-    }: Seq[Expression] => Expression),
-    ("repetition_ratio", classOf[RepetitionRatioExpr], {
-      case Seq(c, n) =>
-        RepetitionRatioExpr(c,
-          requireIntLiteral("repetition_ratio", "n-gram size", n, 1))
-      case args => throw new IllegalArgumentException(
-        s"repetition_ratio expects (text, n), got ${args.length} arguments")
-    }: Seq[Expression] => Expression),
-    // Scan-stage SimHash with the library's standard permutation
-    // (Dedup.permA(0)/permB(0) mod 2^31-1) — the SQL twin of
-    // Dedup.simhashScan.
-    ("simhash", classOf[SimhashExpr], {
-      case Seq(c, n) =>
-        SimhashExpr(c, requireIntLiteral("simhash", "bit width", n, 1, 62),
-          graft.functions.Dedup.permA(0), graft.functions.Dedup.permB(0),
-          graft.functions.Dedup.MersennePrime)
-      case args => throw new IllegalArgumentException(
-        s"simhash expects (text, bits), got ${args.length} arguments")
-    }: Seq[Expression] => Expression),
-    ("marker_hits", classOf[MarkerHitsExpr], {
-      case Seq(c, w) =>
-        MarkerHitsExpr(c,
-          requireStringArrayLiteral("marker_hits", "word list", w))
-      case args => throw new IllegalArgumentException(
-        s"marker_hits expects (text, words), got ${args.length} arguments")
-    }: Seq[Expression] => Expression),
-    ("blocklist_mask", classOf[BlocklistMaskExpr], {
-      case Seq(c, p) =>
-        BlocklistMaskExpr(c,
-          requireStringArrayLiteral("blocklist_mask", "phrase list", p))
-      case args => throw new IllegalArgumentException(
-        s"blocklist_mask expects (text, phrases), got ${args.length} arguments")
-    }: Seq[Expression] => Expression),
-    ("wordpiece", classOf[WordPieceExpr], {
-      case Seq(c, v) =>
-        WordPieceExpr(c,
-          requireStringArrayLiteral("wordpiece", "vocabulary", v), "[UNK]")
-      case Seq(c, v, u) =>
-        WordPieceExpr(c,
-          requireStringArrayLiteral("wordpiece", "vocabulary", v),
-          requireStringLiteral("wordpiece", "unknown token", u))
-      case args => throw new IllegalArgumentException(
-        s"wordpiece expects (text, vocab[, unk]), got ${args.length} arguments")
-    }: Seq[Expression] => Expression),
-    ("line_signals", classOf[LineSignalsExpr], {
-      case Seq(c, l) =>
-        LineSignalsExpr(c,
-          requireIntLiteral("line_signals", "line length", l, 1), 0)
-      case Seq(c, l, a) =>
-        LineSignalsExpr(c,
-          requireIntLiteral("line_signals", "line length", l, 1),
-          requireIntLiteral("line_signals", "append count", a, 0))
-      case args => throw new IllegalArgumentException(
-        s"line_signals expects (text, lineLen[, appendFirst]), got ${args.length} arguments")
-    }: Seq[Expression] => Expression),
-    ("ngram_rep_mass", classOf[NgramRepMassExpr], {
-      case Seq(c, t, d) =>
-        NgramRepMassExpr(c,
-          requireIntLiteral("ngram_rep_mass", "top-gram size", t, 1),
-          requireIntLiteral("ngram_rep_mass", "dup-gram size", d, 1))
-      case args => throw new IllegalArgumentException(
-        s"ngram_rep_mass expects (text, nTop, nDup), got ${args.length} arguments")
-    }: Seq[Expression] => Expression),
-    ("log2q", classOf[Log2FixedExpr], {
-      case Seq(c) => Log2FixedExpr(c)
-      case args => throw new IllegalArgumentException(
-        s"log2q expects 1 argument, got ${args.length}")
-    }: Seq[Expression] => Expression),
-    ("exp2q", classOf[Exp2FixedExpr], {
-      case Seq(c) => Exp2FixedExpr(c)
-      case args => throw new IllegalArgumentException(
-        s"exp2q expects 1 argument, got ${args.length}")
-    }: Seq[Expression] => Expression),
-    ("cosine_sim", classOf[CosineSimExpr], {
-      case Seq(a, b) => CosineSimExpr(a, b)
-      case args => throw new IllegalArgumentException(
-        s"cosine_sim expects 2 arguments, got ${args.length}")
-    }: Seq[Expression] => Expression),
-    ("dot_product", classOf[DotProductExpr], {
-      case Seq(a, b) => DotProductExpr(a, b)
-      case args => throw new IllegalArgumentException(
-        s"dot_product expects 2 arguments, got ${args.length}")
-    }: Seq[Expression] => Expression),
-    ("rp_lsh_bucket", classOf[RpLshBucketExpr], {
-      case Seq(v, n) =>
-        RpLshBucketExpr(v, requireIntLiteral("rp_lsh_bucket", "bit count", n, 1, 63))
-      case args => throw new IllegalArgumentException(
-        s"rp_lsh_bucket expects (vector, nBits), got ${args.length} arguments")
-    }: Seq[Expression] => Expression))
+  /** The SQL functions: every kernel whose parameters all have a literal
+    * form (see [[Kernels]]). */
+  val all: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+    Kernels.all.flatMap(k => k.sqlBuilder.map(b => (k.name, k.exprClass, b)))
 
   /** Register into an already-running session (builder-time extensions
     * only apply to sessions created after `withExtensions`).

@@ -1,12 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
 /** Token-level LONGEST COMMON SUBSEQUENCE — the sequence-alignment
   * primitive behind ROUGE-L (Lin 2004): unlike the n-gram overlaps
@@ -54,8 +49,7 @@ object Lcs {
 
   /** Column form: token-LCS of two string columns at `cap`. */
   def tokenLcsCol(a: Column, b: Column, cap: Int): Column =
-    GraftBridge.column(TokenLcsExpr(GraftBridge.expression(a),
-      GraftBridge.expression(b), cap))
+    Kernels.tokenLcs(Seq(a, b), cap)
 }
 
 /** Scan-stage builder of ROUGE-N's occurrence-indexed hashed gram set:
@@ -67,86 +61,24 @@ object Lcs {
   * array.
   */
 object RougeGrams {
-  def gramSet(s: String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val toks = TokenScan.tokensCapped(s, Int.MaxValue)
-    val m = toks.length - n + 1
-    if (m <= 0)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Any])
-    val counts = new java.util.HashMap[Long, Integer]()
-    val out = new Array[Long](m)
-    val sb = new java.lang.StringBuilder()
-    var i = 0
-    while (i < m) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j))
-        j += 1
-      }
-      val h = PolyHash.eval(sb.toString)
-      val occ = counts.merge(h, 1, (a, b) => a + b)
-      out(i) = h * 1048576L + occ.toLong
-      i += 1
-    }
-    java.util.Arrays.sort(out)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      out.map(Long.box): Array[Any])
+  def gramSet(s: String, n: Int): ArrayData = {
+    val toks = TokenScan.tokens(s)
+    val sb = new java.lang.StringBuilder
+    occurrenceSet(Array.tabulate(math.max(toks.length - n + 1, 0))(i =>
+      PolyHash.eval(TokenScan.window(toks, i, i + n, sb))))
   }
-}
 
-/** Scalar: RougeGrams.gramSet compiled into the scan stage. */
-case class RougeGramSetExpr(child: Expression, n: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  require(n >= 1, s"n must be >= 1, got $n")
+  /** The packing both gram-set builders share: the k-th occurrence of
+    * hash h becomes h·2^20 + k, sorted ascending. */
+  def occurrenceSet(hashes: Array[Long]): ArrayData = {
+    val counts = new java.util.HashMap[Long, Integer]()
+    val out = hashes.map(h =>
+      h * 1048576L + counts.merge(h, 1, (a, b) => a + b).toLong)
+    java.util.Arrays.sort(out)
+    new GenericArrayData(out.map(Long.box): Array[Any])
+  }
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"rouge_gram_set requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    RougeGrams.gramSet(input.asInstanceOf[UTF8String].toString, n)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.RougeGrams.gramSet($c.toString(), $n)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): RougeGramSetExpr = copy(child = newChild)
-}
-
-/** Scalar: Lcs.tokenLcs compiled into the scan stage — one static call
-  * per row pair, no per-token expression tree. */
-case class TokenLcsExpr(left: Expression, right: Expression, cap: Int)
-    extends BinaryExpression {
-  require(cap >= 1, s"cap must be >= 1, got $cap")
-
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"token_lcs requires two string arguments, got " +
-        s"${left.dataType.sql}, ${right.dataType.sql}")
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    Lcs.tokenLcs(l.asInstanceOf[UTF8String].toString,
-      r.asInstanceOf[UTF8String].toString, cap)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.plans.Lcs.tokenLcs($a.toString(), $b.toString(), $cap)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): TokenLcsExpr =
-    copy(left = newLeft, right = newRight)
+  /** Column form: the occurrence-indexed word n-gram set of a text
+    * column (sorted array<bigint>). */
+  def gramSetCol(c: Column, n: Int): Column = Kernels.rougeGramSet(Seq(c), n)
 }

@@ -2,21 +2,15 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the text-hashing hot paths.
+/** Kernels for the text-hashing hot paths (entries of [[Kernels]]).
   *
   * Spark's higher-order functions (transform/aggregate/filter) are
   * CodegenFallback — evaluated interpretively per row with intermediate
   * array allocation. For corpus-scale hashing (every shingle of every
   * document) that interpretation dominates the runtime, so these
-  * expressions compile the whole tokenize→shingle→hash pipeline into tight
-  * JVM loops while keeping semantics bit-identical to the SQL-expressible
+  * kernels run the whole tokenize→shingle→hash pipeline as tight JVM
+  * loops while keeping semantics bit-identical to the SQL-expressible
   * formulas the DuckDB oracle runs.
   */
 object PolyHash {
@@ -39,264 +33,140 @@ object PolyHash {
   }
 }
 
-/** Scalar: rolling polynomial hash of a string (see PolyHash.eval).
-  * Codegen emits a single static call — no per-char expression tree.
+/** The gram-stream row kernels (each a generator entry of [[Kernels]]) and
+  * the ONE tokenize + joined-gram-hash step they share: whitespace
+  * tokenization bit-identical to Text.tokens, and PolyHash over the
+  * space-joined token window — so the documented bit-parity between the
+  * compiled generators and the declarative tokens→ngram→hash
+  * construction lives in exactly one place.
   */
-case class PolyHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  // Analysis-time type check: poly_hash(non-string) previously failed
-  // codegen compilation and then threw ClassCastException from the
-  // interpreted fallback at runtime.
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"poly_hash requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    PolyHash.eval(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.PolyHash.eval($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): PolyHashExpr =
-    copy(child = newChild)
-}
-
-/** The ONE tokenize + joined-gram-hash kernel behind every gram-stream
-  * generator here ([[HashedShingles]], [[HashedShinglesPos]],
-  * [[WinnowSelect]], [[HashedTokenLines]]): whitespace tokenization
-  * bit-identical to Text.tokens, and PolyHash over the space-joined
-  * token window — so the documented bit-parity between the compiled
-  * generators and the declarative tokens→ngram→hash construction lives
-  * in exactly one place. A tokenization or hash-joining change edits
-  * this object or nothing (previously each generator inlined the loop,
-  * and a drift in one would only have been caught by the parity specs).
-  */
-private[plans] object GramHash {
+object GramHash {
   /** Maximal runs of non-whitespace (Java `\s`), empty fragments
     * dropped — Text.tokens verbatim. */
-  def tokens(v: UTF8String): Array[String] =
-    v.toString.split("\\s+").filter(_.nonEmpty)
+  private def tokens(v: String): Array[String] =
+    v.split("\\s+").filter(_.nonEmpty)
 
   /** PolyHash of the space-joined token window [from, until). */
-  def windowHash(tokens: Array[String], from: Int, until: Int): Long = {
-    val sb = new java.lang.StringBuilder(tokens(from))
-    var k = from + 1
-    while (k < until) { sb.append(' ').append(tokens(k)); k += 1 }
-    PolyHash.eval(sb.toString)
-  }
+  private def windowHash(tokens: Array[String], from: Int, until: Int,
+      sb: java.lang.StringBuilder): Long =
+    PolyHash.eval(TokenScan.window(tokens, from, until, sb))
 
   /** PolyHash of the n-gram starting at token `i`. */
-  def gramHash(tokens: Array[String], i: Int, n: Int): Long =
-    windowHash(tokens, i, i + n)
-}
+  private def gramHash(tokens: Array[String], i: Int, n: Int,
+      sb: java.lang.StringBuilder): Long =
+    windowHash(tokens, i, i + n, sb)
 
-/** Generator: one output row per word n-gram of the input text, carrying
-  * the n-gram's polynomial hash (`tid: bigint`). Tokenization is
-  * whitespace-split with empty fragments dropped — identical to
-  * Text.tokens — and the hashed string is the space-joined n-gram,
-  * identical to Text.wordNgrams + PolyHash ([[GramHash]] is the shared
-  * kernel). With n = 1 this is a hashed
-  * tokenizer. Fuses tokenize → shingle → hash into one compiled pass with
-  * no intermediate Spark arrays.
-  */
-case class HashedShingles(child: Expression, n: Int)
-    extends UnaryExpression with Generator with CodegenFallback {
-  require(n >= 1, "shingle size must be >= 1")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hashed_shingles requires a string argument, got ${child.dataType.sql}")
-
-  override def elementSchema: StructType =
-    StructType(StructField("tid", LongType) :: Nil)
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Nil
-    else {
-      val tokens = GramHash.tokens(v.asInstanceOf[UTF8String])
-      if (tokens.length < n) Nil
-      else (0 to tokens.length - n).iterator.map { i =>
-        InternalRow(GramHash.gramHash(tokens, i, n))
-      }
-    }
+  /** One row per word n-gram of the text, carrying the n-gram's
+    * polynomial hash (`tid`): the hashed string is the space-joined
+    * n-gram, identical to Text.wordNgrams + PolyHash. With n = 1 this is
+    * a hashed tokenizer. Fuses tokenize → shingle → hash into one pass
+    * with no intermediate Spark arrays.
+    */
+  def shingles(s: String, n: Int): IterableOnce[InternalRow] = {
+    val toks = tokens(s)
+    val sb = new java.lang.StringBuilder
+    (0 to toks.length - n).iterator.map(i => InternalRow(gramHash(toks, i, n, sb)))
   }
 
-  override protected def withNewChildInternal(newChild: Expression): HashedShingles =
-    copy(child = newChild)
-}
-
-/** Generator: [[HashedShingles]] carrying each n-gram's 0-based starting
-  * TOKEN POSITION alongside its hash (`pos: bigint, tid: bigint`) — the
-  * input to span-level (substring) dedup, where a gram hit must map back
-  * to the token interval [pos, pos + n) it covers. Same tokenization,
-  * same joined-gram hash: a (text, n) pair produces exactly the tids of
-  * HashedShingles, in position order.
-  */
-case class HashedShinglesPos(child: Expression, n: Int)
-    extends UnaryExpression with Generator with CodegenFallback {
-  require(n >= 1, "shingle size must be >= 1")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hashed_shingles_pos requires a string argument, got ${child.dataType.sql}")
-
-  override def elementSchema: StructType =
-    StructType(StructField("pos", LongType) ::
-      StructField("tid", LongType) :: Nil)
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Nil
-    else {
-      val tokens = GramHash.tokens(v.asInstanceOf[UTF8String])
-      if (tokens.length < n) Nil
-      else (0 to tokens.length - n).iterator.map { i =>
-        InternalRow(i.toLong, GramHash.gramHash(tokens, i, n))
-      }
-    }
+  /** [[shingles]] carrying each n-gram's 0-based starting TOKEN POSITION
+    * alongside its hash (`pos, tid`) — the input to span-level
+    * (substring) dedup, where a gram hit must map back to the token
+    * interval [pos, pos + n) it covers: exactly the tids of [[shingles]],
+    * in position order.
+    */
+  def shinglesPos(s: String, n: Int): IterableOnce[InternalRow] = {
+    val toks = tokens(s)
+    val sb = new java.lang.StringBuilder
+    (0 to toks.length - n).iterator.map(i =>
+      InternalRow(i.toLong, gramHash(toks, i, n, sb)))
   }
 
-  override protected def withNewChildInternal(newChild: Expression): HashedShinglesPos =
-    copy(child = newChild)
-}
-
-/** Generator: winnowing fingerprint selection (Schleimer et al. 2003)
-  * fused into ONE compiled scan pass (`sel_pos: bigint, tid: bigint`) —
-  * the minimum of every `w`-hash window over the word-n-gram hash
-  * stream, rightmost occurrence on ties, distinct selections emitted.
-  *
-  * Bit-identical to the declarative construction (HashedShinglesPos →
-  * doc-partitioned sliding window min over the composite key
-  * `tid * 2^31 + (2^31 - 1 - pos)` → distinct), WITHOUT the doc-keyed
-  * shuffle: selection is sequential within a document, so a monotonic
-  * deque computes every window minimum in O(grams), and the classic
-  * winnowing property (as the window slides, the selection either stays
-  * or moves to the entering gram; a selection never recurs after being
-  * displaced — displaced means a smaller key is in every later window
-  * that still contains it) makes consecutive-dedup produce exactly the
-  * distinct selection set. Documents with fewer than `w` grams
-  * contribute the minimum of their whole stream (the clipped-window
-  * rule); documents with no grams contribute nothing. Keys are unique
-  * (the position is packed into the key), so the minimum is unambiguous.
-  */
-case class WinnowSelect(child: Expression, n: Int, w: Int)
-    extends UnaryExpression with Generator with CodegenFallback {
-  require(n >= 1, "shingle size must be >= 1")
-  require(w >= 1, "window must be >= 1 hashes")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"winnow_select requires a string argument, got ${child.dataType.sql}")
-
-  override def elementSchema: StructType =
-    StructType(StructField("sel_pos", LongType) ::
-      StructField("tid", LongType) :: Nil)
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Nil
-    else {
-      val tokens = GramHash.tokens(v.asInstanceOf[UTF8String])
-      val m = tokens.length - n + 1
-      if (m <= 0) Nil
-      else {
-        val cap = 2147483648L // 2^31
-        // Gram keys: (tid asc, pos desc) as one long — same packing as
-        // the declarative window construction.
-        val keys = new Array[Long](m)
-        var i = 0
-        while (i < m) {
-          keys(i) = GramHash.gramHash(tokens, i, n) * cap + (cap - 1 - i)
-          i += 1
-        }
-        val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-        if (m <= w) {
-          // Sub-w stream: one clipped window = global minimum.
-          var best = keys(0)
-          i = 1
-          while (i < m) { if (keys(i) < best) best = keys(i); i += 1 }
-          out += InternalRow(cap - 1 - (best % cap), best / cap)
-        } else {
-          // Monotonic deque of positions with increasing keys; window
-          // starts 0 .. m - w, each full (the declarative filter keeps
-          // only full-window starts when m > w).
-          val dq = new Array[Int](m)
-          var lo = 0
-          var hi = 0 // deque is dq[lo, hi)
-          var prev = -1L
-          i = 0
-          while (i < m) {
-            while (hi > lo && keys(dq(hi - 1)) > keys(i)) hi -= 1
-            dq(hi) = i; hi += 1
-            val start = i - w + 1
-            if (start >= 0) {
-              if (dq(lo) < start) lo += 1
-              val sel = keys(dq(lo))
-              if (sel != prev) {
-                out += InternalRow(cap - 1 - (sel % cap), sel / cap)
-                prev = sel
-              }
-            }
-            i += 1
+  /** Winnowing fingerprint selection (Schleimer et al. 2003) in ONE scan
+    * pass (`sel_pos, tid`) — the minimum of every `w`-hash window over
+    * the word-n-gram hash stream, rightmost occurrence on ties, distinct
+    * selections emitted.
+    *
+    * Bit-identical to the declarative construction (shinglesPos →
+    * doc-partitioned sliding window min over the composite key
+    * `tid * 2^31 + (2^31 - 1 - pos)` → distinct), WITHOUT the doc-keyed
+    * shuffle: selection is sequential within a document, so a monotonic
+    * deque computes every window minimum in O(grams), and the classic
+    * winnowing property (as the window slides, the selection either stays
+    * or moves to the entering gram; a selection never recurs after being
+    * displaced — displaced means a smaller key is in every later window
+    * that still contains it) makes consecutive-dedup produce exactly the
+    * distinct selection set. Documents with fewer than `w` grams
+    * contribute the minimum of their whole stream (the clipped-window
+    * rule); documents with no grams contribute nothing. Keys are unique
+    * (the position is packed into the key), so the minimum is unambiguous.
+    */
+  def winnow(s: String, n: Int, w: Int): IterableOnce[InternalRow] = {
+    val toks = tokens(s)
+    val m = toks.length - n + 1
+    if (m <= 0) return Nil
+    val cap = 2147483648L // 2^31
+    // Gram keys: (tid asc, pos desc) as one long — same packing as
+    // the declarative window construction.
+    val keys = new Array[Long](m)
+    val sb = new java.lang.StringBuilder
+    var i = 0
+    while (i < m) {
+      keys(i) = gramHash(toks, i, n, sb) * cap + (cap - 1 - i)
+      i += 1
+    }
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    if (m <= w) {
+      // Sub-w stream: one clipped window = global minimum.
+      var best = keys(0)
+      i = 1
+      while (i < m) { if (keys(i) < best) best = keys(i); i += 1 }
+      out += InternalRow(cap - 1 - (best % cap), best / cap)
+    } else {
+      // Monotonic deque of positions with increasing keys; window
+      // starts 0 .. m - w, each full (the declarative filter keeps
+      // only full-window starts when m > w).
+      val dq = new Array[Int](m)
+      var lo = 0
+      var hi = 0 // deque is dq[lo, hi)
+      var prev = -1L
+      i = 0
+      while (i < m) {
+        while (hi > lo && keys(dq(hi - 1)) > keys(i)) hi -= 1
+        dq(hi) = i; hi += 1
+        val start = i - w + 1
+        if (start >= 0) {
+          if (dq(lo) < start) lo += 1
+          val sel = keys(dq(lo))
+          if (sel != prev) {
+            out += InternalRow(cap - 1 - (sel % cap), sel / cap)
+            prev = sel
           }
         }
-        out
+        i += 1
       }
     }
+    out
   }
 
-  override protected def withNewChildInternal(newChild: Expression): WinnowSelect =
-    copy(child = newChild)
-}
-
-/** Generator: one output row per fixed-width token LINE of the input
-  * text (`line_no: bigint, lh: bigint`) — non-overlapping `lineLen`-token
-  * windows INCLUDING the remainder tail, each hashed as its space-joined
-  * string. Bit-identical to
-  * `posexplode(Text.tokenLines(Text.tokens(text), lineLen))` +
-  * `Text.charFingerprint(line)` (the corpus-wide line-dedup key stream),
-  * fused into one compiled pass with no intermediate token/line arrays
-  * and no line-string Spark rows — at corpus scale the interpreted
-  * transform/slice/concat_ws HOF chain those build is the dominant cost
-  * of the hash side of line dedup.
-  */
-case class HashedTokenLines(child: Expression, lineLen: Int)
-    extends UnaryExpression with Generator with CodegenFallback {
-  require(lineLen >= 1, "line length must be >= 1 tokens")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hashed_token_lines requires a string argument, got ${child.dataType.sql}")
-
-  override def elementSchema: StructType =
-    StructType(StructField("line_no", LongType) ::
-      StructField("lh", LongType) :: Nil)
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Nil
-    else {
-      val tokens = GramHash.tokens(v.asInstanceOf[UTF8String])
-      if (tokens.length == 0) Nil
-      else (0 until (tokens.length + lineLen - 1) / lineLen).iterator
-        .map { line =>
-          val i = line * lineLen
-          val end = math.min(i + lineLen, tokens.length)
-          InternalRow(line.toLong, GramHash.windowHash(tokens, i, end))
-        }
+  /** One row per fixed-width token LINE of the text (`line_no, lh`) —
+    * non-overlapping `lineLen`-token windows INCLUDING the remainder
+    * tail, each hashed as its space-joined string. Bit-identical to
+    * `posexplode(Text.tokenLines(Text.tokens(text), lineLen))` +
+    * `Text.charFingerprint(line)` (the corpus-wide line-dedup key
+    * stream), with no intermediate token/line arrays and no line-string
+    * Spark rows — at corpus scale the interpreted transform/slice/
+    * concat_ws HOF chain those build is the dominant cost of the hash
+    * side of line dedup.
+    */
+  def lines(s: String, lineLen: Int): IterableOnce[InternalRow] = {
+    val toks = tokens(s)
+    val sb = new java.lang.StringBuilder
+    (0 until (toks.length + lineLen - 1) / lineLen).iterator.map { line =>
+      val i = line * lineLen
+      InternalRow(line.toLong,
+        windowHash(toks, i, math.min(i + lineLen, toks.length), sb))
     }
   }
-
-  override protected def withNewChildInternal(newChild: Expression): HashedTokenLines =
-    copy(child = newChild)
 }
 
 /** Static kernels for single-pass whitespace token scans.
@@ -305,7 +175,9 @@ case class HashedTokenLines(child: Expression, lineLen: Int)
   * `filter(split(c, "\\s+"), length > 0)`: a token is a maximal run of
   * non-whitespace characters, where whitespace is Java regex `\s` in its
   * default ASCII mode — exactly `[ \t\n\x0B\f\r]`. Character counts are
-  * code points (what Spark's `length` returns), not UTF-16 units.
+  * code points (what Spark's `length` returns), not UTF-16 units. Every
+  * token scan here runs the one tokenizer loop ([[scanTokens]]) and
+  * joins grams and lines with the one joiner ([[window]]).
   */
 object TokenScan {
   @inline def isWs(c: Char): Boolean =
@@ -326,27 +198,47 @@ object TokenScan {
     n
   }
 
+  /** Calls `f` on every whitespace token of `s`, in order, while it
+    * returns true: the one tokenizer loop of this object. */
+  @inline private[plans] def scanTokens(s: String)(f: String => Boolean): Unit = {
+    var i = 0
+    var start = -1
+    val len = s.length
+    var more = true
+    while (more && i <= len) {
+      val ws = i == len || isWs(s.charAt(i))
+      if (!ws && start < 0) start = i
+      if (ws && start >= 0) { more = f(s.substring(start, i)); start = -1 }
+      i += 1
+    }
+  }
+
   /** The first min(cap, count) whitespace tokens as an array — the
     * bounded-prefix discipline for O(cap²) pairwise work (Lcs).
     */
   def tokensCapped(s: String, cap: Int): Array[String] = {
     val out = new scala.collection.mutable.ArrayBuffer[String]()
-    var i = 0
-    var start = -1
-    val len = s.length
-    while (i < len && out.length < cap) {
-      val ws = isWs(s.charAt(i))
-      if (!ws && start < 0) start = i
-      if (ws && start >= 0) { out += s.substring(start, i); start = -1 }
-      i += 1
-    }
-    if (start >= 0 && out.length < cap) {
-      var j = i
-      while (j < len && !isWs(s.charAt(j))) j += 1
-      out += s.substring(start, j)
-    }
+    if (cap > 0) scanTokens(s) { t => out += t; out.length < cap }
     out.toArray
   }
+
+  /** Every whitespace token of `s`, in order. */
+  def tokens(s: String): Array[String] = tokensCapped(s, Int.MaxValue)
+
+  /** The space-joined token window [from, until) — a word n-gram or a
+    * fixed-width line, exactly `concat_ws(' ', slice(tokens, …))` —
+    * built in `sb`, which one document's windows reuse. A one-token
+    * window is the token itself. */
+  def window(tokens: Array[String], from: Int, until: Int,
+      sb: java.lang.StringBuilder): String =
+    if (until == from + 1) tokens(from)
+    else {
+      sb.setLength(0)
+      sb.append(tokens(from))
+      var k = from + 1
+      while (k < until) { sb.append(' ').append(tokens(k)); k += 1 }
+      sb.toString
+    }
 
   /** Total code points across all tokens — equals the sum of `length(t)`
     * over the token array, since tokens partition the non-\s characters.
@@ -362,12 +254,20 @@ object TokenScan {
     n
   }
 
-  /** Fraction of word n-grams that repeat an earlier gram: 1 -
-    * distinct/total, 0.0 for docs with fewer than n tokens. Gram identity
-    * is the space-joined token string compared by string equality —
-    * exactly `array_distinct` over `wordNgrams` (no hashing, no collision
-    * skew), in one pass with one token array and one hash set.
-    */
+  /** Occurrence count of every `n`-token window of `toks`. */
+  private def gramCounts(toks: Array[String], n: Int)
+      : java.util.HashMap[String, Long] = {
+    val counts = new java.util.HashMap[String, Long]()
+    val sb = new java.lang.StringBuilder
+    var g = 0
+    while (g + n <= toks.length) {
+      val gram = window(toks, g, g + n, sb)
+      counts.put(gram, counts.getOrDefault(gram, 0L) + 1L)
+      g += 1
+    }
+    counts
+  }
+
   /** Gini-impurity lexical diversity: 1 − Σc²/n² over the doc's token
     * counts — 0 for empty or single-token-type docs, →1 as the
     * vocabulary use evens out. The log-free diversity signal (entropy
@@ -378,24 +278,8 @@ object TokenScan {
   def tokenGini(s: String): Double = {
     val counts = new java.util.HashMap[String, Long]()
     var n = 0L
-    var i = 0
-    var start = -1
-    val len = s.length
-    while (i < len) {
-      val ws = isWs(s.charAt(i))
-      if (!ws && start < 0) start = i
-      if (ws && start >= 0) {
-        val t = s.substring(start, i)
-        counts.put(t, counts.getOrDefault(t, 0L) + 1L)
-        n += 1; start = -1
-      }
-      i += 1
-    }
-    if (start >= 0) {
-      val t = s.substring(start)
-      counts.put(t, counts.getOrDefault(t, 0L) + 1L)
-      n += 1
-    }
+    scanTokens(s) { t =>
+      counts.put(t, counts.getOrDefault(t, 0L) + 1L); n += 1; true }
     if (n == 0L) return 0.0
     var sumSq = 0L
     val it = counts.values().iterator()
@@ -412,32 +296,15 @@ object TokenScan {
     * dirty variant costs nothing extra.
     */
   def lineSignals(s: String, lineLen: Int, appendFirst: Int): Array[Long] = {
-    val tokens = new java.util.ArrayList[String]()
-    var i = 0
-    var start = -1
-    val len = s.length
-    while (i < len) {
-      val ws = isWs(s.charAt(i))
-      if (!ws && start < 0) start = i
-      if (ws && start >= 0) { tokens.add(s.substring(start, i)); start = -1 }
-      i += 1
-    }
-    if (start >= 0) tokens.add(s.substring(start))
-    val m = tokens.size
+    val toks = tokens(s)
+    val m = toks.length
     val nBase = if (m == 0) 0 else (m - 1) / lineLen + 1
     val lines = new java.util.ArrayList[String](nBase + appendFirst)
     val sb = new java.lang.StringBuilder
     var w = 0
     while (w < nBase) {
-      sb.setLength(0)
-      var k = w * lineLen
-      val end = math.min(m, k + lineLen)
-      while (k < end) {
-        if (k > w * lineLen) sb.append(' ')
-        sb.append(tokens.get(k))
-        k += 1
-      }
-      lines.add(sb.toString)
+      lines.add(
+        window(toks, w * lineLen, math.min(m, w * lineLen + lineLen), sb))
       w += 1
     }
     if (appendFirst > 0 && nBase >= 2) {
@@ -464,38 +331,10 @@ object TokenScan {
     * per-(doc, gram) shuffle chain folded into per-row hash counting.
     */
   def ngramRepMass(s: String, nTop: Int, nDup: Int): Array[Long] = {
-    val tokens = new java.util.ArrayList[String]()
-    var i = 0
-    var start = -1
-    val len = s.length
-    while (i < len) {
-      val ws = isWs(s.charAt(i))
-      if (!ws && start < 0) start = i
-      if (ws && start >= 0) { tokens.add(s.substring(start, i)); start = -1 }
-      i += 1
-    }
-    if (start >= 0) tokens.add(s.substring(start))
-    val m = tokens.size
+    val toks = tokens(s)
     def massOf(n: Int, top: Boolean): Long = {
-      if (m < n) return 0L
-      val counts = new java.util.HashMap[String, Long]()
-      val sb = new java.lang.StringBuilder
-      var g = 0
-      val total = m - n + 1
-      while (g < total) {
-        sb.setLength(0)
-        var k = g
-        while (k < g + n) {
-          if (k > g) sb.append(' ')
-          sb.append(tokens.get(k))
-          k += 1
-        }
-        val gram = sb.toString
-        counts.put(gram, counts.getOrDefault(gram, 0L) + 1L)
-        g += 1
-      }
       var acc = 0L
-      val it = counts.entrySet().iterator()
+      val it = gramCounts(toks, n).entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
         if (e.getValue >= 2L) {
@@ -521,36 +360,17 @@ object TokenScan {
     org.apache.spark.sql.catalyst.util.ArrayData
       .toArrayData(ngramRepMass(s, nTop, nDup))
 
+  /** Fraction of word n-grams that repeat an earlier gram: 1 -
+    * distinct/total, 0.0 for docs with fewer than n tokens. Gram identity
+    * is the space-joined token string compared by string equality —
+    * exactly `array_distinct` over `wordNgrams` (no hashing, no collision
+    * skew), in one pass with one token array and one hash map.
+    */
   def repetitionRatio(s: String, n: Int): Double = {
-    val tokens = new java.util.ArrayList[String]()
-    var i = 0
-    var start = -1
-    val len = s.length
-    while (i < len) {
-      val ws = isWs(s.charAt(i))
-      if (!ws && start < 0) start = i
-      if (ws && start >= 0) { tokens.add(s.substring(start, i)); start = -1 }
-      i += 1
-    }
-    if (start >= 0) tokens.add(s.substring(start))
-    val m = tokens.size
-    if (m < n) return 0.0
-    val total = m - n + 1
-    val set = new java.util.HashSet[String]()
-    val sb = new java.lang.StringBuilder
-    var g = 0
-    while (g < total) {
-      sb.setLength(0)
-      var k = g
-      while (k < g + n) {
-        if (k > g) sb.append(' ')
-        sb.append(tokens.get(k))
-        k += 1
-      }
-      set.add(sb.toString)
-      g += 1
-    }
-    1.0 - set.size.toDouble / total.toDouble
+    val toks = tokens(s)
+    if (toks.length < n) return 0.0
+    val total = toks.length - n + 1
+    1.0 - gramCounts(toks, n).size.toDouble / total.toDouble
   }
 
   /** SimHash fingerprint of a document in one pass: per token OCCURRENCE,
@@ -563,22 +383,14 @@ object TokenScan {
     */
   def simhashFp(s: String, bits: Int, a: Long, b: Long, m: Long): Long = {
     val lanes = new Array[Long](bits)
-    var i = 0
-    var start = -1
-    val len = s.length
-    while (i <= len) {
-      val ws = i == len || isWs(s.charAt(i))
-      if (!ws && start < 0) start = i
-      if (ws && start >= 0) {
-        val h = (PolyHash.eval(s.substring(start, i)) * a + b) % m
-        var k = 0
-        while (k < bits) {
-          if (((h >> k) & 1L) == 1L) lanes(k) += 1 else lanes(k) -= 1
-          k += 1
-        }
-        start = -1
+    scanTokens(s) { t =>
+      val h = (PolyHash.eval(t) * a + b) % m
+      var k = 0
+      while (k < bits) {
+        if (((h >> k) & 1L) == 1L) lanes(k) += 1 else lanes(k) -= 1
+        k += 1
       }
-      i += 1
+      true
     }
     var fp = 0L
     var k = 0
@@ -592,293 +404,63 @@ object TokenScan {
   /** Number of tokens (with multiplicity) contained in `set`. */
   def markerHits(s: String, set: java.util.HashSet[String]): Int = {
     var hits = 0
-    var i = 0
-    var start = -1
-    val len = s.length
-    while (i < len) {
-      val ws = isWs(s.charAt(i))
-      if (!ws && start < 0) start = i
-      if (ws && start >= 0) {
-        if (set.contains(s.substring(start, i))) hits += 1
-        start = -1
-      }
-      i += 1
-    }
-    if (start >= 0 && set.contains(s.substring(start))) hits += 1
+    scanTokens(s) { t => if (set.contains(t)) hits += 1; true }
     hits
   }
 }
 
-/** Scalar: whitespace token count in one compiled pass — no intermediate
-  * token array. Semantically `size(filter(split(c, "\\s+"), length > 0))`.
-  */
-case class TokenCountExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"token_count requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TokenScan.tokenCount(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TokenScan.tokenCount($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenCountExpr =
-    copy(child = newChild)
-}
-
-/** Scalar: total token characters (code points) in one compiled pass —
-  * semantically `aggregate(tokens, 0L, (acc, t) -> acc + length(t))`.
-  */
-case class TokenCharsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"token_chars requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TokenScan.tokenChars(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TokenScan.tokenChars($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenCharsExpr =
-    copy(child = newChild)
-}
-
-/** Scalar: count of tokens present in a fixed word set, in one compiled
-  * pass — semantically `size(filter(tokens, t -> array_contains(words, t)))`
-  * but without materializing the token array or re-scanning the word list
-  * per token (the HOF form is O(tokens × words) and CodegenFallback).
-  */
-case class MarkerHitsExpr(child: Expression, words: Seq[String])
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val set: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    words.foreach(s.add)
-    s
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"marker_hits requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TokenScan.markerHits(input.asInstanceOf[UTF8String].toString, set)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // Janino has no generics: the reference is typed as the raw HashSet.
-    val setRef = ctx.addReferenceObj("markerSet", set, "java.util.HashSet")
-    defineCodeGen(ctx, ev, c => s"graft.plans.TokenScan.markerHits($c.toString(), $setRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MarkerHitsExpr =
-    copy(child = newChild)
-}
-
-/** Scalar: word-n-gram repetition ratio in one compiled pass (see
-  * TokenScan.repetitionRatio). The composed HOF form
-  * (`1 - size(array_distinct(wordNgrams))/size(wordNgrams)`) interprets
-  * a transform+slice+concat_ws lambda per gram per row — measured ~20 s
-  * for a 5k-doc scan that this expression runs in well under a second.
-  */
-case class RepetitionRatioExpr(child: Expression, n: Int)
-    extends UnaryExpression {
-  require(n >= 1, "n-gram size must be >= 1")
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"repetition_ratio requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TokenScan.repetitionRatio(input.asInstanceOf[UTF8String].toString, n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TokenScan.repetitionRatio($c.toString(), $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): RepetitionRatioExpr =
-    copy(child = newChild)
-}
-
-/** Scalar: Gopher line signals [n_lines, dup_lines, total_chars,
-  * dup_chars] in one compiled pass (see TokenScan.lineSignals). The
-  * composed HOF form (tokenLines + aggregate + array_distinct, twice)
-  * interprets per-line lambdas per row — measured 10.8 s for the sf0.1
-  * catalog scan that this expression retires.
-  */
-case class LineSignalsExpr(child: Expression, lineLen: Int, appendFirst: Int)
-    extends UnaryExpression {
-  require(lineLen >= 1, s"lineLen must be >= 1, got $lineLen")
-  require(appendFirst >= 0, s"appendFirst must be >= 0, got $appendFirst")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"line_signals requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TokenScan.lineSignalsData(input.asInstanceOf[UTF8String].toString,
-      lineLen, appendFirst)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.TokenScan.lineSignalsData($c.toString(), $lineLen, $appendFirst)")
-
-  override protected def withNewChildInternal(newChild: Expression): LineSignalsExpr =
-    copy(child = newChild)
-}
-
-/** Scalar: Gopher n-gram repetition masses [top-nTop-gram mass,
-  * duplicated-nDup-gram mass] in one compiled pass (see
-  * TokenScan.ngramRepMass) — the per-(doc, gram) explode/groupBy chain
-  * folded into per-row hash counting, turning the operator map-only.
-  */
-case class NgramRepMassExpr(child: Expression, nTop: Int, nDup: Int)
-    extends UnaryExpression {
-  require(nTop >= 1 && nDup >= 1, s"gram sizes must be >= 1: $nTop, $nDup")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"ngram_rep_mass requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TokenScan.ngramRepMassData(input.asInstanceOf[UTF8String].toString,
-      nTop, nDup)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.TokenScan.ngramRepMassData($c.toString(), $nTop, $nDup)")
-
-  override protected def withNewChildInternal(newChild: Expression): NgramRepMassExpr =
-    copy(child = newChild)
-}
-
-/** Scalar: Gini-impurity lexical diversity (see TokenScan.tokenGini). */
-case class TokenGiniExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"token_gini requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TokenScan.tokenGini(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TokenScan.tokenGini($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenGiniExpr =
-    copy(child = newChild)
-}
-
-/** Scalar: scan-stage SimHash fingerprint (see TokenScan.simhashFp).
-  * The distributed Dedup.simhash form shuffles |tokens|×bits lane rows
-  * through two aggregations; this computes the identical fingerprint
-  * per row at the scan for bits-bounded constant memory.
-  */
-case class SimhashExpr(child: Expression, bits: Int, a: Long, b: Long, m: Long)
-    extends UnaryExpression {
-  require(bits >= 1 && bits <= 62, s"bits must be in [1, 62], got $bits")
-  require(m > 0, "modulus must be positive")
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TokenScan.simhashFp(input.asInstanceOf[UTF8String].toString, bits, a, b, m)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.TokenScan.simhashFp($c.toString(), $bits, ${a}L, ${b}L, ${m}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimhashExpr =
-    copy(child = newChild)
-}
-
 object TextExpressions {
   /** Column API: polynomial hash of a string column (codegen'd). */
-  def polyHash(c: Column): Column =
-    GraftBridge.column(PolyHashExpr(GraftBridge.expression(c)))
+  def polyHash(c: Column): Column = Kernels.polyHash(Seq(c))
 
   /** Column API: generate hashed word n-grams (`tid`) — use in a select
     * like explode: df.select(col("id"), hashedShingles(col("text"), 3)).
     */
   def hashedShingles(c: Column, n: Int): Column =
-    GraftBridge.column(HashedShingles(GraftBridge.expression(c), n))
+    Kernels.hashedShingles(Seq(c), n)
 
   /** Column API: positioned hashed word n-grams (pos, tid rows). */
   def hashedShinglesPos(c: Column, n: Int): Column =
-    GraftBridge.column(HashedShinglesPos(GraftBridge.expression(c), n))
+    Kernels.hashedShinglesPos(Seq(c), n)
 
   /** Column API: winnowing fingerprint selection (sel_pos, tid rows). */
   def winnowSelect(c: Column, n: Int, w: Int): Column =
-    GraftBridge.column(WinnowSelect(GraftBridge.expression(c), n, w))
+    Kernels.winnowSelect(Seq(c), n, w)
 
   /** Column API: hashed fixed-width token lines (line_no, lh rows). */
   def hashedTokenLines(c: Column, lineLen: Int): Column =
-    GraftBridge.column(HashedTokenLines(GraftBridge.expression(c), lineLen))
+    Kernels.hashedTokenLines(Seq(c), lineLen)
 
   /** Column API: whitespace token count (codegen'd single pass). */
-  def tokenCount(c: Column): Column =
-    GraftBridge.column(TokenCountExpr(GraftBridge.expression(c)))
+  def tokenCount(c: Column): Column = Kernels.tokenCount(Seq(c))
 
   /** Column API: total token characters (codegen'd single pass). */
-  def tokenChars(c: Column): Column =
-    GraftBridge.column(TokenCharsExpr(GraftBridge.expression(c)))
+  def tokenChars(c: Column): Column = Kernels.tokenChars(Seq(c))
 
   /** Column API: tokens-in-word-set count (codegen'd single pass). */
   def markerHits(c: Column, words: Seq[String]): Column =
-    GraftBridge.column(MarkerHitsExpr(GraftBridge.expression(c), words))
+    Kernels.markerHits(Seq(c), words)
 
   /** Column API: word-n-gram repetition ratio (codegen'd single pass). */
   def repetitionRatio(c: Column, n: Int): Column =
-    GraftBridge.column(RepetitionRatioExpr(GraftBridge.expression(c), n))
+    Kernels.repetitionRatio(Seq(c), n)
 
   /** Column API: Gini-impurity lexical diversity (codegen'd single pass). */
-  def tokenGini(c: Column): Column =
-    GraftBridge.column(TokenGiniExpr(GraftBridge.expression(c)))
+  def tokenGini(c: Column): Column = Kernels.tokenGini(Seq(c))
 
   /** Column API: Gopher line signals [n_lines, dup_lines, total_chars,
     * dup_chars] (codegen'd single pass).
     */
   def lineSignals(c: Column, lineLen: Int, appendFirst: Int = 0): Column =
-    GraftBridge.column(
-      LineSignalsExpr(GraftBridge.expression(c), lineLen, appendFirst))
+    Kernels.lineSignals(Seq(c), lineLen, appendFirst)
 
   /** Column API: Gopher n-gram repetition masses [top mass, dup mass]
     * (codegen'd single pass).
     */
   def ngramRepMass(c: Column, nTop: Int, nDup: Int): Column =
-    GraftBridge.column(
-      NgramRepMassExpr(GraftBridge.expression(c), nTop, nDup))
+    Kernels.ngramRepMass(Seq(c), nTop, nDup)
 
   /** Column API: scan-stage SimHash fingerprint (codegen'd single pass). */
   def simhashFp(c: Column, bits: Int, a: Long, b: Long, m: Long): Column =
-    GraftBridge.column(SimhashExpr(GraftBridge.expression(c), bits, a, b, m))
+    Kernels.simhash(Seq(c), bits, a, b, m)
 }

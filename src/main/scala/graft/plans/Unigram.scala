@@ -1,12 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unigram-LM (SentencePiece-style, Kudo 2018 "Subword Regularization")
@@ -122,76 +117,14 @@ final class UgVocab(val costs: Map[String, Long], val unkCost: Long)
   }
 }
 
-object UgVocab {
-  /** Janino-friendly static entries for generated code — named differently
-    * from the instance methods: scalac suppresses the static forwarder on
-    * the companion CLASS when the class declares any method of the same
-    * name, and generated code calls `graft.plans.UgVocab.<static>`.
-    */
-  def evalStats(s: String, v: UgVocab): ArrayData = v.wordStats(s)
-  def evalPieces(s: String, v: UgVocab): ArrayData = v.wordPieces(s)
-}
-
-private[plans] trait UgExprBase extends UnaryExpression {
-  def costs: Map[String, Long]
-  def unkCost: Long
-  @transient protected lazy val vocab = new UgVocab(costs, unkCost)
-
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"unigram segmentation requires a string argument, got ${child.dataType.sql}")
-}
-
-/** Scalar: [n_pieces, total_cost_milli] of the Viterbi segmentation of one
-  * word (array<long>, compiled single pass).
-  */
-case class UnigramStatsExpr(child: Expression, costs: Map[String, Long],
-    unkCost: Long) extends UgExprBase {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    UgVocab.evalStats(input.asInstanceOf[UTF8String].toString, vocab)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vRef = ctx.addReferenceObj("ugVocab", vocab, "graft.plans.UgVocab")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.UgVocab.evalStats($c.toString(), $vRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): UnigramStatsExpr =
-    copy(child = newChild)
-}
-
-/** Scalar: the Viterbi piece sequence of one word (array<string>). */
-case class UnigramPiecesExpr(child: Expression, costs: Map[String, Long],
-    unkCost: Long) extends UgExprBase {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    UgVocab.evalPieces(input.asInstanceOf[UTF8String].toString, vocab)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vRef = ctx.addReferenceObj("ugVocab", vocab, "graft.plans.UgVocab")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.UgVocab.evalPieces($c.toString(), $vRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): UnigramPiecesExpr =
-    copy(child = newChild)
-}
-
 object Unigram {
   /** Column: [n_pieces, cost_milli] of one word under the cost table. */
   def wordStats(c: Column, costs: Map[String, Long],
       unkCost: Long = 16000L): Column =
-    GraftBridge.column(
-      UnigramStatsExpr(GraftBridge.expression(c), costs, unkCost))
+    Kernels.unigramStats(Seq(c), costs, unkCost)
 
   /** Column: Viterbi pieces of one word under the cost table. */
   def wordPieces(c: Column, costs: Map[String, Long],
       unkCost: Long = 16000L): Column =
-    GraftBridge.column(
-      UnigramPiecesExpr(GraftBridge.expression(c), costs, unkCost))
+    Kernels.unigramPieces(Seq(c), costs, unkCost)
 }

@@ -1,13 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 /** Native cosine similarity over `array<float>` / `array<double>` columns.
   *
@@ -100,58 +96,6 @@ object VecOps {
   }
 }
 
-/** Shared shape for the two vector-similarity binaries: float/double
-  * element dispatch, analysis-time type checking, boxed-null result
-  * mapping (NULL element / zero norm → NULL; NaN payloads stay NaN) in
-  * both interpreted and generated paths.
-  */
-trait VecBinaryExpr extends BinaryExpression {
-  /** VecOps method name for float-element arrays ("dot" / "cosine"). */
-  protected def floatFn: String
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def elem(dt: DataType): Option[DataType] = dt match {
-      case ArrayType(et @ (FloatType | DoubleType), _) => Some(et)
-      case _ => None
-    }
-    (elem(left.dataType), elem(right.dataType)) match {
-      case (Some(l), Some(r)) if l == r => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<float> or two array<double> " +
-          s"arguments, got ${left.dataType.sql} and ${right.dataType.sql}")
-    }
-  }
-
-  private def fn: String = left.dataType match {
-    case ArrayType(DoubleType, _) => floatFn + "D"
-    case _ => floatFn
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val r: java.lang.Double =
-      if (fn.endsWith("D"))
-        if (floatFn == "dot") VecOps.dotD(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-        else VecOps.cosineD(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-      else
-        if (floatFn == "dot") VecOps.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-        else VecOps.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    r
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("r")
-      s"""
-         |java.lang.Double $r = graft.plans.VecOps.$fn($a, $b);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
-       """.stripMargin
-    })
-}
-
 /** Random-hyperplane LSH bucketing compiled to one pass over the vector.
   *
   * Bit j of the result is set when proj_j = Σ_i sign(i,j)·v_i > 0, with
@@ -164,103 +108,47 @@ trait VecBinaryExpr extends BinaryExpression {
   */
 object RpLsh {
   /** Null means: input array contained a NULL element. */
-  def bucketF(v: ArrayData, nBits: Int): java.lang.Long = {
-    val n = v.numElements()
+  def bucket(v: ArrayData, nBits: Int): java.lang.Long = {
     val projs = new Array[Double](nBits)
     var i = 0
-    while (i < n) {
+    while (i < v.numElements()) {
       if (v.isNullAt(i)) return null
-      val x = v.getFloat(i).toDouble
-      var j = 0
-      while (j < nBits) {
-        val s = if (((i + 1) * 2654435761L + (j + 1) * 40503L) % 65536L < 32768L) x else -x
-        projs(j) += s
-        j += 1
-      }
+      project(projs, i, v.getFloat(i).toDouble)
       i += 1
     }
-    var b = 0L
-    var j = 0
-    while (j < nBits) { if (projs(j) > 0) b |= 1L << j; j += 1 }
-    b
+    bits(projs)
   }
 
   def bucketD(v: ArrayData, nBits: Int): java.lang.Long = {
-    val n = v.numElements()
     val projs = new Array[Double](nBits)
     var i = 0
-    while (i < n) {
+    while (i < v.numElements()) {
       if (v.isNullAt(i)) return null
-      val x = v.getDouble(i)
-      var j = 0
-      while (j < nBits) {
-        val s = if (((i + 1) * 2654435761L + (j + 1) * 40503L) % 65536L < 32768L) x else -x
-        projs(j) += s
-        j += 1
-      }
+      project(projs, i, v.getDouble(i))
       i += 1
     }
+    bits(projs)
+  }
+
+  /** Element i's signed vote into every projection accumulator. */
+  private def project(projs: Array[Double], i: Int, x: Double): Unit = {
+    var j = 0
+    while (j < projs.length) {
+      val s = if (((i + 1) * 2654435761L + (j + 1) * 40503L) % 65536L < 32768L) x else -x
+      projs(j) += s
+      j += 1
+    }
+  }
+
+  private def bits(projs: Array[Double]): Long = {
     var b = 0L
     var j = 0
-    while (j < nBits) { if (projs(j) > 0) b |= 1L << j; j += 1 }
+    while (j < projs.length) { if (projs(j) > 0) b |= 1L << j; j += 1 }
     b
   }
 }
 
-case class RpLshBucketExpr(child: Expression, nBits: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  require(nBits >= 1 && nBits <= 63, "nBits must be in [1, 63]")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"rp_lsh_bucket requires an array<float> or array<double> argument, " +
-        s"got ${other.sql}")
-  }
-
-  private def fn: String = child.dataType match {
-    case ArrayType(DoubleType, _) => "bucketD"
-    case _ => "bucketF"
-  }
-
-  override protected def nullSafeEval(v: Any): Any =
-    (if (fn == "bucketD") RpLsh.bucketD(v.asInstanceOf[ArrayData], nBits)
-     else RpLsh.bucketF(v.asInstanceOf[ArrayData], nBits)): Any
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val r = ctx.freshName("r")
-      s"""
-         |java.lang.Long $r = graft.plans.RpLsh.$fn($v, $nBits);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): RpLshBucketExpr =
-    copy(child = newChild)
-}
-
-case class CosineSimExpr(left: Expression, right: Expression)
-    extends VecBinaryExpr {
-  override protected def floatFn: String = "cosine"
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-case class DotProductExpr(left: Expression, right: Expression)
-    extends VecBinaryExpr {
-  override protected def floatFn: String = "dot"
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** The centroid side of [[NearestCellExpr]], precomputed once per plan:
+/** The centroid side of the nearest_cell kernel, precomputed once per plan:
   * cell ids ascending (the tie-break order), centroid vectors, and each
   * centroid's self-dot-product (left fold in index order — the same
   * accumulation [[VecOps.dot]] would produce). Rides into generated code
@@ -299,35 +187,13 @@ object NearestCell {
   def assignF(v: ArrayData, t: CentroidTable): InternalRow = {
     val k = t.cells.length
     if (k == 0) return null
-    val n = v.numElements()
-    // x·x once per point, left fold in index order
-    var xx = 0.0
-    var i = 0
-    while (i < n) {
-      if (v.isNullAt(i)) return new GenericInternalRow(
-        Array[Any](t.cells(0), null))
-      val x = v.getFloat(i).toDouble
-      xx += x * x
-      i += 1
-    }
+    val xx = selfDot(v)
+    if (xx == null) return new GenericInternalRow(Array[Any](t.cells(0), null))
     var bestCell = -1
     var bestD2 = 0.0
     var c = 0
     while (c < k) {
-      val cv = t.vecs(c)
-      val m = math.min(n, cv.length)
-      var dp = 0.0
-      var j = 0
-      while (j < m) { dp += v.getFloat(j).toDouble * cv(j).toDouble; j += 1 }
-      val raw = (xx - 2.0 * dp) + t.ccs(c)
-      // greatest(0.0, raw) under Spark's double ordering (NaN greatest,
-      // -0.0 < 0.0), then Spark's Round semantics (NaN/Inf pass through,
-      // else BigDecimal HALF_UP at scale 6)
-      val clamped = if (java.lang.Double.compare(raw, 0.0) >= 0) raw else 0.0
-      val d2 =
-        if (clamped.isNaN || clamped.isInfinite) clamped
-        else java.math.BigDecimal.valueOf(clamped)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      val d2 = dist2(v, xx, t.vecs(c), t.ccs(c))
       if (bestCell == -1 || java.lang.Double.compare(d2, bestD2) < 0) {
         bestCell = t.cells(c); bestD2 = d2
       }
@@ -335,48 +201,36 @@ object NearestCell {
     }
     new GenericInternalRow(Array[Any](bestCell, bestD2))
   }
-}
 
-/** Nearest-centroid assignment compiled to ONE k×d loop per row — the
-  * map-only replacement for the broadcast-cross-join + per-point-argmin
-  * candidate stream (n·k materialized rows, and an argmin whose
-  * struct-typed buffer forces a sort-based aggregate). Profiled at
-  * 32k vectors × 500 cells × 128 dims: one assignment pass 23.8 s as a
-  * candidate stream, sub-second compiled. Output:
-  * struct(cell int, dist2 double); see [[NearestCell.assignF]] for the
-  * exact-arithmetic and null contracts.
-  */
-case class NearestCellExpr(child: Expression, table: CentroidTable)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("cell", IntegerType, nullable = false),
-    StructField("dist2", DoubleType, nullable = true)))
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"nearest_cell requires an array<float> argument, got ${other.sql}")
+  /** x·x, left fold in index order; null when x has a NULL element. */
+  private[plans] def selfDot(v: ArrayData): java.lang.Double = {
+    var xx = 0.0
+    var i = 0
+    while (i < v.numElements()) {
+      if (v.isNullAt(i)) return null
+      val x = v.getFloat(i).toDouble
+      xx += x * x
+      i += 1
+    }
+    xx
   }
 
-  override protected def nullSafeEval(v: Any): Any =
-    NearestCell.assignF(v.asInstanceOf[ArrayData], table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val tbl = ctx.addReferenceObj("centTable", table,
-        classOf[CentroidTable].getName)
-      val r = ctx.freshName("r")
-      s"""
-         |InternalRow $r = graft.plans.NearestCell.assignF($v, $tbl);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCellExpr =
-    copy(child = newChild)
+  /** round(greatest(0, x·x − 2·x·c + c·c), 6) under Spark's double
+    * ordering (NaN greatest, −0.0 < 0.0) and Round semantics (NaN/Inf
+    * pass through, else BigDecimal HALF_UP at scale 6); x·c folds over
+    * the common prefix. */
+  private[plans] def dist2(v: ArrayData, xx: Double, cv: Array[Float],
+      cc: Double): Double = {
+    val m = math.min(v.numElements(), cv.length)
+    var dp = 0.0
+    var j = 0
+    while (j < m) { dp += v.getFloat(j).toDouble * cv(j).toDouble; j += 1 }
+    val raw = (xx - 2.0 * dp) + cc
+    val clamped = if (java.lang.Double.compare(raw, 0.0) >= 0) raw else 0.0
+    if (clamped.isNaN || clamped.isInfinite) clamped
+    else java.math.BigDecimal.valueOf(clamped)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
 }
 
 /** Two-level (hierarchical IVF) centroid table: the flat cells grouped
@@ -433,13 +287,6 @@ final class HierCentroidTable(cellIds: Array[Int],
 }
 
 object NearestCellHier {
-  private def exactD2(raw: Double): Double = {
-    val clamped = if (java.lang.Double.compare(raw, 0.0) >= 0) raw else 0.0
-    if (clamped.isNaN || clamped.isInfinite) clamped
-    else java.math.BigDecimal.valueOf(clamped)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-  }
-
   /** Two-hop assignment: rank super-cells by the SAME rounded dist²
     * (super-id tie-break), scan the members of the nProbe best, argmin
     * by (dist2, cell). Null contract mirrors [[NearestCell.assignF]]:
@@ -448,29 +295,12 @@ object NearestCellHier {
   def assignH(v: ArrayData, t: HierCentroidTable): InternalRow = {
     val kSuper = t.superTable.cells.length
     if (kSuper == 0 || t.firstCell == -1) return null
-    val n = v.numElements()
-    var xx = 0.0
-    var i = 0
-    while (i < n) {
-      if (v.isNullAt(i)) return new GenericInternalRow(
-        Array[Any](t.firstCell, null))
-      val x = v.getFloat(i).toDouble
-      xx += x * x
-      i += 1
-    }
+    val xx = NearestCell.selfDot(v)
+    if (xx == null) return new GenericInternalRow(Array[Any](t.firstCell, null))
     // super distances, then select nProbe best by (d2, position) —
     // positions ascend in super-id order, so the tie-break is the id
-    val sd = new Array[Double](kSuper)
-    var s = 0
-    while (s < kSuper) {
-      val cv = t.superTable.vecs(s)
-      val m = math.min(n, cv.length)
-      var dp = 0.0
-      var j = 0
-      while (j < m) { dp += v.getFloat(j).toDouble * cv(j).toDouble; j += 1 }
-      sd(s) = exactD2((xx - 2.0 * dp) + t.superTable.ccs(s))
-      s += 1
-    }
+    val sd = Array.tabulate(kSuper)(s =>
+      NearestCell.dist2(v, xx, t.superTable.vecs(s), t.superTable.ccs(s)))
     val probes = math.min(t.nProbe, kSuper)
     val taken = new Array[Boolean](kSuper)
     var bestCell = -1
@@ -487,16 +317,10 @@ object NearestCellHier {
       }
       taken(pick) = true
       val cells = t.memberCells(pick)
-      val vecs = t.memberVecs(pick)
-      val ccs = t.memberCcs(pick)
       var c = 0
       while (c < cells.length) {
-        val cv = vecs(c)
-        val m = math.min(n, cv.length)
-        var dp = 0.0
-        var j = 0
-        while (j < m) { dp += v.getFloat(j).toDouble * cv(j).toDouble; j += 1 }
-        val d2 = exactD2((xx - 2.0 * dp) + ccs(c))
+        val d2 = NearestCell.dist2(v, xx, t.memberVecs(pick)(c),
+          t.memberCcs(pick)(c))
         val cmp = java.lang.Double.compare(d2, bestD2)
         if (bestCell == -1 || cmp < 0 || (cmp == 0 && cells(c) < bestCell)) {
           bestCell = cells(c); bestD2 = d2
@@ -510,56 +334,16 @@ object NearestCellHier {
   }
 }
 
-/** Two-level nearest-centroid assignment compiled to one
-  * (kSuper + nProbe·members)×d loop per row — see [[HierCentroidTable]].
-  */
-case class NearestCellHierExpr(child: Expression, table: HierCentroidTable)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("cell", IntegerType, nullable = false),
-    StructField("dist2", DoubleType, nullable = true)))
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"nearest_cell_hier requires an array<float> argument, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(v: Any): Any =
-    NearestCellHier.assignH(v.asInstanceOf[ArrayData], table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val tbl = ctx.addReferenceObj("hierTable", table,
-        classOf[HierCentroidTable].getName)
-      val r = ctx.freshName("r")
-      s"""
-         |InternalRow $r = graft.plans.NearestCellHier.assignH($v, $tbl);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCellHierExpr =
-    copy(child = newChild)
-}
-
 object VecExpressions {
   /** Compiled cosine similarity between two array<float|double> columns. */
-  def cosineSim(a: Column, b: Column): Column =
-    GraftBridge.column(
-      CosineSimExpr(GraftBridge.expression(a), GraftBridge.expression(b)))
+  def cosineSim(a: Column, b: Column): Column = Kernels.cosineSim(Seq(a, b))
 
   /** Compiled double-precision dot product of two array<float|double> columns. */
-  def dotProduct(a: Column, b: Column): Column =
-    GraftBridge.column(
-      DotProductExpr(GraftBridge.expression(a), GraftBridge.expression(b)))
+  def dotProduct(a: Column, b: Column): Column = Kernels.dotProduct(Seq(a, b))
 
   /** Compiled random-hyperplane LSH bucket id of an embedding column. */
   def rpLshBucket(v: Column, nBits: Int): Column =
-    GraftBridge.column(RpLshBucketExpr(GraftBridge.expression(v), nBits))
+    Kernels.rpLshBucket(Seq(v), nBits)
 
   /** Compiled nearest-centroid assignment of an array<float> column
     * against a fixed centroid set: struct(cell, dist2), smallest-cell
@@ -568,13 +352,12 @@ object VecExpressions {
     */
   def nearestCell(vec: Column, cellIds: Array[Int],
       centroids: Array[Array[Float]]): Column =
-    GraftBridge.column(NearestCellExpr(GraftBridge.expression(vec),
-      new CentroidTable(cellIds, centroids)))
+    Kernels.nearestCell(Seq(vec), new CentroidTable(cellIds, centroids))
 
   /** Compiled TWO-LEVEL nearest-centroid assignment: probe the nProbe
     * best super-cells, scan only their member centroids — sublinear in
     * the total cell count (see [[HierCentroidTable]]).
     */
   def nearestCellHier(vec: Column, table: HierCentroidTable): Column =
-    GraftBridge.column(NearestCellHierExpr(GraftBridge.expression(vec), table))
+    Kernels.nearestCellHier(Seq(vec), table)
 }

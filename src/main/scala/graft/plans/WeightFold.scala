@@ -1,16 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Scalar: `bias + Σ weights(b)` over a bucket-id array — the row-local
-  * margin of a linear model whose weight vector lives on the DRIVER
+/** `bias + Σ weights(b)` over a bucket-id array — the row-local margin of
+  * a linear model whose weight vector lives on the DRIVER
   * (graft.functions.Classifier's perceptron rounds).
   *
   * Exists for PLAN-BUILD latency, not row throughput: the equivalent
@@ -18,9 +12,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * re-enters Catalyst each training round with a fresh lambda and a
   * 2·|model|-literal map in the expression tree — analysis + lambda
   * resolution + optimizer passes over that tree were ~half the measured
-  * wall of a 12-round training at sf0.1. Here the model is a
-  * CONSTRUCTOR PARAMETER (one tree node; the array rides codegen's
-  * reference-object table), so per-round planning touches a constant-
+  * wall of a 12-round training at sf0.1. Here the model is a kernel
+  * PARAMETER (one tree node; the vector rides codegen's reference-object
+  * table, so every round generates byte-identical source and the
+  * codegen cache stays hot), so per-round planning touches a constant-
   * size tree, and the fold itself stays inside whole-stage codegen.
   *
   * Long arithmetic with an explicit overflow trap (`Math.addExact` —
@@ -31,41 +26,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * builder hashes with pmod, and anything else throws with the id in
   * the message.
   */
-case class WeightFoldSum(child: Expression, bias: Long, weights: Array[Long])
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"weight_fold_sum requires array<bigint>, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    WeightFoldSum.fold(input.asInstanceOf[ArrayData], bias, weights)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("weights", weights, "long[]")
-    // bias rides the reference table too (NOT an inlined `${bias}L`):
-    // training calls this once per round with fresh model values, and
-    // inlining any of them would change the generated source text each
-    // round — a fresh janino compile per round (~half the per-round
-    // driver latency) where reference-table values leave the source
-    // byte-identical and the codegen cache hot.
-    val b = ctx.addReferenceObj("bias", java.lang.Long.valueOf(bias),
-      "java.lang.Long")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.WeightFoldSum.fold($c, $b.longValue(), $w)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WeightFoldSum =
-    copy(child = newChild)
-}
-
-object WeightFoldSum {
-  /** Static kernel shared by interpreted eval and generated code. */
-  def fold(bkts: ArrayData, bias: Long, weights: Array[Long]): Long = {
+final class WeightVector(bias: Long, weights: Array[Long])
+    extends Serializable {
+  def margin(bkts: ArrayData): Long = {
     var s = bias
     var i = 0
     val n = bkts.numElements()
@@ -79,10 +42,11 @@ object WeightFoldSum {
     }
     s
   }
+}
 
+object WeightFold {
   /** Column builder: margin of `bkts` (array<bigint> of bucket ids)
     * under a dense weight vector with a bias term. */
   def margin(bkts: Column, bias: Long, weights: Array[Long]): Column =
-    GraftBridge.column(
-      WeightFoldSum(GraftBridge.expression(bkts), bias, weights))
+    Kernels.weightFoldSum(Seq(bkts), bias, weights)
 }

@@ -1,12 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** WordPiece-style greedy segmentation (Wu et al. 2016, "Google's Neural
@@ -58,55 +53,14 @@ final class WpVocab(val pieces: Seq[String], val unk: String)
   /** All pieces of all whitespace words of `s`, flattened in order. */
   def tokenize(s: String): ArrayData = {
     val out = new java.util.ArrayList[UTF8String]()
-    var i = 0
-    var start = -1
-    val len = s.length
-    while (i < len) {
-      val ws = TokenScan.isWs(s.charAt(i))
-      if (!ws && start < 0) start = i
-      if (ws && start >= 0) { segment(s.substring(start, i), out); start = -1 }
-      i += 1
-    }
-    if (start >= 0) segment(s.substring(start), out)
+    TokenScan.scanTokens(s) { w => segment(w, out); true }
     new GenericArrayData(out.toArray)
   }
-}
-
-/** Scalar: greedy WordPiece segmentation to `array<string>` in one
-  * compiled pass, vocab shared as a reference object.
-  */
-case class WordPieceExpr(child: Expression, pieces: Seq[String], unk: String)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val vocab = new WpVocab(pieces, unk)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"wordpiece requires a string argument, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    vocab.tokenize(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vRef = ctx.addReferenceObj("wpVocab", vocab, "graft.plans.WpVocab")
-    // Call the INSTANCE method on the reference object: Scala emits no
-    // static forwarder for the companion's tokenize(String, WpVocab)
-    // (the class already declares tokenize(String)), so the static call
-    // fails Janino compilation and every row silently ran interpreted
-    // (CodegenSpec guards the whole expression family against this).
-    defineCodeGen(ctx, ev, c => s"$vRef.tokenize($c.toString())")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WordPieceExpr =
-    copy(child = newChild)
 }
 
 object WordPiece {
   /** Column form: greedy WordPiece pieces of a text column. */
   def wordpiece(c: Column, pieces: Seq[String],
       unk: String = "[UNK]"): Column =
-    GraftBridge.column(WordPieceExpr(GraftBridge.expression(c), pieces, unk))
+    Kernels.wordpiece(Seq(c), pieces, unk)
 }

@@ -1,76 +1,69 @@
 package graft
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.Alias
-import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.InternalRow
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{Blocklist, FixLog, TextExpressions, Unigram,
-  VecExpressions, WordPiece}
+import graft.plans.{Kernels, ScanKernel}
 
-/** Compiled-expression guard: every graft expression that claims
-  * codegen must actually COMPILE its generated Java.
+/** Compiled-expression guard over the whole kernel table: every kernel
+  * must COMPILE its generated Java, and its generated code must compute
+  * what its interpreted path computes.
   *
   * `UnsafeProjection.create`'s interpreted fallback swallows Janino
-  * failures silently — WordPieceExpr shipped a broken static call for a
-  * whole round with green value tests because every row quietly ran
-  * interpreted. `GraftTestBridge.compileExpression` goes through
-  * `GenerateUnsafeProjection.generate` directly, which throws on any
-  * compile failure, so a doGenCode regression fails THIS suite instead
-  * of degrading throughput. Literal children keep the expressions bound
-  * without a plan. (The two shingle generators are CodegenFallback by
-  * design — generators can't sit in a projection — and are excluded.)
+  * failures silently — the WordPiece kernel once shipped a broken static
+  * call for a whole round with green value tests because every row
+  * quietly ran interpreted. `GraftTestBridge.compileExpression` goes
+  * through `GenerateUnsafeProjection.generate` directly, which throws on
+  * any compile failure, so a codegen regression fails THIS suite instead
+  * of degrading throughput. The cases come from `Kernels.all`, so a new
+  * kernel cannot skip the guard. Literal children keep the expressions
+  * bound without a plan.
   */
 class CodegenSpec extends AnyFunSuite {
   // touch the session so UTF8String/codegen statics initialize the same
   // way they do in every other suite
   private lazy val spark = TestSpark.spark
 
-  private def compiled(name: String, c: Column): Unit = test(
-    s"$name generates compilable code") {
-    spark.sparkContext.setLogLevel("ERROR")
-    // route the Column through analysis (the raw bridge expression is an
-    // Unevaluable ColumnNode wrapper until resolved); literal children
-    // need no binding afterwards
-    val plan = GraftBridge.logicalPlan(spark.range(1).select(c))
-    val e = plan.asInstanceOf[Project].projectList.head match {
-      case a: Alias => a.child
-      case other    => other
+  // the Column API name a kernel's compile test has always carried
+  private val label = Map("poly_hash" -> "polyHash",
+    "token_count" -> "tokenCount", "token_chars" -> "tokenChars",
+    "marker_hits" -> "markerHits", "repetition_ratio" -> "repetitionRatio",
+    "token_gini" -> "tokenGini", "line_signals" -> "lineSignals",
+    "ngram_rep_mass" -> "ngramRepMass", "simhash" -> "simhashFp",
+    "cosine_sim" -> "cosineSim", "dot_product" -> "dotProduct",
+    "rp_lsh_bucket" -> "rpLshBucket", "nearest_cell" -> "nearestCell",
+    "nearest_cell_hier" -> "nearestCellHier",
+    "blocklist_mask" -> "blocklistMask",
+    "unigram_stats" -> "unigramWordStats",
+    "unigram_pieces" -> "unigramWordPieces")
+
+  // row generators (CodegenFallback: a generator cannot sit in a
+  // projection) have no generated path to guard
+  for (k <- Kernels.all; if !k.rows) {
+    val params = KernelSamples.params(k)
+
+    test(s"${label.getOrElse(k.name, k.name)} generates compilable code") {
+      spark.sparkContext.setLogLevel("ERROR")
+      // the Column API call, with literal arguments
+      val cols = KernelSamples.inputs(k).head._2.map(GraftBridge.column(_))
+      org.apache.spark.GraftTestBridge.compileColumn(spark,
+        k(cols, params: _*))
     }
-    org.apache.spark.GraftTestBridge.compileExpression(e)
+
+    val cases = KernelSamples.inputs(k).map(_._1)
+    test(s"${k.name}: interpreted and generated code agree on " +
+        cases.mkString(", ")) {
+      for ((name, lits) <- KernelSamples.inputs(k)) {
+        val e = ScanKernel(k.name, lits, params)
+        val interpreted = CatalystTypeConverters.convertToScala(
+          e.eval(InternalRow.empty), e.dataType)
+        val generated = org.apache.spark.GraftTestBridge.evalGenerated(e)
+        assert(String.valueOf(interpreted) == String.valueOf(generated),
+          s"${k.name} on the $name input")
+        if (name == "NULL") assert(interpreted == null, k.name)
+      }
+    }
   }
-
-  private val text = lit("the quick brown fox jumps over the lazy dog")
-  private val vec = typedLit(Array(0.25f, -0.5f, 0.125f, 1.0f))
-
-  compiled("polyHash", TextExpressions.polyHash(text))
-  compiled("tokenCount", TextExpressions.tokenCount(text))
-  compiled("tokenChars", TextExpressions.tokenChars(text))
-  compiled("markerHits", TextExpressions.markerHits(text, Seq("the", "fox")))
-  compiled("repetitionRatio", TextExpressions.repetitionRatio(text, 2))
-  compiled("tokenGini", TextExpressions.tokenGini(text))
-  compiled("lineSignals", TextExpressions.lineSignals(text, 16))
-  compiled("ngramRepMass", TextExpressions.ngramRepMass(text, 2, 3))
-  compiled("simhashFp", TextExpressions.simhashFp(text, 32, 1103515245L,
-    12345L, 2147483647L))
-  compiled("cosineSim", VecExpressions.cosineSim(vec, vec))
-  compiled("dotProduct", VecExpressions.dotProduct(vec, vec))
-  compiled("rpLshBucket", VecExpressions.rpLshBucket(vec, 8))
-  compiled("nearestCell", VecExpressions.nearestCell(vec, Array(0, 1),
-    Array(Array(0.1f, 0.2f, 0.3f, 0.4f), Array(-0.1f, 0.0f, 0.2f, 0.9f))))
-  compiled("nearestCellHier", VecExpressions.nearestCellHier(vec,
-    new graft.plans.HierCentroidTable(Array(0, 1),
-      Array(Array(0.1f, 0.2f, 0.3f, 0.4f), Array(-0.1f, 0.0f, 0.2f, 0.9f)),
-      Array(0, 0), Array(0), Array(Array(0f, 0.1f, 0.25f, 0.65f)), 1)))
-  compiled("blocklistMask", Blocklist.blocklistMask(text,
-    Seq("lazy dog", "quick brown")))
-  compiled("log2q", FixLog.log2qCol(lit(123456789L)))
-  compiled("exp2q", FixLog.exp2qCol(lit(98304L)))
-  compiled("unigramWordStats", Unigram.wordStats(lit("unaffable"),
-    Map("un" -> 1000L, "aff" -> 2000L, "able" -> 1500L, "a" -> 4000L)))
-  compiled("unigramWordPieces", Unigram.wordPieces(lit("unaffable"),
-    Map("un" -> 1000L, "aff" -> 2000L, "able" -> 1500L, "a" -> 4000L)))
-  compiled("wordpiece", WordPiece.wordpiece(text, Seq("the", "qu", "ick",
-    "brown", "fox", "j", "u", "mps", "over", "lazy", "dog", "a", "z", "y")))
 }

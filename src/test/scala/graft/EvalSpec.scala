@@ -63,9 +63,8 @@ class EvalSpec extends AnyFunSuite {
     assert(got((3L, 2L)) == ((0L, 2L, 2L, 0L, 0L, 0L)))
     assert(!got.contains((4L, 2L)), "gram-less side must drop the pair")
     // the compiled gram-set builder actually compiles (no fallback)
-    org.apache.spark.GraftTestBridge.compileExpression(
-      graft.plans.RougeGramSetExpr(
-        org.apache.spark.sql.catalyst.expressions.Literal("a b a b"), 2))
+    org.apache.spark.GraftTestBridge.compileColumn(spark,
+      graft.plans.RougeGrams.gramSetCol(lit("a b a b"), 2))
     // occurrence indexing: "a b" twice -> two DISTINCT elements
     val gs = graft.plans.RougeGrams.gramSet("a b a b", 2)
     assert(gs.numElements() == 3)
@@ -151,10 +150,8 @@ class EvalSpec extends AnyFunSuite {
     // order matters: reversed shares only 1
     assert(graft.plans.Lcs.tokenLcs("a b c", "c b a", 100) == 1)
     // codegen path actually compiles (no interpreted fallback)
-    org.apache.spark.GraftTestBridge.compileExpression(
-      graft.plans.TokenLcsExpr(
-        org.apache.spark.sql.catalyst.expressions.Literal("a b"),
-        org.apache.spark.sql.catalyst.expressions.Literal("a c"), 16))
+    org.apache.spark.GraftTestBridge.compileColumn(spark,
+      graft.plans.Lcs.tokenLcsCol(lit("a b"), lit("a c"), 16))
   }
 
   test("macroMetrics: hand-computed accuracy, macro and weighted means; " +

@@ -112,4 +112,53 @@ class MemoRegistrySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("nnDescent stores its graph once: a build runs the uncached " +
+      "build's jobs and leaves one stored copy") {
+    def stored: Set[Int] =
+      spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    def jobsOf[T](body: => T): (T, Int) = {
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      val before = jobs.get
+      val v = body
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      (v, jobs.get - before)
+    }
+    val emb = Tables.embeddings(spark, TestSpark.sf0001)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      Memos.releaseAll()
+      eventually(timeout(60.seconds), interval(250.millis)) {
+        assert(PlanMemo.registered.forall(!_.isOccupied))
+      }
+      val baseline = stored
+      val (g, built) = jobsOf(Vec.nnDescent(emb, "vec_id", "embedding", 4))
+      val graph = g.queryExecution.analyzed.collectLeaves()
+        .collect { case l: LogicalRDD => l.rdd.id }
+      assert(graph.size == 1)
+      // the build's intermediate checkpoints are freed asynchronously;
+      // the ring seed's pairs stay in Dedup.sortedNeighborhoodPairs's own
+      // memo
+      eventually(timeout(60.seconds), interval(250.millis)) {
+        val copies = spark.sparkContext.getRDDStorageInfo
+          .filterNot(i => baseline(i.id) || i.callSite.contains("Dedup.scala"))
+        assert(copies.map(_.id).toSet == graph.toSet, s"graph $graph, " +
+          copies.map(i => s"${i.id} (${i.callSite})").mkString(", "))
+      }
+      val (u, uncached) = jobsOf(Vec.nnDescentUncached(emb, "vec_id",
+        "embedding", 4, 4, 3, 8))
+      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(u)
+      assert(built == uncached,
+        s"the memoized build ran $built jobs, the uncached one $uncached")
+    } finally {
+      spark.sparkContext.removeSparkListener(counter)
+      Memos.releaseAll()
+    }
+  }
 }

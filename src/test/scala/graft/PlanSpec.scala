@@ -27,7 +27,7 @@ class PlanSpec extends AnyFunSuite {
   test("column pruning reaches the scan through the shingle generator") {
     val p = plan("q_minhash_sig")
     assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string>"), p)
-    assert(p.contains("hashedshingles"), p)
+    assert(p.contains("hashed_shingles("), p)
     // partial aggregation before the exchange (map-side combine)
     assert(p.contains("partial_min"), p)
   }
@@ -76,14 +76,14 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
     // the native bucketing expression, not nBits interpreted HOF passes
-    assert(p.toLowerCase.contains("rplshbucket"), p)
+    assert(p.contains("rp_lsh_bucket("), p)
   }
 
   test("token-scan queries run the native expressions, not HOF fallbacks") {
     for (q <- Seq("q_lang_id", "q_text_quality", "q_quality_rules")) {
       val p = plan(q)
-      assert(p.toLowerCase.contains("markerhitsexpr") ||
-        p.toLowerCase.contains("tokencountexpr"), s"$q: $p")
+      assert(p.contains("marker_hits(") || p.contains("token_count("),
+        s"$q: $p")
       // The replaced CodegenFallback shapes must not creep back in.
       assert(!p.contains("aggregate(filter(split"), s"$q: $p")
     }
@@ -153,7 +153,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("span dedup: fused positioned generator, pruned scan, equi-joins only") {
     val p = plan("q_span_dedup")
-    assert(p.contains("hashedshinglespos"), p)
+    assert(p.contains("hashed_shingles_pos("), p)
     assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string>"), p)
     // repeated-gram detection combines map-side before its exchange
     assert(p.contains("partial_count"), p)
@@ -187,10 +187,10 @@ class PlanSpec extends AnyFunSuite {
       .winnowFingerprintsUncached(Tables.documents(spark, d),
         "doc_id", "text", 3, 4)
       .queryExecution.executedPlan.toString
-    // The whole selection is the WinnowSelect generator in the scan
+    // The whole selection is the winnow_select generator in the scan
     // stage: no doc-keyed window shuffle, no distinct, no join — the
     // fingerprint stream never leaves the scan.
-    assert(p.contains("winnowselect"), p)
+    assert(p.contains("winnow_select("), p)
     assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string>"), p)
     assert(!p.contains("Window"), p)
     assert(!p.contains("Join"), p)
@@ -456,7 +456,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("blocklist: compiled single-pass scan, no per-phrase contains") {
     val p = plan("q_blocklist")
-    assert(p.contains("blocklistmaskexpr") || p.contains("BlocklistMask"), p)
+    assert(p.contains("blocklist_mask("), p)
     assert(!p.contains("Contains("), p)
     assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string>"), p)
   }
@@ -497,7 +497,7 @@ class PlanSpec extends AnyFunSuite {
       .rankedScoresUncached(docs, docs, "doc_id", "text", "lang")
       .queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), p)
-    assert(p.toLowerCase.contains("log2fixed"), p)
+    assert(p.contains("log2q("), p)
   }
 
   test("pca: projection scan reads only id and embedding") {

@@ -5,10 +5,10 @@ import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Text
-import graft.plans.{GraftFunctions, TextExpressions, TokenScan}
+import graft.plans.{Arg, GraftFunctions, Kernels, TextExpressions, TokenScan}
 
-/** The native token-scanner expressions (TokenCountExpr / TokenCharsExpr /
-  * MarkerHitsExpr) must be bit-identical to the higher-order-function forms
+/** The native token-scanner kernels (token_count / token_chars /
+  * marker_hits) must be bit-identical to the higher-order-function forms
   * they replaced — same tokenization (`split("\\s+")` + drop empties), same
   * code-point character counts, same null propagation.
   */
@@ -91,6 +91,12 @@ class TokenScanSpec extends AnyFunSuite {
         TextExpressions.tokenChars(col("n")),
         TextExpressions.markerHits(col("n"), words))) {
       intercept[AnalysisException](df.select(c).collect())
+    }
+    // every string kernel of the table, with its analysis message
+    for (k <- Kernels.all; if k.args.head == Arg.Text) {
+      val c = k(k.args.map(_ => col("n")), KernelSamples.params(k): _*)
+      val e = intercept[AnalysisException](df.select(c).collect())
+      assert(e.getMessage.contains(s"${k.name} requires"), e.getMessage)
     }
   }
 

@@ -193,6 +193,49 @@ class TopKExtensionsSpec extends AnyFunSuite {
     intercept[Exception] {
       spark.sql("SELECT line_signals('t', 0)").collect()
     }
+    // the kernel table's other literal-parameter kernels: one call each,
+    // equal to the kernel method, and a bad literal for each bounded one
+    def longs(q: String): Seq[Long] = spark.sql(q).head().getSeq[Long](0)
+    import graft.plans.{CdcScan, CharGrams, GramHash, RougeGrams}
+    assert(longs("SELECT char_gram_set('abcab', 2)") ===
+      CharGrams.gramSet("abcab", 2).toLongArray().toSeq)
+    assert(longs("SELECT rouge_gram_set('a b a b', 2)") ===
+      RougeGrams.gramSet("a b a b", 2).toLongArray().toSeq)
+    assert(spark.sql("SELECT token_lcs('a b c d', 'a c d x', 8)")
+      .head().getInt(0) === 3)
+    assert(spark.sql("SELECT damerau('abcd', 'abdc')").head().getInt(0) === 1)
+    def rows(gen: String): Seq[String] = spark.sql(
+      s"SELECT t.* FROM (SELECT 1 AS dummy) LATERAL VIEW $gen t")
+      .collect().map(_.toSeq.mkString(",")).toSeq
+    def expected(it: IterableOnce[org.apache.spark.sql.catalyst.InternalRow],
+        width: Int): Seq[String] =
+      it.iterator.map(r => (0 until width).map(r.getLong).mkString(",")).toSeq
+    val text = "a b c a b c d e a b"
+    assert(rows(s"winnow_select('$text', 2, 3)") ===
+      expected(GramHash.winnow(text, 2, 3), 2))
+    assert(rows(s"hashed_token_lines('$text', 4)") ===
+      expected(GramHash.lines(text, 4), 2))
+    assert(rows(s"cdc_chunks('$text', 3, 2)") ===
+      expected(CdcScan.chunks(text, 3, 2), 4))
+    for (bad <- Seq("char_gram_set('t', 0)", "rouge_gram_set('t', 0)",
+        "token_lcs('a', 'b', 0)", "damerau('a', 'b', 1)",
+        "hashed_token_lines('t', 0)")) {
+      val e = intercept[Exception](spark.sql(s"SELECT $bad").collect())
+      assert(e.getMessage.contains(bad.takeWhile(_ != '(')), e.getMessage)
+    }
+    for (bad <- Seq("winnow_select('t', 2, 0)", "cdc_chunks('t', 1, 4)",
+        "cdc_chunks('t', 4, 31)")) {
+      val e = intercept[Exception](rows(bad))
+      assert(e.getMessage.contains(bad.takeWhile(_ != '(')), e.getMessage)
+    }
+    // SQL simhash takes (text, bits) only: its permutation is fixed
+    assert(spark.sql("SELECT simhash('a b c', 24)").head().getLong(0) ===
+      graft.plans.TokenScan.simhashFp("a b c", 24, graft.functions.Dedup.permA(0),
+        graft.functions.Dedup.permB(0), graft.functions.Dedup.MersennePrime))
+    val sh5 = intercept[Exception](
+      spark.sql("SELECT simhash('a b c', 24, 1, 2, 3)").collect())
+    assert(sh5.getMessage.contains("simhash expects (column, bit width)"),
+      sh5.getMessage)
   }
 
   test("GraftExtensions wires functions, strategy, and rewrite into a new session") {

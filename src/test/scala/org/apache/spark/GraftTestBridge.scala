@@ -16,12 +16,31 @@ object GraftTestBridge {
     * codegen + Janino pipeline and throws on any compile failure —
     * unlike `UnsafeProjection.create`, whose
     * CodeGeneratorWithInterpretedFallback silently swallows the error
-    * and runs every row interpreted (exactly how WordPieceExpr's broken
+    * and runs every row interpreted (exactly how the WordPiece kernel's broken
     * static call shipped unnoticed). The expression must be bound —
     * literal children.
     */
   def compileExpression(e: Expression): Unit =
     GenerateUnsafeProjection.generate(Seq(e)): Unit
+
+  /** [[compileExpression]] for a Column with literal arguments: the
+    * Column's expression is an unresolved wrapper until analyzed. */
+  def compileColumn(spark: SparkSession, c: org.apache.spark.sql.Column): Unit =
+    compileExpression(spark.range(1).select(c).queryExecution.analyzed
+      .expressions.head match {
+        case a: org.apache.spark.sql.catalyst.expressions.Alias => a.child
+        case e => e
+      })
+
+  /** The value of a bound expression computed by its generated code
+    * (compiled as [[compileExpression]] does), as a Scala value. */
+  def evalGenerated(e: Expression): Any = {
+    val row = GenerateUnsafeProjection.generate(Seq(e))
+      .apply(org.apache.spark.sql.catalyst.InternalRow.empty)
+    if (row.isNullAt(0)) null
+    else org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .convertToScala(row.get(0, e.dataType), e.dataType)
+  }
 
   /** Remove the top-k window rewrite rule `graft.plans.TopKNative.enable`
     * registers (its strategy stays; it only fires for explicitly
