@@ -180,24 +180,16 @@ object Dedup {
   }
 
   /** Oracle-mode token dictionary: distinct tokens numbered by
-    * lexicographic rank. Rank is computed with a distributed range-
-    * partitioned sort + per-partition zipWithIndex (offsets from partition
-    * sizes) — identical semantics to an unpartitioned row_number window
-    * without its single-partition bottleneck, so the dictionary scales to
-    * large vocabularies; the hashed variants below avoid ranking entirely.
+    * lexicographic rank (1-based, NULL first) — [[GroupRank]]'s global
+    * row number, identical to an unpartitioned row_number window
+    * without its single-partition bottleneck, so the dictionary scales
+    * to large vocabularies; the hashed variants below avoid ranking
+    * entirely.
     */
-  def tokenDict(toks: DataFrame, tokCol: String = "tok"): DataFrame = {
-    val spark = toks.sparkSession
-    import spark.implicits._
-    toks.select(col(tokCol)).distinct()
-      .orderBy(col(tokCol))
-      .select(col(tokCol).cast("string"))
-      .as[String]
-      .rdd
-      .zipWithIndex()
-      .map { case (t, i) => (t, i + 1L) }
-      .toDF(tokCol, "tid")
-  }
+  def tokenDict(toks: DataFrame, tokCol: String = "tok"): DataFrame =
+    GroupRank.withRankAndCount(toks.select(col(tokCol)).distinct(), Nil,
+        Seq(col(tokCol).asc), "tid", "__n")
+      .select(col(tokCol).cast("string").as(tokCol), col("tid"))
 
   // ------------------------------------------------------------------
   // MinHash + LSH
@@ -1194,12 +1186,10 @@ object Dedup {
     * linear by construction, no distribution assumptions, which is what
     * makes SNM the standard blocker when key skew defeats hashing.
     *
-    * Scale shape: the global rank comes from [[GroupRank]]'s two-level
-    * plan (range exchange + local windows + a shard-count-sized offset
-    * broadcast — NO single-partition sort), and the neighborhood join is
-    * a rank-keyed equi-join against `window−1` exploded rank slots per
-    * row. Ties in `key` break by id, so ranks — and therefore the pair
-    * set — are fully deterministic.
+    * Scale shape: the global rank comes from [[GroupRank]] (NO
+    * single-partition sort), and the neighborhood join is a rank-keyed
+    * equi-join against `window−1` exploded rank slots per row. Ties in
+    * `key` break by id, so ranks — and the pair set — are deterministic.
     *
     * Output: (id_a, id_b, key_a, key_b, rdist) with id_a the LOWER-ranked
     * doc and rdist ∈ [1, window−1] its rank distance to id_b. Feed a
@@ -1215,46 +1205,48 @@ object Dedup {
   private val snmMemo = new PlanMemo[DataFrame]
 
   def sortedNeighborhoodPairs(docs: DataFrame, idCol: String, key: Column,
-      window: Int): DataFrame = {
+      window: Int): DataFrame =
+    snmMemo(docs, idCol, key.toString, window)(snmPairs(docs, idCol, key, window))
+
+  /** The unmemoized SNM build: [[Vec.nnDescent]]'s ring seed ranks a
+    * fresh checkpoint no memo key could match, and frees the pairs. */
+  private[functions] def snmPairs(docs: DataFrame, idCol: String,
+      key: Column, window: Int): DataFrame = {
     require(window >= 2, s"window must be >= 2, got $window")
-    snmMemo(docs, idCol, key.toString, window) {
-      val keyed = docs.select(col(idCol), key.as("__snmkey"))
-        .withColumn("__snmall", lit(1))
-      // Materialized once: both neighborhood-join sides read the ranked
-      // table, and the two-level rank behind it is a range exchange + a
-      // window + an offset broadcast — not a chain to run twice.
-      val ranked = graft.functions.GroupRank.withRankAndCount(keyed,
-          Seq("__snmall"), Seq(col("__snmkey").asc, col(idCol).asc),
-          "__snmrn", "__snmn")
-        .select(col(idCol), col("__snmkey"), col("__snmrn"))
-        .localCheckpoint(true)
-      val a = ranked
-        .select(col(idCol).as("id_a"), col("__snmkey").as("key_a"),
-          col("__snmrn").as("__rna"))
-        .select(col("id_a"), col("key_a"), col("__rna"),
-          explode(sequence(col("__rna") + 1,
-            col("__rna") + (window - 1))).as("__snmj"))
-      val b = ranked.select(col(idCol).as("id_b"),
-        col("__snmkey").as("key_b"), col("__snmrn").as("__snmj"))
-      // Repartition BEFORE the checkpoint: AQE coalesces the (w−1)·n
-      // candidate rows — a few MB — into ONE partition, and every
-      // checkpoint consumer inherits that single partition. The
-      // consumers are the CPU-bound verify stages (banded edit/Damerau
-      // DP, gram-multiset evals: quadratic-per-ROW work on narrow
-      // rows), so bytes-sized coalescing serializes them onto one core
-      // at any scale — the bruteForceTopK scan-partitioning hazard,
-      // same one-linear-exchange fix (measured here: the Damerau DP
-      // stage ran 1-partition, 2.3 s; 32-way it is ~0.1 s).
-      val pairs = a.join(b, Seq("__snmj"))
-        .select(col("id_a"), col("id_b"), col("key_a"), col("key_b"),
-          (col("__snmj") - col("__rna")).cast("long").as("rdist"))
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint(true)
-      // the eager checkpoint above has read every ranked row: free the
-      // ranked table now, not whenever a GC lets the cleaner find it
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(ranked)
-      pairs
-    }
+    val keyed = docs.select(col(idCol), key.as("__snmkey"))
+    // Materialized once: both neighborhood-join sides read the ranked
+    // table, and the rank behind it is a range exchange and two passes
+    // over it — not a chain to run twice.
+    val ranked = GroupRank.withRankAndCount(keyed, Nil,
+        Seq(col("__snmkey").asc, col(idCol).asc), "__snmrn", "__snmn")
+      .select(col(idCol), col("__snmkey"), col("__snmrn"))
+      .localCheckpoint(true)
+    val a = ranked
+      .select(col(idCol).as("id_a"), col("__snmkey").as("key_a"),
+        col("__snmrn").as("__rna"))
+      .select(col("id_a"), col("key_a"), col("__rna"),
+        explode(sequence(col("__rna") + 1,
+          col("__rna") + (window - 1))).as("__snmj"))
+    val b = ranked.select(col(idCol).as("id_b"),
+      col("__snmkey").as("key_b"), col("__snmrn").as("__snmj"))
+    // Repartition BEFORE the checkpoint: AQE coalesces the (w−1)·n
+    // candidate rows — a few MB — into ONE partition, and every
+    // checkpoint consumer inherits that single partition. The
+    // consumers are the CPU-bound verify stages (banded edit/Damerau
+    // DP, gram-multiset evals: quadratic-per-ROW work on narrow
+    // rows), so bytes-sized coalescing serializes them onto one core
+    // at any scale — the bruteForceTopK scan-partitioning hazard,
+    // same one-linear-exchange fix (measured here: the Damerau DP
+    // stage ran 1-partition, 2.3 s; 32-way it is ~0.1 s).
+    val pairs = a.join(b, Seq("__snmj"))
+      .select(col("id_a"), col("id_b"), col("key_a"), col("key_b"),
+        (col("__snmj") - col("__rna")).cast("long").as("rdist"))
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+      .localCheckpoint(true)
+    // the eager checkpoint above has read every ranked row: free the
+    // ranked table now, not whenever a GC lets the cleaner find it
+    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(ranked)
+    pairs
   }
 
   /** Blocking-quality report: how much of a TRUTH pair set a candidate

@@ -307,7 +307,7 @@ object Eval {
     * negatives_tied), AUC = 2U / (2·n_pos·n_neg). Computed without a
     * pairwise join OR a global sort: scores aggregate to per-score
     * (pos, neg) counts, the running negative count below each score is
-    * [[GroupRank.withPrefixSum]]'s two-level exclusive prefix sum over
+    * [[GroupRank.withPrefixSum]]'s exclusive prefix sum over
     * the score order — so the statistic holds at any corpus size with
     * one range exchange, never an O(n²) comparison. Output: one row
     * (n_pos, n_neg, u2, auc_ppm), NULL auc when either class is empty.
@@ -317,8 +317,8 @@ object Eval {
   def aucExact(pred: DataFrame, scoreCol: String,
       positive: Column): DataFrame = {
     val pre = GroupRank.withPrefixSum(
-      scoreCounts(pred, scoreCol, positive).withColumn("__all", lit(1)),
-      Seq("__all"), Seq(col("__sc").asc), "__nn", "__negBelow", "__negTot")
+      scoreCounts(pred, scoreCol, positive), Nil, Seq(col("__sc").asc),
+      "__nn", "__negBelow", "__negTot")
     pre.agg(sum(col("__np")).as("n_pos"), sum(col("__nn")).as("n_neg"),
         sum(col("__np") * (lit(2L) * col("__negBelow") + col("__nn")))
           .as("u2"))
@@ -491,7 +491,7 @@ object Eval {
 
   /** AVERAGE PRECISION (the PR-curve summary) of an integer score
     * against a binary label, deterministic cross-engine: rank all rows
-    * by (score desc, tie-break id asc) with the two-level exact rank,
+    * by (score desc, tie-break id asc) with [[GroupRank]]'s exact rank,
     * and AP = mean over positives of precision@rank. Each
     * precision@rank is quantized ONCE to exact ppm (truncating-free
     * half-away rendering via [[Stats.fixedPointExact]] — a sum of
@@ -510,11 +510,10 @@ object Eval {
       .select(col(scoreCol).cast("long").as("__sc"),
         col(idCol).as("__id"),
         when(positive, 1L).otherwise(0L).as("__p"))
-      .withColumn("__all", lit(1))
-    val ranked = GroupRank.withRankAndCount(labeled, Seq("__all"),
+    val ranked = GroupRank.withRankAndCount(labeled, Nil,
       Seq(col("__sc").desc, col("__id").asc), "__rk", "__nr")
     // cumulative positives AT the rank = exclusive prefix + own label
-    val pre = GroupRank.withPrefixSum(ranked, Seq("__all"),
+    val pre = GroupRank.withPrefixSum(ranked, Nil,
       Seq(col("__sc").desc, col("__id").asc), "__p", "__posBefore",
       "__posTot")
     pre.filter(col("__p") === 1L)
@@ -935,7 +934,7 @@ object Eval {
     * One row: (n_cal, m_cal, tau_q, n_eval, covered, coverage_ppm,
     * avg_set_ppm).
     *
-    * Scale shape: two-level rank over the calibration nonconformities,
+    * Scale shape: one exact rank over the calibration nonconformities,
     * id-keyed equi-joins, class-count-bounded per-doc set counting —
     * no row-domain windows.
     */
@@ -963,9 +962,8 @@ object Eval {
     val calCnt = cal.agg(count(lit(1)).as("n_cal"),
       count(col("__a")).as("m_cal"))
     val tau = GroupRank.withRankAndCount(
-        cal.filter(col("__a").isNotNull).select(lit(1).as("__g"),
-          col("__a")),
-        Seq("__g"), Seq(col("__a").asc), "__rn", "__m")
+        cal.filter(col("__a").isNotNull).select(col("__a")),
+        Nil, Seq(col("__a").asc), "__rn", "__m")
       .crossJoin(broadcast(calCnt))
       .filter(col("__rn") === GroupRank.intDiv(
         col("n_cal") * (10000L - alphaBps) + 9999L, lit(10000L)))
@@ -1017,11 +1015,10 @@ object Eval {
     val dec = "decimal(38,0)"
     val perScore = scoreCounts(pred, scoreCol, positive)
       .withColumn("__nt", col("__np") + col("__nn"))
-    val withTp = GroupRank.withPrefixSum(
-      perScore.withColumn("__all", lit(1)),
-      Seq("__all"), Seq(col("__sc").desc), "__np", "__tpAbove", "__tpTot")
+    val withTp = GroupRank.withPrefixSum(perScore, Nil,
+      Seq(col("__sc").desc), "__np", "__tpAbove", "__tpTot")
     val withCum = GroupRank.withPrefixSum(
-      withTp, Seq("__all"), Seq(col("__sc").desc), "__nt", "__ctAbove",
+      withTp, Nil, Seq(col("__sc").desc), "__nt", "__ctAbove",
       "__ctTot")
     val terms = withCum
       .select(col("__np"), col("__nn"),

@@ -454,8 +454,7 @@ object LangModel {
     * detected from the table's columns (it carries `langCol`).
     *
     * Scale note (100 TB): the within-language rank is
-    * [[GroupRank.withRankAndCount]]'s two-level plan — range exchange,
-    * bounded local windows, mixture-sized offsets — and the tier cut is
+    * [[GroupRank.withRankAndCount]] and the tier cut is
     * [[GroupRank.ntileFromRank]]'s exact NTILE arithmetic on (rank, n),
     * so a dominant language is many parallel sort slices, never one
     * language-keyed sort task. Bucket assignments are identical to the
@@ -496,7 +495,7 @@ object LangModel {
 
   /** Sampled-threshold CCNet bucketing — the 100 TB form of
     * [[lmBuckets]]: instead of ranking EVERY document within its
-    * language (a corpus-wide two-level rank whose range exchange moves
+    * language (a corpus-wide rank whose range exchange moves
     * the whole score column), rank only a deterministic hash sample,
     * read the nBuckets-1 boundary ORDER STATISTICS per language off the
     * sample, and assign every document SCAN-STAGE against the broadcast

@@ -11,12 +11,11 @@ import org.apache.spark.sql.functions._
   * every sequence except the final one exactly full).
   *
   * The whole operator is arithmetic over ONE exact exclusive prefix sum
-  * ([[GroupRank.withPrefixSum]]'s two-level plan): a document's global
-  * start offset s places it in sequences floor(s/L) ..
-  * floor((s+n-1)/L), each overlap row computed scan-stage from (s, n, L)
-  * — one range exchange + a mixture-sized broadcast, then map-only
-  * generation of ~n/L+1 rows per document. No single-task sort, no
-  * driver-side packing loop; the order key is the engine's exact
+  * ([[GroupRank.withPrefixSum]]): a document's global start offset s
+  * places it in sequences floor(s/L) .. floor((s+n-1)/L), each overlap
+  * row computed scan-stage from (s, n, L) — one range exchange, then
+  * map-only generation of ~n/L+1 rows per document. No single-task
+  * sort, no driver-side packing loop; the order key is the engine's exact
   * cross-engine mixer when `shuffled`, so the oracle replays the
   * permutation bit for bit.
   *
@@ -36,9 +35,8 @@ object Pack {
       else Seq(col(idCol).asc)
     val pre = GroupRank.withPrefixSum(
       docs.select(col(idCol), col(nTokCol).cast("long").as("__pn"))
-        .filter(col("__pn") > 0L)
-        .withColumn("__pall", lit(1)),
-      Seq("__pall"), order, "__pn", "__ps", "__ptot")
+        .filter(col("__pn") > 0L),
+      Nil, order, "__pn", "__ps", "__ptot")
     pre
       .withColumn("__sfirst", GroupRank.intDiv(col("__ps"), lit(seqLen)))
       .withColumn("__slast",

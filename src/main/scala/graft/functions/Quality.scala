@@ -58,10 +58,8 @@ object Quality {
     * broken by `tieCol`, so the kept set is deterministic under any
     * partitioning.
     *
-    * Ranking is [[GroupRank.withRankAndCount]]'s two-level plan (range
-    * exchange → bounded local windows → mixture-sized offset table), so
-    * a 30 TB source is many parallel sort slices — never one
-    * group-keyed sort task.
+    * Ranking is [[GroupRank.withRankAndCount]], so a 30 TB source is
+    * many parallel sort slices — never one group-keyed sort task.
     */
   def percentileGate(df: org.apache.spark.sql.DataFrame, groupCol: String,
       scoreCol: String, keepBps: Int, tieCol: String): org.apache.spark.sql.DataFrame = {
@@ -138,10 +136,8 @@ object Quality {
     * normalized value is the pooled order statistic at p (pooled order
     * = (value, group, id) — a deterministic total order).
     *
-    * Both rankings ride [[GroupRank.withRankAndCount]]'s two-level plan
-    * (range exchange + bounded local windows), and the lookup is one
-    * equi-join on the pooled rank — never a single-task sort at any
-    * group size.
+    * Both rankings are [[GroupRank.withRankAndCount]], and the lookup is
+    * one equi-join on the pooled rank — never a single-task sort.
     *
     * Output: the input columns plus (rank_in_group, norm_v).
     */
@@ -151,8 +147,7 @@ object Quality {
     import org.apache.spark.sql.functions._
     val ranked = GroupRank.withRankAndCount(df, Seq(groupCol),
       Seq(col(valueCol).asc, col(idCol).asc), "rank_in_group", "__qn")
-    val pooled = GroupRank.withRankAndCount(
-        df.withColumn("__qall", lit(1)), Seq("__qall"),
+    val pooled = GroupRank.withRankAndCount(df, Nil,
         Seq(col(valueCol).asc, col(groupCol).asc, col(idCol).asc),
         "__qpr", "__qpn")
       .select(col("__qpr"), col(valueCol).as("norm_v"))
@@ -176,9 +171,8 @@ object Quality {
     * descending with `tieCol` as the deterministic tie-break; emits the
     * within-group rank as `rankCol`.
     *
-    * Rides [[GroupRank]]'s two-level plan, so a 30 TB domain never becomes
-    * one sort task — the difference between this and a `row_number()`
-    * window is exactly the round-5 audit's single-task-per-group finding.
+    * Rides [[GroupRank]], so a 30 TB domain never becomes one sort task
+    * (a `row_number()` window would be one task per group).
     */
   def groupCap(df: org.apache.spark.sql.DataFrame, groupCol: String,
       scoreCol: String, tieCol: String, k: Long,

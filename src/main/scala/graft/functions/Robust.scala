@@ -13,10 +13,9 @@ import org.apache.spark.sql.functions._
   * Medians are EXACT but never buffered: Spark's `median`/`percentile`
   * aggregate collects every group value into an executor-side buffer —
   * a scale-killer for corpus-sized groups — so this module computes the
-  * median by RANK: [[GroupRank.withRankAndCount]]'s two-level ranking
-  * (range exchange → bounded local sorts → mixture-sized offsets — many
-  * parallel slices per group, never one sort task per group), keep the
-  * one or two middle rows, average them. Interpolation (mean of the two
+  * median by RANK ([[GroupRank.withRankAndCount]]: many parallel slices
+  * per group, never one sort task per group), keep the one or two middle
+  * rows, average them. Interpolation (mean of the two
   * middles at even counts) matches the engines' native medians
   * bit-for-bit, which keeps the whole operator under the hash oracle.
   */
@@ -80,17 +79,24 @@ object Robust {
     * deterministic). Output: input columns + (lo_clip, hi_clip,
     * winsorized); NULL values pass through unclipped.
     *
-    * Scale shape: one two-level rank pass over (group, value), a
-    * mixture-sized threshold table joined back group-keyed, and a
-    * scan-stage least/greatest — no group-sized windows.
+    * Scale shape: one rank pass over (group, value), a mixture-sized
+    * threshold table joined back group-keyed, and a scan-stage clip.
     */
   def winsorize(df: DataFrame, groupCol: String, valueCol: String,
       loBps: Int, hiBps: Int): DataFrame = {
     require(loBps >= 1 && hiBps <= 10000 && loBps < hiBps,
       s"need 1 <= loBps < hiBps <= 10000, got [$loBps, $hiBps]")
+    clipped(df, clipThresholds(df, groupCol, valueCol, loBps, hiBps),
+      groupCol, valueCol)
+  }
+
+  /** Per-group (lo_clip, hi_clip): the group's non-NULL values at the
+    * ceil ranks max(1, ceil(n·q/10000)) of `loBps` and `hiBps`. */
+  private def clipThresholds(df: DataFrame, groupCol: String,
+      valueCol: String, loBps: Int, hiBps: Int): DataFrame = {
     def rankAt(bps: Int) = greatest(lit(1L),
       GroupRank.intDiv(col("__n") * bps + lit(9999L), lit(10000L)))
-    val thresholds = GroupRank.withRankAndCount(
+    GroupRank.withRankAndCount(
         df.select(col(groupCol), col(valueCol))
           .filter(col(valueCol).isNotNull),
         Seq(groupCol), Seq(col(valueCol).asc), "__rn", "__n")
@@ -100,6 +106,11 @@ object Robust {
           .as("lo_clip"),
         max(when(col("__rn") === rankAt(hiBps), col(valueCol)))
           .as("hi_clip"))
+  }
+
+  /** `df` + its group's thresholds + `winsorized` (clipped to them). */
+  private def clipped(df: DataFrame, thresholds: DataFrame, groupCol: String,
+      valueCol: String): DataFrame =
     df.join(thresholds, Seq(groupCol), "left")
       // explicit null guard: Spark's greatest/least SKIP nulls (they
       // behave like max/min over the non-null args), so a null value
@@ -108,7 +119,6 @@ object Robust {
         when(col(valueCol).isNull, lit(null))
           .otherwise(
             least(greatest(col(valueCol), col("lo_clip")), col("hi_clip"))))
-  }
 
   /** SAMPLED-THRESHOLD winsorization — the 100 TB form of [[winsorize]]
     * and the CCNet-mechanics generalization proven out by
@@ -142,30 +152,14 @@ object Robust {
       s"need 1 <= loBps < hiBps <= 10000, got [$loBps, $hiBps]")
     require(samplePerMille >= 1 && samplePerMille <= 1000,
       s"samplePerMille must be in [1, 1000], got $samplePerMille")
-    def rankAt(bps: Int) = greatest(lit(1L),
-      GroupRank.intDiv(col("__n") * bps + lit(9999L), lit(10000L)))
-    def thresholdsOf(src: DataFrame) = GroupRank.withRankAndCount(
-        src.select(col(groupCol), col(valueCol))
-          .filter(col(valueCol).isNotNull),
-        Seq(groupCol), Seq(col(valueCol).asc), "__rn", "__n")
-      .groupBy(col(groupCol))
-      .agg(
-        max(when(col("__rn") === rankAt(loBps), col(valueCol)))
-          .as("lo_clip"),
-        max(when(col("__rn") === rankAt(hiBps), col(valueCol)))
-          .as("hi_clip"))
-    val sampled = thresholdsOf(df.filter(
-      pmod(Sampling.hashOrder(col(idCol)), lit(1000L)) < samplePerMille))
+    val sampled = clipThresholds(df.filter(pmod(Sampling.hashOrder(
+      col(idCol)), lit(1000L)) < samplePerMille), groupCol, valueCol, loBps, hiBps)
     // groups the sample missed: exact thresholds over their own rows
     val missing = df.select(col(groupCol)).distinct()
       .join(sampled.select(col(groupCol)), Seq(groupCol), "left_anti")
-    val fallback = thresholdsOf(df.join(broadcast(missing), Seq(groupCol)))
-    val thresholds = sampled.unionByName(fallback)
-    df.join(broadcast(thresholds), Seq(groupCol), "left")
-      .withColumn("winsorized",
-        when(col(valueCol).isNull, lit(null))
-          .otherwise(
-            least(greatest(col(valueCol), col("lo_clip")), col("hi_clip"))))
+    val fallback = clipThresholds(df.join(broadcast(missing), Seq(groupCol)),
+      groupCol, valueCol, loBps, hiBps)
+    clipped(df, broadcast(sampled.unionByName(fallback)), groupCol, valueCol)
   }
 
   /** Per-row robust outlier flags for `valueCol` within `groupCol`
@@ -174,10 +168,9 @@ object Robust {
     * flags — the strictest consistent reading, and the deterministic one.
     * Output: input columns + (med, mad, is_outlier), one row per input.
     *
-    * Scale shape: two rank-based median passes (value, then absolute
-    * deviation), each GroupRank's parallel two-level plan, and two
-    * broadcast-or-shuffle joins keyed by the group — every stage
-    * parallel and spillable, nothing buffered or serialized per group.
+    * Scale shape: two [[GroupRank]] median passes (value, then absolute
+    * deviation) and two joins keyed by the group — nothing buffered or
+    * serialized per group.
     */
   def outlierStats(df: DataFrame, groupCol: String, valueCol: String,
       k: Double): DataFrame = {

@@ -390,20 +390,20 @@ object Sampling {
     * identity stays available for staged curricula (train on buckets
     * 1..i, then widen).
     *
-    * One two-level global ranking pass ([[GroupRank]] with a constant
-    * group — the range exchange still yields bounded partitions); tier
-    * and position derive from the global rank in closed form (standard
-    * NTILE arithmetic: the first n mod k tiers take one extra row), so
-    * no second shuffle. Output: (idCol, scoreCol, bucket, order_idx),
-    * order_idx a dense 1..n permutation — the shard writer's sort key.
+    * One global ranking pass ([[GroupRank]] with no groups — the range
+    * exchange yields bounded partitions); tier and position derive from
+    * the global rank in closed form (standard NTILE arithmetic: the
+    * first n mod k tiers take one extra row), so no second shuffle.
+    * Output: (idCol, scoreCol, bucket, order_idx), order_idx a dense
+    * 1..n permutation — the shard writer's sort key.
     */
   def curriculumOrder(df: DataFrame, idCol: String, scoreCol: String,
       nBuckets: Int): DataFrame = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
     val kL = lit(nBuckets.toLong)
     val ranked = GroupRank.withRankAndCount(
-      df.select(col(idCol), col(scoreCol)).withColumn("__one", lit(1)),
-      Seq("__one"), Seq(col(scoreCol).asc, col(idCol).asc), "__rn", "__n")
+      df.select(col(idCol), col(scoreCol)), Nil,
+      Seq(col(scoreCol).asc, col(idCol).asc), "__rn", "__n")
     val q = GroupRank.intDiv(col("__n"), kL)
     val r = col("__n") % kL
     val bucket = GroupRank.ntileFromRank(col("__rn"), col("__n"), nBuckets)

@@ -559,8 +559,7 @@ object Stats {
       .select(fixedPointExact(col("b.__y") - col("a.__y"),
         col("b.__x") - col("a.__x")).as("__sl"))
     val ranked = GroupRank.withRankAndCount(
-      slopes.select(lit(1).as("__g"), col("__sl")),
-      Seq("__g"), Seq(col("__sl").asc), "__rn", "__np")
+      slopes, Nil, Seq(col("__sl").asc), "__rn", "__np")
     val medRow = ranked
       .filter(col("__rn") === GroupRank.intDiv(
         col("__np") * 5000L + 9999L, lit(10000L)))
@@ -810,15 +809,15 @@ object Stats {
     * domain); zero/NULL rows are excluded. One row:
     * (k, x_threshold, hill2_q, alpha_ppm).
     *
-    * Scale shape: the two-level exact rank selects the top k+1 — no
-    * global sort task; one bounded aggregate over k rows.
+    * Scale shape: [[GroupRank]] selects the top k+1 — no global sort
+    * task; one bounded aggregate over k rows.
     */
   def hillTail(df: DataFrame, valueCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val ranked = GroupRank.withRankAndCount(
-        df.select(lit(1).as("__g"), col(valueCol).cast("long").as("__x"))
+        df.select(col(valueCol).cast("long").as("__x"))
           .filter(col("__x").isNotNull && col("__x") >= 1L),
-        Seq("__g"), Seq(col("__x").desc), "__rn", "__n")
+        Nil, Seq(col("__x").desc), "__rn", "__n")
       .filter(col("__rn") <= k + 1)
     val thr = ranked.filter(col("__rn") === k + 1)
       .select(col("__x").as("__xt"),
@@ -1014,8 +1013,8 @@ object Stats {
     * (every token new). Deterministic stream order = (idCol, position)
     * — the engine's canonical corpus order, replayed by the oracle.
     *
-    * Shape: the global token index is [[GroupRank.withRankAndCount]]'s
-    * two-level rank (NO single-task sort over the corpus stream);
+    * Shape: the global token index is [[GroupRank.withRankAndCount]]
+    * (NO single-task sort over the corpus stream);
     * first-occurrence positions are a vocabulary-sized min; each type
     * then lands in the FIRST of `gridPoints` evenly-spaced prefix
     * checkpoints that contains it (ceil arithmetic — partial-
@@ -1034,8 +1033,7 @@ object Stats {
     val stream = docs.select(col(idCol).as("__id"),
         posexplode(Text.tokens(col(textCol))).as(Seq("__p", "__tok")))
       .where(col("__tok").rlike("^[a-z]+$"))
-    val ranked = GroupRank.withRankAndCount(
-      stream.withColumn("__all", lit(1)), Seq("__all"),
+    val ranked = GroupRank.withRankAndCount(stream, Nil,
       Seq(col("__id").asc, col("__p").asc), "__gp", "__nn")
     val firstpos = ranked.groupBy(col("__tok"))
       .agg(min(col("__gp")).as("__fp"), max(col("__nn")).as("__n"))
@@ -1067,14 +1065,12 @@ object Stats {
     * inequality readout (0 = perfectly even, ->1 = one holder): exact
     * rational G = (2 * sum(rank_i * x_i) - (n+1) * sum(x)) /
     * (n * sum(x)) over sizes ranked ascending (deterministic id
-    * tie-break, two-level rank). One row:
-    * (n, gini_num, gini_den, gini).
+    * tie-break, [[GroupRank]]). One row: (n, gini_num, gini_den, gini).
     */
   def gini(df: DataFrame, sizeCol: String, idCol: String): DataFrame = {
     val ranked = GroupRank.withRankAndCount(
-      df.select(col(idCol), col(sizeCol).cast("long").as("__gsz"))
-        .withColumn("__gall", lit(1)),
-      Seq("__gall"), Seq(col("__gsz").asc, col(idCol).asc),
+      df.select(col(idCol), col(sizeCol).cast("long").as("__gsz")),
+      Nil, Seq(col("__gsz").asc, col(idCol).asc),
       "__gr", "__gn")
     ranked.agg(count(lit(1)).as("n"), sum(col("__gsz")).as("__tot"),
         sum(col("__gr") * col("__gsz")).as("__ws"))
@@ -1350,10 +1346,8 @@ object Stats {
     * rendered as rho_ppm = ppm((n(n^2-1) - 6*sum d^2) / (n(n^2-1))).
     * One row: (n, d2_sum, rho_ppm); n < 2 renders NULL.
     *
-    * Scale: both rankings are [[GroupRank.withRankAndCount]] two-level
-    * exact ranks (range exchange + bounded local sort + broadcast shard
-    * offsets) — never a one-task global window; the d^2 reduction is a
-    * partial-aggregable single pass. d^2 sums in decimal(38,0)
+    * Scale: both rankings are [[GroupRank.withRankAndCount]] — never a
+    * one-task global window; the d^2 reduction is a single pass. d^2 sums in decimal(38,0)
     * (sum d^2 <= n^3/3: safe far past 1e10 rows).
     */
   def spearman(df: DataFrame, xCol: String, yCol: String,
@@ -1361,10 +1355,9 @@ object Stats {
     val dec = "decimal(38,0)"
     val base = df.select(col(idCol).as("__id"), col(xCol).as("__x"),
         col(yCol).as("__y"))
-      .withColumn("__g", lit(1))
-    val rx = GroupRank.withRankAndCount(base, Seq("__g"),
+    val rx = GroupRank.withRankAndCount(base, Nil,
       Seq(col("__x").asc, col("__id").asc), "__rx", "__n")
-    val rxy = GroupRank.withRankAndCount(rx, Seq("__g"),
+    val rxy = GroupRank.withRankAndCount(rx, Nil,
       Seq(col("__y").asc, col("__id").asc), "__ry", "__n2")
     val sums = rxy
       .select((((col("__rx") - col("__ry")).cast("decimal(19,0)") *
@@ -1879,7 +1872,7 @@ object Stats {
     * languages, buckets — the engine's bounded-domain rule); the pair
     * build is a broadcast nested loop over that domain, aggregate
     * data by construction. For row-scale monotone association use
-    * [[spearman]], which is O(n log n) by two-level rank.
+    * [[spearman]], which is O(n log n) by [[GroupRank]].
     * Output: (n_pairs, concordant, discordant, tau_ppm); an empty or
     * single-key input yields n_pairs = 0 and a NULL tau.
     */

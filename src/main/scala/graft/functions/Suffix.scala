@@ -9,15 +9,14 @@ import org.apache.spark.sql.functions._
   * per-document token streams — the suffix-array primitive behind exact
   * substring dedup (Lee et al. 2022 "Deduplicating Training Data Makes
   * Language Models Better" builds suffix arrays for exactly this), here
-  * re-expressed as log2(L) rounds of the engine's two-level exact
-  * ranking instead of a monolithic suffix sort.
+  * re-expressed as log2(L) rounds of [[GroupRank]]'s exact ranking
+  * instead of a monolithic suffix sort.
   *
   * Round 0 ranks every suffix by its FIRST token (a vocabulary-sized
   * dense rank). Round k+1 ranks by the pair (rank_k[pos],
-  * rank_k[pos + 2^k]) — one positional self-join plus one two-level
-  * ranking of the DISTINCT pairs (dense: equal prefixes share a rank;
-  * ranking distinct pairs keeps it deterministic), so after R rounds
-  * suffixes are ordered by their first 2^R tokens. Suffixes never cross
+  * rank_k[pos + 2^k]) — one positional self-join plus one dense rank
+  * of the pairs (equal prefixes share a rank, so it is deterministic):
+  * after R rounds suffixes are ordered by their first 2^R tokens. Suffixes never cross
   * document boundaries (no phantom repeats from concatenation); a
   * missing partner past the end ranks as sentinel 0, which sorts before
   * every real rank — exactly "shorter prefix first", matching list
@@ -26,8 +25,8 @@ import org.apache.spark.sql.functions._
   * The point at scale: the sort keys are PAIRS OF LONGS at every round
   * — never the L-token windows themselves (an L-fold corpus blowup for
   * the direct window sort the DuckDB oracle runs at toy scale) — and
-  * every round is one equi-join plus one distinct + two-level rank:
-  * all partial-aggregable / range-exchange shapes, log2(L) of them.
+  * every round is one equi-join plus one dense rank: range-exchange
+  * shapes, log2(L) of them.
   *
   * [[lcpAdjacent]] then yields the classical corollary: the longest
   * repeated substring (capped at 2^R - 1 tokens) is the maximal
@@ -46,14 +45,6 @@ object Suffix {
         posexplode(Text.tokens(col(textCol))))
       .select(col("__id"), col("pos").cast("long").as("__pos"),
         col("col").as("__tok"))
-
-  /** Dense rank over any frame of UNIQUE rows by `order` — two-level,
-    * no single-task sort. */
-  private def denseRankOf(df: DataFrame, order: Seq[org.apache.spark.sql.Column],
-      as: String): DataFrame =
-    GroupRank.withRankAndCount(df.withColumn("__g", lit(1)), Seq("__g"),
-        order, as, "__n")
-      .drop("__g", "__n")
 
   /** Per-round rank tables r_0 .. r_rounds: each (__id, __pos, r) with
     * r ordering suffixes by their first 2^k tokens. Returned oldest
@@ -89,14 +80,11 @@ object Suffix {
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val toks = stream(docs, idCol, textCol).localCheckpoint(true)
     val n = toks.count()
-    // dense rank of the token stream directly (two-level, no distinct +
-    // rank-the-vocabulary + join-back: that staging cost one more
-    // corpus exchange and a corpus-sized sort-merge join per ranking)
-    val ranked0 = GroupRank.denseRankAll(toks, Seq("__tok"), "__r")
-    var cur = ranked0.select(col("__id"), col("__pos"), col("__r"))
+    // dense rank of the token stream directly (no distinct + rank-the-
+    // vocabulary + join-back: one corpus exchange and join fewer)
+    var cur = GroupRank.denseRankAll(toks, Seq("__tok"), "__r")
+      .select(col("__id"), col("__pos"), col("__r"))
       .localCheckpoint(true)
-    // the rank's pinned local stage has no reader left
-    GraftBridge.unpersistCheckpoint(ranked0)
     val tables = scala.collection.mutable.ArrayBuffer[DataFrame](cur)
     var span = 1L
     // max rank of the last DENSE table: the convergence probe, and the
@@ -160,10 +148,9 @@ object Suffix {
         // ranking the distinct pair domain and joining back (dense rank
         // is tie-insensitive), minus the distinct, the domain join's
         // exchanges, and its corpus-sized sorts
-        val ranked = GroupRank.denseRankAll(paired, Seq("__ra", "__rb"), "__r")
-        cur = ranked.select(col("__id"), col("__pos"), col("__r"))
+        cur = GroupRank.denseRankAll(paired, Seq("__ra", "__rb"), "__r")
+          .select(col("__id"), col("__pos"), col("__r"))
           .localCheckpoint(true)
-        GraftBridge.unpersistCheckpoint(ranked)
         dense = true
         idLaid = false
         maxRank = cur.agg(max(col("__r"))).head.getLong(0)
@@ -227,9 +214,9 @@ object Suffix {
     // step credits min(2^k, tokens remaining), not the full span
     val lens = tables.head.groupBy(col("__id"))
       .agg(count(lit(1)).as("__len"))
-    val order = denseRankOf(
-      tables.last.select(col("__id"), col("__pos"), col("__r")),
-      Seq(col("__r").asc, col("__id").asc, col("__pos").asc), "__ord")
+    val order = GroupRank.withRankAndCount(
+      tables.last.select(col("__id"), col("__pos"), col("__r")), Nil,
+      Seq(col("__r").asc, col("__id").asc, col("__pos").asc), "__ord", "__n")
     val a = order.select(col("__id").as("__ida"), col("__pos").as("__posa"),
       col("__ord"))
     val b = order.select(col("__id").as("__idb"), col("__pos").as("__posb"),

@@ -453,9 +453,9 @@ object Vec {
     // could never escape a bad bucket. NN-descent's random init is
     // what bridges cells; its deterministic analog here is the
     // sorted-neighborhood ring over the hashOrder permutation —
-    // diverse cross-bucket edges, engine-replayable.
-    val ring = Dedup.sortedNeighborhoodPairs(
-      base0.select(col("__id")), "__id",
+    // diverse cross-bucket edges, engine-replayable (unmemoized: freed
+    // with base0).
+    val ring = Dedup.snmPairs(base0.select(col("__id")), "__id",
       Sampling.hashOrder(col("__id")), window = ringWindow)
     val seedRaw = local
       .unionByName(ring.select(col("id_a").as("__s"), col("id_b").as("__d")))
@@ -502,7 +502,8 @@ object Vec {
     }
     val out = g.select(col("__s").as("node_id"),
       col("__d").as("neighbor_id"), col("sim"), col("rank"))
-    GraftBridge.unpersistCheckpoint(base0)
+    // the seed's leaves: base0 and the ring's pairs
+    GraftBridge.unpersistCheckpoint(seedRaw)
     GraftBridge.dataFrame(spark0, GraftBridge.logicalPlan(out))
   }
 
@@ -689,12 +690,11 @@ object Vec {
       .sortWithinPartitions(col("node_id").asc, col("sim").desc,
         col("neighbor_id").asc)
       .localCheckpoint(true)
-    // The eager checkpoint holds the last round's output, so no task reads
-    // the vector map or base0 (the seed's source) again: free both now,
-    // as the DataFrame loop frees base0, not at whichever later GC lets
-    // the ContextCleaner find them unreachable.
+    // The eager checkpoint holds the last round's output: no task reads
+    // the vector map or the seed's leaves (base0, the ring's pairs) again,
+    // so free them now, not whenever a GC lets the ContextCleaner do it.
     bc.destroy()
-    GraftBridge.unpersistCheckpoint(base0)
+    GraftBridge.unpersistCheckpoint(seedRaw)
     // localCheckpoint under AQE records UnknownPartitioning; re-declare
     // the layout the plan above genuinely produced so consumers reuse
     // it exchange- and sort-free (the memo stores this frame as is).

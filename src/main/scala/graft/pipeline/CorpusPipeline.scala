@@ -310,7 +310,7 @@ object CorpusPipeline {
   }
 
   /** Per-source cap: at most `k` docs per `sourceCol`, best quality
-    * first ([[Quality.groupCap]] on the two-level rank) — the
+    * first ([[Quality.groupCap]] on the exact group rank) — the
     * RefinedWeb-style anti-domination stage. Needs annotated docs.
     */
   def domainCapStage(annotated: DataFrame, sourceCol: String, k: Long,

@@ -34,7 +34,7 @@ object GraftFunctions {
 
 /** Config-only integration: a session created with
   * `spark.sql.extensions=graft.plans.GraftExtensions` gets the SQL
-  * functions, the TopK planning strategy, AND the window-rank rewrite —
+  * functions, the TopK/rank planning strategy, AND the window-rank rewrite —
   * no Scala calls needed. The rewrite is injected as a pre-CBO rule: it
   * runs after the operator-optimization fixed point (so the Filter sits
   * directly on its Window, projects collapsed) and rewrites at most once

@@ -66,7 +66,7 @@ object TopKNative {
         spark.experimental.extraOptimizations :+ TopKRewrite
   }
 
-  private def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
+  private[graft] def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(TopKStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopKStrategy
@@ -97,6 +97,8 @@ object TopKStrategy extends SparkStrategy {
       val partial = TopKPartialExec(n.keys, n.ordering, n.k, MaxPartialKeys,
         planLater(n.child))
       TopKFinalExec(n.keys, n.ordering, n.k, n.rankAttr, partial) :: Nil
+    case n: RankWithin =>
+      RankWithinExec(n.groups, n.order, n.step, n.produced, planLater(n.child)) :: Nil
     case _ => Nil
   }
 }

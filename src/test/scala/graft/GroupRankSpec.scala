@@ -44,38 +44,130 @@ class GroupRankSpec extends AnyFunSuite {
     }
   }
 
-  test("denseRankAll equals the dense_rank window without exchange reuse") {
-    // With exchange reuse off, the per-shard stats branch and the rank
-    // branch each run their own range exchange, and RangePartitioner
-    // seeds its boundary sample with the RDD id. 5,000 rows per input
-    // partition against a sample of 60 make the bounds a real sample;
-    // 8 shards over 534 distinct (a, b) keys of about 75 rows each.
-    val confs = Map("spark.sql.exchange.reuse" -> "false",
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "8")
+  /** Run `body` under `confs`, restoring the session's values after. */
+  private def withConfs[T](confs: Map[String, String])(body: => T): T = {
     val saved = confs.keys.map(k => k -> spark.conf.getOption(k))
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Every check below runs without exchange reuse and without AQE, at
+    * two partition counts. With reuse off, each branch of a plan that
+    * reads a range exchange twice runs its own, and RangePartitioner
+    * seeds its boundary sample with the RDD id. */
+  private def reuseOff(parts: Int) = Map("spark.sql.exchange.reuse" -> "false",
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> parts.toString)
+
+  /** 40,000 rows over 8 input partitions: 5,000 rows each against a
+    * boundary sample of about 60 make the range bounds a real sample.
+    * Groups: "big" (~38,000 rows, spans every shard), "mid" (~2,000),
+    * a NULL group (40 rows), and the single-row groups "one" and
+    * "nullv" (whose only value is NULL). `score` has ties and NULLs,
+    * `v` has NULLs. */
+  private def skewed = spark.range(0L, 40000L, 1L, 8).select(col("id"),
+    when(col("id") % 1000L === 7L, lit(null).cast("string"))
+      .when(col("id") === 11L, "one").when(col("id") === 13L, "nullv")
+      .when(col("id") % 20L === 3L, "mid").otherwise("big").as("g"),
+    when(col("id") % 97L === 5L, lit(null).cast("long"))
+      .otherwise(col("id") * 2654435761L % 1000L).as("score"),
+    when(col("id") % 13L === 0L, lit(null).cast("long"))
+      .otherwise(col("id") % 5L).as("v"))
+
+  /** id -> (a, b) for the two named long columns (NULL as None). */
+  private def byId(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
+    df.select(col("id"), col(a), col(b)).collect().map(r => r.getLong(0) ->
+      (Option(r.get(1)), Option(r.get(2)))).toMap
+
+  private def assertSame(got: Map[Long, (Option[Any], Option[Any])],
+      want: Map[Long, (Option[Any], Option[Any])], what: String): Unit = {
+    val wrong = want.count { case (id, w) => !got.get(id).contains(w) }
+    assert(wrong === 0, s"$what: $wrong of ${want.size} rows differ or are missing")
+    assert(got.size === want.size, what)
+  }
+
+  test("withRankAndCount equals the row_number and count windows without " +
+      "exchange reuse, at 8 and 7 partitions") {
+    val order = Seq(col("score").desc, col("id").asc)
+    for (parts <- Seq(8, 7)) withConfs(reuseOff(parts)) {
+      val df = skewed
+      val shards = df.repartitionByRange(col("g"), col("score").desc)
+        .select(spark_partition_id()).distinct().count()
+      assert(shards >= 4, s"only $shards shards")
+      val w = Window.partitionBy(col("g")).orderBy(order: _*)
+      val want = df.withColumn("rn", row_number().over(w).cast("long"))
+        .withColumn("n", count(lit(1)).over(Window.partitionBy(col("g"))))
+      assertSame(byId(GroupRank.withRankAndCount(df, Seq("g"), order, "rn", "n"),
+        "rn", "n"), byId(want, "rn", "n"), s"$parts partitions")
+    }
+  }
+
+  test("withPrefixSum equals the preceding-rows sum window without " +
+      "exchange reuse, at 8 and 7 partitions") {
+    val order = Seq(col("score").desc, col("id").asc)
+    for (parts <- Seq(8, 7)) withConfs(reuseOff(parts)) {
+      val df = skewed
+      val w = Window.partitionBy(col("g")).orderBy(order: _*)
+      val want = df
+        .withColumn("pre", coalesce(sum(col("v")).over(
+          w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .withColumn("tot", sum(col("v")).over(Window.partitionBy(col("g"))))
+      val got = GroupRank.withPrefixSum(df, Seq("g"), order, "v", "pre", "tot")
+      assertSame(byId(got, "pre", "tot"), byId(want, "pre", "tot"),
+        s"$parts partitions")
+      // the single-row group whose one value is NULL has a NULL total
+      assert(got.filter(col("g") === "nullv").select(col("tot")).head().isNullAt(0))
+    }
+  }
+
+  test("denseRankAll equals the dense_rank window without exchange reuse") {
+    // 534 distinct (a, b) keys of about 75 rows each, plus NULL a keys
+    for (parts <- Seq(8, 7)) withConfs(reuseOff(parts)) {
       val df = spark.range(0L, 40000L, 1L, 8)
         .select(col("id"),
-          ((col("id") * 2654435761L) % 40000L / 150L).cast("long").as("a"),
+          when(col("id") % 101L === 0L, lit(null).cast("long"))
+            .otherwise(((col("id") * 2654435761L) % 40000L / 150L).cast("long"))
+            .as("a"),
           (col("id") % 2L).as("b"))
       val shards = df.repartitionByRange(col("a"), col("b"))
         .select(spark_partition_id()).distinct().count()
       assert(shards >= 4, s"only $shards shards")
       val got = GroupRank.denseRankAll(df, Seq("a", "b"), "r")
-        .select(col("id"), col("r"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        .withColumn("z", lit(0L))
       val want = df.withColumn("r",
           dense_rank().over(Window.orderBy(col("a"), col("b"))).cast("long"))
-        .select(col("id"), col("r"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got.size === 40000)
-      val wrong = got.count { case (id, r) => want(id) != r }
-      assert(wrong === 0, s"$wrong of 40000 ranks differ")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+        .withColumn("z", lit(0L))
+      assertSame(byId(got, "r", "z"), byId(want, "r", "z"), s"$parts partitions")
+    }
+  }
+
+  test("degenerate inputs: an empty group list is one group, empty input " +
+      "gives no rows") {
+    val order = Seq(col("score").asc, col("id").asc)
+    for (parts <- Seq(8, 7)) withConfs(reuseOff(parts)) {
+      val df = skewed
+      val w = Window.orderBy(order: _*)
+      val want = df.withColumn("rn", row_number().over(w).cast("long"))
+        .withColumn("pre", coalesce(sum(col("v")).over(
+          w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      val got = GroupRank.withPrefixSum(
+        GroupRank.withRankAndCount(df, Nil, order, "rn", "n"),
+        Nil, order, "v", "pre", "tot")
+      assertSame(byId(got, "rn", "pre"), byId(want, "rn", "pre"),
+        s"$parts partitions")
+      val totals = got.select(col("n"), col("tot")).distinct().collect()
+      assert(totals.map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+        Seq((40000L, df.agg(sum(col("v"))).head().getLong(0))))
+      val empty = df.filter(col("id") < 0L)
+      assert(GroupRank.withRankAndCount(empty, Seq("g"), order, "rn", "n")
+        .count() === 0L)
+      assert(GroupRank.withPrefixSum(empty, Nil, order, "v", "pre", "tot")
+        .count() === 0L)
+      assert(GroupRank.denseRankAll(empty, Seq("g"), "r").count() === 0L)
     }
   }
 

@@ -142,12 +142,11 @@ class MemoRegistrySpec extends AnyFunSuite {
       val graph = g.queryExecution.analyzed.collectLeaves()
         .collect { case l: LogicalRDD => l.rdd.id }
       assert(graph.size == 1)
-      // the build's intermediate checkpoints are freed asynchronously;
-      // the ring seed's pairs stay in Dedup.sortedNeighborhoodPairs's own
-      // memo
+      // the build's intermediate checkpoints, the ring seed's pairs
+      // included, are freed asynchronously
       eventually(timeout(60.seconds), interval(250.millis)) {
         val copies = spark.sparkContext.getRDDStorageInfo
-          .filterNot(i => baseline(i.id) || i.callSite.contains("Dedup.scala"))
+          .filterNot(i => baseline(i.id))
         assert(copies.map(_.id).toSet == graph.toSet, s"graph $graph, " +
           copies.map(i => s"${i.id} (${i.callSite})").mkString(", "))
       }

@@ -10,8 +10,23 @@ class PlanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val d = "/root/testdata/sf0.001"
 
-  def plan(q: String): String =
-    SparkEntry.queries(q)(spark, d).queryExecution.executedPlan.toString
+  def query(q: String): org.apache.spark.sql.DataFrame =
+    SparkEntry.queries(q)(spark, d)
+
+  def plan(q: String): String = query(q).queryExecution.executedPlan.toString
+
+  /** `df` ranks through the RankWithin operator, and its plan has no
+    * window without a partition spec (one task would sort all its rows). */
+  def assertRankWithin(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
+    val ep = df.queryExecution.executedPlan
+    assert(ep.toString.contains("RankWithin"), s"$what lost the rank operator:\n$ep")
+    val global = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(ep) {
+        case w: org.apache.spark.sql.execution.window.WindowExec
+          if w.partitionSpec.isEmpty => w
+      }
+    assert(global.isEmpty, s"$what has a window without a partition spec:\n$ep")
+  }
 
   test("filters are pushed into the parquet scan") {
     val p = plan("q_filter_status")
@@ -238,12 +253,14 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("outlier gate: median passes prune doc_id, windows instead of percentile") {
-    val p = plan("q_outlier_docs")
+    val q = query("q_outlier_docs")
+    val p = q.queryExecution.executedPlan.toString
     // per-row pass reads all three columns; both median passes drop the id
     assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string,source:string>"), p)
     assert(p.contains("ReadSchema: struct<text:string,source:string>"), p)
     assert(!p.toLowerCase.contains("percentile"), p)
-    assert(p.contains("Window"), p)
+    // the medians select by rank: the RankWithin operator, not a window
+    assertRankWithin(q, "q_outlier_docs")
     assert(!p.contains("CartesianProduct"), p)
   }
 
@@ -267,7 +284,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("lm buckets: pruned scans, equi-joined LM table, two-level rank") {
-    val p = plan("q_lm_buckets")
+    val q = query("q_lm_buckets")
+    val p = q.queryExecution.executedPlan.toString
     // the scoring chain is memoized (checkpoint scan in the visible
     // plan); the lang join and the bucketing rank remain visible
     assert(p.contains("ReadSchema: struct<doc_id:bigint,lang:string>"), p)
@@ -275,7 +293,7 @@ class PlanSpec extends AnyFunSuite {
     // the tier cut is NTILE arithmetic over the two-level rank — the
     // window-function ntile (one sort task per language) must be gone
     assert(!p.contains("ntile"), p)
-    assert(p.contains("__grshard"), p)
+    assertRankWithin(q, "q_lm_buckets")
     // the underlying scoring chain (the NB/snm memo pattern): pruned
     // (doc_id, text) scan, equi-joined LM table, no cartesian product
     val docs = Tables.documents(spark, d)
@@ -347,25 +365,24 @@ class PlanSpec extends AnyFunSuite {
   test("group-ranked operators: no single-task group sort remains") {
     // The round-5 weak marks: a window partitioned by the group column
     // ALONE and ORDERED BY a data column shuffles every row of a group
-    // into one sort task. After the GroupRank re-plan the only ordered
-    // windows keyed by the group alone run over the mixture-sized
-    // per-shard counts table and order by the shard id — so a group
+    // into one sort task. After the GroupRank re-plan the ranks come
+    // from the RankWithin operator over a range exchange, so a group
     // column followed directly by a ranked DATA column is the retired
-    // shape. (The unordered whole-partition sum over the counts table
-    // prints as group + specifiedwindowframe, which this regex skips.)
+    // shape.
     val badWindow =
       ("windowspecdefinition\\((source|lang)#\\d+, " +
         "(quality|score|fit_q|n_tokens|__adev)#").r
     for (q <- Seq("q_quality_gate", "q_lm_buckets", "q_outlier_docs")) {
-      val p = plan(q)
+      val df = query(q)
+      val p = df.queryExecution.executedPlan.toString
       assert(badWindow.findFirstIn(p).isEmpty,
         s"$q has a group-keyed single-partition sort:\n$p")
-      assert(p.contains("__grshard"), s"$q lost the two-level rank:\n$p")
+      assertRankWithin(df, q)
     }
   }
 
   test("snm: global rank is two-level, neighborhood join is rank-keyed") {
-    import org.apache.spark.sql.functions.{col, lit, lower, substring}
+    import org.apache.spark.sql.functions.{col, lower, substring}
     // The checkpoint inside sortedNeighborhoodPairs truncates the
     // catalog query's visible plan, so assert on the rank stage and the
     // join stage separately.
@@ -373,13 +390,13 @@ class PlanSpec extends AnyFunSuite {
       Tables.documents(spark, d)
         .select(col("doc_id"),
           lower(substring(col("text"), 1, 30)).as("__snmkey"))
-        .withColumn("__snmall", lit(1)),
-      Seq("__snmall"), Seq(col("__snmkey").asc, col("doc_id").asc),
+,
+      Nil, Seq(col("__snmkey").asc, col("doc_id").asc),
       "__snmrn", "__snmn")
     val rp = ranked.queryExecution.executedPlan.toString
     // a partition-less ordered window over the key would be the
-    // single-sort-task shape the two-level plan exists to avoid
-    assert(rp.contains("__grshard"), rp)
+    // single-sort-task shape the rank operator exists to avoid
+    assertRankWithin(ranked, "the snm rank")
     assert(!rp.matches("(?s).*windowspecdefinition\\(__snmkey#.*"), rp)
     val p = plan("q_snm_pairs")
     assert(!p.contains("CartesianProduct"), p)
@@ -435,10 +452,11 @@ class PlanSpec extends AnyFunSuite {
     val badWindow =
       "windowspecdefinition\\(source#\\d+, (quality|n_tokens)#".r
     for (q <- Seq("q_domain_cap", "q_group_quantiles")) {
-      val p = plan(q)
+      val df = query(q)
+      val p = df.queryExecution.executedPlan.toString
       assert(badWindow.findFirstIn(p).isEmpty,
         s"$q has a group-keyed single-partition sort:\n$p")
-      assert(p.contains("__grshard"), s"$q lost the two-level rank:\n$p")
+      assertRankWithin(df, q)
     }
   }
 
@@ -561,7 +579,7 @@ class PlanSpec extends AnyFunSuite {
     // the per-language boundary array joins as a broadcast — the
     // assignment is a map-side probe, not a shuffle join
     assert(p.contains("BroadcastHashJoin"), p)
-    // the only two-level rank (__grshard machinery) runs over the hash
+    // the only rank (the RankWithin operator) runs over the hash
     // SAMPLE; the full scored frame reaches the bucket assignment
     // through the broadcast join, never through a rank exchange —
     // rank output columns must not appear in the final projection
@@ -607,8 +625,9 @@ class PlanSpec extends AnyFunSuite {
 
   test("spearman: both rankings ride the two-level rank, no " +
       "single-task global sort window") {
-    val p = plan("q_spearman")
-    assert(p.contains("__grshard"), s"q_spearman lost the two-level rank:\n$p")
+    val q = query("q_spearman")
+    val p = q.queryExecution.executedPlan.toString
+    assertRankWithin(q, "q_spearman")
     // a row_number window over an EMPTY partition spec ordered by a data
     // column would be the one-task global sort this plan exists to avoid
     val badWindow = "windowspecdefinition\\((__x|__y|ntok|n_chars)#".r
