@@ -12,11 +12,13 @@ import org.apache.spark.sql.functions.{count, lit, sum, xxhash64}
   * own session with the [[Bench]] settings. Per run it prints one JSON
   * line — wall, job count and summed job walls (wall minus that sum is a
   * lower bound on driver-side time), executor run and GC time, memory and
-  * disk spill — plus the row count and an order-independent checksum
-  * taken outside the timed region. It then prints one summary line per
-  * (entry, sf) and fails unless every cell agrees on the checksum: no
-  * result may depend on the master or on the partition count. Its last
-  * line is the JVM's peak resident set, `{"sweep":"memory",...}`.
+  * disk spill, the RDD storage it added and still holds at its end (memo
+  * values included) — plus the row count and an order-independent
+  * checksum taken outside the timed region. It then prints one summary
+  * line per (entry, sf) and fails unless every cell agrees on the
+  * checksum: no result may depend on the master or on the partition
+  * count. Its last line is the JVM's peak resident set,
+  * `{"sweep":"memory",...}`.
   *
   * Args (all optional, `key=value`, lists comma-separated):
   * {{{
@@ -42,7 +44,7 @@ object Sweep {
     * None when the entry failed. */
   final case class Run(entry: String, sf: String, master: String,
       cores: Int, wallS: Double, jobs: Long, jobSumS: Double, taskS: Double,
-      gcS: Double, memSpill: Long, diskSpill: Long,
+      gcS: Double, memSpill: Long, diskSpill: Long, storage: Long,
       check: Option[(Long, String)]) {
     def json: String = {
       val (rows, sum) = check.getOrElse((-1L, "null"))
@@ -52,6 +54,7 @@ object Sweep {
         f""""util":${taskS / math.max(wallS * cores, 1e-9)}%.2f,""" +
         f""""mem_spill_mb":${memSpill / 1048576.0}%.1f,""" +
         f""""disk_spill_mb":${diskSpill / 1048576.0}%.1f,""" +
+        f""""storage_mb":${storage / 1048576.0}%.1f,""" +
         s""""rows":$rows,"checksum":$sum,"ok":${check.isDefined}}"""
     }
   }
@@ -104,6 +107,7 @@ object Sweep {
     sc.addSparkListener(meter)
     try for (sf <- sfDirs; entry <- entries) yield {
       graft.functions.Memos.releaseAll()
+      val held = sc.getRDDStorageInfo.map(_.id).toSet // earlier runs' leaks
       GraftBridge.drainListenerBus(spark)
       meter.reset()
       val t0 = System.nanoTime()
@@ -118,6 +122,8 @@ object Sweep {
       val run = Run(entry, sf, sc.master, cores, wall, meter.jobs.get,
         meter.jobMs.get / 1e3, meter.taskMs.get / 1e3, meter.gcMs.get / 1e3,
         meter.memSpill.get, meter.diskSpill.get,
+        sc.getRDDStorageInfo.filterNot(i => held(i.id))
+          .map(i => i.memSize + i.diskSize).sum,
         df.flatMap(d => scala.util.Try(checksum(d)).toOption))
       println(run.json)
       run

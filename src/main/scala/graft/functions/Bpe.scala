@@ -79,7 +79,7 @@ object Bpe {
       .groupBy(col("word"))
       .agg(count(lit(1)).cast("long").as("wc"))
       .select(col("word"), col("wc"), charRep(col("word")).as("rep"))
-      .localCheckpoint(true)
+      .checkpointed
     val learned = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, String, Long)]
     var r = 1
@@ -120,7 +120,7 @@ object Bpe {
             regexp_replace(col("rep"),
               java.util.regex.Pattern.quote(s" $a  $b "),
               java.util.regex.Matcher.quoteReplacement(s" $a$b ")).as("rep"))
-          .localCheckpoint(true)
+          .checkpointed
         r += 1
       }
     }

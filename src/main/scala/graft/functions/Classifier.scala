@@ -157,7 +157,7 @@ object Classifier {
     val xa = lab.join(feats, Seq(idCol), "left")
       .select(col(idCol), col("y"),
         coalesce(col("__bkts"), typedLit(Seq.empty[Long])).as("__bkts"))
-      .localCheckpoint(true)
+      .checkpointed
 
     // The model lives on the DRIVER (a ≤(B+1)-entry map — the same
     // class of bounded artifact as k-means' collected centroids) and

@@ -67,14 +67,13 @@ object Cluster {
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
       vertices: DataFrame, idCol: String, maxIter: Int = 20): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    import org.apache.spark.sql.GraftBridge
     ccMemo(edges, vertices, aCol, bCol, idCol, maxIter) {
       // Undirected: materialize both directions once; dedup cuts message
       // volume when the candidate generator emits a pair via several bands.
       val sym = Graph.undirectedEdges(edges, aCol, bCol, "__s", "__t")
-        .localCheckpoint(true)
+        .checkpointed
       var labels = vertices.select(col(idCol).as("__id"), col(idCol).as("__comp"))
-        .localCheckpoint(true)
+        .checkpointed
       var it = 0
       var converged = false
       while (it < maxIter && !converged) {
@@ -97,7 +96,7 @@ object Cluster {
           .join(hopped.select(col("__id").as("__comp"),
             col("__comp").as("__cc")), Seq("__comp"))
           .select(col("__id"), least(col("__comp"), col("__cc")).as("__comp"))
-          .localCheckpoint(true)
+          .checkpointed
         // Exact, type-agnostic convergence: did any vertex's label change?
         // (Labels only decrease, so inequality == change.) One join of the
         // two checkpointed label sets per round, stopped at the first
@@ -108,18 +107,14 @@ object Cluster {
           .join(labels.select(col("__id"), col("__comp").as("__old")), Seq("__id"))
           .filter(col("__comp") =!= col("__old"))
           .isEmpty
-        GraftBridge.unpersistCheckpoint(labels) // superseded round's blocks
-        labels = next
+        labels = Checkpoints.replace(labels)(next)
         it += 1
       }
-      GraftBridge.unpersistCheckpoint(sym)
-      if (!converged) {
-        GraftBridge.unpersistCheckpoint(labels)
+      if (!converged)
         throw new IllegalStateException(
           s"connectedComponents did not converge in $maxIter rounds — a " +
             "component's diameter exceeds the cap; raise maxIter (with " +
             "pointer jumping, rounds needed ~= log2 of the longest chain)")
-      }
       labels.select(col("__id").as(idCol), col("__comp").as("component"))
     }
   }
@@ -243,7 +238,7 @@ object Cluster {
     val roots = blockedComponents(intra, "__tile", "__a", "__b",
         verts, "__v")
       .select(col("__v"), col("component").as("__root"))
-      .localCheckpoint(true)
+      .checkpointed
     // Only tile-crossing edges can join two local roots (an intra-tile
     // edge's endpoints already share one), so the remnant edge build
     // never touches the intra volume.

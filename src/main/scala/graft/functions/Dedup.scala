@@ -142,7 +142,7 @@ object Dedup {
         .withColumn("jaccard",
           col("shared_grams").cast("double") /
             (col("n_a") + col("n_b") - col("shared_grams")).cast("double"))
-        .localCheckpoint(true)
+        .checkpointed
     }
   }
 
@@ -330,7 +330,7 @@ object Dedup {
         .filter(col("id_a") < col("id_b"))
         .select(col("id_a"), col("id_b"))
         .distinct()
-        .localCheckpoint(true)
+        .checkpointed
     }
   }
 
@@ -448,7 +448,7 @@ object Dedup {
       .withColumn("__n", count(lit(1)).over(w))
       .filter(col("__n") <= cap)
       .drop("__n")
-      .localCheckpoint(true)
+      .checkpointed
     val a = capped.select(col("ck"), col("cv"),
       col(idCol).as("id_a"), col("__fp").as("__fa"))
     val b = capped.select(col("ck"), col("cv"),
@@ -632,7 +632,7 @@ object Dedup {
       n: Int, w: Int): DataFrame =
     wfMemo(docs, idCol, textCol, n, w) {
       winnowFingerprintsUncached(docs, idCol, textCol, n, w)
-        .localCheckpoint(true)
+        .checkpointed
     }
 
   // private[graft]: plan-shape assertions and streaming per-batch
@@ -1008,7 +1008,7 @@ object Dedup {
       val grams = docShingleIds(docs, idCol, textCol, n).distinct()
       val rare = grams.groupBy("tid").agg(count(lit(1)).as("__df"))
         .filter(col("__df") <= dfCap).select("tid")
-      grams.join(rare, Seq("tid")).localCheckpoint(true)
+      grams.join(rare, Seq("tid")).checkpointed
     }
 
   /** Fan-out-sized partitioning for an inverted-list pair join: the
@@ -1103,7 +1103,7 @@ object Dedup {
         .filter(col("jaccard") >= minJaccard)
         .select(col("id_a"), col("id_b"), col("inter"), col("n_a"), col("n_b"),
           col("jaccard"))
-        .localCheckpoint(true)
+        .checkpointed
     }
   }
 
@@ -1211,7 +1211,7 @@ object Dedup {
   /** The unmemoized SNM build: [[Vec.nnDescent]]'s ring seed ranks a
     * fresh checkpoint no memo key could match, and frees the pairs. */
   private[functions] def snmPairs(docs: DataFrame, idCol: String,
-      key: Column, window: Int): DataFrame = {
+      key: Column, window: Int): DataFrame = Checkpoints.owned {
     require(window >= 2, s"window must be >= 2, got $window")
     val keyed = docs.select(col(idCol), key.as("__snmkey"))
     // Materialized once: both neighborhood-join sides read the ranked
@@ -1220,7 +1220,7 @@ object Dedup {
     val ranked = GroupRank.withRankAndCount(keyed, Nil,
         Seq(col("__snmkey").asc, col(idCol).asc), "__snmrn", "__snmn")
       .select(col(idCol), col("__snmkey"), col("__snmrn"))
-      .localCheckpoint(true)
+      .checkpointed
     val a = ranked
       .select(col(idCol).as("id_a"), col("__snmkey").as("key_a"),
         col("__snmrn").as("__rna"))
@@ -1238,15 +1238,11 @@ object Dedup {
     // at any scale — the bruteForceTopK scan-partitioning hazard,
     // same one-linear-exchange fix (measured here: the Damerau DP
     // stage ran 1-partition, 2.3 s; 32-way it is ~0.1 s).
-    val pairs = a.join(b, Seq("__snmj"))
+    a.join(b, Seq("__snmj"))
       .select(col("id_a"), col("id_b"), col("key_a"), col("key_b"),
         (col("__snmj") - col("__rna")).cast("long").as("rdist"))
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint(true)
-    // the eager checkpoint above has read every ranked row: free the
-    // ranked table now, not whenever a GC lets the cleaner find it
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(ranked)
-    pairs
+      .checkpointed
   }
 
   /** Blocking-quality report: how much of a TRUTH pair set a candidate
@@ -1267,8 +1263,8 @@ object Dedup {
     // both are products of whole candidate pipelines — materialize the
     // normalized pair sets (bounded: truth passed a verifier, cand is
     // (w−1)·n-ish) instead of re-running those pipelines per aggregate.
-    val cand = norm(candidates).localCheckpoint(true)
-    val tru = norm(truth).localCheckpoint(true)
+    val cand = norm(candidates).checkpointed
+    val tru = norm(truth).checkpointed
     val nTruth = tru.agg(count(lit(1)).as("n_truth"))
     val nCand = cand.agg(count(lit(1)).as("n_candidates"))
     val nHit = tru.join(cand, Seq("id_a", "id_b"), "left_semi")

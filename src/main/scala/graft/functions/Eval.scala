@@ -957,7 +957,7 @@ object Eval {
         col("score_q").as("__sy")), Seq(idCol, "__y"), "left")
       .select(col(idCol), (col("__top") - col("__sy")).as("__a"),
         calPred.as("__cal"))
-      .localCheckpoint(true)
+      .checkpointed
     val cal = aTrue.filter(col("__cal"))
     val calCnt = cal.agg(count(lit(1)).as("n_cal"),
       count(col("__a")).as("m_cal"))

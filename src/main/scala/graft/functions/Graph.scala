@@ -70,7 +70,7 @@ object Graph {
     */
   private def wedgeInputs(edges: DataFrame, aCol: String, bCol: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val und = canonicalEdges(edges, aCol, bCol).localCheckpoint(true)
+    val und = canonicalEdges(edges, aCol, bCol).checkpointed
     val sym = und.select(col("a").as("z"), col("b").as("n"))
       .unionByName(und.select(col("b").as("z"), col("a").as("n")))
     (und, sym, sym.groupBy(col("z")).agg(count(lit(1)).as("__d")))
@@ -117,7 +117,7 @@ object Graph {
     // re-running the corpus scan per round — the same lineage-truncation
     // call the connected-components loop uses, and a bounded artifact
     // (vocab² worst case), never corpus-sized.
-    val edges = cooccurrenceEdges(docs, textCol).localCheckpoint(true)
+    val edges = cooccurrenceEdges(docs, textCol).checkpointed
     val outW = edges.groupBy(col("src"))
       .agg(sum(col("w")).cast("long").as("out_w"))
     // Node count rides in as a broadcast 1-row aggregate, like every
@@ -176,7 +176,7 @@ object Graph {
     // distinct collapses duplicate candidate pairs to unit weight
     val sym = undirectedEdges(pairs.filter(col(aCol) =!= col(bCol)),
         aCol, bCol, "src", "dst")
-      .localCheckpoint(true)
+      .checkpointed
     val deg = sym.groupBy(col("src"))
       .agg(count(lit(1)).cast("long").as("out_w"))
     val seedSet = seeds.select(col(idCol)).distinct()
@@ -186,7 +186,7 @@ object Graph {
       .join(seedSet.withColumn("__s", lit(1L)), Seq(idCol), "left")
       .select(col(idCol), coalesce(col("__s"), lit(0L)).as("__s"))
       .crossJoin(nSeeds)
-      .localCheckpoint(true)
+      .checkpointed
     var rank = verts.select(col(idCol),
       expr(s"CAST(__s * $RScale AS $dec) div n_seeds")
         .cast("long").as("rank_q"))
@@ -257,22 +257,21 @@ object Graph {
       vertices: DataFrame, idCol: String, rounds: Int): DataFrame =
     lpMemo(edges, aCol, bCol, vertices, idCol, rounds) {
       labelPropagationUncached(edges, aCol, bCol, vertices, idCol, rounds)
-        .localCheckpoint(true)
+        .checkpointed
     }
 
   // private[graft]: plan-shape assertions target the unmemoized chain
   private[graft] def labelPropagationUncached(edges: DataFrame,
       aCol: String, bCol: String, vertices: DataFrame, idCol: String,
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = Checkpoints.owned {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.GraftBridge
     val sym = undirectedEdges(edges, aCol, bCol, "__src", "__dst")
       .filter(col("__src") =!= col("__dst"))
-      .localCheckpoint(true)
+      .checkpointed
     var labels = vertices.select(col(idCol).as("__id"),
         col(idCol).as("__lbl"))
-      .localCheckpoint(true)
+      .checkpointed
     val w = Window.partitionBy(col("__id"))
       .orderBy(col("__c").desc, col("__lbl").asc)
     for (_ <- 1 to rounds) {
@@ -283,14 +282,11 @@ object Graph {
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .select(col("__id"), col("__lbl").as("__new"))
-      val next = labels
+      labels = Checkpoints.replace(labels)(labels
         .join(pick, Seq("__id"), "left")
         .select(col("__id"), coalesce(col("__new"), col("__lbl")).as("__lbl"))
-        .localCheckpoint(true)
-      GraftBridge.unpersistCheckpoint(labels)
-      labels = next
+        .checkpointed)
     }
-    GraftBridge.unpersistCheckpoint(sym)
     labels.select(col("__id").as(idCol), col("__lbl").as("label"))
   }
 
@@ -315,7 +311,7 @@ object Graph {
     */
   def triangleCounts(edges: DataFrame, aCol: String, bCol: String,
       vertices: DataFrame, idCol: String): DataFrame = {
-    val und = canonicalEdges(edges, aCol, bCol).localCheckpoint(true)
+    val und = canonicalEdges(edges, aCol, bCol).checkpointed
     val deg = und.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
     // orient by (degree, id): u -> v iff (d_u, u) < (d_v, v)
@@ -328,7 +324,7 @@ object Graph {
           struct(col("a").as("u"), col("b").as("w")))
           .otherwise(struct(col("b").as("u"), col("a").as("w"))).as("__e"))
       .select(col("__e.u").as("u"), col("__e.w").as("w"))
-      .localCheckpoint(true)
+      .checkpointed
     // wedges at the one two-out-edge vertex of each triangle
     val wedges = orient.select(col("u"), col("w").as("v1"))
       .join(orient.select(col("u"), col("w").as("v2")), Seq("u"))
@@ -447,36 +443,29 @@ object Graph {
     * INDUCED degree — 0 rows when the whole graph peels away.
     */
   def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = Checkpoints.owned {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import org.apache.spark.sql.GraftBridge
     val sym = undirectedEdges(edges, aCol, bCol, "__src", "__dst")
       .filter(col("__src") =!= col("__dst"))
-      .localCheckpoint(true)
+      .checkpointed
     def induced(alive: DataFrame): DataFrame = sym
       .join(alive.select(col("__id").as("__src")), Seq("__src"), "leftsemi")
       .join(alive.select(col("__id").as("__dst")), Seq("__dst"), "leftsemi")
       .groupBy(col("__src").as("__id"))
       .agg(count(lit(1)).as("__deg"))
     var alive = sym.select(col("__src").as("__id")).distinct()
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val next = induced(alive)
+      .checkpointed
+    for (_ <- 1 to rounds)
+      alive = Checkpoints.replace(alive)(induced(alive)
         .filter(col("__deg") >= k)
         .select(col("__id"))
-        .localCheckpoint(true)
-      GraftBridge.unpersistCheckpoint(alive)
-      alive = next
-    }
-    // materialize before dropping the checkpoints it reads (survivor
-    // degrees are core-sized — bounded output, not corpus data)
-    val out = induced(alive)
+        .checkpointed)
+    // materialized, so the scope frees the edges and survivors it reads
+    // (survivor degrees are core-sized — bounded output, not corpus data)
+    induced(alive)
       .select(col("__id").as(idOut(aCol, bCol)), col("__deg").as("degree"))
-      .localCheckpoint(true)
-    GraftBridge.unpersistCheckpoint(sym)
-    GraftBridge.unpersistCheckpoint(alive)
-    out
+      .checkpointed
   }
 
   /** Output id column name for vertex results derived from an (aCol,
@@ -514,7 +503,7 @@ object Graph {
     * (token, auth_q).
     */
   def hitsAuthorities(docs: DataFrame, idCol: String, textCol: String,
-      iters: Int, k: Int): DataFrame = {
+      iters: Int, k: Int): DataFrame = Checkpoints.owned {
     require(iters >= 1 && iters <= 8, s"iters in [1,8], got $iters")
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.GraftBridge
@@ -524,7 +513,7 @@ object Graph {
         explode(Text.tokens(col(textCol))).as("__tok"))
       .where(col("__tok").rlike("^[a-z]+$"))
       .distinct()
-      .localCheckpoint(true)
+      .checkpointed
     // ~250k edges per round partition (each round's joins and folds
     // scan edge-sized streams): sf-sized corpora run a handful of
     // partitions, a 10^12-edge graph derives ~4M — capped as a
@@ -535,50 +524,45 @@ object Graph {
     def bind(df: DataFrame): DataFrame =
       GraftBridge.dataFrame(ts, GraftBridge.logicalPlan(df))
     val edgesByDoc = bind(edges0).repartition(parts, col("__doc"))
-      .localCheckpoint(true)
-    val edgesByTok = bind(edges0).repartition(parts, col("__tok"))
-      .localCheckpoint(true)
-    GraftBridge.unpersistCheckpoint(edges0)
-    // distinct over the doc-partitioned checkpoint: no exchange, and the
-    // result carries hash(__doc, parts) into the first round's join
-    var hubs = edgesByDoc.select(col("__doc")).distinct()
-      .withColumn("__h", lit(scale))
-    var curA: DataFrame = null
-    var curH: DataFrame = null
-    var auth: DataFrame = null
-    for (_ <- 1 to iters) {
-      // both sides hash(__doc, parts): the shuffle-hash join plans zero
-      // exchanges; the round's one exchange is the token-domain fold
+      .checkpointed
+    val edgesByTok = Checkpoints.replace(edges0)(bind(edges0)
+      .repartition(parts, col("__tok")).checkpointed)
+    // a = G^T h, then h = G a: both join sides hash-partitioned on the
+    // key, so a half-round's one exchange is its vertex-domain fold
+    def authority(hubs: DataFrame): DataFrame = {
       val araw = edgesByDoc.join(hubs.hint("shuffle_hash"), Seq("__doc"))
         .groupBy(col("__tok")).agg(sum(col("__h")).as("__ar"))
-        .localCheckpoint(true)
-      if (curA != null) GraftBridge.unpersistCheckpoint(curA)
-      curA = araw
+        .checkpointed
       val amax = araw.agg(max(col("__ar")).as("__am"))
       // decimal product: __ar * 10^6 would wrap long past ~9e6 docs;
       // IntegralDivide's long result is safe (quotient <= 10^6)
-      auth = araw.crossJoin(broadcast(amax))
+      araw.crossJoin(broadcast(amax))
         .select(col("__tok"),
           expr(s"(CAST(__ar AS decimal(38,0)) * $scale) div __am").as("__a"))
+    }
+    def hubsOf(auth: DataFrame): DataFrame = {
       val hraw = edgesByTok.join(auth.hint("shuffle_hash"), Seq("__tok"))
         .groupBy(col("__doc")).agg(sum(col("__a")).as("__hr"))
-        .localCheckpoint(true)
-      if (curH != null) GraftBridge.unpersistCheckpoint(curH)
-      curH = hraw
+        .checkpointed
       val hmax = hraw.agg(max(col("__hr")).as("__hm"))
-      hubs = hraw.crossJoin(broadcast(hmax))
+      hraw.crossJoin(broadcast(hmax))
         .select(col("__doc"),
           expr(s"(CAST(__hr AS decimal(38,0)) * $scale) div __hm").as("__h"))
+    }
+    // distinct over the doc-partitioned checkpoint: no exchange, and the
+    // result carries hash(__doc, parts) into the first round's join
+    var auth = authority(edgesByDoc.select(col("__doc")).distinct()
+      .withColumn("__h", lit(scale)))
+    var hubs = hubsOf(auth)
+    for (_ <- 2 to iters) {
+      auth = Checkpoints.replace(auth)(authority(hubs))
+      hubs = Checkpoints.replace(hubs)(hubsOf(auth))
     }
     val out = auth
       .select(col("__tok").as("token"), col("__a").as("auth_q"))
       .orderBy(col("auth_q").desc, col("token").asc)
       .limit(k)
-      .localCheckpoint(true)
-    GraftBridge.unpersistCheckpoint(edgesByDoc)
-    GraftBridge.unpersistCheckpoint(edgesByTok)
-    if (curA != null) GraftBridge.unpersistCheckpoint(curA)
-    if (curH != null) GraftBridge.unpersistCheckpoint(curH)
+      .checkpointed
     GraftBridge.dataFrame(spark0, GraftBridge.logicalPlan(out))
   }
 
@@ -635,16 +619,16 @@ object Graph {
     * isolated).
     */
   def harmonicCentrality(edges: DataFrame, aCol: String, bCol: String,
-      vertices: DataFrame, idCol: String, maxHops: Int): DataFrame = {
+      vertices: DataFrame, idCol: String,
+      maxHops: Int): DataFrame = Checkpoints.owned {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    import org.apache.spark.sql.GraftBridge
     val sym = undirectedEdges(edges, aCol, bCol, "__src", "__dst")
       .filter(col("__src") =!= col("__dst"))
-      .localCheckpoint(true)
+      .checkpointed
     var reached = sym
       .select(col("__src").as("__u"), col("__dst").as("__v"),
         lit(1L).as("__d"))
-      .localCheckpoint(true)
+      .checkpointed
     var frontier = reached
     for (h <- 2 to maxHops) {
       val next = frontier
@@ -656,12 +640,10 @@ object Graph {
         .join(reached.select(col("__u"), col("__v")), Seq("__u", "__v"),
           "left_anti")
         .withColumn("__d", lit(h.toLong))
-        .localCheckpoint(true)
-      val merged = reached.unionByName(next).localCheckpoint(true)
-      GraftBridge.unpersistCheckpoint(reached)
-      GraftBridge.unpersistCheckpoint(frontier)
-      reached = merged
-      frontier = next
+        .checkpointed
+      reached = Checkpoints.replace(reached)(
+        reached.unionByName(next).checkpointed)
+      frontier = Checkpoints.replace(frontier)(next)
     }
     val agg = reached.groupBy(col("__u").as(idCol))
       .agg(count(lit(1)).as("n_reached"),
@@ -693,7 +675,7 @@ object Graph {
   def modularity(edges: DataFrame, aCol: String, bCol: String,
       communities: DataFrame, idCol: String,
       labelCol: String = "label"): DataFrame = {
-    val und = canonicalEdges(edges, aCol, bCol).localCheckpoint(true)
+    val und = canonicalEdges(edges, aCol, bCol).checkpointed
     val lab = communities.select(col(idCol).as("__id"),
       col(labelCol).cast("long").as("__lbl"))
     val m = und.count()

@@ -184,7 +184,7 @@ object LangModel {
       // bounded far below the occurrence stream it came from.
       val cab = pairs.groupBy(gc ++ Seq(col("tid_a"), col("tid_b")): _*)
         .agg(count(lit(1)).cast("long").as("c_ab"))
-        .localCheckpoint(true)
+        .checkpointed
       val ca = cab.groupBy(gc :+ col("tid_a"): _*)
         .agg(sum(col("c_ab")).cast("long").as("c_a"),
           count(lit(1)).cast("long").as("n1a"))
@@ -215,7 +215,7 @@ object LangModel {
         .withColumn("pkn", col("pkn_q").cast("double") / lit(1e9))
         .select(gc ++ Seq(col("tid_a"), col("tid_b"), col("c_ab"),
           col("pkn_q"), col("pkn")): _*)
-        .localCheckpoint(true)
+        .checkpointed
     }
 
   /** Jelinek-Mercer interpolated bigram LM over the bigram event
@@ -245,7 +245,7 @@ object LangModel {
     val pairs = adjacentPairs(docs.select(col(textCol)), textCol, Nil)
     val cab = pairs.groupBy(col("tid_a"), col("tid_b"))
       .agg(count(lit(1)).cast("long").as("c_ab"))
-      .localCheckpoint(true)
+      .checkpointed
     val ca = cab.groupBy(col("tid_a"))
       .agg(sum(col("c_ab")).cast("long").as("c_a"))
     val cb = cab.groupBy(col("tid_b"))
@@ -326,7 +326,7 @@ object LangModel {
     // join) — materialized once, as the bigram table (see knBigramProbs).
     val cabc = triples.groupBy(col("tid_a"), col("tid_b"), col("tid_c"))
       .agg(count(lit(1)).cast("long").as("c_abc"))
-      .localCheckpoint(true)
+      .checkpointed
     val cab = cabc.groupBy(col("tid_a"), col("tid_b"))
       .agg(sum(col("c_abc")).cast("long").as("c_ab"),
         count(lit(1)).cast("long").as("n1fw"))
@@ -371,7 +371,7 @@ object LangModel {
       lm: DataFrame, groupCols: Seq[String] = Nil): DataFrame =
     scoreMemo(docs, lm, idCol, textCol, groupCols) {
       knScoreDocsUncached(docs, idCol, textCol, lm, groupCols)
-        .localCheckpoint(true)
+        .checkpointed
     }
 
   // private[graft]: plan-shape assertions target the unmemoized chain
@@ -432,7 +432,7 @@ object LangModel {
         .withColumn("bits_q", expr("__sbq div n_scored"))
         .withColumn("bits", round(col("bits_q").cast("double") / 65536.0, 6))
         .select(col(idCol), col("n_scored"), col("bits_q"), col("bits"))
-        .localCheckpoint(true)
+        .checkpointed
     }
 
   /** CCNet-style LM-fit bucketing (Wenzek et al. 2020, arXiv:1911.00359):

@@ -48,14 +48,15 @@ object Mixture {
   private val MaxLwQ = 41L * 65536L
 
   def doremiWeights(domainLoss: DataFrame, domainCol: String,
-      lossQCol: String, rounds: Int = 4, etaQ: Long = 65536L): DataFrame = {
+      lossQCol: String, rounds: Int = 4,
+      etaQ: Long = 65536L): DataFrame = Checkpoints.owned {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(etaQ >= 0, s"etaQ must be >= 0, got $etaQ")
     var cur = domainLoss
       .select(col(domainCol), col(lossQCol).cast("long").as("__loss"))
       .withColumn("__lw", lit(0L))
       .withColumn("__w", FixLog.exp2qCol(col("__lw")))
-      .localCheckpoint(true)
+      .checkpointed
     for (_ <- 1 to rounds) {
       val tot = cur.agg(sum(col("__w")).as("__sw"),
         sum((col("__w").cast("decimal(19,0)") * col("__loss"))
@@ -63,8 +64,7 @@ object Mixture {
       // checkpoint per round (the bradleyTerry pattern): the self-
       // referential cross-join otherwise doubles the logical plan each
       // round — 2^rounds analysis cost for callers passing rounds >> 4
-      val prev = cur
-      cur = cur.crossJoin(broadcast(tot))
+      cur = Checkpoints.replace(cur)(cur.crossJoin(broadcast(tot))
         // weighted mean loss under the CURRENT weights (integer div)
         .withColumn("__mean",
           expr("CAST(__swl div CAST(__sw AS decimal(38,0)) AS BIGINT)"))
@@ -78,8 +78,7 @@ object Mixture {
             lit(MaxLwQ)))
         .withColumn("__w", FixLog.exp2qCol(col("__lw")))
         .select(col(domainCol), col("__loss"), col("__lw"), col("__w"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(prev)
+        .checkpointed)
     }
     val norm = cur.agg(sum(col("__w")).as("__sw"))
     cur.crossJoin(broadcast(norm))

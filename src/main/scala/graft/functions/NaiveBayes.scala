@@ -163,13 +163,8 @@ object NaiveBayes {
   private def rankedScores(train: DataFrame, score: DataFrame,
       idCol: String, textCol: String, classCol: String): DataFrame =
     memo(train, score, idCol, textCol, classCol) {
-      val (chain, toks) =
-        scoringChain(train, score, idCol, textCol, classCol)
-      val scored = chain.localCheckpoint(true)
-      // the memo's checkpoint holds the result: the same-corpus token
-      // checkpoint the chain read is garbage now
-      toks.foreach(GraftBridge.unpersistCheckpoint)
-      scored
+      rankedScoresUncached(train, score, idCol, textCol, classCol)
+        .checkpointed
     }
 
   // private[graft]: PlanSpec asserts the scoring chain's plan shape
@@ -177,15 +172,7 @@ object NaiveBayes {
   // checkpoint scan
   private[graft] def rankedScoresUncached(train: DataFrame,
       score: DataFrame, idCol: String, textCol: String,
-      classCol: String): DataFrame =
-    scoringChain(train, score, idCol, textCol, classCol)._1
-
-  /** The scoring chain, and the token checkpoint it reads when train and
-    * score are the same corpus (freed by the caller once the chain is
-    * materialized). */
-  private def scoringChain(train: DataFrame, score: DataFrame,
-      idCol: String, textCol: String, classCol: String)
-      : (DataFrame, Option[DataFrame]) = {
+      classCol: String): DataFrame = {
     // SEEN-PAIR DECOMPOSITION of the score sum: with
     // w_q(t,c) = log2q(n_tc + 1) − log2q(N_c + V) and log2q(1) the
     // in-vocabulary-but-unseen-for-c weight's first term,
@@ -202,20 +189,20 @@ object NaiveBayes {
     // occurrence stream.
     val sameCorpus = GraftBridge.logicalPlan(train).canonicalized ==
       GraftBridge.logicalPlan(score).canonicalized
-    val (counts, occ, toksCp) =
+    val (counts, occ) =
       if (sameCorpus) {
         val toks = train.select(col(idCol), col(classCol).as("class"),
             explode(Text.tokens(col(textCol))).as("token"))
           .where(col("token").rlike("^[a-z]+$"))
-          .localCheckpoint(true)
+          .checkpointed
         (toks.groupBy(col("class"), col("token"))
            .agg(count(lit(1)).as("n")),
-         toks.select(col(idCol), col("token")), Some(toks))
+         toks.select(col(idCol), col("token")))
       } else
         (tokenClassCounts(train, textCol, classCol),
          score.select(col(idCol),
              explode(Text.tokens(col(textCol))).as("token"))
-           .where(col("token").rlike("^[a-z]+$")), None)
+           .where(col("token").rlike("^[a-z]+$")))
     val classes = counts.groupBy(col("class")).agg(sum(col("n")).as("__nc"))
     val v = counts.select(col("token")).distinct()
       .agg(count(lit(1)).as("__v"))
@@ -246,6 +233,6 @@ object NaiveBayes {
           col("__prior_q")).as("score_q"))
     val pick = Window.partitionBy(col(idCol))
       .orderBy(col("score_q").desc, col("class").asc)
-    (perClass.withColumn("__rn", row_number().over(pick)), toksCp)
+    perClass.withColumn("__rn", row_number().over(pick))
   }
 }

@@ -27,12 +27,9 @@ import org.apache.spark.sql.{Dataset, GraftBridge}
   * reclaims the blocks once no consumer references them. A failed build
   * leaves the existing slots intact.
   *
-  * Release: [[release]] (and [[Memos.releaseAll]], which walks the
-  * registry every memo joins on construction) frees every checkpointed
-  * frame reachable in each value — a DataFrame, a tuple or a Seq of
-  * them; other values hold no storage. Freeing is best-effort: a stopped
-  * context's blocks are already gone and unpersisting them throws, which
-  * is swallowed.
+  * A build is a [[Checkpoints]] scope whose surviving checkpoints belong
+  * to the slot; [[release]] (and [[Memos.releaseAll]] over every memo)
+  * frees them with [[Checkpoints.free]], best-effort.
   */
 private[graft] final class PlanMemo[V] {
   private val lock = new Object
@@ -58,7 +55,7 @@ private[graft] final class PlanMemo[V] {
           slots = hit :: slots.filterNot(_ eq hit)
           v
         case None =>
-          val v = build
+          val v = Checkpoints.owned(build, memo = true)
           PlanMemo.builds.incrementAndGet()
           slots = ((full, v) :: slots).take(PlanMemo.Capacity)
           v
@@ -70,13 +67,13 @@ private[graft] final class PlanMemo[V] {
     * no live consumers of the memoized frames remain). */
   def release(): Unit = lock.synchronized {
     slots.foreach { case (_, v) =>
-      try PlanMemo.free(v) catch { case NonFatal(_) => () }
+      try Checkpoints.free(v) catch { case NonFatal(_) => () }
     }
     slots = Nil
   }
 
-  /** Whether any slot currently holds a value (test hook). */
-  private[graft] def isOccupied: Boolean = lock.synchronized(slots.nonEmpty)
+  /** The values the slots hold, most recently used first (test hook). */
+  private[graft] def held: Seq[V] = lock.synchronized(slots.map(_._2))
 }
 
 private[graft] object PlanMemo {
@@ -84,13 +81,6 @@ private[graft] object PlanMemo {
     * (k=5/k=10 rankings, corpus-wide and per-language LMs, raw and
     * residual PQ trainings, ...) so no family thrashes. */
   val Capacity = 12
-
-  private def free(v: Any): Unit = v match {
-    case df: Dataset[_] => GraftBridge.unpersistCheckpoint(df)
-    case s: Iterable[_] => s.foreach(free)
-    case p: Product => p.productIterator.foreach(free)
-    case _ => ()
-  }
 
   // Session-global hit/build counters across EVERY memo instance — the
   // bench harness snapshots them around each catalog entry to attribute

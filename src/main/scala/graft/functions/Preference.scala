@@ -58,7 +58,7 @@ object Preference {
   private val Q = 1099511627776L // 2^40
 
   def bradleyTerry(pairs: DataFrame, winCol: String, loseCol: String,
-      rounds: Int = 8): DataFrame = {
+      rounds: Int = 8): DataFrame = Checkpoints.owned {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val spark = pairs.sparkSession
     val edges0 = pairs
@@ -71,7 +71,7 @@ object Preference {
       .where(col("__a").isNotNull && col("__b").isNotNull)
       .groupBy(col("__a"), col("__b"))
       .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .checkpointed
     val nItems = edges0.select(col("__a").as("item"))
       .unionByName(edges0.select(col("__b").as("item"))).distinct().count()
     // ~100k items per round partition; the cap is a driver-metadata
@@ -152,11 +152,10 @@ object Preference {
     // caches can be freed — without it every downstream action would
     // re-walk the full `rounds`-deep lineage.
     val out = spark.createDataFrame(rows.toJavaRDD(), schema)
-      .localCheckpoint(true)
+      .checkpointed
     w.unpersist(false)
     if (prevUpd != null) prevUpd.unpersist(false)
     edges.unpersist(false)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(edges0)
     out
   }
 }

@@ -115,7 +115,7 @@ object Quant {
     pqMemo(corpus, m, subDim, k, iters, idCol, vecCol) {
       val (codes, cb) = pqModelUncached(corpus, m, subDim, k, iters,
         idCol, vecCol)
-      (codes.localCheckpoint(true), cb.localCheckpoint(true))
+      (codes.checkpointed, cb.checkpointed)
     }
 
   // private[graft]: plan-shape assertions target the unmemoized chain

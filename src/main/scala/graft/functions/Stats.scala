@@ -1230,7 +1230,7 @@ object Stats {
         explode(Text.tokens(col(textCol))).as("__w"))
       .where(col("__w").rlike("^[a-z]+$"))
       .groupBy(col("__grp"), col("__w")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .checkpointed
     val ng = cnt.groupBy(col("__grp")).agg(sum(col("__c")).as("__ntok"))
     val topw = broadcast(cnt.groupBy(col("__w"))
       .agg(sum(col("__c")).as("__tot"))
@@ -1247,7 +1247,7 @@ object Stats {
       .select(col("__grp"), col("__w"),
         fixedPointExact(coalesce(col("__c"), lit(0L)), col("__ntok"))
           .as("__f"))
-      .localCheckpoint(true)
+      .checkpointed
     // Same integers as counting ng/topw directly — the grid holds every
     // (group, top word) pair exactly once — without re-running either
     // chain per consts consumer.

@@ -74,17 +74,17 @@ object Suffix {
   private val MaxCompositeRank = 3037000498L
 
   def rankTables(docs: DataFrame, idCol: String, textCol: String,
-      rounds: Int): Seq[DataFrame] = {
+      rounds: Int): Seq[DataFrame] = Checkpoints.owned {
     require(rounds >= 1 && rounds <= 10, s"rounds in [1,10], got $rounds")
     val spark = docs.sparkSession
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val toks = stream(docs, idCol, textCol).localCheckpoint(true)
+    val toks = stream(docs, idCol, textCol).checkpointed
     val n = toks.count()
     // dense rank of the token stream directly (no distinct + rank-the-
     // vocabulary + join-back: one corpus exchange and join fewer)
     var cur = GroupRank.denseRankAll(toks, Seq("__tok"), "__r")
       .select(col("__id"), col("__pos"), col("__r"))
-      .localCheckpoint(true)
+      .checkpointed
     val tables = scala.collection.mutable.ArrayBuffer[DataFrame](cur)
     var span = 1L
     // max rank of the last DENSE table: the convergence probe, and the
@@ -136,7 +136,7 @@ object Suffix {
         cur = GraftBridge.relabelCheckpointLayout(
           paired.select(col("__id"), col("__pos"),
               (col("__ra") * (maxRank + 1L) + col("__rb")).as("__r"))
-            .localCheckpoint(true),
+            .checkpointed,
           Seq("__id"), Seq(("__id", true), ("__pos", true)), parts)
         dense = false
         idLaid = true
@@ -150,7 +150,7 @@ object Suffix {
         // exchanges, and its corpus-sized sorts
         cur = GroupRank.denseRankAll(paired, Seq("__ra", "__rb"), "__r")
           .select(col("__id"), col("__pos"), col("__r"))
-          .localCheckpoint(true)
+          .checkpointed
         dense = true
         idLaid = false
         maxRank = cur.agg(max(col("__r"))).head.getLong(0)
@@ -165,9 +165,6 @@ object Suffix {
     // fires on dense rounds), so this is an invariant, not a repair
     assert(dense, "rankTables ended on a composite (non-dense) table")
     while (tables.size < rounds + 1) tables += cur
-    // every per-round table is eagerly materialized; the raw stream
-    // checkpoint has no further reader
-    GraftBridge.unpersistCheckpoint(toks)
     tables.toSeq
   }
 
@@ -198,7 +195,7 @@ object Suffix {
     sharedRankTables(docs, idCol, textCol, rounds).last
       .select(col("__id").as(idCol), col("__pos").as("pos"),
         col("__r").as("srank"))
-      .localCheckpoint(true)
+      .checkpointed
 
   /** Adjacent-suffix LCPs (capped at 2^rounds - 1 tokens): for every
     * neighboring pair in suffix-rank order, the exact shared-prefix
@@ -255,7 +252,7 @@ object Suffix {
     // Memos.releaseAll)
     pairs.select(col("__ida").as("id_a"), col("__posa").as("pos_a"),
       col("__idb").as("id_b"), col("__posb").as("pos_b"),
-      col("__lcp").as("lcp")).localCheckpoint(true)
+      col("__lcp").as("lcp")).checkpointed
   }
 
   /** The top-`k` longest repeated token substrings (L-bounded): maximal

@@ -86,7 +86,7 @@ object UnigramLm {
 
     val types = wordTypes(docs, textCol)
       .where(col("word").rlike("\\A[\\x21-\\x7e]+\\z"))
-      .localCheckpoint(eager = true)
+      .checkpointed
     val seed = seedVocab(types, maxPieceLen, seedSize)
     // uniform init over the seed: equal counts
     var counts: Seq[(String, Long)] =

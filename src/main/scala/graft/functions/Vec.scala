@@ -248,7 +248,7 @@ object Vec {
       excludeSelf: Boolean = true): DataFrame =
     bfMemo(queries, corpus, k, idCol, vecCol, excludeSelf) {
       bruteForceTopKUncached(queries, corpus, k, idCol, vecCol, excludeSelf)
-        .localCheckpoint(true)
+        .checkpointed
     }
 
   private[graft] def bruteForceTopKUncached(queries: DataFrame,
@@ -416,7 +416,7 @@ object Vec {
 
   private[graft] def nnDescentUncached(vecs: DataFrame, idCol: String,
       vecCol: String, k: Int, nBits: Int, rounds: Int,
-      ringWindow: Int): DataFrame = {
+      ringWindow: Int): DataFrame = Checkpoints.owned {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     require(ringWindow >= 2, s"ringWindow must be >= 2, got $ringWindow")
@@ -426,7 +426,7 @@ object Vec {
         col(vecCol).as("__v"),
         sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol), col(vecCol)))
           .as("__n"))
-      .localCheckpoint(true)
+      .checkpointed
     // One pass over the checkpointed base prices the planner choice
     // below: whether the vector table fits the session's own broadcast
     // budget (the checkpoint is a LogicalRDD with no size statistics,
@@ -460,51 +460,47 @@ object Vec {
     val seedRaw = local
       .unionByName(ring.select(col("id_a").as("__s"), col("id_b").as("__d")))
       .unionByName(ring.select(col("id_b").as("__s"), col("id_a").as("__d")))
-    if (vecsFit)
-      return nndRoundsLocal(spark0, base0, seedRaw, k, rounds)
-    val seed = seedRaw.distinct()
-    def simRank(cand: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("__s"))
-        .orderBy(col("sim").desc, col("__d").asc)
-      val dSide = base0.select(col("__id").as("__d"), col("__v").as("__vd"),
-        col("__n").as("__nd"))
-      val sSide = base0.select(col("__id").as("__s"), col("__v").as("__vs"),
-        col("__n").as("__ns"))
-      // d-join first (the candidate rows are still bare long pairs),
-      // s-join last so the window's hash(__s) requirement is satisfied
-      // by the join's own output partitioning.
-      cand.join(dSide, Seq("__d"))
-        .join(sSide, Seq("__s"))
-        .select(col("__s"), col("__d"),
-          pairSim(col("__vs"), col("__vd"), col("__ns"), col("__nd"))
-            .as("sim"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
+    if (vecsFit) nndRoundsLocal(spark0, base0, seedRaw, k, rounds) else {
+      val seed = seedRaw.distinct()
+      def simRank(cand: DataFrame): DataFrame = {
+        val w = Window.partitionBy(col("__s"))
+          .orderBy(col("sim").desc, col("__d").asc)
+        val dSide = base0.select(col("__id").as("__d"), col("__v").as("__vd"),
+          col("__n").as("__nd"))
+        val sSide = base0.select(col("__id").as("__s"), col("__v").as("__vs"),
+          col("__n").as("__ns"))
+        // d-join first (the candidate rows are still bare long pairs),
+        // s-join last so the window's hash(__s) requirement is satisfied
+        // by the join's own output partitioning.
+        cand.join(dSide, Seq("__d"))
+          .join(sSide, Seq("__s"))
+          .select(col("__s"), col("__d"),
+            pairSim(col("__vs"), col("__vd"), col("__ns"), col("__nd"))
+              .as("sim"))
+          .withColumn("rank", row_number().over(w).cast("long"))
+          .filter(col("rank") <= k)
+      }
+      var g = simRank(seed).checkpointed
+      for (_ <- 1 to rounds) {
+        // the full local join runs on the SYMMETRIZED edge set (Dong et
+        // al.'s new/old ∪ reverse lists): a node meets its neighbors'
+        // neighbors regardless of edge direction
+        val e = g.select(col("__s"), col("__d"))
+        val sym = e.unionByName(
+          e.select(col("__d").as("__s"), col("__s").as("__d"))).distinct()
+        val cand = sym.as("x")
+          .join(sym.withColumnRenamed("__s", "__m").as("y"),
+            col("x.__d") === col("y.__m"))
+          .select(col("x.__s").as("__s"), col("y.__d").as("__d"))
+          .filter(col("__s") =!= col("__d"))
+          .unionByName(sym)
+          .distinct()
+        g = Checkpoints.replace(g)(simRank(cand).checkpointed)
+      }
+      val out = g.select(col("__s").as("node_id"),
+        col("__d").as("neighbor_id"), col("sim"), col("rank"))
+      GraftBridge.dataFrame(spark0, GraftBridge.logicalPlan(out))
     }
-    var g = simRank(seed).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      // the full local join runs on the SYMMETRIZED edge set (Dong et
-      // al.'s new/old ∪ reverse lists): a node meets its neighbors'
-      // neighbors regardless of edge direction
-      val e = g.select(col("__s"), col("__d"))
-      val sym = e.unionByName(
-        e.select(col("__d").as("__s"), col("__s").as("__d"))).distinct()
-      val cand = sym.as("x")
-        .join(sym.withColumnRenamed("__s", "__m").as("y"),
-          col("x.__d") === col("y.__m"))
-        .select(col("x.__s").as("__s"), col("y.__d").as("__d"))
-        .filter(col("__s") =!= col("__d"))
-        .unionByName(sym)
-        .distinct()
-      val prev = g
-      g = simRank(cand).localCheckpoint(true)
-      GraftBridge.unpersistCheckpoint(prev)
-    }
-    val out = g.select(col("__s").as("node_id"),
-      col("__d").as("neighbor_id"), col("sim"), col("rank"))
-    // the seed's leaves: base0 and the ring's pairs
-    GraftBridge.unpersistCheckpoint(seedRaw)
-    GraftBridge.dataFrame(spark0, GraftBridge.logicalPlan(out))
   }
 
   /** Exact [[pairSim]] replay for the in-memory round path:
@@ -689,12 +685,10 @@ object Vec {
       .repartition(sqlParts, col("node_id"))
       .sortWithinPartitions(col("node_id").asc, col("sim").desc,
         col("neighbor_id").asc)
-      .localCheckpoint(true)
+      .checkpointed
     // The eager checkpoint holds the last round's output: no task reads
-    // the vector map or the seed's leaves (base0, the ring's pairs) again,
-    // so free them now, not whenever a GC lets the ContextCleaner do it.
+    // the vector map again.
     bc.destroy()
-    GraftBridge.unpersistCheckpoint(seedRaw)
     // localCheckpoint under AQE records UnknownPartitioning; re-declare
     // the layout the plan above genuinely produced so consumers reuse
     // it exchange- and sort-free (the memo stores this frame as is).
@@ -743,7 +737,7 @@ object Vec {
       val adj = e.unionByName(
           e.select(col("__d").as("__s"), col("__s").as("__d")))
         .distinct()
-        .localCheckpoint(true)
+        .checkpointed
       val entry = base
         .select(col("__id"),
           Sampling.hashOrder(col("__id")).as("__h"))
@@ -775,12 +769,13 @@ object Vec {
           .unionByName(bm.select(col("__q"), col("__d")))
           .filter(col("__q") =!= col("__d"))
           .distinct()
-        bm = score(cand).filter(col("rank") <= beam).localCheckpoint(true)
+        bm = Checkpoints.replace(bm)(
+          score(cand).filter(col("rank") <= beam).checkpointed)
       }
       bm.filter(col("rank") <= k)
         .select(col("__q").as("query_id"), col("__d").as("neighbor_id"),
           col("sim"), col("rank"))
-        .localCheckpoint(true)
+        .checkpointed
     }
   }
 
@@ -849,7 +844,7 @@ object Vec {
       vecCol: String = "embedding"): (DataFrame, DataFrame) =
     kmMemo(corpus, k, iters, idCol, vecCol) {
       val (a, c) = kmeansModelUncached(corpus, k, iters, idCol, vecCol)
-      (a.localCheckpoint(true), c.localCheckpoint(true))
+      (a.checkpointed, c.checkpointed)
     }
 
   // private[functions]: pqModel's m CONCURRENT subspace trainings call
@@ -998,7 +993,7 @@ object Vec {
     ivfMemo(corpus, queries, k, nProbe, cellCol, idCol, vecCol,
         excludeSelf) {
       ivfTopKUncached(corpus, queries, k, nProbe, cellCol, idCol, vecCol,
-        excludeSelf).localCheckpoint(true)
+        excludeSelf).checkpointed
     }
 
   private[graft] def ivfTopKUncached(corpus: DataFrame, queries: DataFrame,
@@ -1108,7 +1103,7 @@ object Vec {
     val (centroids, resid) = residMemo(corpus, cellCol, idCol, vecCol) {
       val cents = groupCentroids(
         corpus.select(col(cellCol).as("cell"), col(vecCol)), "cell", vecCol)
-        .localCheckpoint(true)
+        .checkpointed
       val res = corpus.select(col(idCol), col(cellCol).as("cell"),
           col(vecCol))
         .join(broadcast(cents), Seq("cell"))
@@ -1116,7 +1111,7 @@ object Vec {
           zip_with(col(vecCol), col("centroid"),
             (x, c) => (x.cast("double") - c.cast("double")).cast("float"))
             .as(vecCol))
-        .localCheckpoint(true)
+        .checkpointed
       (cents, res)
     }
     val (codes, codebook) = Quant.pqModel(
@@ -1428,39 +1423,34 @@ object Vec {
     * sequence (round 1 emits 0.0: no prior centers).
     */
   def kCenters(corpus: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      idCol: String = "vec_id",
+      vecCol: String = "embedding"): DataFrame = Checkpoints.owned {
     require(k >= 1, s"k must be >= 1, got $k")
-    import org.apache.spark.sql.GraftBridge
     val dot = graft.plans.VecExpressions.dotProduct _
     val pts = corpus.select(col(idCol), col(vecCol))
     val first = pts.orderBy(col(idCol).asc).limit(1)
       .select(col(idCol), col(vecCol), lit(0.0).as("dmin"))
-      .localCheckpoint(true)
+      .checkpointed
     var picks = Vector(first)
-    var lastPick = first
-    var run: DataFrame = null
-    var r = 1
+    var run = pts
     var exhausted = first.isEmpty // empty corpus: return an empty frame
-    while (r < k && !exhausted) {
-      val c = broadcast(lastPick.select(col(vecCol).as("cvec")))
+    while (picks.size < k && !exhausted) {
+      val c = broadcast(picks.last.select(col(vecCol).as("cvec")))
       val d2 = round(greatest(lit(0.0),
         dot(col(vecCol), col(vecCol)) -
           lit(2.0) * dot(col(vecCol), col("cvec")) +
           dot(col("cvec"), col("cvec"))), 6)
-      val upd = (if (run == null) pts.crossJoin(c).withColumn("dmin", d2)
+      // the first pass folds no earlier minimum
+      val upd = (if (picks.size == 1) pts.crossJoin(c).withColumn("dmin", d2)
         else run.crossJoin(c)
           .withColumn("dmin", least(col("dmin"), d2)))
         .select(col(idCol), col(vecCol), col("dmin"))
-      val next = upd.localCheckpoint(true)
-      if (run != null) GraftBridge.unpersistCheckpoint(run)
-      run = next
+      run = Checkpoints.replace(run)(upd.checkpointed)
       val pick = run.filter(col("dmin") > 0)
         .orderBy(col("dmin").desc, col(idCol).asc).limit(1)
-        .localCheckpoint(true)
-      if (pick.isEmpty) exhausted = true
-      else { picks :+= pick; lastPick = pick; r += 1 }
+        .checkpointed
+      if (pick.isEmpty) exhausted = true else picks :+= pick
     }
-    if (run != null) GraftBridge.unpersistCheckpoint(run)
     picks.zipWithIndex.map { case (df, i) =>
       df.select(lit(i + 1).as("sel_round"), col(idCol),
         col("dmin").as("radius2"))
@@ -1628,13 +1618,13 @@ object Vec {
     val nbr = probes.join(owners, Seq("cx", "cy"))
       .filter(d2 <= lit(eps * eps))
       .select(col("ia"), col("ib"), col("tile_a"), col("tile_b"))
-      .localCheckpoint(true)
+      .checkpointed
     // tile_a is a function of ia, so grouping by both keeps it along.
     val core = nbr.groupBy(col("ia"), col("tile_a"))
       .agg(count(lit(1)).as("__deg"))
       .filter(col("__deg") >= minPts)
       .select(col("ia").as("__id"), col("tile_a").as("__tile"))
-      .localCheckpoint(true)
+      .checkpointed
     val coreEdges = nbr
       .join(core.select(col("__id").as("ia")), Seq("ia"))
       .join(core.select(col("__id").as("ib")), Seq("ib"))
@@ -1715,8 +1705,8 @@ object Vec {
       .filter(col("id_a") =!= col("id_b"))
       .select(col("query_id"), col("id_a"), col("id_b"),
         cosine(col("__va"), col("__vb"), 6).as("psim"))
-      .localCheckpoint(true)
-    val relCk = rel.localCheckpoint(true)
+      .checkpointed
+    val relCk = rel.checkpointed
     // The greedy loop is PER-QUERY LOCAL: each query's k picks depend
     // only on its own shortlist rel scores and pairwise sims — a
     // |shortlist|²·k computation. The former k driver rounds (anti-join
@@ -1791,7 +1781,7 @@ object Vec {
       org.apache.spark.sql.types.StructField("__mx",
         org.apache.spark.sql.types.DoubleType, nullable = false)))
     queries.sparkSession.createDataFrame(picked.toJavaRDD(), schema)
-      .localCheckpoint(true)
+      .checkpointed
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("rel"),
         round((lit(lambda) * col("rel") -
@@ -1835,7 +1825,7 @@ object Vec {
         greatest(lit(0L),
           round(cosine(col("__vc"), col("__vu"), 6) * lit(1e6), 0)
             .cast("long")).as("__s"))
-      .localCheckpoint(true)
+      .checkpointed
     // Greedy rounds as an RDD pass over the sims relation GROUPED PER
     // UNIVERSE POINT (one shuffle, done once): coverage cur(v) =
     // max_{s∈sel} sim(v,s) is a lookup inside v's own pool-sized row,
@@ -1930,7 +1920,7 @@ object Vec {
     val sr = reach.groupBy(col("__s").as("__id"))
       .agg(greatest(lit(1L), sum(col("__reach"))).as("__sr"),
         count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .checkpointed
     val r = sr.select(col("__id").as("__d"),
       expr("(__n * 1000000000L) div __sr").as("__r"))
     val sums = d.join(r, Seq("__d"))
@@ -2008,7 +1998,7 @@ object Vec {
   def graphWalks(vecs: DataFrame, starts: DataFrame, steps: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       k: Int = 16, nBits: Int = 4, graphRounds: Int = 3,
-      ringWindow: Int = 8): DataFrame = {
+      ringWindow: Int = 8): DataFrame = Checkpoints.owned {
     require(steps >= 1, s"steps must be >= 1, got $steps")
     import org.apache.spark.sql.GraftBridge
     val spark0 = vecs.sparkSession
@@ -2016,7 +2006,7 @@ object Vec {
       ringWindow)
     val adj0 = g.select(col("node_id").as("__v"),
         col("neighbor_id").as("__nb"), col("rank").cast("long").as("__rk"))
-      .localCheckpoint(true)
+      .checkpointed
     // Each `out` union branch is a LAZY plan: left un-truncated, branch
     // s re-derives every hop before its own, so the unioned walk corpus
     // re-ran the hop joins quadratically in `steps` (the before-plan
@@ -2034,12 +2024,12 @@ object Vec {
     val bcBudget = GraftBridge.autoBroadcastThreshold(spark0)
     val adjFits = bcBudget > 0 && m * 72L <= bcBudget
     val deg0 = adj0.groupBy(col("__v")).agg(max(col("__rk")).as("__deg"))
-      .localCheckpoint(true)
+      .checkpointed
     val deg = if (adjFits) broadcast(deg0) else deg0
     val adj = if (adjFits) broadcast(adj0) else adj0
     var frontier = starts.select(col(idCol).as("__start"),
       col(idCol).as("__cur"))
-      .localCheckpoint(true)
+      .checkpointed
     var out = frontier.select(col("__start"), lit(0L).as("step"),
       col("__cur").as("node_id"))
     for (s <- 1 to steps) {
@@ -2052,14 +2042,10 @@ object Vec {
         .join(adj, pick("__cur") === adj("__v") &&
           pick("__idx") === adj("__rk"))
         .select(col("__start"), col("__nb").as("__cur"))
-        .localCheckpoint(true)
+        .checkpointed
       out = out.unionByName(frontier.select(col("__start"),
         lit(s.toLong).as("step"), col("__cur").as("node_id")))
     }
-    // every hop is materialized: the returned plan reads only the
-    // frontier checkpoints, so the adjacency and degree ones go
-    GraftBridge.unpersistCheckpoint(adj0)
-    GraftBridge.unpersistCheckpoint(deg0)
     out.select(col("__start").as("start_id"), col("step"), col("node_id"))
   }
 
@@ -2100,7 +2086,7 @@ object Vec {
     val fwd = bruteForceTopK(queries, targets, k, idCol, vecCol,
         excludeSelf = false)
       .select(col("query_id"), col("neighbor_id"), simE6.as("c_e6"))
-      .localCheckpoint(true)
+      .checkpointed
     val sumX = fwd.groupBy(col("query_id"))
       .agg(sum(col("c_e6")).as("__sx"))
     val candIds = fwd.select(col("neighbor_id").as(idCol)).distinct()
@@ -2219,7 +2205,8 @@ object Vec {
   def labelSpread(vecs: DataFrame, seeds: DataFrame, spreadRounds: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       labelCol: String = "label", k: Int = 16, nBits: Int = 4,
-      graphRounds: Int = 3, ringWindow: Int = 8): DataFrame = {
+      graphRounds: Int = 3,
+      ringWindow: Int = 8): DataFrame = Checkpoints.owned {
     require(spreadRounds >= 1, s"spreadRounds must be >= 1, got $spreadRounds")
     val g = nnDescent(vecs, idCol, vecCol, k, nBits, graphRounds,
       ringWindow)
@@ -2227,12 +2214,12 @@ object Vec {
       .unionByName(g.select(col("neighbor_id").as("__s"),
         col("node_id").as("__d")))
       .distinct()
-      .localCheckpoint(true)
-    var lab = seeds
+      .checkpointed
+    val seeded = seeds
       .select(col(idCol).as("__id"), col(labelCol).cast("long").as("__lab"))
-      .localCheckpoint(true)
-    val seedIds = lab.select(col("__id"))
-    for (_ <- 1 to spreadRounds) {
+      .checkpointed
+    val seedIds = seeded.select(col("__id"))
+    def spread(lab: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("__s"))
         .orderBy(col("__c").desc, col("__lab").asc)
       val maj = e
@@ -2242,11 +2229,13 @@ object Vec {
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .select(col("__s").as("__id"), col("__lab"))
-      lab = lab
+      lab
         .unionByName(maj.join(lab.select(col("__id")), Seq("__id"),
           "left_anti"))
-        .localCheckpoint(true)
+        .checkpointed
     }
+    var lab = spread(seeded) // seedIds reads the seed round: it stays
+    for (_ <- 2 to spreadRounds) lab = Checkpoints.replace(lab)(spread(lab))
     vecs.select(col(idCol).as("__id"))
       .join(lab, Seq("__id"), "left_outer")
       .join(seedIds.select(col("__id"), lit(true).as("__seed")),
@@ -2366,7 +2355,7 @@ object Vec {
     // ONE row-level join pairs the two views (n array rows — the former
     // shape joined the EXPLODED components, n·d rows per side, once per
     // Frobenius pass); all three moment passes read this checkpoint.
-    val comps = va.join(vb, Seq("__id")).localCheckpoint(true)
+    val comps = va.join(vb, Seq("__id")).checkpointed
     val dims = comps.agg(
         max(nullif(size(col("__xs")), lit(0))).cast("long").as("d_a"),
         max(nullif(size(col("__ys")), lit(0))).cast("long").as("d_b"))

@@ -109,7 +109,7 @@ object VecIndex {
         .select(col(idCol), (col("cell").cast("long") + nextId).as("cell"))
       val newRows = cellData.join(sub, Seq(idCol))
         .select(col(idCol), col(vecCol), col("cell"))
-        .localCheckpoint(true) // sever lineage from the files we delete
+        .checkpointed // sever lineage from the files we delete
       newRows.write.partitionBy("cell").mode("append")
         .parquet(s"$path/data")
       fs.delete(new org.apache.hadoop.fs.Path(base, s"cell=$c"), true): Unit
@@ -130,7 +130,7 @@ object VecIndex {
       "cell", vecCol)
     val updated = survivors.unionByName(
         newCents.select(col("cell").cast("int").as("cell"), col("centroid")))
-      .localCheckpoint(true)
+      .checkpointed
     updated.write.mode("overwrite").parquet(s"$path/centroids")
     Serving.invalidate(s"ivf:$path")
     splits
@@ -198,28 +198,29 @@ object VecIndex {
       checkpoint: String, m: Int, subDim: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): org.apache.spark.sql.streaming.StreamingQuery =
     graft.streaming.StreamingMedallion.parquetDirSink(spark, streamDir,
-        Seq(idCol, vecCol), checkpoint, "IvfPq_Stream_Append") { (s, batch, _) =>
-      val cents = s.read.parquet(s"$path/centroids")
-      val codebook = s.read.parquet(s"$path/codebook")
-      val coarse = Vec.assignToCentroids(batch, cents, idCol, vecCol)
-        .select(col(idCol), col(vecCol), col("cell"))
-        .localCheckpoint(true) // m subspace encoders + the cell join
-      val codes = (0 until m).map { ss =>
-        Vec.assignToCentroids(
-            coarse.select(col(idCol),
-              slice(col(vecCol), ss * subDim + 1, subDim).as(vecCol)),
-            codebook.filter(col("subspace") === ss)
-              .select(col("code").as("cell"), col("centroid")),
-            idCol, vecCol)
-          .select(col(idCol), lit(ss).as("subspace"),
-            col("cell").as("code"))
-      }.reduce(_ unionByName _)
-      val rows = packCodes(codes, idCol)
-        .join(coarse.select(col(idCol), col("cell")), Seq(idCol))
-        .select(col(idCol), col("codes"), col("cell"))
-      graft.merge.Merge.antiJoinAppend(s, rows, s"$path/codes",
-        Seq(idCol), "cell"): Unit
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(coarse)
+        Seq(idCol, vecCol), checkpoint, "IvfPq_Stream_Append") {
+      (s, batch, _) => Checkpoints.owned {
+        val cents = s.read.parquet(s"$path/centroids")
+        val codebook = s.read.parquet(s"$path/codebook")
+        val coarse = Vec.assignToCentroids(batch, cents, idCol, vecCol)
+          .select(col(idCol), col(vecCol), col("cell"))
+          .checkpointed // m subspace encoders + the cell join
+        val codes = (0 until m).map { ss =>
+          Vec.assignToCentroids(
+              coarse.select(col(idCol),
+                slice(col(vecCol), ss * subDim + 1, subDim).as(vecCol)),
+              codebook.filter(col("subspace") === ss)
+                .select(col("code").as("cell"), col("centroid")),
+              idCol, vecCol)
+            .select(col(idCol), lit(ss).as("subspace"),
+              col("cell").as("code"))
+        }.reduce(_ unionByName _)
+        val rows = packCodes(codes, idCol)
+          .join(coarse.select(col(idCol), col("cell")), Seq(idCol))
+          .select(col(idCol), col("codes"), col("cell"))
+        graft.merge.Merge.antiJoinAppend(s, rows, s"$path/codes",
+          Seq(idCol), "cell"): Unit
+      }
     }
 
   /** Top-k ADC search against a written IVF-PQ index: rank cells per
@@ -420,12 +421,12 @@ object VecIndex {
     * symmetrized edges and the vectors, both replay-guarded), callable
     * directly for bulk loads and the drift probes. */
   private[graft] def appendGraphBatch(s: SparkSession, path: String,
-      batch: DataFrame, k: Int, beam: Int, hops: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+      batch: DataFrame, k: Int, beam: Int, hops: Int, idCol: String = "vec_id",
+      vecCol: String = "embedding"): Unit = Checkpoints.owned {
     val meta = s.read.parquet(s"$path/meta").collect()(0)
     val nB = meta.getLong(meta.fieldIndex("n_buckets"))
     val b = batch.select(col(idCol).cast("long").as(idCol),
-      col(vecCol)).localCheckpoint(true)
+      col(vecCol)).checkpointed
     // search BEFORE appending the batch's own vectors, so a new
     // node can never resolve to itself or a batch-mate
     val vdir = s"$path/vectors"
@@ -481,7 +482,7 @@ object VecIndex {
       .withColumn("__h", Sampling.hashOrder(col(idCol)))
       .orderBy(col("__h").asc, col(idCol).asc).limit(nQueries)
       .select(col(idCol), col(vecCol))
-      .localCheckpoint(true)
+      .checkpointed
     graft.functions.Eval.topkRecall(
       graphProbeIndexed(spark, path, queries, k, beam, hops, idCol, vecCol),
       Vec.bruteForceTopKUncached(queries, vecs, k, idCol, vecCol),
@@ -499,12 +500,13 @@ object VecIndex {
     */
   def rebuildGraphIndex(spark: SparkSession, path: String, k: Int,
       rounds: Int = 3, ringWindow: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+      idCol: String = "vec_id",
+      vecCol: String = "embedding"): Unit = Checkpoints.owned {
     val meta = spark.read.parquet(s"$path/meta").collect()(0)
     val nB = meta.getLong(meta.fieldIndex("n_buckets"))
     val vecs = spark.read.parquet(s"$path/vectors")
       .select(col(idCol).cast("long").as(idCol), col(vecCol))
-      .localCheckpoint(true)
+      .checkpointed
     val nBits = Vec.deriveNBits(vecs.count())
     val g = Vec.nnDescentUncached(vecs, idCol, vecCol, k, nBits, rounds,
       ringWindow)
@@ -512,7 +514,7 @@ object VecIndex {
     val sym = e.unionByName(e.select(col("neighbor_id").as("node_id"),
         col("node_id").as("neighbor_id"), col("sim")))
       .distinct()
-      .localCheckpoint(true) // adj/ is about to be overwritten under it
+      .checkpointed // adj/ is about to be overwritten under it
     sym.withColumn("node_bucket", pmod(col("node_id"), lit(nB)))
       .write.partitionBy("node_bucket").mode("overwrite")
       .parquet(s"$path/adj")
@@ -580,22 +582,33 @@ object VecIndex {
     // per-hop partition pruning happens in the filters below either way.
     val vecsBase = spark.read.parquet(s"$path/vectors")
     val adjBase = spark.read.parquet(s"$path/adj")
-    def vecsFor(ids: Array[Long]): DataFrame =
-      vecsBase
+    // a hop's bucket-pruned reads: vectors (__d, __dv, __dn) and
+    // adjacency (__d, __d2)
+    def vecsFor(vecs: DataFrame, ids: Array[Long]): DataFrame =
+      vecs
         .filter(col("vec_bucket")
           .isin(ids.map(_ % nB).distinct.toIndexedSeq: _*))
         .filter(col(idCol).isin(ids.toIndexedSeq: _*))
-        .select(col(idCol).cast("long").as("__id"), col(vecCol).as("__v"),
+        .select(col(idCol).cast("long").as("__d"), col(vecCol).as("__dv"),
           sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol),
-            col(vecCol))).as("__n"))
-    def adjFor(ids: Array[Long]): DataFrame =
-      adjBase
+            col(vecCol))).as("__dn"))
+    def adjFor(adj: DataFrame, ids: Array[Long]): DataFrame =
+      adj
         .filter(col("node_bucket")
           .isin(ids.map(_ % nB).distinct.toIndexedSeq: _*))
         .filter(col("node_id").isin(ids.toIndexedSeq: _*))
         .select(col("node_id").as("__d"), col("neighbor_id").as("__d2"))
-    val w = Window.partitionBy(col("__q"))
-      .orderBy(col("sim").desc, col("__d").asc)
+    // each query's `beam` best candidates by cosine, (sim desc, id) ties
+    def topBeam(cand: DataFrame, vecs: DataFrame, q: DataFrame,
+        ids: Array[Long]): DataFrame =
+      cand.join(vecsFor(vecs, ids), Seq("__d"))
+        .join(q, Seq("__q"))
+        .select(col("__q"), col("__d"),
+          Vec.pairSim(col("__qv"), col("__dv"), col("__qn"), col("__dn"))
+            .as("sim"))
+        .withColumn("rank", row_number().over(Window.partitionBy(col("__q"))
+          .orderBy(col("sim").desc, col("__d").asc)).cast("long"))
+        .filter(col("rank") <= beam)
 
     // Serving detection in ONE job: collect at most frontierMax + 1
     // query rows — fewer means the whole query side is a bounded
@@ -616,20 +629,6 @@ object VecIndex {
       // re-reading the layout re-ran file listing + schema resolution
       // per probe. In-JVM writers invalidate via [[invalidateServing]].
       val (ss, ssVecs, ssAdj) = servingSession(spark, path)
-      def ssVecsFor(ids: Array[Long]): DataFrame =
-        ssVecs
-          .filter(col("vec_bucket")
-            .isin(ids.map(_ % nB).distinct.toIndexedSeq: _*))
-          .filter(col(idCol).isin(ids.toIndexedSeq: _*))
-          .select(col(idCol).cast("long").as("__d"), col(vecCol).as("__dv"),
-            sqrt(graft.plans.VecExpressions.dotProduct(col(vecCol),
-              col(vecCol))).as("__dn"))
-      def ssAdjFor(ids: Array[Long]): DataFrame =
-        ssAdj
-          .filter(col("node_bucket")
-            .isin(ids.map(_ % nB).distinct.toIndexedSeq: _*))
-          .filter(col("node_id").isin(ids.toIndexedSeq: _*))
-          .select(col("node_id").as("__d"), col("neighbor_id").as("__d2"))
       val qvLocal = broadcast(ss.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           java.util.Arrays.asList(qProbe: _*)), qv.schema))
@@ -637,7 +636,7 @@ object VecIndex {
       // Hop-1 candidate pairs = the entry node plus its neighbors per
       // query (one tiny pruned adjacency read), self-pairs dropped —
       // exactly the distributed loop's first cand frame.
-      val entryNbrs = ssAdjFor(Array(entryId)).collect().map(_.getLong(1))
+      val entryNbrs = adjFor(ssAdj, Array(entryId)).collect().map(_.getLong(1))
       var cand: Array[(Long, Long)] =
         (qIds.map(q => (q, entryId)) ++
           qIds.flatMap(q => entryNbrs.map(q -> _)))
@@ -646,15 +645,8 @@ object VecIndex {
       for (h <- 1 to hops) {
         val candIds = cand.map(_._2).distinct
         import ss.implicits._
-        val local = cand.toSeq.toDF("__q", "__d")
-        val scored = local
-          .join(ssVecsFor(candIds), Seq("__d"))
-          .join(qvLocal, Seq("__q"))
-          .select(col("__q"), col("__d"),
-            Vec.pairSim(col("__qv"), col("__dv"), col("__qn"), col("__dn"))
-              .as("sim"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= beam)
+        val scored =
+          topBeam(cand.toSeq.toDF("__q", "__d"), ssVecs, qvLocal, candIds)
         if (h == hops) {
           result = scored.filter(col("rank") <= k)
             .select(col("__q"), col("__d"), col("sim"), col("rank"))
@@ -664,7 +656,7 @@ object VecIndex {
           // rides a left join pruned by candIds (a driver-known
           // superset of the surviving beam ids).
           val rows = scored
-            .join(ssAdjFor(candIds), Seq("__d"), "left")
+            .join(adjFor(ssAdj, candIds), Seq("__d"), "left")
             .select(col("__q"), col("__d"), col("__d2"))
             .collect()
           val bmPairs = rows.map(r => (r.getLong(0), r.getLong(1))).distinct
@@ -689,32 +681,26 @@ object VecIndex {
     }
 
     // ---- distributed bulk loop ----
-    var bm: DataFrame = qv.select(col("__q")).withColumn("__d", lit(entryId))
-    for (_ <- 1 to hops) {
-      val beamIds = bm.select(col("__d")).distinct().collect()
-        .map(_.getLong(0))
-      val cand = bm.select(col("__q"), col("__d"))
-        .join(adjFor(beamIds), Seq("__d"))
-        .select(col("__q"), col("__d2").as("__d"))
-        .unionByName(bm.select(col("__q"), col("__d")))
-        .filter(col("__q") =!= col("__d"))
-        .distinct()
-        .localCheckpoint(true)
-      val candIds = cand.select(col("__d")).distinct().collect()
-        .map(_.getLong(0))
-      bm = cand
-        .join(vecsFor(candIds).select(col("__id").as("__d"),
-          col("__v").as("__dv"), col("__n").as("__dn")), Seq("__d"))
-        .join(qv, Seq("__q"))
-        .select(col("__q"), col("__d"),
-          Vec.pairSim(col("__qv"), col("__dv"), col("__qn"), col("__dn"))
-            .as("sim"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= beam)
-        .localCheckpoint(true)
+    Checkpoints.owned {
+      var bm: DataFrame = qv.select(col("__q")).withColumn("__d", lit(entryId))
+      for (_ <- 1 to hops) {
+        val beamIds = bm.select(col("__d")).distinct().collect()
+          .map(_.getLong(0))
+        val cand = Checkpoints.replace(bm)(bm.select(col("__q"), col("__d"))
+          .join(adjFor(adjBase, beamIds), Seq("__d"))
+          .select(col("__q"), col("__d2").as("__d"))
+          .unionByName(bm.select(col("__q"), col("__d")))
+          .filter(col("__q") =!= col("__d"))
+          .distinct()
+          .checkpointed)
+        val candIds = cand.select(col("__d")).distinct().collect()
+          .map(_.getLong(0))
+        bm = Checkpoints.replace(cand)(
+          topBeam(cand, vecsBase, qv, candIds).checkpointed)
+      }
+      bm.filter(col("rank") <= k)
+        .select(col("__q").as("query_id"), col("__d").as("neighbor_id"),
+          col("sim"), col("rank"))
     }
-    bm.filter(col("rank") <= k)
-      .select(col("__q").as("query_id"), col("__d").as("neighbor_id"),
-        col("sim"), col("rank"))
   }
 }

@@ -3,6 +3,8 @@ package graft.merge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.CheckpointOps
+
 /** Delta-MERGE emulation with stock Spark joins (SURVEY.md §2.6).
   *
   * The reference's only nontrivial relational ops are Delta MERGE upserts:
@@ -265,7 +267,7 @@ object Merge {
       l.join(r, l("__mk") === r("__mk") &&
           (!l("__mk").startsWith("h") || rowEq), "left_anti")
         .drop("__mk")
-    }).localCheckpoint(true)
+    }).checkpointed
     val n = fresh.count()
     if (n > 0) {
       fresh.write.format("parquet").mode("append")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.CheckpointOps
+
 case class MediaMeta(format: String, width: Int, height: Int, n_frames: Int)
 case class MediaRec(media_id: Long, payload: Array[Byte], meta: MediaMeta)
 case class MediaFeat(media_id: Long, payload: Array[Byte], meta: MediaMeta,
@@ -176,7 +178,7 @@ object Media {
       w: Int, h: Int, k: Int): DataFrame =
     thumbMemo(docs, idCol, textCol, w, h, k) {
       imageThumbnails(textAsPng(docs, idCol, textCol, w, h), k)
-        .localCheckpoint(true)
+        .checkpointed
     }
 
   /** Decode + nearest-neighbor thumbnail per payload: (media_id, thumb)

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.CheckpointOps
+
 /** The reference's operator library (see SURVEY.md §2), generalized into
   * reusable `DataFrame => DataFrame` combinators.
   *
@@ -54,7 +56,7 @@ object Medallion {
       val cached = df.cache()
       val corrupt =
         try cached.filter(col("_corrupt_record").isNotNull)
-          .select(col("_corrupt_record")).localCheckpoint(true)
+          .select(col("_corrupt_record")).checkpointed
         finally cached.unpersist()
       val valid = df.filter(col("_corrupt_record").isNull)
         .drop("_corrupt_record")

@@ -3,7 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Cluster, Dedup, Lines, Quality, Text, Vec}
+import graft.functions.{CheckpointOps, Cluster, Dedup, Lines, Quality, Text,
+  Vec}
 
 /** End-to-end training-corpus curation: the composition a 100 TB text
   * pipeline actually runs, built entirely from graft operators —
@@ -250,10 +251,10 @@ object CorpusPipeline {
     * frame would otherwise re-execute the whole lineage per consumer.
     */
   def curate(docs: DataFrame, cfg: Config = Config()): (DataFrame, DataFrame) = {
-    val gated = qualityGate(annotate(docs, cfg), cfg).localCheckpoint(true)
-    val exact = exactDedup(gated, cfg).localCheckpoint(true)
+    val gated = qualityGate(annotate(docs, cfg), cfg).checkpointed
+    val exact = exactDedup(gated, cfg).checkpointed
     val near = assignSplits(nearDedup(exact, cfg), cfg = cfg)
-      .localCheckpoint(true)
+      .checkpointed
     val stats = docs.select(count(lit(1)).as("n_input"))
       .crossJoin(gated.select(count(lit(1)).as("n_gated")))
       .crossJoin(exact.select(count(lit(1)).as("n_exact")))
@@ -360,7 +361,7 @@ object CorpusPipeline {
       domainCap: Option[(String, Long)] = None,
       cfg: Config = Config())
       : (DataFrame, DataFrame, DataFrame) = {
-    def cp(df: DataFrame): DataFrame = df.localCheckpoint(true)
+    def cp(df: DataFrame): DataFrame = df.checkpointed
     val bl = cp(blocklistGate(docs, blockPhrases, cfg))
     val ld = cp(lineDedupLen.map(lineDedupStage(bl, _, cfg)).getOrElse(bl))
     val ann = cp(annotate(ld, cfg))

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.CheckpointOps
 import graft.merge.Merge
 import graft.ops.Medallion
 
@@ -98,7 +99,7 @@ object MoviePipeline {
       .unionByName(
         quarantined.select(col("value")).withColumn("status", lit("quarantined")))
       .distinct()
-    val keyed = withPartitions(bronzeNew, statused).localCheckpoint(true)
+    val keyed = withPartitions(bronzeNew, statused).checkpointed
     SilverSplit(flat, clean, quarantined, keyed)
   }
 
@@ -175,7 +176,7 @@ object MoviePipeline {
   def updateBronzeStatus(spark: SparkSession, bronzePath: String,
       keys: DataFrame, status: String): Unit = {
     val keyed = withPartitions(spark.read.parquet(bronzePath),
-      keys.withColumn("status", lit(status))).localCheckpoint(true)
+      keys.withColumn("status", lit(status))).checkpointed
     updateBronzeStatuses(spark, bronzePath, keyed)
   }
 
@@ -195,7 +196,7 @@ object MoviePipeline {
     val (repaired, _) = Medallion.cleanQuarantineSplit(
       transformMovie(Medallion.repairAbs(flat, "RunTime")).distinct(), isClean)
 
-    val repairedKeys = repaired.select(col("value")).distinct().localCheckpoint(true)
+    val repairedKeys = repaired.select(col("value")).distinct().checkpointed
     val n = Merge.antiJoinAppend(spark, repaired.drop("value"),
       s"$silverDir/movie_silver", Seq("Id"), "p_CreatedDate")
     updateBronzeStatus(spark, bronzePath, repairedKeys, "loaded")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.functions.CheckpointOps
+
 /** The COMPOSED streaming serving loop: one microbatch stream drives the
   * whole ingest path the engine's streaming rungs implement in
   * isolation —
@@ -64,7 +66,7 @@ object CorpusStream {
         val accepted = IncrementalDedup
           .step(batch, s"$root/dedup_index", idCol, textCol,
             batchId = Some(batchId))
-          .localCheckpoint(true)
+          .checkpointed
         accepted.withColumn("__batch", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.functions.Dedup
+import graft.functions.{CheckpointOps, Dedup}
 
 /** Incremental near-dedup for a streaming document ingest: every
   * microbatch is deduplicated against BOTH itself and everything already
@@ -51,7 +51,7 @@ object IncrementalDedup {
       Dedup.minhashSignatureHashed(batch, idCol, textCol, shingleSize,
         numHashes),
       idCol, rowsPerBand)
-      .localCheckpoint(true) // consumed 3x below; plan is 2 shuffles deep
+      .checkpointed // consumed 3x below; plan is 2 shuffles deep
     keyedStep(batch, bands, Seq("band", "band_val"), indexPath, idCol,
       batchId)
   }
@@ -74,7 +74,7 @@ object IncrementalDedup {
         graft.plans.CdcColumns.cdcChunks(col(textCol), w, maskBits))
       .filter(col("clen") >= minLen)
       .select(col(idCol), col("chash")).distinct()
-      .localCheckpoint(true) // consumed 3x below
+      .checkpointed // consumed 3x below
     keyedStep(batch, chunks, Seq("chash"), indexPath, idCol, batchId)
   }
 
@@ -129,10 +129,10 @@ object IncrementalDedup {
       .withColumn("__min", min(col(idCol)).over(wBucket))
       .filter(col(idCol) > col("__min"))
       .select(col(idCol)).distinct()
-    val dupIds = vsIndex.union(inBatch).distinct().localCheckpoint(true)
+    val dupIds = vsIndex.union(inBatch).distinct().checkpointed
 
     val accepted = batch.join(dupIds, Seq(idCol), "left_anti")
-      .localCheckpoint(true) // materialize before the index append below
+      .checkpointed // materialize before the index append below
     // One on-disk layout for BOTH modes — __batch-partitioned — because
     // root-level files (plain append) and partition directories cannot
     // coexist under one parquet root (partition discovery rejects the
@@ -200,7 +200,7 @@ object IncrementalDedup {
       .filter(col("__batch").isin(batches: _*))
       .drop("__batch")
       .withColumn("__batch", lit(-1L))
-      .localCheckpoint(true) // materialize BEFORE touching the layout
+      .checkpointed // materialize BEFORE touching the layout
     folded.write.mode("append").partitionBy("__batch").parquet(indexPath)
     batches.foreach { b =>
       fs.delete(new org.apache.hadoop.fs.Path(root, s"__batch=$b"), true)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.CheckpointOps
 import graft.merge.Merge
 import graft.ops.Medallion
 
@@ -151,7 +152,7 @@ object StreamingMedallion {
         org.apache.spark.sql.types.LongType)))
     val keyed = spark.read.schema(logSchema).parquet(logPath)
       .select(col("value"), col("status"), col("p_ingestdate"))
-      .distinct().localCheckpoint(true)
+      .distinct().checkpointed
     if (keyed.isEmpty) { fs.delete(new org.apache.hadoop.fs.Path(logPath), true); return }
     graft.pipeline.MoviePipeline.updateBronzeStatuses(spark, bronzePath, keyed)
     fs.delete(new org.apache.hadoop.fs.Path(logPath), true)

@@ -49,22 +49,6 @@ object GraftBridge {
       .getOrCreate(spark.asInstanceOf[classic.SparkSession])
       .invalidateAll()
 
-  /** Free the block-storage behind an eagerly localCheckpoint'ed (or
-    * checkpoint'ed) DataFrame. `Dataset.unpersist` only clears
-    * CacheManager entries (`df.persist`), not checkpoint RDD blocks —
-    * those otherwise linger until the driver GCs the RDD reference, which
-    * in an iterative loop means O(rounds) superseded label sets pinned in
-    * executor memory. Frees EVERY RDD-scan leaf of the analyzed plan, so a
-    * projection or join over checkpoints frees them too: only pass frames
-    * whose checkpoints no live frame still reads. No-op for leaves that
-    * are not RDD scans (files, local relations).
-    */
-  def unpersistCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
-
   /** Block until every queued listener event is delivered — lets a
     * measurement harness attribute listener-counted job time to the
     * action that just returned (the bus is async; without the drain a

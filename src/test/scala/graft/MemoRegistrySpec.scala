@@ -7,8 +7,8 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 
-import graft.functions.{Cluster, Dedup, Memos, NaiveBayes, PlanMemo, Quant,
-  Vec}
+import graft.functions.{Checkpoints, Cluster, Dedup, Memos, NaiveBayes,
+  PlanMemo, Quant, Vec}
 
 /** `Memos.releaseAll` frees every registered memo — including the
   * nn-descent graph and beam-search memos a hand-kept release list
@@ -22,11 +22,11 @@ class MemoRegistrySpec extends AnyFunSuite {
     for (q <- Seq("q_nndescent", "q_graph_search", "q_winnow_pairs"))
       SparkEntry.queries(q)(spark, TestSpark.sf0001)
         .write.format("noop").mode("overwrite").save()
-    assert(PlanMemo.registered.exists(_.isOccupied),
+    assert(PlanMemo.registered.exists(_.held.nonEmpty),
       "the three entries must leave at least one memo occupied")
     Memos.releaseAll()
-    assert(PlanMemo.registered.forall(!_.isOccupied),
-      s"${PlanMemo.registered.count(_.isOccupied)} memo(s) still occupied")
+    assert(PlanMemo.registered.forall(_.held.isEmpty),
+      s"${PlanMemo.registered.count(_.held.nonEmpty)} memo(s) still occupied")
   }
 
   test("releaseAll frees the checkpoints of DataFrame and tuple memo " +
@@ -102,7 +102,7 @@ class MemoRegistrySpec extends AnyFunSuite {
       val baseline = stored
       val result = run()
       assert(result.count() > 0, name)
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(result)
+      graft.functions.Checkpoints.free(result)
       Memos.releaseAll()
       eventually(timeout(60.seconds), interval(250.millis)) {
         val left = spark.sparkContext.getRDDStorageInfo
@@ -135,7 +135,7 @@ class MemoRegistrySpec extends AnyFunSuite {
     try {
       Memos.releaseAll()
       eventually(timeout(60.seconds), interval(250.millis)) {
-        assert(PlanMemo.registered.forall(!_.isOccupied))
+        assert(PlanMemo.registered.forall(_.held.isEmpty))
       }
       val baseline = stored
       val (g, built) = jobsOf(Vec.nnDescent(emb, "vec_id", "embedding", 4))
@@ -152,12 +152,55 @@ class MemoRegistrySpec extends AnyFunSuite {
       }
       val (u, uncached) = jobsOf(Vec.nnDescentUncached(emb, "vec_id",
         "embedding", 4, 4, 3, 8))
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(u)
+      graft.functions.Checkpoints.free(u)
       assert(built == uncached,
         s"the memoized build ran $built jobs, the uncached one $uncached")
     } finally {
       spark.sparkContext.removeSparkListener(counter)
       Memos.releaseAll()
     }
+  }
+
+  test("one build of each memo family leaves stored only what the memo " +
+      "values read") {
+    def stored: Set[Int] =
+      spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val d = TestSpark.sf0001
+    val docs = Tables.documents(spark, d)
+    val emb = Tables.embeddings(spark, d)
+    def pairs = Dedup.lshCandidatePairs(Dedup.lshBands(
+      Dedup.minhashSignature(Dedup.docShingleIds(docs, "doc_id", "text", 3),
+        "doc_id", col("tid"), SparkEntry.numMinhashes), "doc_id", 2),
+      "doc_id")
+    val builds = Seq[(String, () => Any)](
+      "LSH pairs" -> (() => pairs),
+      "components" -> (() => Cluster.connectedComponents(pairs, "id_a",
+        "id_b", docs.select(col("doc_id")), "doc_id")),
+      "k-means" -> (() => Vec.kmeansModel(emb, k = 8, iters = 2)),
+      "PQ" -> (() => Quant.pqModel(emb, m = 4, subDim = 16, k = 8,
+        iters = 2)),
+      "beam search" -> (() => Vec.graphBeamSearch(
+        Vec.nnDescent(emb, "vec_id", "embedding", 4), emb,
+        emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 2,
+        beam = 4, hops = 2)),
+      "winnow" -> (() => Dedup.winnowFingerprints(docs, "doc_id", "text",
+        5, 4)),
+      "NaiveBayes" -> (() =>
+        NaiveBayes.classify(docs, docs, "doc_id", "text", "lang")))
+    for ((name, build) <- builds) {
+      Memos.releaseAll()
+      val baseline = stored
+      build()
+      // strong references: a GC cannot hide a leak by collecting the RDD
+      val held = spark.sparkContext.getPersistentRDDs
+      val read = PlanMemo.registered.flatMap(_.held)
+        .flatMap(Checkpoints.reach).map(_.id).toSet
+      eventually(timeout(60.seconds), interval(250.millis)) {
+        val extra = (stored -- baseline -- read).toSeq.sorted
+        assert(extra.isEmpty, s"$name left " + extra.map(i =>
+          s"$i (${held.get(i).fold("?")(_.toString)})").mkString(", "))
+      }
+    }
+    Memos.releaseAll()
   }
 }

@@ -80,43 +80,8 @@ class NnDescentParitySpec extends AnyFunSuite {
     val g = Vec.nnDescentUncached(vecsDf(spark), "vec_id", "embedding",
       k = 4, nBits = 3, rounds = 2, ringWindow = 3)
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // hashpartitioning's partitionIdExpression is pmod(murmur3, n) —
-    // the hash() function is the same murmur3/seed-42
-    val misplaced = g
-      .select(col("node_id"), spark_partition_id().as("p"),
-        pmod(hash(col("node_id")), lit(parts)).as("h"))
-      .filter(col("p") =!= col("h")).count()
-    assert(misplaced == 0L, s"$misplaced rows outside their murmur3 partition")
-    val sortedOk = g.select("node_id", "sim", "neighbor_id")
-      .rdd.mapPartitions { it =>
-        var prevN = Long.MinValue
-        var prevS: java.lang.Double = null
-        var prevFirst = true
-        var prevD = Long.MinValue
-        var good = true
-        it.foreach { r =>
-          val n = r.getLong(0)
-          val s: java.lang.Double =
-            if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1))
-          val d = r.getLong(2)
-          if (!prevFirst) {
-            val c =
-              if (n != prevN) java.lang.Long.compare(prevN, n)
-              else {
-                val cs =
-                  if (prevS == null && s == null) 0
-                  else if (prevS == null) 1
-                  else if (s == null) -1
-                  else java.lang.Double.compare(s.doubleValue, prevS.doubleValue)
-                if (cs != 0) cs else java.lang.Long.compare(prevD, d)
-              }
-            if (c > 0) good = false
-          }
-          prevN = n; prevS = s; prevD = d; prevFirst = false
-        }
-        Iterator(good)
-      }.collect().forall(identity)
-    assert(sortedOk, "a partition violates (node_id asc, sim desc nulls " +
-      "last, neighbor_id asc)")
+    assert(LayoutCheck.violations(g, Seq("node_id"),
+      Seq(("node_id", true), ("sim", false), ("neighbor_id", true)),
+      parts) == ((0L, 0L)))
   }
 }

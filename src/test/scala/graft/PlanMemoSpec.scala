@@ -67,7 +67,7 @@ class PlanMemoSpec extends AnyFunSuite {
     assert(stored.contains(rddId(vals(0))) && stored.contains(rddId(vals(2))))
     assert(vals(0).count() == 1 && vals(2).count() == 3)
     memo.release()
-    vals.foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
+    vals.foreach(graft.functions.Checkpoints.free)
   }
 
   test("release frees DataFrame, tuple and Seq values, and empties the " +
@@ -84,7 +84,7 @@ class PlanMemoSpec extends AnyFunSuite {
     val ids = (Seq(a, b, c) ++ ds).map(rddId)
     assert(ids.forall(stored.contains))
     Seq(single, pair, many, count).foreach(_.release())
-    assert(Seq(single, pair, many, count).forall(!_.isOccupied))
+    assert(Seq(single, pair, many, count).forall(_.held.isEmpty))
     eventually(timeout(30.seconds), interval(200.millis)) {
       assert((stored & ids.toSet).isEmpty)
     }
@@ -102,7 +102,7 @@ class PlanMemoSpec extends AnyFunSuite {
     memo(key, "dead")(dead)
     val live = memo(key, "live")(Seq(checkpointed(2)))
     memo.release()
-    assert(!memo.isOccupied)
+    assert(memo.held.isEmpty)
     eventually(timeout(30.seconds), interval(200.millis)) {
       assert(!stored.contains(rddId(live.head)))
     }

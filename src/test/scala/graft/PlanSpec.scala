@@ -718,6 +718,6 @@ class PlanSpec extends AnyFunSuite {
       Seq(("id", true)), 4)
     val p = ok.groupBy(col("id")).count().queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), p)
-    GraftBridge.unpersistCheckpoint(laid)
+    graft.functions.Checkpoints.free(laid)
   }
 }

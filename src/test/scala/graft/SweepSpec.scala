@@ -19,6 +19,9 @@ class SweepSpec extends AnyFunSuite {
       Sweep.cell(spark, 4, entries, Seq(TestSpark.sf0001))
     } finally spark.conf.set(key, before)
     assert(runs.size == 4 && runs.forall(_.check.isDefined))
+    // the winnow entry's memoized fingerprint checkpoints are still held
+    // when its run ends
+    assert(runs.filter(_.entry == "q_winnow_pairs").forall(_.storage > 0L))
     for (e <- entries) {
       val checks = runs.filter(_.entry == e).map(_.check.get)
       assert(checks.distinct.size == 1, s"$e: $checks")
@@ -37,7 +40,9 @@ class SweepSpec extends AnyFunSuite {
 
   test("a checksum mismatch across cells fails the summary") {
     def run(master: String, sum: String) = Sweep.Run("q_corr_matrix",
-      "sf", master, 1, 0.1, 1L, 0.1, 0.1, 0.0, 0L, 0L, Some((6L, sum)))
+      "sf", master, 1, 0.1, 1L, 0.1, 0.1, 0.0, 0L, 0L, 3L << 20,
+      Some((6L, sum)))
+    assert(run("local[1]", "42").json.contains(""""storage_mb":3.0,"""))
     Sweep.summarize(Seq(run("local[1]", "42"), run("local[4]", "42")))
     val e = intercept[IllegalStateException](
       Sweep.summarize(Seq(run("local[1]", "42"), run("local[4]", "43"))))
