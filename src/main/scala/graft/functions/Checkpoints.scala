@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, GraftBridge}
 import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 
 /** The one owner of eager checkpoints. [[take]] (`ds.checkpointed`)
@@ -88,6 +88,6 @@ private[graft] object Checkpoints {
 
   // best-effort: a stopped context's blocks are already gone
   private def unpersist(rdds: Iterable[RDD[_]]): Unit = rdds.foreach { r =>
-    try r.unpersist(blocking = false) catch { case NonFatal(_) => () }
+    try GraftBridge.unpersistRDD(r) catch { case NonFatal(_) => () }
   }
 }

@@ -180,6 +180,14 @@ object Medallion {
     (df.filter(pred), df.filter(!pred))
   }
 
+  /** The row counts of [[cleanQuarantineSplit]]'s two sides, from one
+    * aggregate over `df` instead of a count per side. */
+  def cleanQuarantineCounts(df: DataFrame, cleanPred: Column): (Long, Long) = {
+    val pred = coalesce(cleanPred, lit(false))
+    val r = df.agg(count_if(pred), count_if(!pred)).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
   /** P10 — numeric repair via abs (operations.py:141). */
   def repairAbs(df: DataFrame, c: String): DataFrame =
     df.withColumn(c, abs(col(c)))

@@ -70,12 +70,12 @@ object MoviePipeline {
   private def isClean = col("RunTime") >= 0 && col("Id").isNotNull
 
   /** What one bronze → silver step hands back: the flattened rows
-    * (cached; the caller unpersists them), both sides of the quality
-    * split, and `keyed` — every row's (value, status, p_ingestdate),
-    * checkpointed.
+    * (cached; the caller unpersists them), the split's source `movies`,
+    * both sides of the quality split, and `keyed` — every row's (value,
+    * status, p_ingestdate), checkpointed.
     */
-  private[graft] case class SilverSplit(flat: DataFrame, clean: DataFrame,
-      quarantined: DataFrame, keyed: DataFrame)
+  private[graft] case class SilverSplit(flat: DataFrame, movies: DataFrame,
+      clean: DataFrame, quarantined: DataFrame, keyed: DataFrame)
 
   /** The bronze → silver step the batch and streaming variants share:
     * flatten the 'new' bronze rows, project movies, split on the quality
@@ -87,8 +87,8 @@ object MoviePipeline {
   private[graft] def splitToSilver(spark: SparkSession, bronzeNew: DataFrame,
       silverDir: String): SilverSplit = {
     val flat = Medallion.flattenValue(bronzeNew).cache()
-    val (clean, quarantined) =
-      Medallion.cleanQuarantineSplit(transformMovie(flat).distinct(), isClean)
+    val movies = transformMovie(flat).distinct()
+    val (clean, quarantined) = Medallion.cleanQuarantineSplit(movies, isClean)
     Merge.antiJoinAppend(spark, clean.drop("value"),
       s"$silverDir/movie_silver", Seq("Id"), "p_CreatedDate")
     // One (value, status, p_ingestdate) source for BOTH statuses,
@@ -100,7 +100,7 @@ object MoviePipeline {
         quarantined.select(col("value")).withColumn("status", lit("quarantined")))
       .distinct()
     val keyed = withPartitions(bronzeNew, statused).checkpointed
-    SilverSplit(flat, clean, quarantined, keyed)
+    SilverSplit(flat, movies, clean, quarantined, keyed)
   }
 
   /** Stage 2 — bronze → silver (main.py:21-46). Returns
@@ -119,7 +119,7 @@ object MoviePipeline {
       s"$silverDir/genres_silver", Seq("Id", "name"))
     upsertDimension(spark, transformLanguage(step.flat),
       s"$silverDir/language_silver", Seq("Id", "OriginalLanguage"))
-    val counts = (step.clean.count(), step.quarantined.count())
+    val counts = Medallion.cleanQuarantineCounts(step.movies, isClean)
 
     // MERGE status writeback on the full struct key (operations.py:112-129),
     // ONE rewrite restricted to the partitions that contain matched keys.

@@ -57,6 +57,14 @@ object GraftBridge {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** Frees a persisted RDD's blocks as Spark's ContextCleaner does
+    * (`SparkContext.unpersistRDD`). `RDD.unpersist` makes the same call
+    * but first logs a WARN for every local checkpoint, that its lineage
+    * is truncated, also when nothing reads it again.
+    */
+  def unpersistRDD(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** The session's configured auto-broadcast byte budget
     * (`spark.sql.autoBroadcastJoinThreshold`; <= 0 means disabled).
     * Operators over checkpointed intermediates (LogicalRDD: no size

@@ -140,4 +140,38 @@ class CheckpointsSpec extends AnyFunSuite {
     Checkpoints.free(f)
     gone(rddId(f))
   }
+
+  test("an owner frees its checkpoints without logging a WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("checkpoint-free-warns", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warns.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    appender.start()
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    var ids = Seq.empty[Int]
+    try {
+      val n = Checkpoints.owned {
+        val a = ck(4)
+        val b = Checkpoints.owned(ck(6)) // read: handed outward
+        ids = Seq(rddId(a), rddId(b))
+        b.count()
+      }
+      assert(n == 6)
+      gone(ids: _*)
+    } finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(warns.isEmpty, warns)
+  }
 }

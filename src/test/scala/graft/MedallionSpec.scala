@@ -140,6 +140,19 @@ class MedallionSpec extends AnyFunSuite {
     assert(clean.union(quarantined).exceptAll(m).count() === 0)
   }
 
+  test("P6: the split's counts match both sides, NULL-predicate rows " +
+      "counted as quarantined") {
+    val m = MoviePipeline.transformMovie(flat).distinct()
+      .withColumn("RunTime", when(col("Id") === 1, lit(null))
+        .otherwise(col("RunTime")))
+    val pred = col("RunTime") >= 0
+    val (clean, quarantined) = Medallion.cleanQuarantineSplit(m, pred)
+    val counts = Medallion.cleanQuarantineCounts(m, pred)
+    assert(counts === ((1L, 2L)))
+    assert(counts === ((clean.count(), quarantined.count())))
+    assert(Medallion.cleanQuarantineCounts(m.limit(0), pred) === ((0L, 0L)))
+  }
+
   test("P7+O1: genres dimension dedups, drops empty names, sorts") {
     val g = MoviePipeline.transformGenres(flat).collect()
     assert(g.map(_.getAs[Long]("Id")).toSeq === Seq(1L, 3L))

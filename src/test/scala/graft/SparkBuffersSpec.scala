@@ -1,6 +1,9 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.security.MessageDigest
+
+import com.sun.management.{HotSpotDiagnosticMXBean, VMOption}
 
 import org.apache.spark.GraftTestBridge
 import org.apache.spark.sql.{DataFrame, Row}
@@ -12,9 +15,10 @@ import org.scalatest.time.SpanSugar._
 
 import graft.functions.Vec
 
-/** The broadcast chunk and execution page size that `build.sbt` sets for
-  * every graft JVM (256 KB and 2 MB), broadcasts that span many 256 KB
-  * pieces, and the broadcast that nn-descent frees itself.
+/** The broadcast chunk, execution page size and G1 region size that
+  * `build.sbt` sets for every graft JVM (256 KB, 2 MB and 4 MB),
+  * broadcasts that span many 256 KB pieces, and the broadcast that
+  * nn-descent frees itself.
   */
 class SparkBuffersSpec extends AnyFunSuite {
   import SparkBuffersSpec.sha
@@ -24,6 +28,11 @@ class SparkBuffersSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     assert(sc.getConf.getSizeAsKb("spark.broadcast.blockSize") == 256L)
     assert(GraftTestBridge.pageSizeBytes == 2L * 1024 * 1024)
+    // set on the command line, not picked by G1 from -Xmx
+    val region = ManagementFactory.getPlatformMXBean(
+      classOf[HotSpotDiagnosticMXBean]).getVMOption("G1HeapRegionSize")
+    assert(region.getValue == "4194304", region)
+    assert(region.getOrigin == VMOption.Origin.VM_CREATION, region)
   }
 
   test("a 3 MB broadcast is stored as 256 KB pieces and reassembles " +
